@@ -158,13 +158,11 @@ object Bench {
       .map(p => s"[${p.calPre},${p.calPost}]").mkString("[", ",", "]")
     val minTotal = warmMin.map(_._2).sum
 
-    // FULL metrics go to a FILE the round commits (BENCH_results.json,
-    // commit-stamped like SCALING_results.json): the per-query map for
-    // 100+ queries exceeds what the driver's line capture retains —
-    // round 6's committed artifact lost 52 of 107 per-query numbers to
-    // a mid-JSON truncation. Stdout carries a COMPACT summary line
-    // (total + pass totals + calibration + artifact pointer) that can
-    // never outgrow the capture; the committed file stands on its own.
+    // The full metrics (per-query maps, cold pass, GC, per-pass
+    // brackets) go to the artifact file; stdout's last line is a compact
+    // summary (headline, min_total, n_queries, failed, commit, artifact
+    // path) kept under 1 kB, because a line capture truncates longer
+    // lines and the per-query maps of 131 queries alone are ~8 kB.
     val commit = try {
       scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"),
         new java.io.File(".")).!!.trim
@@ -173,14 +171,7 @@ object Bench {
     val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_results.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (fullJson + "\n").getBytes("UTF-8"))
-    // The printed line CARRIES the per-query maps (round-13 verdict #1):
-    // the driver parses stdout, and the file-only design left PERF_r*'s
-    // per_query empty for 11 straight rounds. A keys-sorted compact map
-    // of ~131 doubles is ~4 kB — far under any line-capture limit (the
-    // round-6 truncation predated the compact format). The full
-    // artifact (cold pass, GC, per-pass brackets) still goes to the
-    // committed file.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(warmMed)},"queries_min":${qjson(warmMin)},"min_total":$minTotal,"cold_total":$coldTotal,"n_queries":${names.size},"failed":$failedJson,"warm_pass_totals":$passTotals,"calibration_ms":[$calBefore,$calAfter],"contended_passes_retried":$contendedRetried,"sf":"$sfDir","full_results":"$artifact"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","min_total":$minTotal,"cold_total":$coldTotal,"n_queries":${names.size},"failed":$failedJson,"warm_pass_totals":$passTotals,"calibration_ms":[$calBefore,$calAfter],"contended_passes_retried":$contendedRetried,"commit":"$commit","sf":"$sfDir","full_results":"$artifact"}""")
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 import scala.jdk.CollectionConverters._
@@ -150,12 +150,20 @@ object IndexLifecycle {
     * rather than collecting toward an OOM (the limit is pushed into
     * the plan, so an over-budget set ships at most maxIds+1 rows). */
   def boundedCollectIds(ids: DataFrame, key: String,
-                        maxIds: Int = MaxIncrementIds): Array[Long] = {
-    val rows = ids.select(col(key)).limit(maxIds + 1).collect()
-    require(rows.length <= maxIds,
+                        maxIds: Int = MaxIncrementIds): Array[Long] =
+    boundedCollect(ids.select(col(key)), maxIds,
       s"increment-class contract violated: more than $maxIds ids in one " +
         s"mutation call on '$key' — chunk the calls or schedule a rebuild")
-    rows.map(_.getLong(0))
+      .map(_.getLong(0))
+
+  /** Collect `df` to the driver under a row bound: `limit(maxRows+1)`
+    * is pushed into the plan, so an over-budget frame ships at most
+    * maxRows+1 rows before `violation` fails the call loudly. */
+  def boundedCollect(df: DataFrame, maxRows: Int,
+                     violation: => String): Array[Row] = {
+    val rows = df.limit(maxRows + 1).collect()
+    require(rows.length <= maxRows, violation)
+    rows
   }
 
   /** Copy a PRISTINE cached index into a fresh scratch dir for a
@@ -489,16 +497,18 @@ object IndexLifecycle {
     * plan-audit pass). Run an action on `df` first so AQE has
     * finalized. Shared by the drift-rung probe and the plan-pinning
     * specs so the unwrap subtlety is maintained once. */
-  def executedPlanNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
+  def executedPlanNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    planNodes(df.queryExecution.executedPlan)
+
+  /** [[executedPlanNodes]] from a physical plan root — the subtree of
+    * any node, or a plan captured by a query-execution listener. */
+  def planNodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def all(p: SparkPlan): Seq[SparkPlan] =
-      (p +: p.children.flatMap(all)) ++ (p match {
-        case a: AdaptiveSparkPlanExec => all(a.executedPlan)
-        case q: QueryStageExec => all(q.plan)
-        case _ => Nil
-      })
-    all(df.queryExecution.executedPlan)
+    (p +: p.children.flatMap(planNodes)) ++ (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case _ => Nil
+    })
   }
 
   /** (broadcast LeftAnti present, shuffled LeftAnti present) — the

@@ -2,8 +2,9 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.HashFunctions.MinHashCoeffs
 
@@ -141,7 +142,7 @@ object SignatureIndex {
     IndexLifecycle.clearBuildScopedMarkers(root)
     hashed.select(sigColumns: _*)
       .write.mode("overwrite").parquet(s"$path/sig")
-    val sig = spark.read.parquet(s"$path/sig")
+    val sig = spark.read.schema(SigSchema).parquet(s"$path/sig")
     val bandedN = banded(sig, rowsPerBand, narrow = true)
     bandedN.groupBy(col("band"), col("band_sig"))
       .agg(count(lit(1)).as("_pop"))
@@ -235,8 +236,8 @@ object SignatureIndex {
     * probes CORRECTLY (probes scan `sig/` directly; meta only feeds
     * bookkeeping and join-width sizing) and RE-RUNNING the append is
     * semantically safe — duplicated signature rows collapse in every
-    * consumer (pair frames group on the id pair, the gate's hit probe
-    * is a semi) — it just wastes the duplicate's bytes until the next
+    * consumer (pair frames group on the id pair, the gate collects its
+    * hits into a set) — it just wastes the duplicate's bytes until the next
     * rebuild. */
   def appendToIndex(newHashed: DataFrame, path: String): Meta = {
     val root = Paths.get(path)
@@ -324,7 +325,8 @@ object SignatureIndex {
     // increment-bounded), then ids already tombstoned drop out — a
     // retried delete changes neither the tombstone set nor counters,
     // and a foreign-id delete changes nothing at all
-    val present = spark.read.parquet(s"$path/sig").select(col("doc_id"))
+    val present = spark.read.schema(SigSchema).parquet(s"$path/sig")
+      .select(col("doc_id"))
       .join(broadcast(ts0), Seq("doc_id"), "left_semi").distinct()
     val fresh = tombstoneIds(spark, path).fold(present) { case (prev, bytes) =>
       IndexLifecycle.boundedIdJoin(present, prev, "doc_id", bytes, "left_anti")
@@ -360,8 +362,7 @@ object SignatureIndex {
                            path: String): Option[(DataFrame, Long)] = {
     val dir = Paths.get(path, "tombstones")
     if (IndexLifecycle.hasParquet(dir))
-      Some((spark.read.parquet(dir.toString)
-        .select(col("doc_id")).distinct(),
+      Some((spark.read.schema(IdSchema).parquet(dir.toString).distinct(),
         IndexLifecycle.idSideBytes(spark, dir)))
     else None
   }
@@ -374,7 +375,7 @@ object SignatureIndex {
     * broadcast below the session threshold, size-driven SHUFFLE_HASH
     * above) and disappears entirely when no tombstones exist. */
   private def liveSig(spark: SparkSession, path: String): DataFrame = {
-    val sig = spark.read.parquet(s"$path/sig")
+    val sig = spark.read.schema(SigSchema).parquet(s"$path/sig")
     tombstoneIds(spark, path).fold(sig) { case (ts, bytes) =>
       IndexLifecycle.boundedIdJoin(sig, ts, "doc_id", bytes, "left_anti")
     }
@@ -384,13 +385,14 @@ object SignatureIndex {
     * FILTERED to doc_ids surviving in the rebuilt sig table (an
     * admitted-then-tombstoned doc's md5 must stop rejecting copies of
     * content that was taken down). Append-mode + set semantics:
-    * duplicate rows from a crash-retried restore are semi-probed. */
+    * duplicate rows from a crash-retried restore collapse in the gate's
+    * md5 set. */
   private def restoreStagedGateMd5(spark: SparkSession, stageDir: Path,
                                    path: String): Unit = {
     val staged = stageDir.resolve(GateAppendMd5Dir)
     if (IndexLifecycle.hasParquet(staged)) {
       spark.read.parquet(staged.toString)
-        .join(spark.read.parquet(s"$path/sig")
+        .join(spark.read.schema(SigSchema).parquet(s"$path/sig")
           .select(col("doc_id").as("c_doc")).distinct(),
           Seq("c_doc"), "left_semi")
         .coalesce(1)
@@ -559,7 +561,7 @@ object SignatureIndex {
     * .mergeParquetFiles]]): the merged file moves INTO `sig/` before
     * the originals are deleted, so a crash in the window leaves
     * duplicate signature rows — which every consumer collapses (pair
-    * frames group on the id pair, the gate's probe is a semi; the
+    * frames group on the id pair, the gate's hits are a set; the
     * old delete-first order instead LOST the merged rows, a silent
     * recall hole only a rebuild repaired). A post-crash re-run merges
     * the duplicates' bytes along; a rebuild reclaims them. Returns
@@ -705,7 +707,7 @@ object SignatureIndex {
         (Some(spark.read.parquet(s"$indexPath/hot")),
           if (h2present) Some(spark.read.parquet(s"$indexPath/hot2")) else None)
       }
-    val incSig = spark.read.parquet(stagedIncDir)
+    val incSig = spark.read.schema(SigSchema).parquet(stagedIncDir)
 
     val sigScan = liveSig(spark, indexPath)
     // SLIM corpus side for the prune: the hsi set payload is ~90% of
@@ -905,36 +907,35 @@ object SignatureIndex {
     * `graft.queries.StreamingQueries.ingestGate`). Returns the rows of
     * `batch` (projected to `keep`) that pass every check against the
     * persisted corpus index:
-    *  - not an exact duplicate: md5 anti-join against the `gate_md5`
-    *    sidecar (NOT subsumable by the band checks — a document with
-    *    fewer than `shingleK` tokens has an EMPTY shingle set, a null
-    *    MinHash signature and therefore no band rows at all, yet its
-    *    exact copies must still be rejected);
+    *  - not an exact duplicate: md5 absent from the `gate_md5` sidecar
+    *    (NOT subsumable by the band checks — a document with fewer than
+    *    `shingleK` tokens has an EMPTY shingle set, a null MinHash
+    *    signature and therefore no band rows at all, yet its exact
+    *    copies must still be rejected);
     *  - no strong near-duplicate (set-Jaccard ≥ 1/2, integer-exact:
     *    3·|A∩B| ≥ |A|+|B|) through any of the first `nGateBands` LSH
     *    bands of the index.
     *
-    * Scale shape — the round-9 defect this replaces re-SORTED the
-    * corpus-sized band table on every micro-batch (4.8×/doubling at
-    * the 2M rung, SCALING.md §4.15). Here every corpus-sized input is
-    * a persisted columnar scan SEMI-PRUNED BY A BATCH-SIZED BROADCAST
-    * before any exchange, exactly [[probeSignatureIndex]]'s plan:
-    *  1. the batch's distinct md5 keys broadcast-prune the md5 sidecar
-    *     scan; survivors (≤ batch size) anti-join the batch;
-    *  2. the batch's distinct band keys broadcast-prune the banded
-    *     sig/ scan; survivors are LEFT SEMI-probed from the batch's
-    *     band rows with the exact-Jaccard residual (both sorted int
-    *     sets co-located in the join — the §4.4 discipline; SEMI, so
-    *     a hot bucket can't explode the output);
-    *  3. batch LEFT ANTI the hit ids.
-    * The corpus is never shuffled, never sorted, never re-hashed.
+    * Per-trigger shape ([[gateRows]], shared with
+    * [[gateAndAppendBatch]]): work the size of the increment plus one
+    * pass over each corpus table, in a handful of jobs —
+    *  1. one job hashes the micro-batch into a DRIVER-LOCAL relation,
+    *     bounded by [[MaxGateBatchRows]] (a larger batch fails loudly);
+    *  2. one scan of the md5 sidecar, filtered by the batch's md5 set;
+    *  3. one unshuffled, unsorted scan of the live `sig/` table whose
+    *     first `nGateBands` bands stream through a broadcast hash join
+    *     on the batch's band rows, with the exact-Jaccard residual;
+    *  4. the admitted rows return as a local relation.
+    * Index tables are read with their known schemas, so no
+    * schema-inference job runs per trigger. Nothing is cached or
+    * checkpointed: the result carries no lineage, so losing an
+    * executor after the call cannot lose or recompute it.
     *
     * The gate deliberately IGNORES the index's hot/hot2 refinement
     * tables: refinement shards a hot bucket to bound PAIR-JOIN output,
     * but a gate needs EXISTENCE, and a strong-but-not-identical pair
     * split across shards would be silently admitted — a semantics
-    * change. The LEFT SEMI probe gives the same output-boundedness
-    * refinement buys the pair join.
+    * change.
     *
     * `nGateBands` = 2 matches the reference gate's two-band form (and
     * its DuckDB oracle twin); a production corpus gate would raise it
@@ -942,116 +943,130 @@ object SignatureIndex {
   def gateBatchThroughIndex(batch: DataFrame, indexPath: String,
                             keep: Seq[String], shingleK: Int = 5,
                             nGateBands: Int = 2): DataFrame = {
-    val (b, admitted) = gateBatchPlan(batch, indexPath, keep, shingleK, nGateBands)
-    // eager local checkpoint: runs the whole gate NOW (while the hashed
-    // batch is cached — one batch-hashing pass instead of one per plan
-    // branch) and hands the runner a materialized batch-sized result,
-    // so the cache can be dropped before this call returns. Checkpoint
-    // blocks are batch-output-sized and freed by the driver GC, the
-    // same bounded lingering as Dedup.ccRounds' documented use.
-    val out = admitted.localCheckpoint(true)
-    b.unpersist()
-    out
+    val (schema, admitted) =
+      gateRows(batch, indexPath, keep, shingleK, nGateBands, appendBatch = None)
+    localFrame(batch.sparkSession, schema, admitted).select(keep.map(col): _*)
   }
 
-  /** The LAZY gate plan — (cached hashed batch, admitted frame) —
-    * split out so the plan-shape spec can audit the physical plan the
-    * gate actually runs (no corpus-side sort, broadcast-semi prune)
-    * before the checkpoint hides it. Defaults reproduce the stateless
-    * gate exactly; the three optional parameters serve the
-    * gate→append composition ([[gateAndAppendBatch]] — one plan, two
-    * consumers, so a future fix to the gate's shape lands once):
-    *
-    *  - `extraMd5`: an additional (c_md5) exact-dup source, unioned
-    *    with the `gate_md5` sidecar scan (the append sidecar, already
-    *    filtered to exclude the current batch's own rows);
-    *  - `excludeDocIds`: sig rows to HIDE from the band check — a
-    *    batch-bounded broadcast anti on the (already semi-pruned)
-    *    scan side, so the SEMI hit probe keeps its output-boundedness;
-    *  - `carryForAppend`: admitted keeps (doc_id, hs, i_md5) beside
-    *    `keep` so the caller can append without re-hashing. */
-  private[graft] def gateBatchPlan(batch: DataFrame, indexPath: String,
-                                   keep: Seq[String], shingleK: Int = 5,
-                                   nGateBands: Int = 2,
-                                   extraMd5: Option[DataFrame] = None,
-                                   excludeDocIds: Option[DataFrame] = None,
-                                   carryForAppend: Boolean = false): (DataFrame, DataFrame) = {
+  /** Increment-class bound on one gate micro-batch: the gate holds the
+    * hashed batch on the driver (keep columns, md5, signature, sorted
+    * shingle set — a few kB per document), so 50k rows is a few hundred
+    * MB at most. A stream feeding the gate bounds its micro-batches
+    * with `maxFilesPerTrigger`/`maxBytesPerTrigger`. */
+  val MaxGateBatchRows: Int = 50000
+
+  /** Known schemas of the tables the gate reads: reading with them
+    * skips the footer-merging schema-inference job every bare
+    * `spark.read.parquet` schedules. The md5 schema covers both
+    * sidecars — `gate_md5` (c_md5 only; the other columns read as
+    * null) and the gate-append sidecar (c_md5, c_doc, c_batch). */
+  private val SigSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("sig", ArrayType(LongType)),
+    StructField("_xb", LongType), StructField("_salt", LongType),
+    StructField("hsi", ArrayType(IntegerType))))
+  private val IdSchema = StructType(Seq(StructField("doc_id", LongType)))
+  private val Md5Schema = StructType(Seq(StructField("c_md5", StringType),
+    StructField("c_doc", LongType), StructField("c_batch", LongType)))
+  private val GateBandSchema = StructType(Seq(
+    StructField("b_doc", LongType), StructField("band", IntegerType),
+    StructField("band_sig", ArrayType(LongType)),
+    StructField("hsi", ArrayType(IntegerType))))
+
+  private def localFrame(spark: SparkSession, schema: StructType,
+                         rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** The gate body behind [[gateBatchThroughIndex]] and
+    * [[gateAndAppendBatch]]: the admitted rows of the hashed batch and
+    * their schema (keep ∪ doc_id, i_md5, sig, hsi — plus hs when
+    * `appendBatch` is set, so the caller appends without re-hashing).
+    * `appendBatch = Some(batchId)` adds the gate-append sidecar to the
+    * md5 check and hides this batch's own recorded admissions from
+    * both checks (the replay contract of [[gateAndAppendBatch]]).
+    * Four jobs at most — the batch collect, the md5 scan, the
+    * broadcast of the batch's band rows, the sig scan — and the later
+    * ones are skipped when nothing is left to check. */
+  private def gateRows(batch: DataFrame, indexPath: String,
+                       keep: Seq[String], shingleK: Int,
+                       nGateBands: Int, appendBatch: Option[Long])
+      : (StructType, Seq[Row]) = {
     import org.apache.spark.sql.graft.HashExpressions
     val spark = batch.sparkSession
-    val meta = readMeta(indexPath)
-    require(nGateBands * meta.rowsPerBand <= MinHashCoeffs.length,
-      s"gate wants $nGateBands bands of ${meta.rowsPerBand} rows; " +
+    val rpb = readMeta(indexPath).rowsPerBand
+    require(nGateBands * rpb <= MinHashCoeffs.length,
+      s"gate wants $nGateBands bands of $rpb rows; " +
         s"only ${MinHashCoeffs.length} signature values exist")
 
-    def gateBands(df: DataFrame, carry: Seq[Column]): DataFrame =
-      df.select(carry :+
-        posexplode(transform(
-          sequence(lit(0), lit(nGateBands - 1)),
-          b => slice(col("sig"), b * meta.rowsPerBand + 1,
-            lit(meta.rowsPerBand))))
-          .as(Seq("band", "band_sig")): _*)
-
-    // batch-sized and read three times (md5 keys, band keys, band
-    // probe): materialize once, reclaimed by the caller's unpersist
-    val b0 = batch
+    // 1. the batch, hashed once into a driver-local relation
+    val hashed = batch
       .withColumn("i_md5", md5(col("text")))
       .withColumn("hs", Dedup.shingleHashes(col("text"), shingleK))
-      .withColumn("sig",
-        HashExpressions.minhash_sigs(col("hs")).as("sig"))
+      .withColumn("sig", HashExpressions.minhash_sigs(col("hs")))
       .withColumn("hsi", array_sort(transform(col("hs"),
         h => (h - 2147483648L).cast("int"))))
-    val b = (if (carryForAppend) b0 else b0.drop("hs")).persist()
+      .select((keep ++ Seq("doc_id", "i_md5", "sig", "hsi") ++
+        appendBatch.map(_ => "hs")).distinct.map(col): _*)
+    val rows = IndexLifecycle.boundedCollect(hashed, MaxGateBatchRows,
+      s"gate micro-batch holds more than $MaxGateBatchRows rows; the gate " +
+        "hashes each batch on the driver — bound the stream's " +
+        "maxFilesPerTrigger/maxBytesPerTrigger")
+    val schema = hashed.schema
+    if (rows.isEmpty) return (schema, Nil)
+    val Seq(fDoc, fMd5, fSig, fHsi) =
+      Seq("doc_id", "i_md5", "sig", "hsi").map(schema.fieldIndex)
 
-    // exact-dup check: sidecar scan pruned by the batch's broadcast
-    // md5 keys — survivors are batch-bounded, then a plain anti
-    val incMd5 = b.select(col("i_md5")).distinct()
-    val md5Src = extraMd5.fold(
-      spark.read.parquet(s"$indexPath/gate_md5"))(
-      spark.read.parquet(s"$indexPath/gate_md5").select(col("c_md5"))
-        .unionByName(_))
-    val md5Hits = md5Src
-      .join(broadcast(incMd5), col("c_md5") === col("i_md5"), "left_semi")
-    val afterMd5 = b.join(md5Hits, col("i_md5") === col("c_md5"), "left_anti")
+    // 2. exact-dup check: one scan of the md5 sidecar(s), filtered by
+    // the batch's md5 set. With a batch id it also returns the rows
+    // this batch recorded on an earlier delivery: those neither reject
+    // (by md5) nor may their signatures (below). Bounded by the batch:
+    // gate_md5 is a set, and the append sidecar gains one row per
+    // admission.
+    val appDir = Paths.get(indexPath, GateAppendMd5Dir)
+    val md5Dirs = s"$indexPath/gate_md5" +:
+      (if (appendBatch.isDefined && IndexLifecycle.hasParquet(appDir))
+        Seq(appDir.toString) else Nil)
+    val md5Match = HashExpressions.in_set(col("c_md5"),
+      rows.map(_.getString(fMd5)))
+    val (own, other) = spark.read.schema(Md5Schema).parquet(md5Dirs: _*)
+      .filter(appendBatch.fold(md5Match)(id => md5Match || col("c_batch") === id))
+      .collect()
+      .partition(r => appendBatch.exists(id => !r.isNullAt(2) && r.getLong(2) == id))
+    val rejectMd5 = other.map(_.getString(0)).toSet
+    val excluded = own.map(_.getLong(1)).toSet
+    val afterMd5 = rows.filterNot(r => rejectMd5(r.getString(fMd5)))
 
-    // near-dup check: banded sig/ scan pruned by the batch's broadcast
-    // band keys, then an existence (SEMI) probe with the exact-Jaccard
-    // residual. Rows with a null signature (empty shingle set) explode
-    // to null band_sig and match nothing — same semantics as the
-    // oracle's null-signature comparison. The exclusion (if any) lands
-    // on the SCAN side before banding, keeping the hit probe a SEMI
-    // (output-bounded in hot buckets).
-    val sigSrc0 = liveSig(spark, indexPath)
-    val sigSrc = excludeDocIds.fold(sigSrc0)(ex =>
-      sigSrc0.join(broadcast(ex), Seq("doc_id"), "left_anti"))
-    val incBands = gateBands(afterMd5,
-      Seq(col("doc_id"), col("sig"), col("hsi")))
-    val incKeys = incBands
-      .select(xxhash64(col("band"), col("band_sig")).as("k")).distinct()
-    val corpusBands = gateBands(
-      sigSrc.select(col("sig"), col("hsi")),
-      Seq(col("hsi")))
-      .withColumnRenamed("hsi", "c_hsi")
-      .withColumnRenamed("band", "c_band")
-      .withColumnRenamed("band_sig", "c_band_sig")
-    val pruned = corpusBands
-      .join(broadcast(incKeys),
-        xxhash64(col("c_band"), col("c_band_sig")) === col("k"), "left_semi")
-    val strong = lit(3) * HashExpressions
-      .sorted_inter_size(col("hsi"), col("c_hsi")) >=
-      size(col("hsi")) + size(col("c_hsi"))
-    val hitIds = incBands
-      .join(pruned.hint("SHUFFLE_HASH"),
-        col("band") === col("c_band") &&
-          col("band_sig") === col("c_band_sig") && strong, "left_semi")
-      .select(col("doc_id")).distinct()
-
-    val outCols =
-      if (carryForAppend)
-        (keep ++ Seq("doc_id", "hs", "i_md5")).distinct.map(col)
-      else keep.map(col)
-    val admitted = afterMd5.join(hitIds, Seq("doc_id"), "left_anti")
-      .select(outCols: _*)
-    (b, admitted)
+    // 3. near-dup check: the batch's first nGateBands bands, cut on the
+    // driver exactly as the corpus side's slice(); a null signature
+    // (empty shingle set) has no bands and matches nothing — the
+    // oracle's null-signature semantics
+    val bands = afterMd5.iterator.filterNot(_.isNullAt(fSig)).flatMap { r =>
+      val sig = r.getSeq[Long](fSig)
+      (0 until nGateBands).map(b => Row(r.getLong(fDoc), b,
+        sig.slice(b * rpb, (b + 1) * rpb), r.getSeq[Int](fHsi)))
+    }.toSeq
+    val hits =
+      if (bands.isEmpty) Set.empty[Long]
+      else {
+        val live = liveSig(spark, indexPath)
+        val corpus =
+          if (excluded.isEmpty) live
+          else live.filter(!HashExpressions.in_set(col("doc_id"), excluded))
+        val strong = lit(3) * HashExpressions
+          .sorted_inter_size(col("hsi"), col("c_hsi")) >=
+          size(col("hsi")) + size(col("c_hsi"))
+        // one long per strong (batch doc, corpus doc, band) triple
+        corpus.select(col("hsi").as("c_hsi"),
+            posexplode(transform(sequence(lit(0), lit(nGateBands - 1)),
+              b => slice(col("sig"), b * rpb + 1, lit(rpb))))
+              .as(Seq("c_band", "c_band_sig")))
+          .join(broadcast(localFrame(spark, GateBandSchema, bands)),
+            col("c_band") === col("band") &&
+              col("c_band_sig") === col("band_sig") && strong)
+          .select(col("b_doc"))
+          .collect().map(_.getLong(0)).toSet
+      }
+    // 4. the admitted rows, driver-local
+    (schema, afterMd5.filterNot(r => hits(r.getLong(fDoc))).toSeq)
   }
 
   /** Sidecar recording the md5 and batch of every gate-ADMITTED
@@ -1063,14 +1078,13 @@ object SignatureIndex {
 
   /** The PRODUCTION ingest composition — gate the batch, then APPEND
     * the admissions — run once per micro-batch by a foreachBatch sink:
-    * [[gateBatchPlan]] (the same plan the stateless gate audits)
-    * decides against the index AS OF this trigger, and the admitted
-    * rows' signatures and md5s are appended so TOMORROW'S increment
-    * dedups against TODAY'S admissions (the loop [[appendToIndex]]'s
-    * docstring narrates; round-11 judge ask: it was composed only in
-    * prose). A later batch carrying a copy of an earlier batch's
-    * admission is REJECTED — the property the stream_gate_append
-    * oracle hashes across a 3-batch-plus-replay staging.
+    * [[gateRows]] (the body the stateless gate runs) decides against
+    * the index AS OF this trigger, and the admitted rows' signatures
+    * and md5s are appended so TOMORROW'S increment dedups against
+    * TODAY'S admissions. A later batch carrying a copy of an earlier
+    * batch's admission is REJECTED — the property the
+    * stream_gate_append oracle hashes across a 3-batch-plus-replay
+    * staging.
     *
     * Semantics vs the stateless gate: admission is ORDER-DEPENDENT
     * (the first arrival of a duplicate class wins; later copies
@@ -1082,57 +1096,43 @@ object SignatureIndex {
     * REPLAY EXACTLY-ONCE (foreachBatch redelivery after a crash
     * between the gate and the appends): the gate decides as if this
     * batchId's OWN previous appends never happened — the md5 check
-    * reads the append sidecar filtered to `c_batch ≠ batchId`, and
-    * the band check hides the sig rows of this batch's recorded
-    * admissions (a batch-bounded broadcast anti on the scan side, so
-    * the SEMI hit probe stays output-bounded). Per-row self-exclusion
-    * alone (the first cut) was NOT enough: two identical docs
-    * co-admitted in one batch would reject EACH OTHER on redelivery
-    * (round-12 self-review). With the batch-scoped exclusion the
-    * admitted set is delivery-count-invariant, spec-pinned;
-    * re-appending is duplicate-safe ([[appendToIndex]]'s contract;
-    * duplicate sidecar rows are semi-probed). The corpus `gate_md5`
-    * sidecar needs no exclusion: the caller's corpus/increment split
-    * keeps the id spaces disjoint.
+    * ignores append-sidecar rows with `c_batch = batchId`, and the
+    * band check filters the sig rows of those recorded admissions out
+    * of its scan. Per-row self-exclusion alone was NOT enough: two
+    * identical docs co-admitted in one batch would reject EACH OTHER
+    * on redelivery. With the batch-scoped exclusion the admitted set
+    * is delivery-count-invariant, spec-pinned; re-appending is
+    * duplicate-safe ([[appendToIndex]]'s contract; duplicate sidecar
+    * rows collapse in the md5 set). The corpus `gate_md5` sidecar
+    * needs no exclusion: the caller's corpus/increment split keeps the
+    * id spaces disjoint.
     *
-    * Ordering within the call: the admitted set is MATERIALIZED
-    * (checkpoint) before either append — its plan reads the very
-    * directories the appends write. Per-batch cost is the gate's
-    * contract (batch-sized broadcasts semi-pruning persisted scans)
-    * plus two increment-sized appends. */
+    * Per-trigger cost: the gate's jobs plus two increment-sized
+    * appends. The decision is a driver-local relation before either
+    * append runs, so the appends — which write the directories the
+    * gate read — need no checkpoint or cache in between, and an
+    * executor lost mid-append cannot recompute the decision against
+    * half-written tables. */
   def gateAndAppendBatch(batch: DataFrame, indexPath: String,
                          keep: Seq[String], batchId: Long,
                          shingleK: Int = 5,
                          nGateBands: Int = 2): DataFrame = {
-    val spark = batch.sparkSession
-    val appDir = Paths.get(indexPath, GateAppendMd5Dir)
-    val (extraMd5, excludeDocIds) =
-      if (IndexLifecycle.hasParquet(appDir)) {
-        val sc = spark.read.parquet(appDir.toString)
-        (Some(sc.filter(col("c_batch") =!= batchId).select(col("c_md5"))),
-         Some(sc.filter(col("c_batch") === batchId)
-           .select(col("c_doc").as("doc_id")).distinct()))
-      } else (None, None)
-    val (b, admittedLazy) = gateBatchPlan(batch, indexPath, keep,
-      shingleK, nGateBands, extraMd5, excludeDocIds,
-      carryForAppend = true)
-    // materialize the decision BEFORE the appends: the plan reads the
-    // directories the appends write (sig/, the md5 sidecar)
-    val admitted = admittedLazy.localCheckpoint(true)
-    b.unpersist()
-    if (!admitted.isEmpty) {
-      // SIDECAR FIRST, index append second (round-12 second-pass
-      // finding: the reverse order re-opened the replay hole in the
-      // crash window between the writes — sigs landed with no batch
-      // record, so the redelivered batch's own rows self-rejected).
-      // Recording an admission whose sig never lands is harmless: the
-      // exclusion hides sig rows that do not exist, and the md5 row
-      // correctly rejects future copies of a doc the re-delivered
-      // batch will re-admit and re-append.
+    val (schema, rows) = gateRows(batch, indexPath, keep, shingleK,
+      nGateBands, appendBatch = Some(batchId))
+    val admitted = localFrame(batch.sparkSession, schema, rows)
+    if (rows.nonEmpty) {
+      // SIDECAR FIRST, index append second: the reverse order re-opened
+      // the replay hole in the crash window between the writes — sigs
+      // landed with no batch record, so the redelivered batch's own
+      // rows self-rejected. Recording an admission whose sig never
+      // lands is harmless: the exclusion hides sig rows that do not
+      // exist, and the md5 row correctly rejects future copies of a
+      // doc the re-delivered batch will re-admit and re-append.
       admitted.select(col("i_md5").as("c_md5"), col("doc_id").as("c_doc"),
           lit(batchId).as("c_batch"))
         .coalesce(1)
-        .write.mode("append").parquet(appDir.toString)
+        .write.mode("append")
+        .parquet(Paths.get(indexPath, GateAppendMd5Dir).toString)
       appendToIndex(admitted.select(col("doc_id"), col("hs")), indexPath)
     }
     admitted.select(keep.map(col): _*)

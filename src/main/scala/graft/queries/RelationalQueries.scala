@@ -61,12 +61,17 @@ object RelationalQueries {
 
   /** q3: global top-k by computed score (SURVEY T2 IDRank:
     * orderBy(score.desc).limit(k)). Spark runs this as TakeOrdered —
-    * no full sort at scale. */
+    * no full sort at scale. Revenue is summed in DECIMAL (both inputs
+    * carry two decimals): a double sum can land a hair under an exact
+    * half cent, and then the cent it rounds to depends on summation
+    * order — the DuckDB twin computes the same decimal sum. */
   private val q3_topk_orders: Q = (s, d) => {
     import s.implicits._
     Tables.lineitem(s, d)
       .groupBy($"l_orderkey")
-      .agg(round(sum($"l_extendedprice" * (lit(1) - $"l_discount")), 2).as("revenue"))
+      .agg(round(sum($"l_extendedprice".cast("decimal(15,2)") *
+          (lit(1) - $"l_discount".cast("decimal(15,2)"))), 2)
+        .cast("double").as("revenue"))
       .orderBy($"revenue".desc, $"l_orderkey")
       .limit(10)
   }
@@ -707,7 +712,8 @@ object RelationalQueries {
         |ORDER BY r_name, n_name""".stripMargin,
     "q3_topk_orders" ->
       """SELECT l_orderkey,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2)) *
+        |    (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue
         |FROM lineitem
         |GROUP BY l_orderkey
         |ORDER BY revenue DESC, l_orderkey

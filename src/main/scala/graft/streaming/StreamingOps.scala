@@ -714,8 +714,10 @@ object StreamingOps {
     * re-delivered batch (same batchId, deterministic transform)
     * overwrites its own partition with identical content instead of
     * appending a second copy (the [[graft.storage.RoutedStore]]
-    * contract). The sink dir lives on local tmp and is reclaimed at
-    * JVM exit (the returned frame reads it lazily). */
+    * contract). The sink dir lives under [[foreachBatchOutRoot]] on
+    * local tmp and is reclaimed at JVM exit (the returned frame reads
+    * it lazily, with the schema the batches wrote — no
+    * schema-inference job). */
   def runForeachBatch(spark: SparkSession, stream: DataFrame, name: String,
                       fn: (DataFrame, Long) => DataFrame): DataFrame = {
     import java.nio.file.Files
@@ -724,10 +726,8 @@ object StreamingOps {
       (if (shm.isDirectory && shm.canWrite) shm.toPath
        else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))),
       s"graft_fb_ckpt_${name}_")
-    val out = Files.createTempDirectory(s"graft_fb_out_${name}_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-      catch { case _: java.io.IOException => () }))
+    val out = Files.createTempDirectory(
+      Files.createDirectories(foreachBatchOutRoot), s"${name}_")
     @volatile var resultSchema: Option[org.apache.spark.sql.types.StructType] = None
     try withStateConfig(spark, streamSourceBytes(stream)) {
       val q = stream.writeStream
@@ -751,12 +751,24 @@ object StreamingOps {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     val hasFiles = scala.util.Using.resource(Files.walk(out))(
       _.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet")))
-    if (hasFiles) spark.read.parquet(out.toString).drop("batch")
-    else { // every batch produced zero rows: nothing was written
-      val schema = resultSchema.getOrElse(org.apache.spark.sql.types.StructType(Nil))
+    val schema = resultSchema.getOrElse(org.apache.spark.sql.types.StructType(Nil))
+    if (hasFiles)
+      spark.read.schema(schema.add("batch", LongType)).parquet(out.toString)
+        .drop("batch")
+    else // every batch produced zero rows: nothing was written
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+  }
+
+  /** Per-JVM parent of every [[runForeachBatch]] sink, deleted by one
+    * shutdown hook: a long-lived session running many streams
+    * registers one hook thread, not one per run. */
+  private lazy val foreachBatchOutRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_fb_out_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      catch { case _: java.io.IOException => () }))
+    root
   }
 
   /** Kill/resume recovery harness (SURVEY W4/W5 — the reference's core

@@ -745,4 +745,17 @@ object HashExpressions {
   def l2sq_long(a: Column, b: Column): Column =
     ExpressionUtils.column(L2SqLong(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** `c IN values` as a hash-set lookup over a driver-local value set
+    * (String or Long values). Unlike `isin`, whose generated code
+    * inlines each literal below the optimizer's InSet threshold, the
+    * set is a reference object: a per-batch set of any size reuses
+    * one compiled class. Parquet scans still receive it as a pushed
+    * `In` filter. */
+  def in_set(c: Column, values: Iterable[Any]): Column =
+    ExpressionUtils.column(org.apache.spark.sql.catalyst.expressions.InSet(
+      ExpressionUtils.expression(c), values.iterator.map {
+        case s: String => UTF8String.fromString(s)
+        case v => v
+      }.toSet))
 }
