@@ -153,15 +153,16 @@ object IndexLifecycle {
                         maxIds: Int = MaxIncrementIds): Array[Long] =
     boundedCollect(ids.select(col(key)), maxIds,
       s"increment-class contract violated: more than $maxIds ids in one " +
-        s"mutation call on '$key' — chunk the calls or schedule a rebuild")
-      .map(_.getLong(0))
+        s"mutation call on '$key' — chunk the calls or schedule a rebuild")(
+      (df, n) => df.limit(n).collect()).map(_.getLong(0))
 
-  /** Collect `df` to the driver under a row bound: `limit(maxRows+1)`
-    * is pushed into the plan, so an over-budget frame ships at most
-    * maxRows+1 rows before `violation` fails the call loudly. */
-  def boundedCollect(df: DataFrame, maxRows: Int,
-                     violation: => String): Array[Row] = {
-    val rows = df.limit(maxRows + 1).collect()
+  /** Collect `df` to the driver under a row bound: `collect(df, n)`
+    * pushes a limit of n = maxRows+1 rows into the plan (global, or
+    * per partition), so an over-budget frame ships a bounded number of
+    * rows before `violation` fails the call loudly. */
+  def boundedCollect[T](df: DataFrame, maxRows: Int, violation: => String)
+                       (collect: (DataFrame, Int) => Array[T]): Array[T] = {
+    val rows = collect(df, maxRows + 1)
     require(rows.length <= maxRows, violation)
     rows
   }

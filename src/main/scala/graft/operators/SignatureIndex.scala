@@ -2,7 +2,9 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -391,7 +393,7 @@ object SignatureIndex {
                                    path: String): Unit = {
     val staged = stageDir.resolve(GateAppendMd5Dir)
     if (IndexLifecycle.hasParquet(staged)) {
-      spark.read.parquet(staged.toString)
+      spark.read.schema(Md5Schema).parquet(staged.toString)
         .join(spark.read.schema(SigSchema).parquet(s"$path/sig")
           .select(col("doc_id").as("c_doc")).distinct(),
           Seq("c_doc"), "left_semi")
@@ -945,36 +947,41 @@ object SignatureIndex {
                             nGateBands: Int = 2): DataFrame = {
     val (schema, admitted) =
       gateRows(batch, indexPath, keep, shingleK, nGateBands, appendBatch = None)
-    localFrame(batch.sparkSession, schema, admitted).select(keep.map(col): _*)
+    LocalRows.frame(batch.sparkSession, schema, admitted)
+      .select(keep.map(col): _*)
   }
 
-  /** Increment-class bound on one gate micro-batch: the gate holds the
-    * hashed batch on the driver (keep columns, md5, signature, sorted
-    * shingle set — a few kB per document), so 50k rows is a few hundred
-    * MB at most. A stream feeding the gate bounds its micro-batches
-    * with `maxFilesPerTrigger`/`maxBytesPerTrigger`. */
+  /** Increment-class bound on one gate micro-batch. The gate holds the
+    * hashed batch on the driver as the UnsafeRows the executors ship
+    * (keep columns, md5, signature, sorted shingle set — plus the
+    * shingle hashes on the append path). Measured with SizeEstimator
+    * on 20k-row collects of ScaleGen's ~700-character documents
+    * (~620 shingles): 2.9 kB per row for the stateless gate, 8.0 kB
+    * with the append path's hashes (boxed `Dataset.collect` rows:
+    * 13.1 / 30.6 kB); sf0.1 documents (~300 characters) 1.1 / 2.8 kB.
+    * So 50k rows retain ~145 MB, or ~400 MB on the append path — a
+    * tenth of a 4 GB driver heap. The batch is hashed in one job over
+    * all its partitions, each shipping at most one bound's worth
+    * before an over-bound batch fails. A stream feeding the gate bounds
+    * its micro-batches with `maxFilesPerTrigger`/`maxBytesPerTrigger`
+    * or by its staging (`StreamingQueries.gateStagingBatches`). */
   val MaxGateBatchRows: Int = 50000
 
-  /** Known schemas of the tables the gate reads: reading with them
-    * skips the footer-merging schema-inference job every bare
-    * `spark.read.parquet` schedules. The md5 schema covers both
-    * sidecars — `gate_md5` (c_md5 only; the other columns read as
-    * null) and the gate-append sidecar (c_md5, c_doc, c_batch). */
-  private val SigSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("sig", ArrayType(LongType)),
-    StructField("_xb", LongType), StructField("_salt", LongType),
-    StructField("hsi", ArrayType(IntegerType))))
+  /** Known schemas of the index tables: reading with them skips the
+    * footer-merging schema-inference job every bare
+    * `spark.read.parquet` schedules. The sig/ schema is DERIVED from
+    * [[sigColumns]] (analysis only, no job), so the layout is stated
+    * once. */
+  private lazy val SigSchema: StructType =
+    SparkSession.active.range(0)
+      .select(col("id").as("doc_id"), Dedup.shingleHashes(lit(""), 1).as("hs"))
+      .select(sigColumns: _*).schema
   private val IdSchema = StructType(Seq(StructField("doc_id", LongType)))
+  /** The md5 sidecars' one layout, used by the gate-append writer and
+    * every reader: `gate_md5` (c_md5 only; the other columns read as
+    * null) and the gate-append sidecar (c_md5, c_doc, c_batch). */
   private val Md5Schema = StructType(Seq(StructField("c_md5", StringType),
     StructField("c_doc", LongType), StructField("c_batch", LongType)))
-  private val GateBandSchema = StructType(Seq(
-    StructField("b_doc", LongType), StructField("band", IntegerType),
-    StructField("band_sig", ArrayType(LongType)),
-    StructField("hsi", ArrayType(IntegerType))))
-
-  private def localFrame(spark: SparkSession, schema: StructType,
-                         rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
 
   /** The gate body behind [[gateBatchThroughIndex]] and
     * [[gateAndAppendBatch]]: the admitted rows of the hashed batch and
@@ -989,15 +996,19 @@ object SignatureIndex {
   private def gateRows(batch: DataFrame, indexPath: String,
                        keep: Seq[String], shingleK: Int,
                        nGateBands: Int, appendBatch: Option[Long])
-      : (StructType, Seq[Row]) = {
+      : (StructType, Seq[InternalRow]) = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.graft.HashExpressions
+    import org.apache.spark.unsafe.types.UTF8String
     val spark = batch.sparkSession
     val rpb = readMeta(indexPath).rowsPerBand
     require(nGateBands * rpb <= MinHashCoeffs.length,
       s"gate wants $nGateBands bands of $rpb rows; " +
         s"only ${MinHashCoeffs.length} signature values exist")
 
-    // 1. the batch, hashed once into a driver-local relation
+    // 1. the batch, hashed once into a driver-local relation (kept as
+    // the UnsafeRows the executors ship: MaxGateBatchRows is sized on
+    // their bytes)
     val hashed = batch
       .withColumn("i_md5", md5(col("text")))
       .withColumn("hs", Dedup.shingleHashes(col("text"), shingleK))
@@ -1009,7 +1020,7 @@ object SignatureIndex {
     val rows = IndexLifecycle.boundedCollect(hashed, MaxGateBatchRows,
       s"gate micro-batch holds more than $MaxGateBatchRows rows; the gate " +
         "hashes each batch on the driver — bound the stream's " +
-        "maxFilesPerTrigger/maxBytesPerTrigger")
+        "maxFilesPerTrigger/maxBytesPerTrigger")(LocalRows.collectPerPartition)
     val schema = hashed.schema
     if (rows.isEmpty) return (schema, Nil)
     val Seq(fDoc, fMd5, fSig, fHsi) =
@@ -1026,24 +1037,28 @@ object SignatureIndex {
       (if (appendBatch.isDefined && IndexLifecycle.hasParquet(appDir))
         Seq(appDir.toString) else Nil)
     val md5Match = HashExpressions.in_set(col("c_md5"),
-      rows.map(_.getString(fMd5)))
+      rows.map(_.getUTF8String(fMd5)))
     val (own, other) = spark.read.schema(Md5Schema).parquet(md5Dirs: _*)
       .filter(appendBatch.fold(md5Match)(id => md5Match || col("c_batch") === id))
       .collect()
       .partition(r => appendBatch.exists(id => !r.isNullAt(2) && r.getLong(2) == id))
-    val rejectMd5 = other.map(_.getString(0)).toSet
+    val rejectMd5 = other.map(r => UTF8String.fromString(r.getString(0))).toSet
     val excluded = own.map(_.getLong(1)).toSet
-    val afterMd5 = rows.filterNot(r => rejectMd5(r.getString(fMd5)))
+    val afterMd5 = rows.filterNot(r => rejectMd5(r.getUTF8String(fMd5)))
 
     // 3. near-dup check: the batch's first nGateBands bands, cut on the
     // driver exactly as the corpus side's slice(); a null signature
     // (empty shingle set) has no bands and matches nothing — the
     // oracle's null-signature semantics
     val bands = afterMd5.iterator.filterNot(_.isNullAt(fSig)).flatMap { r =>
-      val sig = r.getSeq[Long](fSig)
-      (0 until nGateBands).map(b => Row(r.getLong(fDoc), b,
-        sig.slice(b * rpb, (b + 1) * rpb), r.getSeq[Int](fHsi)))
+      val sig = r.getArray(fSig).toLongArray
+      val hsi = r.getArray(fHsi)
+      (0 until nGateBands).map(b => InternalRow(r.getLong(fDoc), b,
+        ArrayData.toArrayData(sig.slice(b * rpb, (b + 1) * rpb)), hsi))
     }.toSeq
+    val bandSchema = StructType(Seq(schema(fDoc).copy(name = "b_doc"),
+      StructField("band", IntegerType), schema(fSig).copy(name = "band_sig"),
+      schema(fHsi)))
     val hits =
       if (bands.isEmpty) Set.empty[Long]
       else {
@@ -1054,16 +1069,21 @@ object SignatureIndex {
         val strong = lit(3) * HashExpressions
           .sorted_inter_size(col("hsi"), col("c_hsi")) >=
           size(col("hsi")) + size(col("c_hsi"))
-        // one long per strong (batch doc, corpus doc, band) triple
+        // the join yields one row per strong (batch doc, corpus doc,
+        // band) match — a near-duplicate cluster of many corpus docs
+        // multiplies it — so each partition ships its DISTINCT batch
+        // docs only (no exchange): the collect is bounded by
+        // partitions × batch size, whatever the cluster sizes
         corpus.select(col("hsi").as("c_hsi"),
             posexplode(transform(sequence(lit(0), lit(nGateBands - 1)),
               b => slice(col("sig"), b * rpb + 1, lit(rpb))))
               .as(Seq("c_band", "c_band_sig")))
-          .join(broadcast(localFrame(spark, GateBandSchema, bands)),
+          .join(broadcast(LocalRows.frame(spark, bandSchema, bands)),
             col("c_band") === col("band") &&
               col("c_band_sig") === col("band_sig") && strong)
-          .select(col("b_doc"))
-          .collect().map(_.getLong(0)).toSet
+          .select(col("b_doc")).as(Encoders.scalaLong)
+          .mapPartitions(_.toSet.iterator)(Encoders.scalaLong)
+          .collect().toSet
       }
     // 4. the admitted rows, driver-local
     (schema, afterMd5.filterNot(r => hits(r.getLong(fDoc))).toSeq)
@@ -1119,7 +1139,8 @@ object SignatureIndex {
                          nGateBands: Int = 2): DataFrame = {
     val (schema, rows) = gateRows(batch, indexPath, keep, shingleK,
       nGateBands, appendBatch = Some(batchId))
-    val admitted = localFrame(batch.sparkSession, schema, rows)
+    val admitted =
+      LocalRows.frame(batch.sparkSession, schema, rows)
     if (rows.nonEmpty) {
       // SIDECAR FIRST, index append second: the reverse order re-opened
       // the replay hole in the crash window between the writes — sigs
@@ -1128,8 +1149,9 @@ object SignatureIndex {
       // lands is harmless: the exclusion hides sig rows that do not
       // exist, and the md5 row correctly rejects future copies of a
       // doc the re-delivered batch will re-admit and re-append.
-      admitted.select(col("i_md5").as("c_md5"), col("doc_id").as("c_doc"),
-          lit(batchId).as("c_batch"))
+      admitted.select(Seq(col("i_md5"), col("doc_id"), lit(batchId))
+          .zip(Md5Schema.fields)
+          .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*)
         .coalesce(1)
         .write.mode("append")
         .parquet(Paths.get(indexPath, GateAppendMd5Dir).toString)

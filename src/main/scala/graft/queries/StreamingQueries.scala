@@ -420,8 +420,8 @@ object StreamingQueries {
     * dedup_incremental) plus its md5 sidecar, probed inside
     * foreachBatch by [[graft.operators.SignatureIndex
     * .gateBatchThroughIndex]]: the micro-batch is hashed once into a
-    * driver-local relation (bounded — a stream feeding the gate caps
-    * its batches with maxFilesPerTrigger/maxBytesPerTrigger), the md5
+    * driver-local relation (bounded — the staging cuts the increment
+    * into enough one-file triggers, [[gateStagingBatches]]), the md5
     * sidecar and the live sig/ table are each read in one scan keyed by
     * the batch (an md5 set filter; a broadcast join on the batch's band
     * rows), and the admissions come back as a local relation. The
@@ -437,7 +437,8 @@ object StreamingQueries {
   /** The gate body, parameterized on the micro-batch count so the
     * batch-split-INVARIANCE claim is spec-testable: the admitted set
     * must be identical at 1, 3, or any other staging granularity
-    * (OracleSfSweepSpec). */
+    * (OracleSfSweepSpec). `nBatches` is a floor: a large increment is
+    * staged into more files ([[gateStagingBatches]]). */
   private[graft] def ingestGate(s: SparkSession, d: String,
                                 nBatches: Int): DataFrame = {
     import graft.operators.SignatureIndex
@@ -453,7 +454,8 @@ object StreamingQueries {
         .select(md5(col("text")).as("c_md5")).distinct()
         .write.mode("overwrite").parquet(p)
     }
-    val inc = StreamingOps.documentsStream(s, d, nBatches)
+    val inc = StreamingOps.documentsStream(s, d, gateStagingBatches(
+        s, d, nBatches, graft.Tables.documents(s, d).filter(bucket >= 90)))
       .filter(bucket >= 90)
     StreamingOps.runForeachBatch(s, inc,
       s"graft_stream_ingest_gate_$nBatches",
@@ -461,6 +463,28 @@ object StreamingQueries {
         batch, idx, keep = Seq("doc_id", "lang", "source")))
       .orderBy(col("doc_id"))
   }
+
+  /** Staged-file count for a gate stream. The file source takes one
+    * staged file per trigger, so a file is the smallest batch any
+    * stream option can make: the increment is cut into at least
+    * `nBatches` files and into enough that a trigger averages at most
+    * 80% of [[graft.operators.SignatureIndex.MaxGateBatchRows]] (the
+    * doc_id-range cuts are not row-exact; the headroom absorbs uneven
+    * id density). Only valid for a batch-split-INVARIANT gate, where
+    * the count changes the trigger count and nothing else. The
+    * increment is counted once per source fingerprint. */
+  private[graft] def gateStagingBatches(s: SparkSession, d: String,
+                                        nBatches: Int,
+                                        increment: => DataFrame): Int = {
+    val src = java.nio.file.Paths.get(d, "documents.parquet")
+    val rows = gateIncrementRows.get(d, StreamingOps.sourceFingerprint(src))(
+      increment.count())
+    val perTrigger = graft.operators.SignatureIndex.MaxGateBatchRows * 4L / 5
+    math.max(nBatches, ((rows + perTrigger - 1) / perTrigger).toInt)
+  }
+
+  private val gateIncrementRows =
+    new graft.operators.IndexLifecycle.FingerprintMemo[Long]
 
   /** stream_embed_gate: the streaming SEMANTIC ingest gate — the
     * embedding-side twin of [[stream_ingest_gate]]: new embeddings
@@ -565,6 +589,10 @@ object StreamingQueries {
       val origBucket = pmod(graft.functions.HashFunctions.hash32(
         pmod(col("doc_id"), lit(StreamingOps.ReplayIdOffset))
           .cast("string")), lit(100))
+      // the cuts stay at nBatches: admission here is order-dependent
+      // and the oracle twin replays these exact cuts, so an increment
+      // too large for them fails loudly at the gate's batch bound
+      // instead of being re-cut (contrast gateStagingBatches)
       val inc = StreamingOps.documentsStreamWithReplay(s, d, nBatches)
         .filter(origBucket >= 90)
       StreamingOps.runForeachBatch(s, inc,

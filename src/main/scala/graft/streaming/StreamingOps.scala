@@ -304,6 +304,13 @@ object StreamingOps {
       .option("latestFirst", "false")
       .parquet(stageDocBatches(spark, sfDir, nBatches, replayStage0 = true))
 
+  /** Row-group size of the staged document files. A file is one
+    * trigger, and the file source splits it across cores only at
+    * row-group boundaries: with the default 128 MB groups a 130-260 MB
+    * file (ScaleGen's 1M-2M rungs) read as one or two partitions, so
+    * a gate trigger hashed its batch on one or two cores. */
+  private val StagedDocRowGroupBytes = 16L << 20
+
   /** Stage documents.parquet into `nBatches` doc_id-contiguous files
     * under a cache dir keyed like [[stageDir]] (format version, sfDir,
     * source size+mtime) — same atomic-rename build, same stale-key
@@ -341,7 +348,9 @@ object StreamingOps {
         val slice = raw.filter(col("doc_id") >= lo &&
           (if (pos == nBatches - 1) lit(true) else col("doc_id") < hi))
         val tmp = build.resolve(s"tmp_$pos")
-        slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        slice.coalesce(1).write.mode("overwrite")
+          .option("parquet.block.size", StagedDocRowGroupBytes)
+          .parquet(tmp.toString)
         val part = scala.util.Using.resource(Files.list(tmp))(
           _.iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet"))

@@ -1,0 +1,46 @@
+/* Bridge package (see HashExpressions.scala): QueryExecution's
+ * executeCollect path, SQLExecution, LocalRelation and classic
+ * Dataset.ofRows are private[sql], so the compact driver-local relation
+ * helpers live in a subpackage of org.apache.spark.sql. */
+package org.apache.spark.sql.graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
+
+/** Driver-local relations held as Catalyst rows. `Dataset.collect`
+  * deserializes every row into boxed JVM objects (an array column
+  * becomes a sequence of boxed values): on shingle-set rows that is
+  * about 4x the bytes of the UnsafeRows the executors already ship,
+  * and both copies are live at the end of the collect. These helpers
+  * keep the UnsafeRows and build a relation straight from them. */
+object LocalRows {
+
+  /** Collect `df` as UnsafeRows, under a SQL execution id exactly as
+    * `Dataset.collect` runs (listeners and the SQL tab see it). */
+  def collect(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
+  /** [[collect]] with at most `n` rows from each partition, in ONE job
+    * over all partitions. A global limit's collect scans the first
+    * partition alone, then the rest in a second job — serializing the
+    * work of a multi-partition frame. */
+  def collectPerPartition(df: DataFrame, n: Int): Array[InternalRow] =
+    collect(org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalLimit(Literal(n), df.queryExecution.logical)))
+
+  /** A DataFrame over driver-held rows of `schema` (no job to build). */
+  def frame(spark: SparkSession, schema: StructType,
+            rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+}
