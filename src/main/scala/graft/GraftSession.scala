@@ -34,6 +34,28 @@ object GraftSession {
     s
   }
 
+  /** Cores of the entry points' local master: SPARK_GRAFT_CPUS, else
+    * every available processor. */
+  private[graft] def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  /** The one session `Bench`, `Verify` and `ScaleBench` run in:
+    * `local[localCpus]` with one shuffle partition per core, AQE on,
+    * UTC, no UI, WARN logging. The bench series is only comparable
+    * while this config stays fixed. */
+  private[graft] def localSession(): SparkSession = {
+    val cpus = localCpus
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Register every testdata table of `sfDir` as a temp view. */
   def registerViews(spark: SparkSession, sfDir: String): Unit =
     Tables.names.foreach { n =>

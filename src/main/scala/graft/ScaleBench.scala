@@ -70,16 +70,8 @@ object ScaleBench {
     val onlyQueries = if (args.length > 1)
       Some(args(1).split(",").map(_.trim).toSet) else None
     val base = sys.env.getOrElse("GRAFT_SCALE_BASE", "target/scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.localCpus
+    val spark = GraftSession.localSession()
     // state stores shard across all cores at scale (the cluster-shaped
     // config); the 4-store default is the small-SF gate's tuning.
     // Provider pinned to RocksDB: every ladder rung measures the 100-TB

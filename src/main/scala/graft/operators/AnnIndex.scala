@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -1005,8 +1006,16 @@ object AnnIndex {
     * ([[appendToAnnIndex]]'s delta-dedup contract); duplicate sidecar
     * rows collapse at the exclusion's distinct.
     *
-    * Admission is MATERIALIZED (checkpoint) before either write — its
-    * plan reads the directories the appends mutate. */
+    * The admitted set is collected into a DRIVER-LOCAL relation before
+    * either write — its plan reads the directories the appends mutate —
+    * as [[SignatureIndex.gateAndAppendBatch]] does: the appends need no
+    * checkpoint, and an executor lost mid-append cannot lose or
+    * recompute the decision. The collect is bounded by
+    * [[IndexLifecycle.MaxIncrementIds]]: an admitted row is three longs,
+    * held as one UnsafeRow of 92 bytes (SizeEstimator on a 200k-row
+    * collect), so a full bound is ~0.9 GB of driver heap; a trigger
+    * admits at most its own batch, which the stream bounds with
+    * `maxFilesPerTrigger`/`maxBytesPerTrigger`. */
   def gateAndAppendAnnBatch(rows: DataFrame, path: String,
                             threshold: Long, batchId: Long,
                             nProbe: Int = GateNProbe): DataFrame = {
@@ -1020,9 +1029,16 @@ object AnnIndex {
       else None
     val probes = rows.select(col("vec_id").as("probe_id"),
       col("qv").as("pqv"))
-    val admitted = gateBatchThroughAnnIndex(probes, path, threshold,
-      nProbe, excludeIds = excl).localCheckpoint(true)
-    if (!admitted.isEmpty) {
+    val decided = gateBatchThroughAnnIndex(probes, path, threshold,
+      nProbe, excludeIds = excl)
+    val rowsAdmitted = IndexLifecycle.boundedCollect(decided,
+      IndexLifecycle.MaxIncrementIds,
+      s"gate-append admitted more than ${IndexLifecycle.MaxIncrementIds} " +
+        "rows in one batch — bound the stream's " +
+        "maxFilesPerTrigger/maxBytesPerTrigger")(LocalRows.collectPerPartition)
+    val admitted =
+      LocalRows.frame(spark, decided.schema, rowsAdmitted.toSeq)
+    if (rowsAdmitted.nonEmpty) {
       // SIDECAR FIRST, index append second (round-12 second-pass
       // finding: the reverse order re-opened the replay hole exactly
       // in the crash window the sidecar exists for — sigs landed, no

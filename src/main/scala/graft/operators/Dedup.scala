@@ -139,15 +139,16 @@ object Dedup {
     stagedSigDirs.add(p)
   }
 
-  /** Delete every scratch dir staged so far. The ladder harnesses call
-    * this BETWEEN measurements: each pass constructs a fresh DataFrame
-    * and with it a fresh staged signature table, the old frames are
-    * dead once their pass finishes, and at the 8M rung one staging is
-    * ~19 GB — accumulating them across a multi-query ladder JVM
-    * overflows the disk (measured: CcProbe's three 4M stagings +
-    * shuffle spill filled the host). Any still-live DataFrame that
-    * references a purged stage becomes invalid — callers own that
-    * lifecycle, which is why this is explicit, not an auto-eviction. */
+  /** Delete every scratch dir staged so far. The ladder harness
+    * (`ScaleBench`) calls this BETWEEN measurements: each pass
+    * constructs a fresh DataFrame and with it a fresh staged signature
+    * table, the old frames are dead once their pass finishes, and at
+    * the 8M rung one staging is ~19 GB — accumulating them across a
+    * multi-query ladder JVM overflows the disk (measured: three 4M
+    * stagings of `graft.CcProbe` at `ad24016` + shuffle spill filled
+    * the host). Any still-live DataFrame that references a purged stage
+    * becomes invalid — callers own that lifecycle, which is why this is
+    * explicit, not an auto-eviction. */
   private[graft] def purgeScratchDirs(): Unit = {
     var p = stagedSigDirs.poll()
     while (p != null) {
@@ -170,7 +171,8 @@ object Dedup {
     * probe, the two broadcast population aggregates, then the final
     * pipeline): inlined, each evaluation re-ran the md5 shingle and
     * MinHash kernels over the whole corpus, and the NearDupProbe
-    * decomposition at the 2M rung showed that prefix re-computation
+    * decomposition (`graft.NearDupProbe` at `ad24016`) at the 2M rung
+    * showed that prefix re-computation
     * WAS the query (108 of 112 s). Post-stage, every pass reads back
     * only the columns it needs (the population aggregates prune the
     * set payload at the parquet scan). This is the per-pass analog of
@@ -236,7 +238,8 @@ object Dedup {
         .select(col("id_a"), col("id_b"), col("n_inter"), col("n_union"),
           col("jaccard_bp"))
     }
-    // NearDupProbe decomposition at the 2M rung: candidates are
+    // NearDupProbe decomposition (`graft.NearDupProbe` at `ad24016`) at the
+    // 2M rung: candidates are
     // bucket-bounded (3.1M pairs, max refined pop 250) and the
     // per-pair Jaccard is trivial — the cost was the signature prefix
     // re-evaluated by every refinement action and join leg, fixed by
@@ -264,7 +267,7 @@ object Dedup {
     // build against a ≥ ~590 MB per-task execution share (local[32],
     // 19 GB pool) is ~9× headroom, and the 3× parquet→build expansion
     // is deliberately rounded up.
-    fatJoinPairs(keyed, "SHUFFLE_HASH",
+    fatJoinPairs(keyed,
       fatJoinWidth(hashed.sparkSession, stagedBytes,
         MinHashCoeffs.length / rowsPerBand))
   }
@@ -273,7 +276,8 @@ object Dedup {
     * the staged bytes are snappy parquet of near-incompressible hash
     * values (~×1.4 back to row bytes) and the SHUFFLE_HASH build adds
     * the UnsafeHashedRelation key table + pointer overhead (~×2 on row
-    * bytes, measured at the 4M rung via FatJoinProbe peak-heap deltas).
+    * bytes, measured at the 4M rung via the peak-heap deltas of
+    * `graft.FatJoinProbe` at `ad24016`).
     * Deliberately rounded UP — an over-wide exchange costs a few extra
     * task launches; an under-wide one is §4.9 (OOM or GC collapse). */
   private val FatBuildExpansion = 3.0
@@ -293,13 +297,10 @@ object Dedup {
                                   stagedBytes: Long, nBands: Int): Option[Int] =
     Sizing.exchangeWidth(spark, stagedBytes, nBands * FatBuildExpansion)
 
-  /** The band self-join tail of the one-pass form, parameterized on the
-    * join strategy and an optional explicit shuffle width so the scale
-    * probe ([[graft.FatJoinProbe]]) can measure the alternatives on the
-    * SAME staged `keyed` frame. `joinHint` is "SHUFFLE_HASH" (build one
-    * leg's partition as an on-heap hash relation — fastest while the
-    * build side fits comfortably) or "MERGE" (external sort both legs —
-    * spills instead of building, stable when it doesn't). `repartitionTo`
+  /** The band self-join tail of the one-pass form: a SHUFFLE_HASH join
+    * (one leg's partition built as an on-heap hash relation; see
+    * [[lshJaccardPairs]] for why MERGE was rejected) with an optional
+    * explicit shuffle width. `repartitionTo`
     * widens the exchange beyond spark.sql.shuffle.partitions: with W
     * concurrent tasks, peak build heap is W × corpus_set_bytes / parts,
     * so parts must scale with the corpus, not stay pinned at the core
@@ -307,12 +308,13 @@ object Dedup {
     * `k`: spark.sql.requireAllClusterKeysForCoPartition (default true)
     * makes EnsureRequirements reject a key-subset partitioning for a
     * co-partitioned join and REWRITE the user exchange back to all keys
-    * at the session-default width — measured in the 4M probe, a
+    * at the session-default width — measured in the 4M probe
+    * (`graft.FatJoinProbe` at `ad24016`), a
     * repartition(256, k) silently became hashpartitioning(k, band,
     * band_sig, 32) and the build OOMed exactly as unwidened. On the
     * full tuple the explicit numPartitions survives (and stays exempt
     * from AQE coalescing: REPARTITION_BY_NUM origin). */
-  private[graft] def fatJoinPairs(keyed0: DataFrame, joinHint: String,
+  private[graft] def fatJoinPairs(keyed0: DataFrame,
                                   repartitionTo: Option[Int],
                                   crossTagCol: Option[String] = None): DataFrame = {
     // pair rule: self-dedup keeps each unordered pair once (id_a <
@@ -339,7 +341,7 @@ object Dedup {
         k1.repartition(n, col("k"), col("band"), col("band_sig"), col("sub"))
       case None    => keyed0
     }
-    keyed.as("a").join(keyed.as("b").hint(joinHint),
+    keyed.as("a").join(keyed.as("b").hint("SHUFFLE_HASH"),
         col("a.k") === col("b.k") &&
           col("a.band") === col("b.band") &&
           col("a.band_sig") === col("b.band_sig") &&
@@ -416,7 +418,7 @@ object Dedup {
       .unionByName(corpusHashed.withColumn("_new", lit(false)))
     val (keyed, stagedBytes) = probeKeyedSized(tagged, rowsPerBand,
       capPop, maxExtraBits, carryCols = Seq("_new"))
-    fatJoinPairs(keyed, "SHUFFLE_HASH",
+    fatJoinPairs(keyed,
       fatJoinWidth(newHashed.sparkSession, stagedBytes,
         MinHashCoeffs.length / rowsPerBand),
       crossTagCol = Some("_new"))

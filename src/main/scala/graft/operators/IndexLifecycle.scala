@@ -496,7 +496,8 @@ object IndexLifecycle {
     * `executedPlan`, and `QueryStageExec` hides its subtree in `.plan`
     * (its `children` is empty — the round-12 lesson that cost a false
     * plan-audit pass). Run an action on `df` first so AQE has
-    * finalized. Shared by the drift-rung probe and the plan-pinning
+    * finalized. Shared by the drift-rung probe (`graft.AnnDriftProbe` at
+    * `ad24016`) and the plan-pinning
     * specs so the unwrap subtlety is maintained once. */
   def executedPlanNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
     planNodes(df.queryExecution.executedPlan)

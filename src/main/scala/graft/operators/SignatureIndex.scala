@@ -191,7 +191,8 @@ object SignatureIndex {
     * became hot since the build are not split, so their pair-join
     * populations grow unbounded. A quarter of the corpus is far below
     * any density shift that moves a bucket past capPop in practice;
-    * the IndexProbe ladder records the append + post-append probe
+    * the IndexProbe ladder (`graft.IndexProbe` at `ad24016`) records
+    * the append + post-append probe
     * costs that make this policy adjudicable. Shared policy constant
     * ([[IndexLifecycle.RebuildFraction]]). */
   val RebuildFraction: Double = IndexLifecycle.RebuildFraction
@@ -250,7 +251,8 @@ object SignatureIndex {
     // maintenance (cross(inc, live) ∪ self(inc), exactly the delta)
     // was implemented, MEASURED, and reverted in round 12: the
     // restage rides the PERSISTED signatures — no re-hashing — at
-    // 8.8/42.9 s (1M/2M, IndexProbe pairs mode), while the increment
+    // 8.8/42.9 s (1M/2M, `graft.IndexProbe` pairs mode at
+    // `ad24016`), while the increment
     // path pays the across-probe's corpus scan plus increment
     // hashing (18.8/62.8 s) — invalidate-and-lazily-restage wins at
     // every measured rung, and only pays when clustering is actually
@@ -793,13 +795,14 @@ object SignatureIndex {
       }
     val keyed = keyedFromSig(
       liveSig(spark, indexPath), meta, hot, hot2)
-    Dedup.fatJoinPairs(keyed, "SHUFFLE_HASH",
+    Dedup.fatJoinPairs(keyed,
       Dedup.fatJoinWidth(spark, meta.sigBytes,
         MinHashCoeffs.length / meta.rowsPerBand))
   }
 
   /** STAGED STRONG-PAIR GRAPH, materialized once beside the index
-    * (`pairs/`): the round-9 CcProbe decomposition showed connected
+    * (`pairs/`): the round-9 CcProbe decomposition (`graft.CcProbe` at
+    * `ad24016`) showed connected
     * components is FLAT across the ladder (21.0 s at 2M → 22.1 s at
     * 4M, 5 rounds both) while strong-edge production carries the
     * entire dedup_clusters growth (~130-210 s of the 308 s 4M rung) —
@@ -830,7 +833,7 @@ object SignatureIndex {
         Paths.get(indexPath, "tombstones"))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // NOTE: the band join staged a corpus-sized scratch table; the
-      // ladder harnesses reclaim it via Dedup.purgeScratchDirs()
+      // ladder harness (ScaleBench) reclaims it via Dedup.purgeScratchDirs()
       // between measurements (not here — the caller owns scratch
       // lifecycle, and purging inside would kill sibling stages)
     }

@@ -132,7 +132,8 @@ object DataPipelineQueries {
 
   /** dedup_index_clusters: near-dup clusters served off the persisted
     * index's STAGED strong-pair graph (SCALING.md §4.14): the CcProbe
-    * decomposition showed CC is flat across the ladder while edge
+    * decomposition (`graft.CcProbe` at `ad24016`) showed CC is flat
+    * across the ladder while edge
     * production carries all of dedup_clusters' growth, so the pairs
     * are materialized ONCE beside the index and every clustering run
     * pays a pairs scan + the flat CC rounds. Identical frame to
@@ -270,7 +271,8 @@ object DataPipelineQueries {
     containmentPairs(s, d, ContainGramCap)
 
   /** The containment body, parameterized on the rare-gram holder cap
-    * so the cap-sensitivity probe (ContainProbe) and the planted-
+    * so the cap-sensitivity probe (`graft.ContainProbe` at `ad24016`)
+    * and the planted-
     * recall spec can sweep it: the candidate pair space must stay
     * bucket-bounded (≤ cap²/2 per gram bucket) as the cap grows, and
     * a planted short-in-long containment pair must be recalled at
@@ -1717,7 +1719,8 @@ object DataPipelineQueries {
     // BOTH families to collide across different grams — expected
     // false positives at 10^9 grams ≈ n²·(2^-64·2^-32) ≈ 10^-11; the
     // oracle compares at SFs where even one family is collision-free.
-    // KERNEL SHAPE (round-13 decomposition, SpanProbe): the first cut
+    // KERNEL SHAPE (round-13 decomposition, `graft.SpanProbe` at
+    // `ad24016`): the first cut
     // built the key inside transform/aggregate higher-order functions
     // — which Spark evaluates INTERPRETED, per-element lambda binding
     // and all (0.9 s for 235k grams at sf0.1, ~the whole query).
@@ -1740,7 +1743,8 @@ object DataPipelineQueries {
     // groupBy-then-join-back form (rounds ≤12) evaluated the gram
     // kernel TWICE — two full corpus scans + tokenizations at 100 TB —
     // and shipped the gram rows through a second exchange when the dup
-    // set outgrew broadcast (SpanProbe at sf0.1: 1.11 s vs 0.57 s for
+    // set outgrew broadcast (`graft.SpanProbe` at `ad24016`, sf0.1:
+    // 1.11 s vs 0.57 s for
     // the window). The window's per-task sort is sized by the shared
     // §4.9 width rule from the free text-bytes signal (gram rows ≈
     // token count ≈ bytes/6, ~48 B per sort row → ~8 B of working set

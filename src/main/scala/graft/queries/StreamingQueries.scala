@@ -679,7 +679,8 @@ object StreamingQueries {
           admitted.select(col("probe_id").as("vec_id"), col("nn_id"),
             col("score"))
         })
-        .localCheckpoint(true)
+        // reads the foreachBatch sink, not the index: the mutated copy
+        // can be reclaimed before the caller runs it
         .orderBy(col("vec_id"))
     }
   }
@@ -740,7 +741,8 @@ object StreamingQueries {
               .withColumn("stage", lit(bid))
           }
         })
-        .localCheckpoint(true)
+        // reads the foreachBatch sink, not the index: the mutated copy
+        // can be reclaimed before the caller runs it
         .orderBy(col("stage"), col("probe_id"), col("rank"))
     }
   }
@@ -808,7 +810,8 @@ object StreamingQueries {
               .withColumn("stage", lit(bid))
           }
         })
-        .localCheckpoint(true)
+        // reads the foreachBatch sink, not the index: the mutated copy
+        // can be reclaimed before the caller runs it
         .orderBy(col("stage"), col("id_new"), col("id_old"))
     }
   }

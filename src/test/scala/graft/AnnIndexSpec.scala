@@ -664,8 +664,11 @@ class AnnIndexSpec extends AnyFunSuite {
     // threshold ABOVE self-dot: nothing in the index rejects them, so
     // both co-admit on first delivery
     val thr = selfDot + 1
-    val a1 = AnnIndex.gateAndAppendAnnBatch(batch, idx, thr, batchId = 7)
-      .select(col("probe_id")).collect().map(_.getLong(0)).sorted.toSeq
+    val f1 = AnnIndex.gateAndAppendAnnBatch(batch, idx, thr, batchId = 7)
+    // the decision comes back as a driver-local relation, never a checkpoint
+    assert(f1.queryExecution.logical.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]).isEmpty)
+    val a1 = f1.select(col("probe_id")).collect().map(_.getLong(0)).sorted.toSeq
     assert(a1 == Seq(9001L, 9002L), s"first delivery admitted $a1")
     // crash-redelivery of the SAME batchId: without the batch-scoped
     // exclusion each twin's top-1 is now the OTHER (score = self-dot

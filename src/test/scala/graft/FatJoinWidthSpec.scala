@@ -44,7 +44,7 @@ class FatJoinWidthSpec extends AnyFunSuite {
   }
 
   test("widened fat join: explicit width survives planning on the full key tuple") {
-    val widened = Dedup.fatJoinPairs(keyed, "SHUFFLE_HASH",
+    val widened = Dedup.fatJoinPairs(keyed,
       Some(defaultParts * 2))
     val p = widened.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
@@ -147,15 +147,12 @@ class FatJoinWidthSpec extends AnyFunSuite {
       "one-pass across form diverged from the two-phase frame")
   }
 
-  test("widened SHUFFLE_HASH and MERGE frames equal the default-width frame") {
+  test("widened SHUFFLE_HASH frame equals the default-width frame") {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.mkString("|")).sorted.toSeq
-    val base = canon(Dedup.fatJoinPairs(keyed, "SHUFFLE_HASH", None))
+    val base = canon(Dedup.fatJoinPairs(keyed, None))
     assert(base.nonEmpty, "fixture must produce candidate pairs")
-    assert(canon(Dedup.fatJoinPairs(keyed, "SHUFFLE_HASH",
+    assert(canon(Dedup.fatJoinPairs(keyed,
       Some(defaultParts * 2))) == base)
-    assert(canon(Dedup.fatJoinPairs(keyed, "MERGE",
-      Some(defaultParts * 2))) == base)
-    assert(canon(Dedup.fatJoinPairs(keyed, "MERGE", None)) == base)
   }
 }
