@@ -223,12 +223,13 @@ object RoutedStore {
     import java.nio.file.Files
     val ckpt = Files.createTempDirectory("graft_routed_produce_ckpt_")
     try {
-      val q = routed.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          appendBatchExactlyOnce(batch, batchId, path)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
+      val q = graft.streaming.StreamingOps.withStreamStart(routed.sparkSession)(
+        routed.writeStream
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            appendBatchExactlyOnce(batch, batchId, path)
+          }
+          .option("checkpointLocation", ckpt.toString)
+          .start())
       try q.processAllAvailable() finally q.stop()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
   }

@@ -99,16 +99,17 @@ object CompactionJob {
                   store: TrackletStore, graph: GraphStore,
                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = saves.sparkSession
-    graft.streaming.CompletionCounter.completionJobsTtl(saves)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.CompletionCounter.PackJob], _: Long) =>
-        import spark.implicits._
-        val jobs = batch.map(_.task_id).collect().toSeq.sorted
-        run(spark, jobs, store, graph)
-        ()
-      }
-      .start()
+    graft.streaming.StreamingOps.withStreamStart(spark)(
+      graft.streaming.CompletionCounter.completionJobsTtl(saves)
+        .writeStream
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.streaming.CompletionCounter.PackJob], _: Long) =>
+          import spark.implicits._
+          val jobs = batch.map(_.task_id).collect().toSeq.sorted
+          run(spark, jobs, store, graph)
+          ()
+        }
+        .start())
   }
 }

@@ -72,7 +72,10 @@ object KafkaEdge {
         col("payload_url"), col("payload_json"))).cast("binary").as("value"))
 
   /** Writer with checkpointing (W4: durable checkpoint dir, no
-    * delete-on-start). */
+    * delete-on-start), not started: the caller owns the start scope.
+    * Call `start()` inside [[StreamingOps.withStreamStart]], as every
+    * stream graft starts itself does, so the stream's tasks reuse the
+    * classes earlier runs compiled. */
   def writeEnvelopes(df: DataFrame, brokers: String,
                      checkpointDir: String): DataStreamWriter[Row] =
     df.writeStream

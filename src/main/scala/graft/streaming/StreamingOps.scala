@@ -3,7 +3,9 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.artifact.graft.ArtifactScope
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StreamingInternals
 import org.apache.spark.sql.types._
 
 /** Structured Streaming building blocks (SURVEY §2.9).
@@ -568,9 +570,10 @@ object StreamingOps {
     * components local/distributed split: both paths produce identical
     * results (the oracle twins hold on either provider), only the
     * state-backing cost model changes. The recovery proof
-    * ([[runWithRestart]]), the RocksDB spec pin (StreamingSpec), and
-    * the scale ladder (ScaleBench) set `graft.stateProvider=rocksdb`
-    * explicitly so the 100-TB configuration stays oracle-checked. */
+    * ([[runWithRestart]]) runs on RocksDB always, and the RocksDB spec
+    * pin (StreamingSpec) and the scale ladder (ScaleBench) set
+    * `graft.stateProvider=rocksdb`, so the 100-TB configuration stays
+    * oracle-checked. */
   val AutoRocksDBSourceBytes: Long = 64L << 20
 
   /** Total on-disk bytes of `stream`'s OWN file sources, from a walk of
@@ -582,8 +585,7 @@ object StreamingOps {
     * driver-side work: one directory walk per source path. */
   private[graft] def streamSourceBytes(stream: DataFrame): Option[Long] = {
     import java.nio.file.{Files, Paths}
-    val paths = org.apache.spark.sql.graft.StreamingInternals
-      .fileSourcePaths(stream)
+    val paths = StreamingInternals.fileSourcePaths(stream)
       .map { p => // strip a file: scheme if present; else use verbatim
         val uriPath = scala.util.Try(java.net.URI.create(p).getPath)
           .toOption.filter(s => s != null && s.nonEmpty)
@@ -600,9 +602,82 @@ object StreamingOps {
     }.sum)
   }
 
-  /** Run `body` with the streaming state configuration the engine
-    * deploys with — RocksDB provider, changelog checkpointing, state
-    * partitions capped at 4 — restoring every touched setting after.
+  /** The state provider a stream over `sourceBytes` of file sources
+    * runs on: explicit `graft.stateProvider` (rocksdb|memory) wins;
+    * otherwise size-driven off the QUERY'S OWN file sources — RocksDB
+    * iff they total at least AutoRocksDBSourceBytes. A stream with no
+    * file source (memory/rate test streams) has ephemeral toy state by
+    * construction → in-memory provider; every durability proof and the
+    * scale ladder pin rocksdb explicitly. */
+  private def stateProvider(spark: SparkSession,
+                            sourceBytes: Option[Long]): String =
+    spark.conf.getOption("graft.stateProvider") match {
+      case Some("rocksdb") => RocksDBProvider
+      case Some("memory")  => MemoryProvider
+      case _ =>
+        if (sourceBytes.exists(_ >= AutoRocksDBSourceBytes)) RocksDBProvider
+        else MemoryProvider
+    }
+
+  /** Run `body` with each of `settings` set on `spark`, restoring
+    * every touched key after exactly as it was found: a key the
+    * session had set gets its value back, a key it had not set is
+    * unset again. */
+  private def withConfs[A](spark: SparkSession,
+                           settings: Seq[(String, String)])(body: => A): A = {
+    val prev = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally settings.foreach { case (k, _) =>
+      prev.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None    => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** The session conf that scopes a session's artifacts (jars,
+    * classes) and, on the executors, its classloader. */
+  private val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** The settings every stream graft starts is started under.
+    *
+    * A stream runs in a clone of the starting session, made when the
+    * stream starts, and with artifact isolation on (Spark's default)
+    * each clone gets an artifact scope of its own: a fresh session id,
+    * so on the executors a fresh classloader. Spark's generated-code
+    * cache is keyed on (the thread's context classloader, code), so
+    * every run of every stream compiled each of its whole-stage classes
+    * again in its tasks, however often the same code ran before. The
+    * clone is therefore started outside per-session isolation: its
+    * tasks run under the executor's shared classloader and hit classes
+    * compiled by earlier runs and triggers.
+    *
+    * Isolation stays on when the starting session holds jars or
+    * classes of its own, which the stream's tasks may need. The
+    * starting session's own scope never changes: Spark fixes it
+    * lazily, from the conf of that moment, when the session first
+    * needs its artifact manager (its first SQL execution, or its
+    * first clone at a stream start), so it is fixed here before the
+    * conf is touched. A fresh session whose first action is a stream
+    * run would otherwise lose its isolation for good. */
+  private def streamStartSettings(spark: SparkSession): Seq[(String, String)] = {
+    ArtifactScope.fix(spark)
+    if (ArtifactScope.hasSessionArtifacts(spark)) Nil
+    else Seq(ArtifactIsolationKey -> "false")
+  }
+
+  /** Start streams of `spark` inside `body` under the stream start
+    * settings ([[streamStartSettings]]), restored after. A stream takes
+    * its conf at `start()`, so wrapping the start is enough; the
+    * runners below also wrap the run, with the state configuration. */
+  def withStreamStart[A](spark: SparkSession)(body: => A): A =
+    withConfs(spark, streamStartSettings(spark))(body)
+
+  /** Run `body` under the stream start settings plus the streaming
+    * state configuration the engine deploys with — `provider`,
+    * changelog checkpointing, state partitions capped at 4 — and
+    * `extra`, restoring every touched setting after.
     *
     * Streaming state cost scales with the number of state-store
     * partitions (one store + checkpoint files each, per stateful op).
@@ -619,44 +694,17 @@ object StreamingOps {
     * not a full RocksDB snapshot upload — the per-batch fixed cost
     * that dominates short batches, and exactly the knob a 100-TB
     * deployment flips for second-scale triggers. */
-  private def withStateConfig[A](spark: SparkSession,
-                                 sourceBytes: Option[Long])(body: => A): A = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = spark.conf.getOption(providerKey)
-    val prevChangelog = spark.conf.getOption(changelogKey)
+  private def withStateConfig[A](spark: SparkSession, provider: String,
+                                 extra: Seq[(String, String)] = Nil)
+                                (body: => A): A = {
     val stateParts = spark.conf.getOption("graft.statePartitions")
-      .map(_.toInt).getOrElse(math.min(4, prev.toInt))
-    // provider choice: explicit `graft.stateProvider` (rocksdb|memory)
-    // wins; otherwise size-driven off the QUERY'S OWN file sources —
-    // RocksDB iff they total at least AutoRocksDBSourceBytes. A stream
-    // with no file source (memory/rate test streams) has ephemeral toy
-    // state by construction → in-memory provider; every durability
-    // proof and the scale ladder pin rocksdb explicitly.
-    val provider = spark.conf.getOption("graft.stateProvider") match {
-      case Some("rocksdb") => RocksDBProvider
-      case Some("memory")  => MemoryProvider
-      case _ =>
-        if (sourceBytes.exists(_ >= AutoRocksDBSourceBytes)) RocksDBProvider
-        else MemoryProvider
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    spark.conf.set(providerKey, provider)
-    spark.conf.set(changelogKey, "true")
-    try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None    => spark.conf.unset(providerKey)
-      }
-      prevChangelog match {
-        case Some(v) => spark.conf.set(changelogKey, v)
-        case None    => spark.conf.unset(changelogKey)
-      }
-    }
+      .map(_.toInt)
+      .getOrElse(math.min(4, spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    withConfs(spark, streamStartSettings(spark) ++ Seq(
+      "spark.sql.shuffle.partitions" -> stateParts.toString,
+      "spark.sql.streaming.stateStore.providerClass" -> provider,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
+    ) ++ extra)(body)
   }
 
   /** `noDataBatches = false` disables Spark's trailing no-data
@@ -674,19 +722,16 @@ object StreamingOps {
   def runToMemory(spark: SparkSession, stream: DataFrame, name: String,
                   outputMode: String,
                   noDataBatches: Boolean = true): DataFrame = {
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.getOption(noDataKey)
-    if (!noDataBatches) spark.conf.set(noDataKey, "false")
-    try withStateConfig(spark, streamSourceBytes(stream)) {
+    val noData =
+      if (noDataBatches) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    withStateConfig(spark, stateProvider(spark, streamSourceBytes(stream)),
+        noData) {
       // Ephemeral run = ephemeral checkpoint: state/offset/commit writes
       // are fsync'd, so place them on tmpfs when present instead of disk
       // (durable pipelines pass a real checkpointLocation of their own,
       // e.g. CompactionJob.startStream).
-      val ckptBase = new java.io.File("/dev/shm")
-      val ckpt = java.nio.file.Files.createTempDirectory(
-        (if (ckptBase.isDirectory && ckptBase.canWrite) ckptBase.toPath
-         else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))),
-        "graft_ckpt_")
+      val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_")
       try {
         val q = stream.writeStream
           .format("memory")
@@ -702,9 +747,6 @@ object StreamingOps {
       } finally {
         org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
       }
-    } finally prevNoData match {
-      case Some(v) => spark.conf.set(noDataKey, v)
-      case None    => spark.conf.unset(noDataKey)
     }
     spark.table(name)
   }
@@ -723,22 +765,17 @@ object StreamingOps {
     * re-delivered batch (same batchId, deterministic transform)
     * overwrites its own partition with identical content instead of
     * appending a second copy (the [[graft.storage.RoutedStore]]
-    * contract). The sink dir lives under [[foreachBatchOutRoot]] on
+    * contract). The sink dir lives under [[streamOutRoot]] on
     * local tmp and is reclaimed at JVM exit (the returned frame reads
     * it lazily, with the schema the batches wrote — no
     * schema-inference job). */
   def runForeachBatch(spark: SparkSession, stream: DataFrame, name: String,
                       fn: (DataFrame, Long) => DataFrame): DataFrame = {
     import java.nio.file.Files
-    val shm = new java.io.File("/dev/shm")
-    val ckpt = Files.createTempDirectory(
-      (if (shm.isDirectory && shm.canWrite) shm.toPath
-       else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))),
-      s"graft_fb_ckpt_${name}_")
-    val out = Files.createTempDirectory(
-      Files.createDirectories(foreachBatchOutRoot), s"${name}_")
+    val ckpt = Files.createTempDirectory(ckptBase, s"graft_fb_ckpt_${name}_")
+    val out = streamOutDir(name)
     @volatile var resultSchema: Option[org.apache.spark.sql.types.StructType] = None
-    try withStateConfig(spark, streamSourceBytes(stream)) {
+    try withStateConfig(spark, stateProvider(spark, streamSourceBytes(stream))) {
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val result = fn(batch, batchId)
@@ -769,10 +806,25 @@ object StreamingOps {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Per-JVM parent of every [[runForeachBatch]] sink, deleted by one
-    * shutdown hook: a long-lived session running many streams
+  /** Where ephemeral stream checkpoints go: tmpfs when present (every
+    * offset, commit and state write is fsync'd), else the JVM tmp dir.
+    * Each runner deletes its checkpoint when its run ends. */
+  private def ckptBase: java.nio.file.Path = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) shm.toPath
+    else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+  }
+
+  /** A fresh sink dir for a run of `name` under [[streamOutRoot]]. */
+  private def streamOutDir(name: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(streamOutRoot), s"${name}_")
+
+  /** Per-JVM parent of every sink a runner returns a lazy frame over
+    * ([[runForeachBatch]], [[runWithRestart]]), on local tmp, deleted
+    * by one shutdown hook: a long-lived session running many streams
     * registers one hook thread, not one per run. */
-  private lazy val foreachBatchOutRoot: java.nio.file.Path = {
+  private lazy val streamOutRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft_fb_out_")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       try org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
@@ -801,35 +853,26 @@ object StreamingOps {
 
   def runWithRestart(spark: SparkSession, mkStream: () => DataFrame,
                      name: String): DataFrame = {
-    // Ephemeral harness run = ephemeral checkpoint/sink placement, same
-    // rule as runToMemory: every offset/commit/changelog write is
-    // fsync'd, so prefer tmpfs. The recovery property under test
-    // (offsets + sink log + RocksDB changelog survive a query kill and
-    // restart) is filesystem-agnostic — production pipelines pass a
-    // durable checkpointLocation of their own.
-    val shm = new java.io.File("/dev/shm")
-    val base = java.nio.file.Files.createTempDirectory(
-      (if (shm.isDirectory && shm.canWrite) shm.toPath
-       else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))),
-      s"graft_${name}_")
-    // the returned frame reads the sink lazily, so the dir must outlive
-    // this call; tmpfs outlives the PROCESS, so reclaim at JVM exit
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
-      catch { case _: java.io.IOException => () }))
-    val out = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
+    // Ephemeral harness run = ephemeral checkpoint, same rule as
+    // runToMemory: every offset/commit/changelog write is fsync'd, so
+    // the checkpoint prefers tmpfs and is deleted when the call ends.
+    // The recovery property under test (offsets + sink log + RocksDB
+    // changelog survive a query kill and restart) is filesystem-
+    // agnostic — production pipelines pass a durable
+    // checkpointLocation of their own. The returned frame reads the
+    // sink lazily, so the sink outlives the call, under streamOutRoot.
+    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase,
+      s"graft_${name}_ckpt_")
+    val out = streamOutDir(name).toString
     // the recovery proof runs PINNED to RocksDB + changelog: what this
     // harness exists to demonstrate is the 100-TB durability story
     // (offsets + sink log + RocksDB changelog surviving a kill), not
     // the small-state fast path the auto provider would pick here
-    val prevPin = spark.conf.getOption("graft.stateProvider")
-    spark.conf.set("graft.stateProvider", "rocksdb")
-    try withStateConfig(spark, sourceBytes = None) { // pinned above
+    try withStateConfig(spark, RocksDBProvider) {
       def start(df: DataFrame) = df.writeStream
         .format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", ckpt.toString)
         .outputMode("append")
         .start()
       // run 1: let the first micro-batch commit, then kill the query
@@ -848,10 +891,7 @@ object StreamingOps {
         lastRestartBatchIds =
           Some((b1, Option(q2.lastProgress).map(_.batchId).getOrElse(-1L)))
       } finally q2.stop()
-    } finally prevPin match {
-      case Some(v) => spark.conf.set("graft.stateProvider", v)
-      case None    => spark.conf.unset("graft.stateProvider")
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
     spark.read.parquet(out)
   }
 

@@ -4,12 +4,13 @@
  * helpers live in a subpackage of org.apache.spark.sql. */
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LocalRelation}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.StructType
 
 /** Driver-local relations held as Catalyst rows. `Dataset.collect`
@@ -31,11 +32,15 @@ object LocalRows {
   /** [[collect]] with at most `n` rows from each partition, in ONE job
     * over all partitions. A global limit's collect scans the first
     * partition alone, then the rest in a second job — serializing the
-    * work of a multi-partition frame. */
-  def collectPerPartition(df: DataFrame, n: Int): Array[InternalRow] =
-    collect(org.apache.spark.sql.classic.Dataset.ofRows(
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      LocalLimit(Literal(n), df.queryExecution.logical)))
+    * work of a multi-partition frame. The cut is not a planned
+    * `LocalLimit`: its generated code names its row counter from a
+    * JVM-global sequence (`_limit_counter_N`), so every call would
+    * compile a class of its own, on the driver and again in the task. */
+  def collectPerPartition(df: DataFrame, n: Int): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      TakePerPartitionExec(n, qe.executedPlan).executeCollect())
+  }
 
   /** A DataFrame over driver-held rows of `schema` (no job to build). */
   def frame(spark: SparkSession, schema: StructType,
@@ -43,4 +48,17 @@ object LocalRows {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+}
+
+/** The first `n` rows of each partition of `child`, as an iterator
+  * cut: no generated code, so the child's whole-stage classes stay the
+  * same from call to call. `executeCollect` ships the rows as
+  * compressed UnsafeRow bytes, as for any collected plan. */
+private case class TakePerPartitionExec(n: Int, child: SparkPlan)
+    extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def doExecute(): RDD[InternalRow] =
+    child.execute().mapPartitionsInternal(_.take(n))
+  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
+    copy(child = newChild)
 }

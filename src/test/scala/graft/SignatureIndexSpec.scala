@@ -388,6 +388,24 @@ class SignatureIndexSpec extends AnyFunSuite {
     assert(canon(admitted) == canon(appended))
   }
 
+  test("gate codegen pin: a second identical gate call compiles no class") {
+    // every trigger of a long-running gate plans the same code; a class
+    // named per call (a planned LocalLimit's `_limit_counter_N`) would
+    // be compiled again on the driver and in a task on every trigger
+    val (idx, incTexts) = gateFixture()
+    def gate() = SignatureIndex
+      .gateBatchThroughIndex(incTexts, idx, keep = Seq("doc_id")).collect()
+    def compiles() = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val first = gate()
+    val before = compiles()
+    val second = gate()
+    assert(compiles() - before == 0,
+      s"the second gate call compiled ${compiles() - before} classes")
+    assert(first.map(_.getLong(0)).sorted.sameElements(
+      second.map(_.getLong(0)).sorted))
+  }
+
   test("a gate batch over the increment bound fails loudly, naming the caps") {
     val (idx, _) = gateFixture()
     val big = spark.range(0, SignatureIndex.MaxGateBatchRows + 1L)

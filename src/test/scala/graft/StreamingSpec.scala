@@ -418,6 +418,94 @@ class StreamingSpec extends AnyFunSuite {
     assert(out == expected)
   }
 
+  private def compiles(): Long = org.apache.spark.metrics.source.CodegenMetrics
+    .METRIC_COMPILATION_TIME.getCount
+
+  /** The identity of the context classloader each task of `ds` runs
+    * under, one row per input row. */
+  private def taskLoaders(ds: org.apache.spark.sql.Dataset[Int]) =
+    ds.mapPartitions { it =>
+      val loader = System.identityHashCode(
+        Thread.currentThread.getContextClassLoader)
+      it.map(_ => loader)
+    }
+
+  /** One run of the same memory-sink stream: the task loaders it saw
+    * and the generated classes compiled during the run. */
+  private def loaderStreamRun(name: String): (Set[Int], Long) = {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Int]
+    in.addData(1 to 8)
+    val before = compiles()
+    val out = StreamingOps.runToMemory(spark,
+      taskLoaders(in.toDS()).toDF("loader"), name, "append")
+    val compiled = compiles() - before
+    (out.as[Int].collect().toSet, compiled)
+  }
+
+  test("stream start scope: runs share one task classloader; a rerun compiles nothing") {
+    // each stream runs in a clone of the starting session; an isolated
+    // clone gets a classloader of its own on the executor, and the
+    // generated-code cache is keyed on the loader, so every run would
+    // compile its classes again in its tasks
+    val (first, _) = loaderStreamRun("loader_run_1")
+    val (second, compiled) = loaderStreamRun("loader_run_2")
+    assert(first.size == 1 && first == second,
+      s"runs ran their tasks under different loaders: $first vs $second")
+    assert(compiled == 0, s"the second run compiled $compiled classes")
+  }
+
+  test("stream start scope restores the parent's settings, also after a stream that throws") {
+    implicit val sqlCtx = spark.sqlContext
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "spark.sql.artifact.isolation.enabled")
+    def settings() = {
+      val all = spark.conf.getAll
+      keys.map(k => k -> all.get(k))
+    }
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    // above the state cap of 4, so the scope must change and restore it
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try {
+      val found = settings()
+      val ok = MemoryStream[Int]
+      ok.addData(1 to 4)
+      assert(StreamingOps.runToMemory(spark, ok.toDF(), "scope_ok", "append")
+        .count() == 4)
+      assert(settings() == found)
+      val bad = MemoryStream[Int]
+      bad.addData(1 to 4)
+      val boom = bad.toDS().map(i =>
+        if (i > 0) throw new IllegalStateException("boom") else i)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        StreamingOps.runToMemory(spark, boom.toDF(), "scope_throws", "append"))
+      assert(settings() == found)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+  test("a fresh session whose first action is a stream run keeps its own artifact scope") {
+    val fresh = spark.newSession()
+    implicit val sqlCtx = fresh.sqlContext
+    import fresh.implicits._
+    val in = MemoryStream[Int]
+    in.addData(1 to 4)
+    // the fresh session first needs its artifact scope for the clone
+    // its stream starts in, and then for the batch function's job,
+    // both while the stream start scope is open
+    val out = StreamingOps.runForeachBatch(fresh, in.toDF(), "fresh_first",
+      (batch, _) => { fresh.range(1).count(); batch })
+    assert(out.count() == 4)
+    // its batch jobs still run under a loader of their own, not the
+    // executor's shared loader the streams run under
+    val batchLoader = taskLoaders(fresh.range(0, 4, 1, 2).as[Long].map(_.toInt))
+      .collect().toSet
+    val (streamLoader, _) = loaderStreamRun("loader_run_fresh")
+    assert(batchLoader.size == 1 && batchLoader != streamLoader,
+      s"batch loaders $batchLoader, stream loaders $streamLoader")
+  }
+
   test("streaming windowed agg equals its batch twin") {
     val streamed = StreamingQueriesAccess.windowedAgg(spark, sf)
     val batch = Tables.events(spark, sf)
