@@ -32,6 +32,11 @@ import scala.jdk.CollectionConverters._
   *    column (vec_id, payload/metadata columns, qv) rides along, so
   *    filtered search reads metadata predicates from the same pruned
   *    scan;
+  *  - `delta/`, `tombstones/`, `gapp_batches/` — the append, delete
+  *    and gate-append side tables;
+  *  - `_MANIFEST` — the layout snapshot listing the files of `cells/`
+  *    and the three side tables; every read resolves them through it
+  *    ([[IndexLifecycle]]);
   *  - `_INDEX_META` — nCells/dims/nVecs/appendedVecs stamp.
   *
   * Probe scale shape (audited in AnnIndexSpec):
@@ -58,7 +63,10 @@ import scala.jdk.CollectionConverters._
   */
 object AnnIndex {
 
-  private val FormatVersion = 1
+  /** On-disk format generation (2: the manifest-read layout); the
+    * build-once cache dir names carry it, so an index written under
+    * another generation is rebuilt, not read. */
+  private[graft] val FormatVersion = 2
 
   /** Largest centroid count planned as inline Catalyst literals; above
     * this the bulk mapPartitions kernel is dispatched. */
@@ -145,35 +153,14 @@ object AnnIndex {
     * delta is scanned IN FULL by every probe (its cell predicate is a
     * PushedFilter, not a partition prune), so file COUNT, not bytes,
     * is the trigger. */
-  def needsCompaction(path: String): Boolean = {
-    // delta, tombstone AND gate-append-sidecar part files count: the
-    // first two are scanned by every search, the third by every
-    // gate-append trigger — all three accumulate exactly the per-file
-    // drag the cadence bounds (the sidecar exemption was a round-12
-    // self-review finding). Delta/tombstone counts come from the
-    // LAYOUT MANIFEST when one exists: a previous compaction's
-    // retained-for-readers files are already folded/applied and must
-    // not re-trigger the cadence they no longer cost.
-    val root = Paths.get(path)
-    val snapshotCount = IndexLifecycle.readManifest(root) match {
-      case Some(rel) => rel.count(r =>
-        r.startsWith("delta/") || r.startsWith("tombstones/"))
-      case None => Seq("delta", "tombstones").map { side =>
-        val d = root.resolve(side)
-        if (!Files.isDirectory(d)) 0
-        else scala.util.Using.resource(Files.list(d))(
-          _.iterator().asScala
-            .count(_.getFileName.toString.endsWith(".parquet")))
-      }.sum
-    }
-    val gappDir = root.resolve(GateAppendBatchesDir)
-    val gapp =
-      if (!Files.isDirectory(gappDir)) 0
-      else scala.util.Using.resource(Files.list(gappDir))(
-        _.iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet")))
-    IndexLifecycle.needsCompaction(snapshotCount + gapp)
-  }
+  def needsCompaction(path: String): Boolean =
+    // delta and tombstone files are scanned by every search, sidecar
+    // files by every gate-append trigger: all three accumulate exactly
+    // the per-file drag the cadence bounds. Counted from the snapshot:
+    // a previous compaction's retained-for-readers files no longer
+    // cost anything.
+    IndexLifecycle.needsCompaction(Seq("delta", "tombstones",
+      GateAppendBatchesDir).map(files(path, _).size).sum)
 
   // ---- assignment kernels ----------------------------------------------
 
@@ -284,10 +271,14 @@ object AnnIndex {
                 path: String): Seq[Seq[(Long, Array[Long])]] =
     booksMemo.get(path,
       IndexLifecycle.dirFingerprint(Paths.get(path, "books")))(
-      spark.read.parquet(s"$path/books").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq))
+      booksFrom(spark.read.parquet(s"$path/books")))
+
+  /** (m, cid, qc) codebook rows as per-subspace, cid-sorted books. */
+  private def booksFrom(df: DataFrame): Seq[Seq[(Long, Array[Long])]] =
+    df.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq)
 
   private val booksMemo =
     new IndexLifecycle.FingerprintMemo[Seq[Seq[(Long, Array[Long])]]]()
@@ -356,10 +347,9 @@ object AnnIndex {
     assigned
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    // fresh layout snapshot at the commit point: the build wiped every
-    // side table, so the manifest is exactly the cells listing
-    IndexLifecycle.updateManifest(root)(_ =>
-      IndexLifecycle.listRelParquet(root, "cells"))
+    // fresh layout snapshot: the build wiped every side table, so the
+    // manifest is exactly the cells listing
+    IndexLifecycle.commitFresh(root, Seq("cells"))
     val meta = Meta(cents.size, dims,
       nVecs = spark.read.parquet(s"$path/cells").count(),
       pqM = pqBooks.map(_.size).getOrElse(0), pqSubDim = pqSubDim)
@@ -437,9 +427,8 @@ object AnnIndex {
     // module forbids), so re-using one is a loud error, enforced at
     // increment cost: use a fresh id or rebuild first
     tombstoneIds(spark, path).foreach { case (ts, bytes) =>
-      val clash = IndexLifecycle.boundedIdJoin(
-        assigned, ts, "vec_id", bytes, "left_semi").limit(1).count()
-      require(clash == 0,
+      require(!IndexLifecycle.anyRow(IndexLifecycle.boundedIdJoin(
+        assigned, ts, "vec_id", bytes, "left_semi")),
         s"appendToAnnIndex: increment re-uses tombstoned vec_ids at " +
           s"$path — deleted ids stay deleted until the next rebuild")
     }
@@ -494,17 +483,9 @@ object AnnIndex {
     // only ids PRESENT in the live index count: broadcast the
     // increment into a semi over the slim vec_id column (output
     // increment-bounded), then drop ids already tombstoned
-    val baseIds = cellsScanOpt(spark, path).map(_.select(col("vec_id")))
-    val deltaIds = sideFiles(path, "delta").map(files => spark.read
-      .parquet(files.map(_.toString): _*).select(col("vec_id")))
-    val liveIds = (baseIds, deltaIds) match {
-      case (Some(b), Some(d)) => b.unionByName(d)
-      case (Some(b), None) => b
-      case (None, Some(d)) => d
+    val present = baseUnionDelta(spark, path)(_.select(col("vec_id")))
       // nothing live: every delete is a foreign-id TRUE no-op
-      case (None, None) => return before
-    }
-    val present = liveIds
+      .getOrElse(return before)
       .join(broadcast(ts0), Seq("vec_id"), "left_semi").distinct()
     val fresh = tombstoneIds(spark, path).fold(present) {
       case (prev, bytes) =>
@@ -545,56 +526,47 @@ object AnnIndex {
     * crash-retried deletes left behind. */
   private def tombstoneIds(spark: SparkSession,
                            path: String): Option[(DataFrame, Long)] =
-    sideFiles(path, "tombstones").map { files =>
-      (spark.read.parquet(files.map(_.toString): _*)
+    sideFiles(path, "tombstones").map { fs =>
+      (spark.read.parquet(fs.map(_.toString): _*)
         .select(col("vec_id")).distinct(),
-        IndexLifecycle.idSideBytesFiles(spark, files))
+        IndexLifecycle.idSideBytes(spark, fs))
     }
 
-  /** The live parquet files of a side table, resolved through the
-    * layout manifest when one exists (the snapshot-pinned read path —
-    * a maintenance event's retained superseded files are invisible),
-    * by directory listing on a legacy index. None = the side table is
-    * empty/absent. */
+  /** The snapshot's files of one sub-table. */
+  private def files(path: String, sub: String): Seq[Path] =
+    IndexLifecycle.snapshotFiles(Paths.get(path), sub)
+
+  /** A side table's snapshot files; None when it lists none. */
   private def sideFiles(path: String, sub: String): Option[Seq[Path]] =
-    IndexLifecycle.manifestFilesUnder(Paths.get(path), sub) match {
-      case Some(files) => if (files.nonEmpty) Some(files) else None
-      case None =>
-        val dir = Paths.get(path, sub)
-        if (IndexLifecycle.hasParquet(dir))
-          Some(scala.util.Using.resource(Files.list(dir))(
-            _.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet")).toSeq))
-        else None
-    }
+    Some(files(path, sub)).filter(_.nonEmpty)
 
-  /** The base cells scan, manifest-pinned when a manifest exists (the
+  /** The base cells scan over the snapshot's cell files (the
     * `basePath` option keeps hive-partition `cell` inference + pruning
-    * over an explicit file list). None = a manifest listing ZERO cell
-    * files — the fully-deleted degenerate state: falling back to the
-    * directory there would resurrect compaction-retained superseded
-    * files (review finding #1 of round 13), and throwing made the
-    * state UNRECOVERABLE (review finding of the second pass: rebuild
-    * and re-append both read through this scan) — so callers compose
-    * with the delta instead: an all-delta index probes fine, and only
-    * a base-less AND delta-less search fails loudly. */
+    * over an explicit file list). None = a snapshot listing ZERO cell
+    * files — the fully-deleted degenerate state: throwing there made
+    * the state UNRECOVERABLE (review finding of round 13's second
+    * pass: rebuild and re-append both read through this scan), so
+    * callers compose with the delta instead: an all-delta index
+    * probes fine, and only a base-less AND delta-less search fails
+    * loudly. */
   private def cellsScanOpt(spark: SparkSession,
                            path: String): Option[DataFrame] =
-    IndexLifecycle.manifestFilesUnder(Paths.get(path), "cells") match {
-      case Some(files) if files.nonEmpty =>
-        Some(spark.read.option("basePath", s"$path/cells")
-          .parquet(files.map(_.toString): _*))
-      case Some(_) => None
-      case None => Some(spark.read.parquet(s"$path/cells"))
-    }
+    sideFiles(path, "cells").map(fs =>
+      spark.read.option("basePath", s"$path/cells")
+        .parquet(fs.map(_.toString): _*))
 
-  /** Re-commit the add-only side tables' disk listing into the layout
-    * manifest — for harnesses/tools that write `delta/`/`tombstones/`
-    * files directly instead of through append/delete (which commit
-    * their own listings). No-op on a legacy index. */
-  def refreshSideManifest(path: String): Unit =
-    IndexLifecycle.commitSubListing(Paths.get(path),
-      Seq("delta", "tombstones"))
+  /** The live rows' two sources — the base cells and the un-compacted
+    * delta — each mapped by `f` and unioned; None when the snapshot
+    * lists neither. `dedupeDelta` collapses the delta on `vec_id` (the
+    * collapse point that makes a RETRIED append duplicate-safe). */
+  private def baseUnionDelta(spark: SparkSession, path: String)(
+      f: DataFrame => DataFrame,
+      dedupeDelta: Boolean = false): Option[DataFrame] =
+    (cellsScanOpt(spark, path).map(f) ++
+      sideFiles(path, "delta").map { fs =>
+        val d = f(spark.read.parquet(fs.map(_.toString): _*))
+        if (dedupeDelta) d.dropDuplicates("vec_id") else d
+      }).reduceOption(_ unionByName _)
 
   /** Top-k search against the persisted index. `probesQ` must carry
     * (probe_id, pqv) and be broadcast-class (an increment of queries,
@@ -734,24 +706,14 @@ object AnnIndex {
                              cellPred: Option[Column],
                              candidateFilter: Column,
                              excludeIds: Option[DataFrame] = None): DataFrame = {
-    def pruned(df: DataFrame): DataFrame =
-      cellPred.fold(df)(p => df.filter(p))
-    // un-compacted appends: increment-class side table, snapshot-
-    // resolved (an empty dir / a superseded-but-retained file set is
-    // invisible). A base-less index (everything deleted + compacted)
-    // serves from delta alone — appends REVIVE it.
-    val base = cellsScanOpt(spark, path).map(pruned)
-    val delta = sideFiles(path, "delta").map(files =>
-      pruned(spark.read.parquet(files.map(_.toString): _*))
-        .dropDuplicates("vec_id"))
-    val cands0 = (base, delta) match {
-      case (Some(b), Some(d)) => b.unionByName(d)
-      case (Some(b), None) => b
-      case (None, Some(d)) => d
-      case (None, None) => throw new IllegalStateException(
+    // un-compacted appends: increment-class side table. A base-less
+    // index (everything deleted + compacted) serves from delta alone
+    // — appends REVIVE it.
+    val cands0 = baseUnionDelta(spark, path)(
+      df => cellPred.fold(df)(p => df.filter(p)), dedupeDelta = true)
+      .getOrElse(throw new IllegalStateException(
         s"index at $path has no live rows (every row deleted and " +
-          "compacted away) — rebuild it or append fresh data first")
-    }
+          "compacted away) — rebuild it or append fresh data first"))
     // un-compacted deletes: strategy from the side table's MEASURED
     // bytes (the cumulative set is policy-bounded, not code-bounded,
     // so the join must not assume broadcast-class); physically
@@ -1020,13 +982,10 @@ object AnnIndex {
                             threshold: Long, batchId: Long,
                             nProbe: Int = GateNProbe): DataFrame = {
     val spark = rows.sparkSession
-    val appDir = Paths.get(path, GateAppendBatchesDir)
-    val excl =
-      if (IndexLifecycle.hasParquet(appDir))
-        Some(spark.read.parquet(appDir.toString)
-          .filter(col("batch") === batchId)
-          .select(col("vec_id")).distinct())
-      else None
+    val excl = sideFiles(path, GateAppendBatchesDir).map(fs =>
+      spark.read.parquet(fs.map(_.toString): _*)
+        .filter(col("batch") === batchId)
+        .select(col("vec_id")).distinct())
     val probes = rows.select(col("vec_id").as("probe_id"),
       col("qv").as("pqv"))
     val decided = gateBatchThroughAnnIndex(probes, path, threshold,
@@ -1056,9 +1015,11 @@ object AnnIndex {
       // batches are dead (only the in-flight batchId is ever read —
       // earlier batches committed before this trigger started) and
       // are pruned by compaction's sidecar merge.
-      admitted.select(col("probe_id").as("vec_id"),
-          lit(batchId).as("batch"))
-        .coalesce(1).write.mode("append").parquet(appDir.toString)
+      IndexLifecycle.commitAddedWrite(Paths.get(path), GateAppendBatchesDir) {
+        admitted.select(col("probe_id").as("vec_id"),
+            lit(batchId).as("batch"))
+          .coalesce(1).write.mode("append").parquet(s"$path/$GateAppendBatchesDir")
+      }
       val admRows = rows.join(
         admitted.select(col("probe_id").as("vec_id")),
         Seq("vec_id"), "left_semi")
@@ -1079,35 +1040,22 @@ object AnnIndex {
     *     fragmented cells' bytes; untouched cells keep their files
     *     byte-identical.
     *
-    * Same single-writer contract as build/append (compaction is a
-    * scheduled maintenance event). Crash windows — both now leave
-    * transient DUPLICATES, never loss ([[IndexLifecycle]]'s ordering
-    * invariant; the old phase-2 order deleted a cell's parts before
-    * the merged file moved in, losing the cell on a crash between):
-    *
-    *  - PHASE 1 (fold) is IDEMPOTENT: before folding, the deduped
-    *    delta LEFT ANTI-joins the base's vec_ids over the touched
-    *    cells only (delta is increment-class, so the touched-cell set
-    *    is bounded and the base scan is partition-pruned to it) —
-    *    rows a crashed previous fold already landed are skipped, so
-    *    re-running compaction after a crash between the fold write
-    *    and the delta delete is itself the repair. The anti-join's
-    *    price — one slim (vec_id) scan of the touched cells — is the
-    *    cost of that idempotence, paid only at maintenance time.
-    *  - PHASE 2's window is ONE cell (the cell being swapped when the
-    *    crash hit): merged + originals coexist, and if the survivor
-    *    count sits at or below `maxFilesPerCell` the next default run
-    *    does NOT re-trigger on it. The repair is explicit:
-    *    `compactCells(path, maxFilesPerCell = 0)` rewrites every cell
-    *    through the vec_id dedupe (one corpus rewrite — the write
-    *    half of a rebuild), or a rebuild.
-    *
     *  - PHASE 1b applies the `tombstones/` side table
     *    ([[deleteFromAnnIndex]]): only cells HOLDING a deleted id are
     *    rewritten (one slim semi scan finds them — bounded by the
-    *    tombstone count), and the tombstone files are dropped LAST,
-    *    so a crash mid-application re-applies harmlessly (anti-join
-    *    of already-removed ids is a no-op).
+    *    tombstone count).
+    *
+    * Same single-writer contract as build/append, and snapshot-safe
+    * for readers ([[IndexLifecycle]]): the entry reclaims what the
+    * previous maintenance event retained; each phase commits ONE
+    * [[IndexLifecycle.commitSwap]] and RETAINS the files it superseded.
+    * A crash before a phase's swap leaves the previous snapshot, its
+    * new files orphans for the next entry to reclaim; the fold stays
+    * IDEMPOTENT besides (the deduped delta LEFT ANTI-joins the base's
+    * vec_ids over the touched cells only, partition-pruned), so
+    * re-running compaction is the repair. Every cell rewrite dedupes
+    * on vec_id, so `maxFilesPerCell = 0` also collapses any duplicate
+    * a pre-snapshot crash left.
     *
     * The fold also dedupes delta on `vec_id`, so retried appends
     * ([[appendToAnnIndex]]) stop costing bytes here. Returns the
@@ -1116,28 +1064,14 @@ object AnnIndex {
                    maxFilesPerCell: Int = 4): Int = {
     val root = Paths.get(path)
     val cellsRoot = root.resolve("cells")
-    val manifestSubs = Seq("cells", "delta", "tombstones")
     // MAINTENANCE ENTRY: reclaim the files the PREVIOUS maintenance
     // event retained for its in-flight snapshot readers (superseded
-    // state lives exactly one maintenance interval), then adopt
-    // legacy indexes into the manifest era. After this, disk ==
-    // manifest for the three snapshot dirs.
-    IndexLifecycle.reclaimUnmanifested(root, manifestSubs)
-    IndexLifecycle.ensureManifest(root, manifestSubs)
+    // state lives exactly one maintenance interval). After this, disk
+    // == manifest for the snapshot sub-tables.
+    IndexLifecycle.reclaimUnmanifested(root,
+      Seq("cells", "delta", "tombstones", GateAppendBatchesDir))
     def manifestSet: Set[String] =
-      IndexLifecycle.readManifest(root).getOrElse(Nil).toSet
-    def relOf(f: Path): String = root.relativize(f).toString
-    // one snapshot swap: -removed +added, optionally clearing whole
-    // side tables whose content was folded/applied (their files are
-    // RETAINED on disk for snapshot-N readers)
-    def commitSwap(removed: Seq[Path], added: Seq[Path],
-                   dropSubs: Seq[String]): Unit =
-      IndexLifecycle.updateManifest(root) { cur =>
-        val rem = removed.map(relOf).toSet
-        cur.filterNot(rem.contains)
-          .filterNot(r => dropSubs.exists(sb => r.startsWith(sb + "/"))) ++
-          added.map(relOf)
-      }
+      IndexLifecycle.readManifest(root).get.toSet
 
     // PHASE 1 (fold): delta rows move into the cell partitions; the
     // snapshot swap makes the fold atomic for readers (a snapshot-N
@@ -1146,8 +1080,7 @@ object AnnIndex {
     // idempotent (anti-join vs the touched cells' base ids) so a
     // crash BEFORE the commit re-runs as the repair, with the
     // uncommitted fold files reclaimed as orphans at re-entry.
-    val deltaFiles = IndexLifecycle.manifestFilesUnder(root, "delta")
-      .getOrElse(Nil)
+    val deltaFiles = files(path, "delta")
     if (deltaFiles.nonEmpty) {
       val preCells = manifestSet
       val delta = spark.read.parquet(deltaFiles.map(_.toString): _*)
@@ -1173,7 +1106,7 @@ object AnnIndex {
       delta.unpersist()
       val folded = IndexLifecycle.listRelParquet(root, "cells")
         .filterNot(preCells.contains).map(root.resolve)
-      commitSwap(removed = Nil, added = folded, dropSubs = Seq("delta"))
+      IndexLifecycle.commitSwap(root, Nil, folded, dropSubs = Seq("delta"))
     }
     // PHASE 1b (tombstones): physically remove deleted ids by
     // rewriting ONLY the cells that hold them (bounded by the
@@ -1212,7 +1145,7 @@ object AnnIndex {
           val dir = cellsRoot.resolve(s"cell=$cid")
           val parts = manifestParts(cid)
           added ++= IndexLifecycle.mergeParquetFiles(spark, parts, dir,
-            transform = applyTransform, retainOriginals = true)
+            transform = applyTransform)
           removed ++= parts
           compacted += 1
         }
@@ -1262,39 +1195,33 @@ object AnnIndex {
         }
         org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
       }
-      commitSwap(removed.toSeq, added.toSeq, dropSubs = Seq("tombstones"))
+      IndexLifecycle.commitSwap(root, removed.toSeq, added.toSeq,
+        dropSubs = Seq("tombstones"))
       ts.unpersist()
     }
     // the gate-append sidecar fragments one file per trigger (it is
     // append-only by the replay invariant — see gateAndAppendAnnBatch)
-    // and is scanned by every gate call: merge it down in the same
-    // pass, PRUNING superseded batches — only the newest batchId can
+    // and is scanned by every gate call: merge it down in phase 2's
+    // swap, PRUNING superseded batches — only the newest batchId can
     // ever serve a replay (every earlier batch committed before the
     // newest trigger started), so its rows are the only live ones.
-    // NOT manifest-scoped: only the single-writer gate loop reads it,
-    // never a concurrent snapshot reader.
-    val gappDir = Paths.get(path, GateAppendBatchesDir)
-    if (Files.isDirectory(gappDir)) {
-      val gappFiles = scala.util.Using.resource(Files.list(gappDir))(
-        _.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.toString))
-      if (gappFiles.size >= 2)
-        IndexLifecycle.mergeParquetFiles(spark, gappFiles, gappDir,
-          transform = { df =>
-            val mx = df.agg(max(col("batch"))).head()
-            if (mx.isNullAt(0)) df.distinct()
-            else df.filter(col("batch") === mx.getLong(0)).distinct()
-          })
+    val removed2 = scala.collection.mutable.ArrayBuffer[Path]()
+    val added2 = scala.collection.mutable.ArrayBuffer[Path]()
+    val gappFiles = files(path, GateAppendBatchesDir)
+    if (gappFiles.size >= 2) {
+      added2 ++= IndexLifecycle.mergeParquetFiles(spark, gappFiles,
+        root.resolve(GateAppendBatchesDir), transform = { df =>
+          val mx = df.agg(max(col("batch"))).head()
+          if (mx.isNullAt(0)) df.distinct()
+          else df.filter(col("batch") === mx.getLong(0)).distinct()
+        })
+      removed2 ++= gappFiles
     }
     // PHASE 2 (fragmented-cell merge): part sets come from the
     // MANIFEST (the disk may hold phase-1b's retained originals);
     // merges retain originals and the swap commits once.
-    val live2 = manifestSet
-    val byCell = live2.filter(_.startsWith("cells/"))
+    val byCell = manifestSet.filter(_.startsWith("cells/"))
       .groupBy(r => r.substring(0, r.lastIndexOf('/')))
-    val removed2 = scala.collection.mutable.ArrayBuffer[Path]()
-    val added2 = scala.collection.mutable.ArrayBuffer[Path]()
     for ((cellRel, rels) <- byCell.toSeq.sortBy(_._1)) {
       if (rels.size > maxFilesPerCell) {
         val dir = root.resolve(cellRel)
@@ -1303,29 +1230,16 @@ object AnnIndex {
         // duplicates a prior crash window left in this cell, so
         // re-running compaction IS the repair
         added2 ++= IndexLifecycle.mergeParquetFiles(spark, parts, dir,
-          transform = _.dropDuplicates("vec_id"), retainOriginals = true)
+          transform = _.dropDuplicates("vec_id"))
         removed2 ++= parts
         compacted += 1
       }
     }
     if (removed2.nonEmpty)
-      commitSwap(removed2.toSeq, added2.toSeq, dropSubs = Nil)
+      IndexLifecycle.commitSwap(root, removed2.toSeq, added2.toSeq)
     compacted
   }
 
-  /** Dot-prefixed rebuild staging dir inside the index root —
-    * invisible to every scan (cells/, delta/, tombstones/ are the
-    * only directories consumers read). */
-  private val RebuildStageDir = ".rebuild_live"
-
-  /** Stage a rebuild's inputs INSIDE the index dir: the live rows
-    * (base ∪ deduped delta, minus tombstones) under
-    * `.rebuild_live/rows` and the RETRAINED quantizer (kmeansBulk
-    * warm-started from the frozen centroids — deterministic) under
-    * `.rebuild_live/cents`, committed by the `_STAGED_OK` marker.
-    * ADDS bytes only — nothing of the old index is touched, so a
-    * crash mid-staging loses nothing. Idempotent: a present marker
-    * short-circuits. */
   /** Epoch stamp of a staging: the meta counters at staging time. A
     * committed rebuild that crashed before reclaiming its staging
     * must NOT be "resumed" after further appends/deletes re-flag the
@@ -1336,48 +1250,41 @@ object AnnIndex {
   private def rebuildEpoch(meta: Meta): String =
     s"${meta.nVecs}|${meta.appendedVecs}|${meta.deletedVecs}"
 
-  private[graft] def stageRebuildLive(spark: SparkSession, path: String,
-                                      trainIters: Int): Unit = {
-    val stageDir = Paths.get(path, RebuildStageDir)
-    val marker = stageDir.resolve("_STAGED_OK")
-    if (Files.isRegularFile(marker)) return
+  /** Stage a rebuild's inputs into `dir` (see [[IndexLifecycle
+    * .maintain]]): the live rows (base ∪ deduped delta, minus
+    * tombstones) under `rows`, the RETRAINED quantizer (kmeansBulk
+    * warm-started from the frozen centroids — deterministic) under
+    * `cents`, the retrained PQ books under `books` on a coded layout,
+    * and the gate-append sidecar. Reads are snapshot-pinned, so a
+    * previous compaction's retained files are never staged. */
+  private def stageLive(spark: SparkSession, path: String, dir: Path,
+                        trainIters: Int): Unit = {
     // `cell` dropped from both legs (the partition column reads back
     // as int, the delta column is long — and the rebuild reassigns
     // against the retrained quantizer anyway); `codes` likewise —
-    // derived data re-encoded against the RETRAINED books. Reads are
-    // manifest-pinned: a previous compaction's retained superseded
-    // files must not be staged (their rows would be dedup-collapsed
-    // anyway, but the snapshot is the cheaper truth). A base-less
-    // index rebuilds from its delta alone; base-less AND delta-less
-    // has nothing to rebuild — fail loudly.
-    val base = cellsScanOpt(spark, path).map(_.drop("cell", "codes"))
-    val deltaDf = sideFiles(path, "delta").map(files => spark.read
-      .parquet(files.map(_.toString): _*).drop("cell", "codes"))
-    val merged = (base, deltaDf) match {
-      case (Some(b), Some(d)) => b.unionByName(d)
-      case (Some(b), None) => b
-      case (None, Some(d)) => d
-      case (None, None) => throw new IllegalStateException(
-        s"index at $path has no live rows — nothing to rebuild")
-    }
+    // derived data re-encoded against the RETRAINED books. A
+    // base-less index rebuilds from its delta alone; base-less AND
+    // delta-less has nothing to rebuild — fail loudly.
+    val merged = baseUnionDelta(spark, path)(_.drop("cell", "codes"))
+      .getOrElse(throw new IllegalStateException(
+        s"index at $path has no live rows — nothing to rebuild"))
     // one corpus-wide dedup: a rebuild is the repair point for every
     // documented transient-duplicate crash window, so it must
-    // collapse them all (retried appends, a crashed phase-2 swap)
+    // collapse them all (retried appends)
     val live0 = merged.dropDuplicates("vec_id")
     val live = tombstoneIds(spark, path).fold(live0) {
       case (ts, bytes) =>
         IndexLifecycle.boundedIdJoin(live0, ts, "vec_id", bytes,
           "left_anti")
     }
-    live.write.mode("overwrite").parquet(
-      stageDir.resolve("rows").toString)
-    val vecsQ = spark.read.parquet(stageDir.resolve("rows").toString)
+    live.write.mode("overwrite").parquet(dir.resolve("rows").toString)
+    val vecsQ = spark.read.parquet(dir.resolve("rows").toString)
     val cents = kmeansBulk(vecsQ.select(col("qv")),
       readCentroids(spark, path), trainIters)
     import spark.implicits._
     cents.map { case (cid, qc) => (cid, qc.toSeq) }.toDF("cid", "qc")
       .coalesce(1).write.mode("overwrite")
-      .parquet(stageDir.resolve("cents").toString)
+      .parquet(dir.resolve("cents").toString)
     // PQ layout: the codebooks are build artifacts like the quantizer
     // — retrained (warm-started from the frozen books, deterministic)
     // and staged beside the centroids; codes are re-derived by the
@@ -1389,117 +1296,52 @@ object AnnIndex {
       newBooks.zipWithIndex.flatMap { case (cs, m) =>
         cs.map { case (cid, qc) => (m, cid, qc.toSeq) }
       }.toDF("m", "cid", "qc").coalesce(1).write.mode("overwrite")
-        .parquet(stageDir.resolve("books").toString)
+        .parquet(dir.resolve("books").toString)
     }
     // carry the gate-append sidecar through the rebuild: the build
-    // deletes it, but the IN-FLIGHT batch's exclusion record must
+    // clears it, but the IN-FLIGHT batch's exclusion record must
     // survive a mid-trigger rebuild or a crash-redelivery loses the
     // replay guarantee (second-pass finding)
-    val sc = Paths.get(path, GateAppendBatchesDir)
-    if (IndexLifecycle.hasParquet(sc)) {
-      val dst = stageDir.resolve(GateAppendBatchesDir)
-      Files.createDirectories(dst)
-      scala.util.Using.resource(Files.list(sc))(
-        _.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach(f => Files.copy(f, dst.resolve(f.getFileName.toString))))
-    }
-    Files.write(marker, rebuildEpoch(readMeta(path))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    IndexLifecycle.stageSidecar(Paths.get(path), dir, GateAppendBatchesDir)
   }
 
-  /** Put a staged gate-append sidecar back after a rebuild (verbatim:
-    * its rows' vec_ids were appended admissions, so they survive in
-    * the rebuilt cells). Idempotent-enough: duplicate rows collapse
-    * at the exclusion's distinct. */
-  private def restoreStagedSidecar(stageDir: Path, path: String): Unit = {
-    val staged = stageDir.resolve(GateAppendBatchesDir)
-    if (IndexLifecycle.hasParquet(staged)) {
-      val live = Paths.get(path, GateAppendBatchesDir)
-      Files.createDirectories(live)
-      scala.util.Using.resource(Files.list(staged))(
-        _.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach { f =>
-            val dst = live.resolve("restored_" + f.getFileName.toString)
-            if (!Files.exists(dst)) Files.copy(f, dst)
-          })
-    }
-  }
+  /** Stage a rebuild exactly as [[maintainAnnIndex]] does, committed by
+    * its marker — the re-entry point the crash-window specs start
+    * from. */
+  private[graft] def stageRebuildLive(spark: SparkSession, path: String,
+                                      trainIters: Int): Unit =
+    IndexLifecycle.stageRebuild(Paths.get(path),
+      rebuildEpoch(readMeta(path)))(stageLive(spark, path, _, trainIters))
 
-  /** MAINTENANCE driver — the production loop's one entry point
-    * (round-11 judge ask: `needsRebuild`/`needsCompaction` existed but
-    * nothing called them in production shape). Consults the policies
-    * in order and acts:
+  /** MAINTENANCE — the ANN family's steps under [[IndexLifecycle
+    * .maintain]] (staging, crash re-entry and the commit point are the
+    * shared driver's). Consults the policies in order and acts:
     *
     *  1. [[needsRebuild]] (append+delete drift past
     *     [[RebuildFraction]]) → REBUILD in place from the index's own
     *     live rows (the ANN family is self-contained: the vectors ARE
-    *     the stored content), quantizer retrained. Physically
-    *     reclaims every tombstone and folds every delta row;
+    *     the stored content), quantizer retrained ([[stageLive]]).
+    *     Physically reclaims every tombstone and folds every delta row;
+    *     the staged gate-append sidecar is restored verbatim (its
+    *     vec_ids were appended admissions, so they survive);
     *  2. else [[needsCompaction]] → [[compactCells]] (delta fold +
     *     tombstone application + fragmented-cell merge,
-    *     increment-priced).
-    *
-    * CRASH ORDERING (the [[IndexLifecycle]] invariant applied to the
-    * one mutation that destroys the index's own source of truth): the
-    * live rows AND the retrained quantizer are staged to
-    * `.rebuild_live/` + marker FIRST ([[stageRebuildLive]] — adds
-    * bytes only), and only then does [[buildAnnIndex]] tear down the
-    * old layout. The build's final meta write is the COMMIT POINT
-    * (it resets the drift counters); the staging is dropped LAST. A
-    * crash anywhere re-enters safely: marker present + drift still
-    * flagged → the rebuild RESUMES from the staged rows/quantizer
-    * (never from the possibly-damaged base — the first cut rebuilt
-    * from `cells/` and could lose vectors or resurrect tombstoned
-    * ids, the round-12 self-review finding); marker present + drift
-    * reset → the previous rebuild committed, the stale staging is
-    * reclaimed. The staged frame's lineage reads only `.rebuild_live`
-    * (no self-read of the directories the build overwrites).
-    *
-    * Reads must quiesce for the duration (the module's
-    * reads-quiesce-during-maintenance contract); appends/deletes are
-    * excluded by the single-writer contract already. */
+    *     increment-priced, snapshot-safe). */
   def maintainAnnIndex(spark: SparkSession, path: String,
                        trainIters: Int = 2): IndexLifecycle.Maintenance = {
     val meta = readMeta(path)
-    val stageDir = Paths.get(path, RebuildStageDir)
-    val marker = stageDir.resolve("_STAGED_OK")
-    if (Files.isRegularFile(marker)) {
-      val staged = new String(Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (!needsRebuild(meta)) {
-        // the previous rebuild committed (meta write resets drift) but
-        // crashed before reclaiming its staging — finish its restore
-        // half, then reclaim — or a direct caller build superseded it
-        restoreStagedSidecar(stageDir, path)
-        org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)
-      } else if (staged != rebuildEpoch(meta))
-        // STALE EPOCH: mutations landed after this staging was cut —
-        // resuming it would drop them; restage from the live state
-        org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)
-    }
-    if (needsRebuild(meta)) {
-      stageRebuildLive(spark, path, trainIters)
-      val vecsQ = spark.read.parquet(stageDir.resolve("rows").toString)
-      val cents = spark.read.parquet(stageDir.resolve("cents").toString)
-        .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1).toSeq
-      val stagedBooks = stageDir.resolve("books")
-      val pqBooks =
-        if (IndexLifecycle.hasParquet(stagedBooks))
-          Some(spark.read.parquet(stagedBooks.toString).collect()
-            .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
-            .groupBy(_._1).toSeq.sortBy(_._1)
-            .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq))
-        else None
-      buildAnnIndex(vecsQ, cents, path, pqBooks) // meta write = commit point
-      restoreStagedSidecar(stageDir, path)
-      org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)
-      IndexLifecycle.Maintenance(rebuilt = true, 0)
-    } else if (needsCompaction(path))
-      IndexLifecycle.Maintenance(rebuilt = false, compactCells(spark, path))
-    else IndexLifecycle.Maintenance(rebuilt = false, 0)
+    val root = Paths.get(path)
+    IndexLifecycle.maintain(root, rebuildEpoch(meta), needsRebuild(meta))(
+      stage = stageLive(spark, path, _, trainIters),
+      build = { dir =>
+        def staged(name: String) = spark.read.parquet(dir.resolve(name).toString)
+        buildAnnIndex(staged("rows"), centsFrom(staged("cents")), path,
+          Some(dir.resolve("books")).filter(Files.isDirectory(_))
+            .map(_ => booksFrom(staged("books"))))
+      },
+      restore = dir => IndexLifecycle.restoreSidecar(spark, root, dir,
+        GateAppendBatchesDir)(identity))(
+      if (needsCompaction(path)) compactCells(spark, path) else 0)
   }
 
   // ---- meta / centroid IO ----------------------------------------------
@@ -1517,15 +1359,10 @@ object AnnIndex {
   def readMeta(path: String): Meta = {
     val props = IndexLifecycle.readMetaProps(
       Paths.get(path), "ann index", FormatVersion)
-    def opt(k: String): Long =
-      Option(props.getProperty(k)).map(_.toLong).getOrElse(0L)
-    Meta(props.getProperty("nCells").toInt,
-      props.getProperty("dims").toInt,
-      props.getProperty("nVecs").toLong,
-      props.getProperty("appendedVecs").toLong,
-      // absent in pre-delete / pre-PQ indexes: no such drift / plain
-      // full-vector layout
-      opt("deletedVecs"), opt("pqM").toInt, opt("pqSubDim").toInt)
+    def prop(k: String): Long = props.getProperty(k).toLong
+    Meta(prop("nCells").toInt, prop("dims").toInt, prop("nVecs"),
+      prop("appendedVecs"), prop("deletedVecs"), prop("pqM").toInt,
+      prop("pqSubDim").toInt)
   }
 
   /** Driver-held centroid table, memoized ONE LIVE ENTRY PER PATH and
@@ -1539,9 +1376,12 @@ object AnnIndex {
                     path: String): Seq[(Long, Array[Long])] =
     centroidsMemo.get(path,
       IndexLifecycle.dirFingerprint(Paths.get(path, "centroids")))(
-      spark.read.parquet(s"$path/centroids").collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1).toSeq)
+      centsFrom(spark.read.parquet(s"$path/centroids")))
+
+  /** (cid, qc) centroid rows, cid-sorted. */
+  private def centsFrom(df: DataFrame): Seq[(Long, Array[Long])] =
+    df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .sortBy(_._1).toSeq
 
   private val centroidsMemo =
     new IndexLifecycle.FingerprintMemo[Seq[(Long, Array[Long])]]()

@@ -3,8 +3,9 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.graft.LocalRows
 
 import scala.jdk.CollectionConverters._
 
@@ -23,29 +24,36 @@ import scala.jdk.CollectionConverters._
   * one risking row LOSS on a crash, the other transient duplicates.
   * One module now owns the contracts; the two layouts are instances.
   *
-  * Crash-ordering invariant every mutation here follows: new bytes are
-  * materialized COMPLETELY before any old bytes are removed, so a
-  * crash at any point leaves every row present AT LEAST once.
-  * Transient duplicates are the recoverable failure mode (each family
-  * documents its collapse point: signature consumers collapse
-  * duplicates semantically; ANN probes dedupe the delta on vec_id and
-  * compaction dedupes cell rewrites); silent loss never is.
+  * One snapshot layer serves both families. Every mutable sub-table —
+  * `sig/`, `tombstones/` and `gateapp_md5/` of a signature index;
+  * `cells/`, `delta/`, `tombstones/` and `gapp_batches/` of an ANN
+  * index — is read through the [[ManifestName]] snapshot, never by a
+  * directory listing. Build-once artifacts (`hot`, `hot2`, `gate_md5`,
+  * `pairs`, `centroids`, `books`) keep their markers and directory
+  * reads. The mutations reduce to three commits of one atomic
+  * manifest write:
+  *  - a build commits a fresh snapshot ([[commitFresh]]);
+  *  - appends, deletes and sidecar writes add exactly the files they
+  *    wrote ([[commitAddedWrite]]);
+  *  - a compaction merges files into new ones and swaps them in
+  *    ([[mergeParquetFiles]] + [[commitSwap]]), RETAINING the
+  *    superseded files until the next maintenance entry reclaims them
+  *    ([[reclaimUnmanifested]]).
   *
-  * READS-DURING-MAINTENANCE contract: every mutation is single-WRITER
-  * by contract. For the ANN family, COMPACTION is now SNAPSHOT-SAFE
-  * for concurrent readers (round-13): readers resolve their file sets
-  * through the [[ManifestName]] layout snapshot instead of directory
-  * listings, compaction commits each swap atomically and RETAINS the
-  * superseded files until the next maintenance entry reclaims them —
-  * so a probe that resolved snapshot N mid-compaction reads exactly
-  * snapshot N's rows (pre-state), and one resolving after the commit
-  * reads exactly N+1 (post-state); the old listing-mid-swap duplicate
-  * window is gone. The residual requirements: a single read must not
-  * span TWO maintenance events (retention is one interval), and a
-  * REBUILD (which tears the cell layout down wholesale) still
-  * requires reads to quiesce — as does the signature family's
-  * compaction (not yet manifest-pinned). Appends and deletes only ADD
-  * side-table files and commit them into the snapshot atomically.
+  * Crash ordering: new bytes are materialized COMPLETELY before the
+  * manifest names them, and old bytes leave the disk only after a
+  * later commit has dropped them. A crash at any instant leaves the
+  * previous snapshot or the next one; written-but-uncommitted files are
+  * unlisted orphans that the next maintenance entry reclaims.
+  *
+  * Concurrency: every mutation is single-WRITER. Appends, deletes and
+  * COMPACTION are snapshot-safe for concurrent readers in both
+  * families: a frame resolved against snapshot N reads exactly N's
+  * rows, one resolved after the commit reads exactly N+1. A single
+  * read must not span TWO maintenance events (retention is one
+  * interval). Only a REBUILD, which tears the layout down wholesale,
+  * still requires reads to quiesce. [[maintain]] is the one driver of
+  * both families' rebuild and compaction steps.
   */
 object IndexLifecycle {
 
@@ -156,6 +164,13 @@ object IndexLifecycle {
         s"mutation call on '$key' — chunk the calls or schedule a rebuild")(
       (df, n) => df.limit(n).collect()).map(_.getLong(0))
 
+  /** True when `df` holds at least one row: one job, each partition
+    * cut after its first row by [[LocalRows.collectPerPartition]]. A
+    * planned limit would name its row counter from a JVM-global
+    * sequence, so every call would compile classes of its own. */
+  def anyRow(df: DataFrame): Boolean =
+    LocalRows.collectPerPartition(df, 1).nonEmpty
+
   /** Collect `df` to the driver under a row bound: `collect(df, n)`
     * pushes a limit of n = maxRows+1 rows into the plan (global, or
     * per partition), so an over-budget frame ships a bounded number of
@@ -213,7 +228,7 @@ object IndexLifecycle {
 
   /** Write the `_INDEX_META` properties stamp (version + the family's
     * fields) under `root`. Meta is BOOKKEEPING by contract in both
-    * families: probes scan the data directories directly, so a lost or
+    * families: probes read the layout snapshot, so a lost or
     * stale meta rewrite never corrupts results — it only skews the
     * rebuild/compaction policy counters (conservatively, for a retried
     * append: counted twice means an earlier rebuild). */
@@ -356,14 +371,24 @@ object IndexLifecycle {
       java.lang.Long.toHexString(entries.map(_._2).sum)
   }
 
-  /** True when `dir` exists and holds at least one parquet part file —
-    * the shared side-table presence check (an existing-but-empty dir
-    * is legal residue of a completed fold/application). */
-  def hasParquet(dir: Path): Boolean =
-    Files.isDirectory(dir) &&
-      scala.util.Using.resource(Files.list(dir))(
-        _.iterator().asScala
-          .exists(_.getFileName.toString.endsWith(".parquet")))
+  /** Every parquet file under `dir`, recursively (none when absent). */
+  private def parquetFiles(dir: Path): Vector[Path] =
+    if (!Files.isDirectory(dir)) Vector.empty
+    else scala.util.Using.resource(Files.walk(dir))(
+      _.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.endsWith(".parquet")).toVector)
+
+  /** `read` over each file's parquet footer, driver-side, lazily. */
+  private def footers[T](spark: SparkSession, files: Seq[Path])
+                        (read: org.apache.parquet.hadoop.ParquetFileReader => T): Iterator[T] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.iterator.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try read(r) finally r.close()
+    }
+  }
 
   /** True when the parquet table under `dir` holds at least one ROW —
     * answered from the file FOOTERS, driver-side (round-13 opt: the
@@ -372,35 +397,15 @@ object IndexLifecycle {
     * takedown loops — for a question a footer read answers in
     * microseconds; the part-file count is bounded by the build, which
     * writes these side tables wholesale). */
-  def parquetHasRows(spark: SparkSession, dir: Path): Boolean = {
-    if (!Files.isDirectory(dir)) return false
-    val files = scala.util.Using.resource(Files.walk(dir))(
-      _.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .toVector)
-    val conf = spark.sessionState.newHadoopConf()
-    files.exists { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount > 0 finally r.close()
-    }
-  }
+  def parquetHasRows(spark: SparkSession, dir: Path): Boolean =
+    footers(spark, parquetFiles(dir))(_.getRecordCount > 0).exists(identity)
 
   /** Exact row count of a parquet file set from the FOOTERS,
     * driver-side — the post-write count an append reads back instead
     * of scheduling a cache+count job over the increment (round-13
     * opt; the file set is the write's own listing diff, bounded). */
-  def parquetRowCount(spark: SparkSession, files: Seq[Path]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def parquetRowCount(spark: SparkSession, files: Seq[Path]): Long =
+    footers(spark, files)(_.getRecordCount).sum
 
   /** Exact MAX of a non-null long column across the parquet files
     * under `dir`, answered from the footers' column STATISTICS,
@@ -411,38 +416,24 @@ object IndexLifecycle {
     * never a semantic change. */
   def parquetColumnMaxLong(spark: SparkSession, dir: Path,
                            column: String): Option[Long] = {
-    if (!Files.exists(dir)) return None
-    val files =
-      if (Files.isRegularFile(dir)) Vector(dir)
-      else scala.util.Using.resource(Files.walk(dir))(
-        _.iterator().asScala
-          .filter(p => Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet"))
-          .toVector)
-    if (files.isEmpty) return None
-    val conf = spark.sessionState.newHadoopConf()
-    val maxes = files.flatMap { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        r.getFooter.getBlocks.asScala.map { block =>
-          block.getColumns.asScala
-            .find(_.getPath.toDotString == column)
-            .map(_.getStatistics) match {
-            // hasNonNullValue guards the all-null row group: its stats
-            // are non-empty (numNulls set) but getMax is the type's
-            // uninitialized default — accepting it would return a
-            // silently wrong max instead of forcing the fallback
-            // (review finding)
-            case Some(st) if st != null && !st.isEmpty && st.hasNonNullValue &&
-                st.isInstanceOf[org.apache.parquet.column.statistics.LongStatistics] =>
-              Some(st.asInstanceOf[org.apache.parquet.column.statistics.LongStatistics].getMax)
-            case _ => None
-          }
-        }.toVector
-      } finally r.close()
-    }
+    val files = if (Files.isRegularFile(dir)) Vector(dir) else parquetFiles(dir)
+    val maxes = footers(spark, files) { r =>
+      r.getFooter.getBlocks.asScala.map { block =>
+        block.getColumns.asScala
+          .find(_.getPath.toDotString == column)
+          .map(_.getStatistics) match {
+          // hasNonNullValue guards the all-null row group: its stats
+          // are non-empty (numNulls set) but getMax is the type's
+          // uninitialized default — accepting it would return a
+          // silently wrong max instead of forcing the fallback
+          // (review finding)
+          case Some(st) if st != null && !st.isEmpty && st.hasNonNullValue &&
+              st.isInstanceOf[org.apache.parquet.column.statistics.LongStatistics] =>
+            Some(st.asInstanceOf[org.apache.parquet.column.statistics.LongStatistics].getMax)
+          case _ => None
+        }
+      }.toVector
+    }.flatten.toVector
     // every row group must carry stats or the max could be understated
     if (maxes.isEmpty || maxes.exists(_.isEmpty)) None
     else Some(maxes.flatten.max)
@@ -450,44 +441,23 @@ object IndexLifecycle {
 
   /** Total parquet bytes under a directory — the sizing input of the
     * join-width policy and compaction thresholds. */
-  def parquetBytes(dir: Path): Long =
-    scala.util.Using.resource(Files.walk(dir))(
-      _.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .map(Files.size).sum)
+  def parquetBytes(dir: Path): Long = parquetFiles(dir).map(Files.size).sum
 
-  /** Size signal for an ID side table feeding [[boundedIdJoin]]:
-    * `max(parquet bytes, row count × 8)`. Parquet bytes alone
-    * UNDER-READ compressible id sets — the 8M drift rung measured a
-    * 2M-id strided tombstone table at 9.7 MiB on disk (RLE/dictionary
-    * ~5 B/id), sliding just under the 10 MiB broadcast budget while
-    * its hash relation would be an order of magnitude bigger — so the
-    * signal is floored at the raw key bytes, which no relation can
-    * undercut. Row counts come from the parquet FOOTERS, driver-side
-    * (no Spark job): one small read per part file, and the part-file
-    * count is bounded by the compaction cadence. Duplicate rows from
-    * crash-retried writes inflate the estimate — conservative (an
-    * over-wide estimate costs a shuffle that was almost due anyway;
-    * an under-read is a broadcast OOM). */
-  def idSideBytes(spark: SparkSession, dir: Path): Long =
-    idSideBytesFiles(spark, scala.util.Using.resource(Files.walk(dir))(
-      _.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .toVector))
-
-  /** [[idSideBytes]] over an explicit (manifest-resolved) file set. */
-  def idSideBytesFiles(spark: SparkSession, files: Seq[Path]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val rows = files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-    math.max(files.map(Files.size).sum, rows * 8L)
-  }
+  /** Size signal for an ID side table feeding [[boundedIdJoin]], over
+    * its snapshot files: `max(parquet bytes, row count × 8)`. Parquet
+    * bytes alone UNDER-READ compressible id sets — the 8M drift rung
+    * measured a 2M-id strided tombstone table at 9.7 MiB on disk
+    * (RLE/dictionary ~5 B/id), sliding just under the 10 MiB broadcast
+    * budget while its hash relation would be an order of magnitude
+    * bigger — so the signal is floored at the raw key bytes, which no
+    * relation can undercut. Row counts come from the parquet FOOTERS,
+    * driver-side (no Spark job): one small read per part file, and the
+    * part-file count is bounded by the compaction cadence. Duplicate
+    * rows from crash-retried writes inflate the estimate —
+    * conservative (an over-wide estimate costs a shuffle that was
+    * almost due anyway; an under-read is a broadcast OOM). */
+  def idSideBytes(spark: SparkSession, files: Seq[Path]): Long =
+    math.max(files.map(Files.size).sum, parquetRowCount(spark, files) * 8L)
 
   // ---- executed-plan introspection -----------------------------------------
 
@@ -513,52 +483,18 @@ object IndexLifecycle {
     })
   }
 
-  /** (broadcast LeftAnti present, shuffled LeftAnti present) — the
-    * [[boundedIdJoin]] strategy observable. Node-TYPED, not string
-    * matching: a node's toString covers its whole subtree, so a
-    * string match would see the anti-join through the joins above
-    * it. */
-  def antiJoinKinds(df: DataFrame): (Boolean, Boolean) = {
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
-    val ns = executedPlanNodes(df)
-    (ns.exists {
-      case b: BroadcastHashJoinExec => b.joinType.toString == "LeftAnti"
-      case _ => false
-    },
-     ns.exists {
-      case j: ShuffledHashJoinExec => j.joinType.toString == "LeftAnti"
-      case _ => false
-    })
-  }
-
   // ---- manifest-pinned layout snapshots ------------------------------------
 
   /** Name of the layout-snapshot manifest at an index root: one
-    * RELATIVE parquet path per line (sorted), committed atomically
-    * (tmp + same-dir ATOMIC_MOVE). The manifest is the Iceberg/Delta
-    * snapshot discipline applied to the index dirs the engine treats
-    * as tables: READERS resolve their file sets through the manifest
-    * instead of directory listings, so an in-place maintenance swap
-    * (compaction's merge/move/delete cycle) becomes INVISIBLE — a
-    * reader that resolved snapshot N keeps reading snapshot N's files
-    * (which maintenance RETAINS until the next maintenance entry
-    * reclaims them), and a reader resolving after the commit sees
-    * exactly snapshot N+1. This retires reads-quiesce-during-
-    * maintenance as the only option (round-12 judge ask #3): the
-    * remaining requirement is merely that one read does not span TWO
-    * maintenance events (superseded files live exactly one
-    * maintenance interval).
-    *
-    * Crash-ordering: the atomic move is the only commit point — a
-    * crash at any instant leaves the previous complete manifest, and
-    * files written but not yet committed are unlisted ORPHANS
-    * reclaimed by [[reclaimUnmanifested]] at the next maintenance
-    * entry. */
+    * RELATIVE parquet path per line (sorted), written to a temp file
+    * and moved into place atomically (same-dir ATOMIC_MOVE). That
+    * move is the only commit point of every mutation: a crash at any
+    * instant leaves the previous complete manifest (see the module
+    * header for the read and retention contract). */
   val ManifestName = "_MANIFEST"
 
-  /** The committed snapshot's relative paths, or None for a
-    * pre-manifest (legacy) index — readers fall back to directory
-    * listings there. */
+  /** The committed snapshot's relative paths; None when no index was
+    * built at `root`. */
   def readManifest(root: Path): Option[Seq[String]] = {
     val p = root.resolve(ManifestName)
     if (!Files.isRegularFile(p)) None
@@ -566,11 +502,22 @@ object IndexLifecycle {
       .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq)
   }
 
-  /** Snapshot files under one subdir of the manifest, as absolute
-    * paths. None = legacy index (no manifest). */
+  /** Snapshot files under one sub-table of the manifest, as absolute
+    * paths; None when no index was built at `root`. */
   def manifestFilesUnder(root: Path, sub: String): Option[Seq[Path]] =
     readManifest(root).map(_.filter(_.startsWith(sub + "/"))
       .map(root.resolve))
+
+  /** The committed snapshot of the index at `root`; an index-less
+    * path fails loudly rather than reading as empty. */
+  private def snapshot(root: Path): Seq[String] =
+    readManifest(root).getOrElse(throw new IllegalStateException(
+      s"no index snapshot ($ManifestName) at $root"))
+
+  /** The snapshot's files under one sub-table (empty when it lists
+    * none) — the only way either family finds its mutable files. */
+  def snapshotFiles(root: Path, sub: String): Seq[Path] =
+    snapshot(root).filter(_.startsWith(sub + "/")).map(root.resolve)
 
   private def writeManifestAtomic(root: Path, rel: Seq[String]): Unit = {
     val tmp = root.resolve(ManifestName + ".tmp")
@@ -581,60 +528,42 @@ object IndexLifecycle {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Current on-disk parquet listing of `sub`, relative to root —
-    * the truth source for ADD-ONLY dirs (append/delete side tables)
-    * and for a freshly (re)built dir. */
-  def listRelParquet(root: Path, sub: String): Seq[String] = {
-    val dir = root.resolve(sub)
-    if (!Files.isDirectory(dir)) Nil
-    else scala.util.Using.resource(Files.walk(dir))(
-      _.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq)
-  }
+  /** Current on-disk parquet listing of `sub`, relative to root. */
+  def listRelParquet(root: Path, sub: String): Seq[String] =
+    parquetFiles(root.resolve(sub)).map(root.relativize(_).toString)
 
-  /** Commit a new snapshot derived from the current one. `f` maps the
-    * current relative-path set (empty for a legacy index) to the new
-    * one. Single-writer by the same contract as every mutation. */
-  def updateManifest(root: Path)(f: Seq[String] => Seq[String]): Unit =
-    writeManifestAtomic(root, f(readManifest(root).getOrElse(Nil)))
+  /** A build's commit: a fresh snapshot of exactly the disk listing of
+    * `subs`, which the build just wrote wholesale. Every other
+    * sub-table starts empty. */
+  def commitFresh(root: Path, subs: Seq[String]): Unit =
+    writeManifestAtomic(root, subs.flatMap(listRelParquet(root, _)))
 
-  /** Replace the `sub` entries of the snapshot with the CURRENT disk
-    * listing. ONLY correct for a dir that was just rewritten WHOLESALE
-    * (an overwrite-mode write replaced every file, so the listing is
-    * the truth) — for an APPEND-mode side-table write use
-    * [[commitAddedWrite]]: a full relist there would RESURRECT files a
-    * previous compaction folded/applied and retained for its snapshot
-    * readers (round-13 review finding — duplicate probe candidates
-    * from re-listed delta; silently re-hidden ids from re-listed
-    * tombstones). NO-OP on a legacy index (creating a partial manifest
-    * there would make readers resolve the UNLISTED dirs as empty). */
-  def commitSubListing(root: Path, subs: Seq[String]): Unit =
-    if (readManifest(root).isDefined)
-      updateManifest(root) { cur =>
-        cur.filterNot(r => subs.exists(s => r.startsWith(s + "/"))) ++
-          subs.flatMap(listRelParquet(root, _))
-      }
-
-  /** Run an ADD-ONLY side-table write and commit EXACTLY the files it
+  /** Run an ADD-ONLY write into `sub` and commit EXACTLY the files it
     * created into the snapshot (listing diff, valid under the
     * single-writer contract). Files already on disk beforehand —
-    * including a previous compaction's retained-but-superseded ones —
-    * never (re-)enter the manifest. A crashed previous attempt's
-    * uncommitted files also stay out: the retry re-writes its rows
-    * into fresh files and the orphans reclaim at the next maintenance
-    * entry. Returns the ADDED files (absolute paths) so callers that
-    * need the write's row count read their footers instead of walking
-    * the dir again (review finding: three hand-rolled copies of this
-    * diff, each walking the growing side table twice per trigger). */
+    * a previous compaction's retained-but-superseded ones, a crashed
+    * attempt's orphans — never (re-)enter the manifest: a relist would
+    * RESURRECT folded delta or applied tombstones (round-13 review
+    * finding). Returns the ADDED files (absolute paths) so callers
+    * read the write's row count from their footers. */
   def commitAddedWrite(root: Path, sub: String)(write: => Unit): Seq[Path] = {
     val pre = listRelParquet(root, sub).toSet
     write
     val added = listRelParquet(root, sub).filterNot(pre.contains)
-    if (readManifest(root).isDefined)
-      updateManifest(root)(cur => cur ++ added)
+    if (added.nonEmpty) writeManifestAtomic(root, snapshot(root) ++ added)
     added.map(root.resolve(_))
+  }
+
+  /** A compaction's commit: one atomic swap of the snapshot, `removed`
+    * out and `added` in, plus every file of the `dropSubs` sub-tables
+    * out (a folded delta, applied tombstones). The dropped files stay
+    * on disk for snapshot-N readers until [[reclaimUnmanifested]]. */
+  def commitSwap(root: Path, removed: Seq[Path], added: Seq[Path],
+                 dropSubs: Seq[String] = Nil): Unit = {
+    val rem = removed.map(root.relativize(_).toString).toSet
+    writeManifestAtomic(root, snapshot(root).filterNot(r =>
+      rem(r) || dropSubs.exists(sb => r.startsWith(sb + "/"))) ++
+      added.map(root.relativize(_).toString))
   }
 
   /** Lifecycle bracket for a mutation run against a pristine cached
@@ -649,89 +578,154 @@ object IndexLifecycle {
 
   /** Delete parquet files under `subs` that the committed snapshot
     * does not list — the superseded files a previous maintenance
-    * event RETAINED for its in-flight readers, reclaimed at the next
-    * maintenance entry (the one-interval retention bound). No-op on a
-    * legacy index. */
-  def reclaimUnmanifested(root: Path, subs: Seq[String]): Unit =
-    readManifest(root).foreach { rel =>
-      val live = rel.toSet
-      def liveUnder(prefix: String): Boolean =
-        live.exists(_.startsWith(prefix + "/"))
-      subs.foreach { sub =>
-        val d = root.resolve(sub)
-        if (Files.isDirectory(d)) {
-          if (!liveUnder(sub))
-            // wholly dead side table (a folded-away delta/, an applied
-            // tombstones/): everything in it — superseded parquet plus
-            // the committer's _SUCCESS/.crc residue — goes at once
-            org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-          else {
-            listRelParquet(root, sub)
-              .filterNot(live.contains)
-              .foreach { r =>
-                val f = root.resolve(r)
-                Files.deleteIfExists(f)
-                // the local-FS checksum shadow of a reclaimed file
-                Files.deleteIfExists(f.resolveSibling(
-                  "." + f.getFileName.toString + ".crc"))
-              }
-            // drop subtree dirs with no live files (a fully-deleted
-            // cell partition), residue included — bottom-up
-            scala.util.Using.resource(Files.walk(d))(
-              _.iterator().asScala.toSeq).reverse
-              .filter(p => p != d && Files.isDirectory(p) &&
-                !liveUnder(root.relativize(p).toString))
-              .foreach(p => org.apache.commons.io.FileUtils
-                .deleteDirectory(p.toFile))
+    * event RETAINED for its in-flight readers, and the orphans of a
+    * write that crashed before its commit — at the next maintenance
+    * entry (the one-interval retention bound). */
+  def reclaimUnmanifested(root: Path, subs: Seq[String]): Unit = {
+    val live = snapshot(root).toSet
+    def liveUnder(prefix: String): Boolean =
+      live.exists(_.startsWith(prefix + "/"))
+    subs.map(root.resolve).filter(Files.isDirectory(_)).foreach { d =>
+      if (!liveUnder(root.relativize(d).toString))
+        // wholly dead side table (a folded-away delta/, an applied
+        // tombstones/): everything in it — superseded parquet plus
+        // the committer's _SUCCESS/.crc residue — goes at once
+        org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+      else {
+        parquetFiles(d).filterNot(f => live(root.relativize(f).toString))
+          .foreach { f =>
+            Files.deleteIfExists(f)
+            // the local-FS checksum shadow of a reclaimed file
+            Files.deleteIfExists(f.resolveSibling(
+              "." + f.getFileName.toString + ".crc"))
           }
-        }
+        // drop subtree dirs with no live files (a fully-deleted
+        // cell partition), residue included — bottom-up
+        scala.util.Using.resource(Files.walk(d))(
+          _.iterator().asScala.toSeq).reverse
+          .filter(p => p != d && Files.isDirectory(p) &&
+            !liveUnder(root.relativize(p).toString))
+          .foreach(p => org.apache.commons.io.FileUtils
+            .deleteDirectory(p.toFile))
       }
     }
-
-  /** Adopt a legacy index into the manifest era: commit a full
-    * listing if no manifest exists yet (disk == truth for an index no
-    * maintenance event has yet touched under this discipline). */
-  def ensureManifest(root: Path, subs: Seq[String]): Unit =
-    if (readManifest(root).isEmpty)
-      writeManifestAtomic(root, subs.flatMap(listRelParquet(root, _)))
+  }
 
   // ---- crash-ordered small-file merge --------------------------------------
 
   /** Merge `files` (parquet parts of one table) into a single part in
-    * `destDir`, with the crash-ordering invariant: (1) the merged data
-    * is materialized COMPLETELY to a temp sibling, (2) moved into
-    * `destDir` under fresh unique names, (3) only THEN are the
-    * originals deleted. A crash in the window between (2) and (3)
-    * leaves the merged rows AND the originals — transient duplicates,
-    * repaired by the caller's documented collapse point (see
-    * [[SignatureIndex.compactSignatures]] /
-    * [[AnnIndex.compactCells]]); a crash before (2) leaves the
-    * originals untouched. Loss is impossible at any point.
+    * `destDir` and return the new files; the originals stay on disk.
+    * The merged data is materialized COMPLETELY to a temp sibling, then
+    * moved into `destDir` under fresh unique names. The caller commits
+    * [-files +returned] with [[commitSwap]]: before that commit the new
+    * files are unlisted orphans (readers see snapshot N, never a
+    * duplicate; the next maintenance entry reclaims them), after it the
+    * originals are superseded files, retained for snapshot-N readers
+    * until the next maintenance entry. Loss is impossible at any point.
     * `transform` lets a caller dedupe at merge time (the ANN cell
-    * rewrite collapses vec_id duplicates, making a re-run of a crashed
-    * compaction the repair itself). */
+    * rewrite collapses vec_id duplicates, the set-valued side tables
+    * take `distinct`). */
   def mergeParquetFiles(spark: SparkSession, files: Seq[Path], destDir: Path,
-                        transform: DataFrame => DataFrame = identity,
-                        retainOriginals: Boolean = false): Seq[Path] = {
+                        transform: DataFrame => DataFrame = identity): Seq[Path] = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val tmp = destDir.resolveSibling(
       ".merge_" + destDir.getFileName.toString + "_" + tag)
     transform(spark.read.parquet(files.map(_.toString): _*)).coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
-    val merged = scala.util.Using.resource(Files.list(tmp))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-    val moved = merged.zipWithIndex.map { case (f, i) =>
+    val moved = parquetFiles(tmp).zipWithIndex.map { case (f, i) =>
       val dst = destDir.resolve(s"compact_${tag}_$i.parquet")
       Files.move(f, dst)
       dst
     }
-    // `retainOriginals`: the manifest-pinned layouts keep superseded
-    // files on disk for their in-flight snapshot readers (reclaimed at
-    // the next maintenance entry); the caller commits the manifest
-    // swap [-originals +moved] after this returns
-    if (!retainOriginals) files.foreach(Files.delete)
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     moved
+  }
+
+  // ---- the maintenance driver ----------------------------------------------
+
+  /** Dot-prefixed rebuild staging dir inside an index root — invisible
+    * to every scan and outside every snapshot sub-table. */
+  private val RebuildStageDir = ".rebuild_live"
+
+  /** Stage a rebuild's inputs under the root's staging dir unless a
+    * staging is already committed there: `stage` writes the staging
+    * COMPLETELY (adding bytes only — nothing of the index is touched),
+    * then the `_STAGED_OK` marker, holding `epoch`, commits it. An
+    * uncommitted staging is restarted from scratch. Returns the dir. */
+  private[graft] def stageRebuild(root: Path, epoch: String)(stage: Path => Unit): Path = {
+    val dir = root.resolve(RebuildStageDir)
+    val marker = dir.resolve("_STAGED_OK")
+    if (!Files.isRegularFile(marker)) {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      Files.createDirectories(dir)
+      stage(dir)
+      Files.write(marker, epoch.getBytes(StandardCharsets.UTF_8))
+    }
+    dir
+  }
+
+  /** MAINTENANCE driver of both families — the production loop's one
+    * entry point for keeping an index healthy. `rebuild` is the
+    * family's drift policy on its current meta, and `epoch` stamps
+    * that meta (any mutation moves it). Each family supplies only its
+    * own steps:
+    *  - `stage(dir)` writes the rebuild's inputs into the staging,
+    *    including the sidecars a build clears ([[stageSidecar]]);
+    *  - `build(dir)` rebuilds the index from the staging; its final
+    *    meta write is the COMMIT POINT (it resets the drift counters);
+    *  - `restore(dir)` puts the staged sidecars back;
+    *  - `compact` runs the family's compaction when its cadence is due
+    *    and returns what it merged (0 = nothing due).
+    *
+    * Crash ordering: the staging ADDS bytes only, the build tears the
+    * old layout down only after the staging's marker commits it, and
+    * the staging is dropped LAST. A crash anywhere re-enters safely:
+    *  - marker + drift still flagged + same epoch → the rebuild RESUMES
+    *    from the staging, never from the possibly-damaged index
+    *    (round-12 self-review finding);
+    *  - marker + a different epoch → mutations landed after the
+    *    staging was cut, so resuming would drop them: restage;
+    *  - marker + drift reset → the rebuild committed: finish its
+    *    restore, reclaim the staging.
+    * A rebuild requires reads to quiesce; compaction does not (see the
+    * module header). */
+  def maintain(root: Path, epoch: String, rebuild: Boolean)(
+      stage: Path => Unit, build: Path => Unit, restore: Path => Unit)(
+      compact: => Int): Maintenance = {
+    val dir = root.resolve(RebuildStageDir)
+    val marker = dir.resolve("_STAGED_OK")
+    if (Files.isRegularFile(marker)) {
+      if (!rebuild) restore(dir)
+      if (!rebuild || new String(Files.readAllBytes(marker),
+          StandardCharsets.UTF_8) != epoch)
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+    if (!rebuild) return Maintenance(rebuilt = false, compact)
+    build(stageRebuild(root, epoch)(stage))
+    restore(dir)
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    Maintenance(rebuilt = true, 0)
+  }
+
+  /** Copy the snapshot's `sub` files into a rebuild staging: the build
+    * clears every mutable sub-table, and a sidecar must outlive it. */
+  def stageSidecar(root: Path, stageDir: Path, sub: String): Unit =
+    snapshotFiles(root, sub).foreach { f =>
+      val dst = Files.createDirectories(stageDir.resolve(sub))
+      Files.copy(f, dst.resolve(f.getFileName.toString))
+    }
+
+  /** Append a staged sidecar's rows that `keep` retains back into the
+    * rebuilt index, committed into its fresh snapshot. A crash-retried
+    * restore appends duplicate rows, which collapse in every reader
+    * (both sidecars are sets). */
+  def restoreSidecar(spark: SparkSession, root: Path, stageDir: Path,
+                     sub: String)(keep: DataFrame => DataFrame): Unit = {
+    val staged = stageDir.resolve(sub)
+    if (Files.isDirectory(staged))
+      commitAddedWrite(root, sub) {
+        keep(spark.read.parquet(staged.toString)).coalesce(1)
+          .write.mode("append").parquet(root.resolve(sub).toString)
+      }
   }
 }

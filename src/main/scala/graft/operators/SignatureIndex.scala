@@ -10,8 +10,6 @@ import org.apache.spark.sql.types._
 
 import graft.functions.HashFunctions.MinHashCoeffs
 
-import scala.jdk.CollectionConverters._
-
 /** PERSISTED MinHash/LSH signature index — the incremental-dedup shape
   * a 100 TB corpus actually runs: the corpus is hashed, banded, skew-
   * refined and written ONCE (on corpus creation or change), and every
@@ -32,6 +30,12 @@ import scala.jdk.CollectionConverters._
   *    broadcast-class by construction;
   *  - `hot2/` — pass-2 residual populations over the cap:
   *    (band, band_sig, _sube, _pop2). Subset of hot's key space;
+  *  - `tombstones/` and `gateapp_md5/` — the delete and gate-append
+  *    side tables ([[deleteFromIndex]], [[gateAndAppendBatch]]);
+  *  - `_MANIFEST` — the layout snapshot listing the files of `sig/`,
+  *    `tombstones/` and `gateapp_md5/`; every read resolves those
+  *    tables through it ([[IndexLifecycle]]), so appends, deletes and
+  *    compaction are snapshot-safe for concurrent readers;
   *  - `_INDEX_META` — rowsPerBand/capPop/maxExtraBits/sigBytes stamp.
   *
   * The refinement assignment is FROZEN at build time: an increment row
@@ -64,7 +68,21 @@ import scala.jdk.CollectionConverters._
   */
 object SignatureIndex {
 
-  private val FormatVersion = 1
+  /** On-disk format generation (2: the manifest-read layout); the
+    * build-once cache dir names carry it, so an index written under
+    * another generation is rebuilt, not read. */
+  private[graft] val FormatVersion = 2
+
+  /** Sidecar recording the md5 and batch of every gate-ADMITTED
+    * document — (c_md5, c_doc, c_batch) — written by
+    * [[gateAndAppendBatch]] so later batches exact-reject copies of
+    * earlier admissions, and so a REPLAYED batch can exclude its own
+    * previous appends (c_batch). */
+  private val GateAppendMd5Dir = "gateapp_md5"
+
+  /** The sub-tables the layout snapshot lists: every table a mutation
+    * touches. */
+  private val MutableSubs = Seq("sig", "tombstones", GateAppendMd5Dir)
 
   case class Meta(rowsPerBand: Int, capPop: Int, maxExtraBits: Int,
                   nDocs: Long, sigBytes: Long, appendedDocs: Long = 0L,
@@ -81,8 +99,16 @@ object SignatureIndex {
     array_sort(transform(col("hs"),
       h => (h - 2147483648L).cast("int"))).as("hsi"))
 
-  private def parquetBytes(dir: Path): Long =
-    IndexLifecycle.parquetBytes(dir)
+  /** The snapshot's files of one sub-table. */
+  private def files(path: String, sub: String): Seq[Path] =
+    IndexLifecycle.snapshotFiles(Paths.get(path), sub)
+
+  /** The snapshot's signature table, read with its known schema. */
+  private def sigScan(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(SigSchema).parquet(files(path, "sig").map(_.toString): _*)
+
+  private def sigBytes(path: String): Long =
+    files(path, "sig").map(Files.size).sum
 
   /** Band-explode a signature frame into one row per (doc, band),
     * carrying the refinement inputs. `narrow` drops hsi — the
@@ -144,7 +170,9 @@ object SignatureIndex {
     IndexLifecycle.clearBuildScopedMarkers(root)
     hashed.select(sigColumns: _*)
       .write.mode("overwrite").parquet(s"$path/sig")
-    val sig = spark.read.schema(SigSchema).parquet(s"$path/sig")
+    // the fresh snapshot: sig/ alone, the side tables start empty
+    IndexLifecycle.commitFresh(root, Seq("sig"))
+    val sig = sigScan(spark, path)
     val bandedN = banded(sig, rowsPerBand, narrow = true)
     bandedN.groupBy(col("band"), col("band_sig"))
       .agg(count(lit(1)).as("_pop"))
@@ -168,7 +196,7 @@ object SignatureIndex {
           .filter(col("_pop2") > capPop)
     hot2.write.mode("overwrite").parquet(s"$path/hot2")
     val meta = Meta(rowsPerBand, capPop, maxExtraBits,
-      nDocs = sig.count(), sigBytes = parquetBytes(Paths.get(path, "sig")))
+      nDocs = sig.count(), sigBytes = sigBytes(path))
     writeMeta(root, meta)
     meta
   }
@@ -234,13 +262,15 @@ object SignatureIndex {
     * persisted signatures and is cheaper at every rung; SCALING.md
     * §4.23.) The next [[clustersFromIndex]] restages it.
     *
-    * Partial-failure contract (single-writer, like the build): if the
-    * sig append lands but the meta rewrite doesn't, the index still
-    * probes CORRECTLY (probes scan `sig/` directly; meta only feeds
-    * bookkeeping and join-width sizing) and RE-RUNNING the append is
-    * semantically safe — duplicated signature rows collapse in every
-    * consumer (pair frames group on the id pair, the gate collects its
-    * hits into a set) — it just wastes the duplicate's bytes until the next
+    * Partial-failure contract (single-writer, like the build): the
+    * append is visible all-or-nothing at its snapshot commit — a crash
+    * before it leaves unlisted orphan files that the next maintenance
+    * entry reclaims. If the commit lands but the meta rewrite doesn't,
+    * the index still probes CORRECTLY (meta only feeds bookkeeping and
+    * join-width sizing) and RE-RUNNING the append is semantically
+    * safe — duplicated signature rows collapse in every consumer (pair
+    * frames group on the id pair, the gate collects its hits into a
+    * set) — it just wastes the duplicate's bytes until the next
     * rebuild. */
   def appendToIndex(newHashed: DataFrame, path: String): Meta = {
     val root = Paths.get(path)
@@ -261,12 +291,9 @@ object SignatureIndex {
     val pairsMarker = root.resolve("pairs").resolve("_PAIRS_OK")
     if (Files.isRegularFile(pairsMarker)) Files.delete(pairsMarker)
     // round-13 opt: ONE evaluation of the increment (the write), with
-    // the appended-row count read back from the new part files'
-    // FOOTERS (commitAddedWrite's listing diff, valid under the
-    // single-writer contract; the signature index carries no manifest,
-    // so the snapshot half is a no-op) — the cache+count+write form
-    // scheduled an extra job per append, per trigger in the
-    // gate→append loops
+    // the appended-row count read back from the committed part files'
+    // FOOTERS — the cache+count+write form scheduled an extra job per
+    // append, per trigger in the gate→append loops
     val added = IndexLifecycle.commitAddedWrite(root, "sig") {
       newHashed.select(sigColumns: _*)
         .write.mode("append").parquet(s"$path/sig")
@@ -274,7 +301,7 @@ object SignatureIndex {
     val nNew = IndexLifecycle.parquetRowCount(newHashed.sparkSession, added)
     val meta = before.copy(
       nDocs = before.nDocs + nNew,
-      sigBytes = parquetBytes(Paths.get(path, "sig")),
+      sigBytes = sigBytes(path),
       appendedDocs = before.appendedDocs + nNew)
     writeMeta(root, meta)
     meta
@@ -329,8 +356,7 @@ object SignatureIndex {
     // increment-bounded), then ids already tombstoned drop out — a
     // retried delete changes neither the tombstone set nor counters,
     // and a foreign-id delete changes nothing at all
-    val present = spark.read.schema(SigSchema).parquet(s"$path/sig")
-      .select(col("doc_id"))
+    val present = sigScan(spark, path).select(col("doc_id"))
       .join(broadcast(ts0), Seq("doc_id"), "left_semi").distinct()
     val fresh = tombstoneIds(spark, path).fold(present) { case (prev, bytes) =>
       IndexLifecycle.boundedIdJoin(present, prev, "doc_id", bytes, "left_anti")
@@ -348,9 +374,11 @@ object SignatureIndex {
       // min(rows, defaultParallelism) part files PER DELETE, inflating
       // the compaction-cadence file count and the per-probe footer
       // reads (round-12 self-review finding)
-      spark.createDataset(newIds.toSeq).toDF("doc_id")
-        .coalesce(1)
-        .write.mode("append").parquet(s"$path/tombstones")
+      IndexLifecycle.commitAddedWrite(root, "tombstones") {
+        spark.createDataset(newIds.toSeq).toDF("doc_id")
+          .coalesce(1)
+          .write.mode("append").parquet(s"$path/tombstones")
+      }
     }
     val nDel = newIds.length.toLong
     val meta = before.copy(nDocs = before.nDocs - nDel,
@@ -363,13 +391,10 @@ object SignatureIndex {
     * bytes (the size signal [[IndexLifecycle.boundedIdJoin]] keys the
     * join strategy on), or None when none exist. */
   private def tombstoneIds(spark: SparkSession,
-                           path: String): Option[(DataFrame, Long)] = {
-    val dir = Paths.get(path, "tombstones")
-    if (IndexLifecycle.hasParquet(dir))
-      Some((spark.read.schema(IdSchema).parquet(dir.toString).distinct(),
-        IndexLifecycle.idSideBytes(spark, dir)))
-    else None
-  }
+                           path: String): Option[(DataFrame, Long)] =
+    Some(files(path, "tombstones")).filter(_.nonEmpty).map(fs =>
+      (spark.read.schema(IdSchema).parquet(fs.map(_.toString): _*).distinct(),
+        IndexLifecycle.idSideBytes(spark, fs)))
 
   /** The LIVE sig scan: the persisted signature table minus the
     * un-reclaimed tombstones ([[deleteFromIndex]]) — the one read
@@ -379,234 +404,123 @@ object SignatureIndex {
     * broadcast below the session threshold, size-driven SHUFFLE_HASH
     * above) and disappears entirely when no tombstones exist. */
   private def liveSig(spark: SparkSession, path: String): DataFrame = {
-    val sig = spark.read.schema(SigSchema).parquet(s"$path/sig")
+    val sig = sigScan(spark, path)
     tombstoneIds(spark, path).fold(sig) { case (ts, bytes) =>
       IndexLifecycle.boundedIdJoin(sig, ts, "doc_id", bytes, "left_anti")
     }
   }
 
-  /** Put the staged gate-append md5 sidecar back after a rebuild,
-    * FILTERED to doc_ids surviving in the rebuilt sig table (an
-    * admitted-then-tombstoned doc's md5 must stop rejecting copies of
-    * content that was taken down). Append-mode + set semantics:
-    * duplicate rows from a crash-retried restore collapse in the gate's
-    * md5 set. */
-  private def restoreStagedGateMd5(spark: SparkSession, stageDir: Path,
-                                   path: String): Unit = {
-    val staged = stageDir.resolve(GateAppendMd5Dir)
-    if (IndexLifecycle.hasParquet(staged)) {
-      spark.read.schema(Md5Schema).parquet(staged.toString)
-        .join(spark.read.schema(SigSchema).parquet(s"$path/sig")
-          .select(col("doc_id").as("c_doc")).distinct(),
-          Seq("c_doc"), "left_semi")
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(Paths.get(path, GateAppendMd5Dir).toString)
-    }
-  }
-
-  /** MAINTENANCE driver — the production loop's one entry point for
-    * keeping an index healthy (round-11 judge ask: the predicates
-    * existed but nothing called them in production shape). Consults
-    * the policies in order and acts:
+  /** MAINTENANCE — the signature family's steps under
+    * [[IndexLifecycle.maintain]] (staging, crash re-entry and the
+    * commit point are the shared driver's). Consults the policies in
+    * order and acts:
     *
     *  1. [[needsRebuild]] (append+delete drift past
-    *     [[RebuildFraction]]) → REBUILD in place from
-    *     `rehashedCorpus` minus the tombstones — the only operation
+    *     [[RebuildFraction]]) → REBUILD in place from `rehashedCorpus`
+    *     restricted to the live indexed doc_ids — the only operation
     *     that physically reclaims deleted signatures (sig/ is not
     *     id-partitioned, so reclamation IS a corpus rewrite) and
     *     re-freezes the hot/hot2 populations on the live data;
     *  2. else [[needsCompaction]] → [[compactSignatures]]
-    *     (increment-priced small-file merge, tombstone files
-    *     deduplicated down to one).
+    *     (increment-priced small-file merge, snapshot-safe).
     *
-    * `rehashedCorpus` must be the live document store's (doc_id, hs)
-    * frame, evaluated only if the rebuild fires: signatures alone
-    * cannot rebuild the index because the content salt is xxhash64
-    * over the TEXT-ORDER shingle stream (`hsi` is stored sorted; a
-    * sorted-order salt would shard a probe and its indexed duplicate
-    * differently in hot buckets — a recall hole). A signature index
-    * is DERIVED data; its rebuild re-hashes from the source, exactly
-    * like production. Tombstoned ids are dropped from the supplied
-    * corpus first (the build clears `tombstones/`; keeping them would
-    * resurrect).
+    * `rehashedCorpus` is the live document store's (doc_id, hs) frame
+    * — it may hold more than the index (documents never admitted, or
+    * since deleted): the restriction to the snapshot's live sig ids is
+    * applied here, and the frame is evaluated only if the rebuild
+    * fires. Signatures alone cannot rebuild the index because the
+    * content salt is xxhash64 over the TEXT-ORDER shingle stream
+    * (`hsi` is stored sorted; a sorted-order salt would shard a probe
+    * and its indexed duplicate differently in hot buckets — a recall
+    * hole). A signature index is DERIVED data; its rebuild re-hashes
+    * from the source, exactly like production.
     *
-    * CRASH ORDERING (uniform with [[AnnIndex.maintainAnnIndex]]): the
-    * tombstone-filtered live corpus is staged to `.rebuild_live/rows`
-    * + marker INSIDE the index dir FIRST (adds bytes only — and the
-    * staged frame's lineage reads nothing the build destroys), then
-    * [[buildSignatureIndex]] tears down the old layout; its final
-    * meta write is the COMMIT POINT (drift counters reset), and the
-    * staging is dropped LAST. A crash anywhere re-enters safely:
-    * marker + drift still flagged → resume from the staged rows (the
-    * first cut re-read `tombstones/` on re-entry — already deleted by
-    * the crashed build, so the rebuild would have RESURRECTED every
-    * taken-down doc, the round-12 self-review finding); marker +
-    * drift reset → the rebuild committed, stale staging reclaimed.
-    * Reads must quiesce for the duration (the module's
-    * reads-quiesce-during-maintenance contract). */
+    * The staging holds the restricted corpus (`rows`) and the
+    * gate-append md5 sidecar, which the build clears and the restore
+    * puts back FILTERED to the surviving doc_ids: it is the ONLY
+    * exact-dup record for admitted null-signature docs (a short doc
+    * has no band rows), and an admitted-then-tombstoned doc's md5 must
+    * stop rejecting copies of content that was taken down. */
   def maintainIndex(spark: SparkSession, path: String)
                    (rehashedCorpus: => DataFrame): IndexLifecycle.Maintenance = {
     val meta = readMeta(path)
-    val stageDir = Paths.get(path, ".rebuild_live")
-    val marker = stageDir.resolve("_STAGED_OK")
-    def epoch(m: Meta): String =
-      s"${m.nDocs}|${m.appendedDocs}|${m.deletedDocs}"
-    if (Files.isRegularFile(marker)) {
-      val staged = new String(Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (!needsRebuild(meta)) {
-        // committed rebuild that crashed before reclaiming: finish
-        // its sidecar restore, then reclaim
-        restoreStagedGateMd5(spark, stageDir, path)
-        org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)
-      } else if (staged != epoch(meta))
-        // STALE EPOCH: mutations landed after this staging was cut —
-        // resuming it would drop them; restage from the live state
-        org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)
-    }
-    if (needsRebuild(meta)) {
-      if (!Files.isRegularFile(marker)) {
-        val live = tombstoneIds(spark, path).fold(rehashedCorpus) {
-          case (ts, bytes) =>
-            IndexLifecycle.boundedIdJoin(rehashedCorpus, ts, "doc_id",
-              bytes, "left_anti")
-        }
-        live.write.mode("overwrite").parquet(
-          stageDir.resolve("rows").toString)
-        // LOUD COVERAGE CHECK before the marker commits the staging
-        // (rebuild-priced — one slim doc_id scan each side): the
-        // supplied corpus must cover every live sig doc_id, or the
-        // rebuild would SILENTLY drop indexed docs and later copies
-        // would be re-admitted (round-12 ADVICE: gate-append replay
-        // admissions live under offset ids a naive source rehash
-        // misses). Crash-safe: a thrown require leaves rows without a
-        // marker, and the next attempt restages over them.
-        val missing = liveSig(spark, path).select(col("doc_id"))
-          .join(spark.read.parquet(stageDir.resolve("rows").toString)
-            .select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .limit(1).count()
-        require(missing == 0,
+    val root = Paths.get(path)
+    def liveIds = liveSig(spark, path).select(col("doc_id"))
+    IndexLifecycle.maintain(root,
+      s"${meta.nDocs}|${meta.appendedDocs}|${meta.deletedDocs}",
+      needsRebuild(meta))(
+      stage = { dir =>
+        val rows = dir.resolve("rows").toString
+        rehashedCorpus.join(liveIds, Seq("doc_id"), "left_semi")
+          .write.mode("overwrite").parquet(rows)
+        // LOUD COVERAGE CHECK before the marker commits the staging: the
+        // corpus must cover every live sig doc_id, or the rebuild would
+        // SILENTLY drop indexed docs and later copies would be
+        // re-admitted (round-12 ADVICE: gate-append replay admissions
+        // live under offset ids a naive source rehash misses)
+        require(!IndexLifecycle.anyRow(liveIds.join(
+            spark.read.parquet(rows).select(col("doc_id")), Seq("doc_id"),
+            "left_anti")),
           s"maintainIndex($path): the supplied rehash corpus does not " +
             "cover every live indexed doc_id — rebuilding would drop " +
             "documents; widen the corpus (replay/offset ids?) first")
-        // carry the gate-append md5 sidecar: the build deletes it, but
-        // it is the ONLY exact-dup record for admitted null-signature
-        // docs (a short doc has no band rows) — dropping it at rebuild
-        // would re-admit exact copies of earlier admissions, and the
-        // in-flight batch's replay exclusion would vanish (second-pass
-        // finding). Restored FILTERED to surviving doc_ids after the
-        // build (a tombstoned admission's md5 must stop rejecting:
-        // the content was taken down).
-        val sc = Paths.get(path, GateAppendMd5Dir)
-        if (IndexLifecycle.hasParquet(sc)) {
-          val dst = stageDir.resolve(GateAppendMd5Dir)
-          Files.createDirectories(dst)
-          scala.util.Using.resource(Files.list(sc))(
-            _.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .foreach(f =>
-                Files.copy(f, dst.resolve(f.getFileName.toString))))
-        }
-        Files.write(marker, epoch(meta)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      buildSignatureIndex(
-        spark.read.parquet(stageDir.resolve("rows").toString), path,
-        meta.rowsPerBand, meta.capPop, meta.maxExtraBits) // meta = commit
-      restoreStagedGateMd5(spark, stageDir, path)
-      org.apache.commons.io.FileUtils.deleteDirectory(stageDir.toFile)
-      IndexLifecycle.Maintenance(rebuilt = true, 0)
-    } else if (needsCompaction(path))
-      IndexLifecycle.Maintenance(rebuilt = false,
-        compactSignatures(spark, path))
-    else IndexLifecycle.Maintenance(rebuilt = false, 0)
+        IndexLifecycle.stageSidecar(root, dir, GateAppendMd5Dir)
+      },
+      build = dir => buildSignatureIndex(
+        spark.read.parquet(dir.resolve("rows").toString), path,
+        meta.rowsPerBand, meta.capPop, meta.maxExtraBits),
+      restore = dir => IndexLifecycle.restoreSidecar(spark, root, dir,
+        GateAppendMd5Dir)(_.join(liveIds.withColumnRenamed("doc_id", "c_doc"),
+          Seq("c_doc"), "left_semi")))(
+      if (needsCompaction(path)) compactSignatures(spark, path) else 0)
   }
 
   /** Compaction-cadence predicate — the signature-family instance of
     * [[IndexLifecycle.CompactSmallFilesMax]] (measured on the ANN
     * twin, SCALING.md §4.19; the degradation mechanism — per-file open
     * cost on the scan every probe pays — is layout-independent): true
-    * once enough sub-threshold append part files accumulated in
-    * `sig/`. A path with no index (or no sig dir) has nothing to
-    * compact — false, same contract as [[AnnIndex.needsCompaction]]
-    * on a delta-less index. */
-  def needsCompaction(path: String, minFileBytes: Long = 8L << 20): Boolean = {
-    val sigDir = Paths.get(path, "sig")
-    if (!Files.isDirectory(sigDir)) return false
-    val small = scala.util.Using.resource(Files.list(sigDir))(
-      _.iterator().asScala
-        .count(p => p.getFileName.toString.endsWith(".parquet") &&
-          Files.size(p) < minFileBytes))
-    // tombstone AND gate-append-sidecar part files count too: liveSig
-    // lists + scans tombstones on every consumer read, and every
-    // gate-append trigger scans the md5 sidecar (its cadence
-    // exemption was a round-12 self-review finding)
-    val side = Seq("tombstones", GateAppendMd5Dir).map { name =>
-      val d = Paths.get(path, name)
-      if (!Files.isDirectory(d)) 0
-      else scala.util.Using.resource(Files.list(d))(
-        _.iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet")))
-    }.sum
-    IndexLifecycle.needsCompaction(small + side)
-  }
+    * once enough snapshot part files accumulated: sub-threshold `sig/`
+    * parts (appends), plus every tombstone and gate-append-sidecar
+    * part — liveSig reads tombstones on every consumer read, and
+    * every gate-append trigger scans the md5 sidecar. */
+  def needsCompaction(path: String, minFileBytes: Long = 8L << 20): Boolean =
+    IndexLifecycle.needsCompaction(
+      files(path, "sig").count(Files.size(_) < minFileBytes) +
+        files(path, "tombstones").size + files(path, GateAppendMd5Dir).size)
 
-  /** Compact the small signature files a long append lifecycle
-    * accumulates (each [[appendToIndex]] adds one or more
-    * increment-sized part files beside the corpus-build parts):
-    * every part file under `minFileBytes` merges into one, the
-    * originals are deleted, and meta's sigBytes refreshes. Content is
-    * untouched — every consumer scans `sig/` as a whole — so probes
-    * and pair frames are result-invariant (spec-pinned); cost is
-    * proportional to the SMALL files' bytes (appends), never the
-    * corpus build parts above the threshold. Single-writer contract
-    * like build/append. Crash ordering ([[IndexLifecycle
-    * .mergeParquetFiles]]): the merged file moves INTO `sig/` before
-    * the originals are deleted, so a crash in the window leaves
-    * duplicate signature rows — which every consumer collapses (pair
-    * frames group on the id pair, the gate's hits are a set; the
-    * old delete-first order instead LOST the merged rows, a silent
-    * recall hole only a rebuild repaired). A post-crash re-run merges
-    * the duplicates' bytes along; a rebuild reclaims them. Returns
-    * the number of files merged. */
+  /** Compact the small files a long append lifecycle accumulates —
+    * snapshot-safe, like [[AnnIndex.compactCells]]: the entry reclaims
+    * what the previous maintenance event retained (and any crashed
+    * write's orphans); every `sig/` part under `minFileBytes` merges
+    * into one, the tombstone and gate-append sidecar tables merge down
+    * through `distinct` (both are sets, and distinct is the identity
+    * their consumers apply); then ONE [[IndexLifecycle.commitSwap]]
+    * publishes the merged files and RETAINS the originals for readers
+    * that resolved the previous snapshot. Content is untouched, so
+    * probes, gates and pair frames are result-invariant (spec-pinned);
+    * cost is proportional to the SMALL files' bytes, never the corpus
+    * build parts above the threshold. A crash before the swap leaves
+    * the merged files as orphans — readers see the previous snapshot,
+    * no duplicates — and re-entry reclaims them. Returns the number of
+    * files merged. */
   def compactSignatures(spark: SparkSession, path: String,
                         minFileBytes: Long = 8L << 20): Int = {
-    val sigDir = Paths.get(path, "sig")
-    val small = scala.util.Using.resource(Files.list(sigDir))(
-      _.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-          Files.size(p) < minFileBytes)
-        .toSeq.sortBy(_.toString))
-    // the tombstone side table fragments the same way (one-plus part
-    // files per delete) and is listed on every liveSig read: merge it
-    // down too, deduplicating in the same pass (tombstone content is
-    // a set — distinct is the identity its consumers already apply)
-    var merged = 0
-    for (name <- Seq("tombstones", GateAppendMd5Dir)) {
-      val d = Paths.get(path, name)
-      if (Files.isDirectory(d)) {
-        val fs = scala.util.Using.resource(Files.list(d))(
-          _.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.sortBy(_.toString))
-        if (fs.size >= 2) {
-          // both side tables are SETS (tombstone ids; admitted md5
-          // rows) — distinct is the identity their consumers apply
-          IndexLifecycle.mergeParquetFiles(spark, fs, d,
-            transform = _.distinct())
-          merged += fs.size
-        }
-      }
+    val root = Paths.get(path)
+    IndexLifecycle.reclaimUnmanifested(root, MutableSubs)
+    val merges = Seq(
+      ("sig", files(path, "sig").filter(Files.size(_) < minFileBytes),
+        identity[DataFrame] _),
+      ("tombstones", files(path, "tombstones"), (_: DataFrame).distinct()),
+      (GateAppendMd5Dir, files(path, GateAppendMd5Dir),
+        (_: DataFrame).distinct()))
+      .filter(_._2.size >= 2)
+    if (merges.isEmpty) return 0
+    val added = merges.flatMap { case (sub, fs, transform) =>
+      IndexLifecycle.mergeParquetFiles(spark, fs, root.resolve(sub), transform)
     }
-    if (small.size >= 2) {
-      IndexLifecycle.mergeParquetFiles(spark, small, sigDir)
-      merged += small.size
-      val meta = readMeta(path)
-      writeMeta(Paths.get(path),
-        meta.copy(sigBytes = parquetBytes(sigDir)))
-    }
-    merged
+    IndexLifecycle.commitSwap(root, merges.flatMap(_._2), added)
+    writeMeta(root, readMeta(path).copy(sigBytes = sigBytes(path)))
+    merges.map(_._2.size).sum
   }
 
   def readMeta(path: String): Meta = {
@@ -617,9 +531,8 @@ object SignatureIndex {
       props.getProperty("maxExtraBits").toInt,
       props.getProperty("nDocs").toLong,
       props.getProperty("sigBytes").toLong,
-      // absent in pre-append/pre-delete indexes: no such drift
-      Option(props.getProperty("appendedDocs")).map(_.toLong).getOrElse(0L),
-      Option(props.getProperty("deletedDocs")).map(_.toLong).getOrElse(0L))
+      props.getProperty("appendedDocs").toLong,
+      props.getProperty("deletedDocs").toLong)
   }
 
   /** The joinable keyed frame (k, band, band_sig, sub, doc_id, hsi)
@@ -661,6 +574,20 @@ object SignatureIndex {
     refined.select(outCols: _*)
   }
 
+  /** The frozen hot/hot2 population tables, None where a table holds
+    * no row (hot2 is consulted only under a non-empty hot). Presence is
+    * read from the parquet footers, driver-side: a `df.isEmpty` here
+    * was one scheduled job per table per probe call. */
+  private def hotTables(spark: SparkSession, indexPath: String)
+      : (Option[DataFrame], Option[DataFrame]) = {
+    def table(name: String): Option[DataFrame] =
+      if (IndexLifecycle.parquetHasRows(spark, Paths.get(indexPath, name)))
+        Some(spark.read.parquet(s"$indexPath/$name"))
+      else None
+    table("hot").fold[(Option[DataFrame], Option[DataFrame])]((None, None))(
+      h => (Some(h), table("hot2")))
+  }
+
   /** Near-dup pairs of a NEW increment (doc_id, hs) against the
     * persisted index — (id_new, id_old, n_inter, n_union, jaccard_bp),
     * the exact [[Dedup.lshJaccardPairsAcross]] frame. Per-invocation
@@ -689,7 +616,7 @@ object SignatureIndex {
     Dedup.registerScratchDir(incDir)
     newHashed.select(sigColumns: _*)
       .write.mode("overwrite").parquet(incDir.toString)
-    (incDir.toString, parquetBytes(incDir))
+    (incDir.toString, IndexLifecycle.parquetBytes(incDir))
   }
 
   /** [[probeSignatureIndex]] body over an ALREADY-STAGED increment —
@@ -700,17 +627,7 @@ object SignatureIndex {
                            incBytes: Long, indexPath: String): DataFrame = {
     val meta = readMeta(indexPath)
     val nBands = MinHashCoeffs.length / meta.rowsPerBand
-    // hot/hot2 presence from the parquet footers (driver-side; a
-    // df.isEmpty here was one scheduled job per table per probe call)
-    val (hot, hot2) =
-      if (!IndexLifecycle.parquetHasRows(spark, Paths.get(indexPath, "hot")))
-        (None, None)
-      else {
-        val h2present = IndexLifecycle.parquetHasRows(
-          spark, Paths.get(indexPath, "hot2"))
-        (Some(spark.read.parquet(s"$indexPath/hot")),
-          if (h2present) Some(spark.read.parquet(s"$indexPath/hot2")) else None)
-      }
+    val (hot, hot2) = hotTables(spark, indexPath)
     val incSig = spark.read.schema(SigSchema).parquet(stagedIncDir)
 
     val sigScan = liveSig(spark, indexPath)
@@ -783,16 +700,7 @@ object SignatureIndex {
     * width-governed SHUFFLE_HASH band self-join. */
   def selfPairsFromIndex(spark: SparkSession, indexPath: String): DataFrame = {
     val meta = readMeta(indexPath)
-    // footer-read presence check — no scheduled job (round-13 opt)
-    val (hot, hot2) =
-      if (!IndexLifecycle.parquetHasRows(spark, Paths.get(indexPath, "hot")))
-        (None, None)
-      else {
-        val h2present = IndexLifecycle.parquetHasRows(
-          spark, Paths.get(indexPath, "hot2"))
-        (Some(spark.read.parquet(s"$indexPath/hot")),
-          if (h2present) Some(spark.read.parquet(s"$indexPath/hot2")) else None)
-      }
+    val (hot, hot2) = hotTables(spark, indexPath)
     val keyed = keyedFromSig(
       liveSig(spark, indexPath), meta, hot, hot2)
     Dedup.fatJoinPairs(keyed,
@@ -829,8 +737,7 @@ object SignatureIndex {
       // without the watermark, a delete→restage sequence would pay
       // two corpus-wide anti-joins per clustering forever, filtering
       // ids that cannot be present (round-12 third-pass finding)
-      Files.write(tombsMark, IndexLifecycle.dirFingerprint(
-        Paths.get(indexPath, "tombstones"))
+      Files.write(tombsMark, tombstoneState(indexPath)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // NOTE: the band join staged a corpus-sized scratch table; the
       // ladder harness (ScaleBench) reclaims it via Dedup.purgeScratchDirs()
@@ -849,8 +756,7 @@ object SignatureIndex {
           java.nio.charset.StandardCharsets.UTF_8)
       else "" // pre-watermark staging: filter conservatively
     tombstoneIds(spark, indexPath).fold(pairs) { case (ts, bytes) =>
-      if (stagedFp == IndexLifecycle.dirFingerprint(
-          Paths.get(indexPath, "tombstones"))) pairs
+      if (stagedFp == tombstoneState(indexPath)) pairs
       else {
         val fa = IndexLifecycle.boundedIdJoin(pairs,
           ts.withColumnRenamed("doc_id", "id_a"), "id_a", bytes, "left_anti")
@@ -861,6 +767,13 @@ object SignatureIndex {
       }
     }
   }
+
+  /** The snapshot's tombstone files by name — an exact stamp of the
+    * tombstone state, since snapshot files are immutable and uniquely
+    * named ("" when there are none). */
+  private def tombstoneState(indexPath: String): String =
+    files(indexPath, "tombstones").map(_.getFileName.toString).sorted
+      .mkString(",")
 
   /** Near-dup CLUSTERS off the persisted index: connected components
     * over the staged strong-pair graph. After the one-time pairs
@@ -1035,13 +948,11 @@ object SignatureIndex {
     // (by md5) nor may their signatures (below). Bounded by the batch:
     // gate_md5 is a set, and the append sidecar gains one row per
     // admission.
-    val appDir = Paths.get(indexPath, GateAppendMd5Dir)
-    val md5Dirs = s"$indexPath/gate_md5" +:
-      (if (appendBatch.isDefined && IndexLifecycle.hasParquet(appDir))
-        Seq(appDir.toString) else Nil)
+    val md5Paths = s"$indexPath/gate_md5" +: (if (appendBatch.isEmpty) Nil
+      else files(indexPath, GateAppendMd5Dir).map(_.toString))
     val md5Match = HashExpressions.in_set(col("c_md5"),
       rows.map(_.getUTF8String(fMd5)))
-    val (own, other) = spark.read.schema(Md5Schema).parquet(md5Dirs: _*)
+    val (own, other) = spark.read.schema(Md5Schema).parquet(md5Paths: _*)
       .filter(appendBatch.fold(md5Match)(id => md5Match || col("c_batch") === id))
       .collect()
       .partition(r => appendBatch.exists(id => !r.isNullAt(2) && r.getLong(2) == id))
@@ -1091,13 +1002,6 @@ object SignatureIndex {
     // 4. the admitted rows, driver-local
     (schema, afterMd5.filterNot(r => hits(r.getLong(fDoc))).toSeq)
   }
-
-  /** Sidecar recording the md5 and batch of every gate-ADMITTED
-    * document — (c_md5, c_doc, c_batch) — written by
-    * [[gateAndAppendBatch]] so later batches exact-reject copies of
-    * earlier admissions, and so a REPLAYED batch can exclude its own
-    * previous appends (c_batch). */
-  private val GateAppendMd5Dir = "gateapp_md5"
 
   /** The PRODUCTION ingest composition — gate the batch, then APPEND
     * the admissions — run once per micro-batch by a foreachBatch sink:
@@ -1152,12 +1056,14 @@ object SignatureIndex {
       // lands is harmless: the exclusion hides sig rows that do not
       // exist, and the md5 row correctly rejects future copies of a
       // doc the re-delivered batch will re-admit and re-append.
-      admitted.select(Seq(col("i_md5"), col("doc_id"), lit(batchId))
-          .zip(Md5Schema.fields)
-          .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*)
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(Paths.get(indexPath, GateAppendMd5Dir).toString)
+      IndexLifecycle.commitAddedWrite(Paths.get(indexPath), GateAppendMd5Dir) {
+        admitted.select(Seq(col("i_md5"), col("doc_id"), lit(batchId))
+            .zip(Md5Schema.fields)
+            .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*)
+          .coalesce(1)
+          .write.mode("append")
+          .parquet(Paths.get(indexPath, GateAppendMd5Dir).toString)
+      }
       appendToIndex(admitted.select(col("doc_id"), col("hs")), indexPath)
     }
     admitted.select(keep.map(col): _*)

@@ -601,24 +601,18 @@ object StreamingQueries {
           val admitted = SignatureIndex.gateAndAppendBatch(
             batch, idx, keep = Seq("doc_id", "lang", "source"),
             batchId = bid)
-          // maintenance in production shape: rehash-from-source is the
-          // docs the index currently holds (semi vs the slim sig id
-          // column), minus tombstones inside maintainIndex; evaluated
-          // only if the rebuild fires. Replay-admitted docs carry
-          // doc_id + ReplayIdOffset and do NOT exist in documents, so
-          // the source corpus is widened with the offset-keyed copies
-          // first (identical text → identical hs) — without it a
-          // drift-fired rebuild would silently drop those admissions
-          // and later copies would be re-admitted (round-12 ADVICE);
-          // maintainIndex additionally fails loudly if the supplied
-          // corpus misses any live sig doc_id
-          SignatureIndex.maintainIndex(s, idx)({
-            val sigIds = s.read.parquet(s"$idx/sig")
-              .select(col("doc_id")).distinct()
+          // maintenance in production shape: rehash-from-source,
+          // evaluated only if the rebuild fires and restricted by
+          // maintainIndex to the docs the index holds. Replay-admitted
+          // docs carry doc_id + ReplayIdOffset and do NOT exist in
+          // documents, so the source corpus is widened with the
+          // offset-keyed copies (identical text → identical hs) —
+          // without them a drift-fired rebuild would drop those
+          // admissions, which maintainIndex refuses loudly (round-12
+          // ADVICE)
+          SignatureIndex.maintainIndex(s, idx)(
             hashedAll.unionByName(hashedAll.withColumn("doc_id",
-                col("doc_id") + lit(StreamingOps.ReplayIdOffset)))
-              .join(sigIds, Seq("doc_id"), "left_semi")
-          })
+              col("doc_id") + lit(StreamingOps.ReplayIdOffset))))
           admitted
         })
         // reads the foreachBatch sink, not the index: the mutated copy
@@ -801,10 +795,7 @@ object StreamingQueries {
               SignatureIndex.deleteFromIndex(batch, idx)
               // production maintenance cadence (no-op at oracle SF:
               // 20% delete drift < 25%, side files ≪ the cadence)
-              SignatureIndex.maintainIndex(s, idx)(
-                hashedAll.join(
-                  s.read.parquet(s"$idx/sig").select(col("doc_id")).distinct(),
-                  Seq("doc_id"), "left_semi"))
+              SignatureIndex.maintainIndex(s, idx)(hashedAll)
             }
             SignatureIndex.probeStagedIncrement(s, incDir, incBytes, idx)
               .withColumn("stage", lit(bid))

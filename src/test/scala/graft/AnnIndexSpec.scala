@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AnnIndex, Dedup, Similarity}
+import graft.operators.{AnnIndex, Dedup, IndexLifecycle, Similarity}
 
 import scala.jdk.CollectionConverters._
 
@@ -484,19 +484,21 @@ class AnnIndexSpec extends AnyFunSuite {
     val idx = newIndexDir()
     AnnIndex.buildAnnIndex(vecsQ, cents, idx)
     val expect = canon(AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3))
+    // a tombstone set written straight into the side table, replacing
+    // the previous one: dropped from the snapshot, then committed the
+    // way deleteFromAnnIndex commits its own files
+    val root = Paths.get(idx)
+    def plant(ids: org.apache.spark.sql.DataFrame): Seq[java.nio.file.Path] = {
+      IndexLifecycle.commitSwap(root, Nil, Nil, dropSubs = Seq("tombstones"))
+      IndexLifecycle.commitAddedWrite(root, "tombstones")(
+        ids.write.mode("overwrite").parquet(s"$idx/tombstones"))
+    }
     // synthetic LARGE cumulative tombstone set (the drift bound is
     // advisory — the code must survive one that outgrew broadcast):
-    // ~3M hashed ids, incompressible, written straight into the side
-    // table; all foreign to the corpus id space, so results must be
-    // IDENTICAL while the join strategy flips
-    spark.range(0, 3000000, 1, 8)
-      .select(xxhash64(col("id")).as("vec_id"))
-      .write.mode("overwrite").parquet(s"$idx/tombstones")
-    // direct side-table writes bypass deleteFromAnnIndex's snapshot
-    // commit: re-commit the listing so manifest-pinned reads see them
-    AnnIndex.refreshSideManifest(idx)
-    val bytes = graft.operators.IndexLifecycle.idSideBytes(spark,
-      Paths.get(idx, "tombstones"))
+    // ~3M hashed ids, incompressible; all foreign to the corpus id
+    // space, so results must be IDENTICAL while the join strategy flips
+    val bytes = IndexLifecycle.idSideBytes(spark, plant(
+      spark.range(0, 3000000, 1, 8).select(xxhash64(col("id")).as("vec_id"))))
     val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
     assert(bytes > budget,
       s"fixture must exceed the broadcast budget: $bytes <= $budget")
@@ -505,7 +507,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // shared AQE-aware node-typed detector (IndexLifecycle owns the
     // QueryStageExec unwrap subtlety)
     val (bigBroadcast, bigShuffled) =
-      graft.operators.IndexLifecycle.antiJoinKinds(df)
+      IndexPlans.antiJoinKinds(df)
     assert(!bigBroadcast,
       "an over-budget tombstone set must not ship as a broadcast")
     assert(bigShuffled,
@@ -515,29 +517,24 @@ class AnnIndexSpec extends AnyFunSuite {
     // the size signal must not let parquet compression leak into the
     // broadcast decision (caught live at the 8M drift rung: a 2M-id
     // tombstone table read 9.7 MiB and slid under the 10 MiB bar)
-    spark.range(1L << 41, (1L << 41) + 16000000, 8, 8)
-      .select(col("id").as("vec_id"))
-      .write.mode("overwrite").parquet(s"$idx/tombstones")
-    AnnIndex.refreshSideManifest(idx)
-    val tombDir = Paths.get(idx, "tombstones")
-    assert(graft.operators.IndexLifecycle.parquetBytes(tombDir) <= budget,
+    val compFiles = plant(spark.range(1L << 41, (1L << 41) + 16000000, 8, 8)
+      .select(col("id").as("vec_id")))
+    assert(IndexLifecycle.parquetBytes(Paths.get(idx, "tombstones")) <= budget,
       "fixture must compress under the budget on disk")
-    assert(graft.operators.IndexLifecycle.idSideBytes(spark, tombDir) > budget)
+    assert(IndexLifecycle.idSideBytes(spark, compFiles) > budget)
     val comp = AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3)
     assert(canon(comp) == expect)
     val (compBroadcast, compShuffled) =
-      graft.operators.IndexLifecycle.antiJoinKinds(comp)
+      IndexPlans.antiJoinKinds(comp)
     assert(!compBroadcast && compShuffled,
       "a compressible over-budget set must still plan SHUFFLE_HASH")
     // below the budget the oracle-SF plan is untouched: broadcast anti
-    spark.range(0, 10, 1, 1)
-      .select((col("id") + (1L << 41)).as("vec_id"))
-      .write.mode("overwrite").parquet(s"$idx/tombstones")
-    AnnIndex.refreshSideManifest(idx)
+    plant(spark.range(0, 10, 1, 1)
+      .select((col("id") + (1L << 41)).as("vec_id")))
     val small = AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3)
     assert(canon(small) == expect)
     val (smallBroadcast, _) =
-      graft.operators.IndexLifecycle.antiJoinKinds(small)
+      IndexPlans.antiJoinKinds(small)
     assert(smallBroadcast,
       "an under-budget tombstone set must stay a broadcast anti-join")
   }

@@ -65,6 +65,32 @@ class CacheVersionSpec extends AnyFunSuite {
       s"staging dir must be format-versioned: $dir")
   }
 
+  test("index caches embed the manifest-era format versions; an older index is not read") {
+    import graft.operators.{AnnIndex, IndexLifecycle, SignatureIndex}
+    // version 2: every mutable index table is read through the layout
+    // manifest; a version-1 index (directory reads) must be rebuilt
+    assert(SignatureIndex.FormatVersion == 2 && AnnIndex.FormatVersion == 2)
+    val key = "cv_spec_" + System.nanoTime()
+    val sig = SignatureIndex.ensureIndex(graft.operators.Dedup.shingleHashSets(
+      Tables.documents(spark, sf).limit(20), "doc_id", "text", 5), key)
+    assert(sig.contains(s"graft_sigindex_v${SignatureIndex.FormatVersion}_"),
+      s"signature index cache dir must be format-versioned: $sig")
+    val ann = AnnIndex.ensureAnnIndex(key) { p =>
+      AnnIndex.buildAnnIndex(spark.range(4).select(col("id").as("vec_id"),
+        array(col("id"), lit(0L)).as("qv")), Seq((0L, Array(0L, 0L))), p)
+    }
+    assert(ann.contains(s"graft_annindex_v${AnnIndex.FormatVersion}_"),
+      s"ANN index cache dir must be format-versioned: $ann")
+    try {
+      // an index stamped by the previous generation fails loudly
+      val root = java.nio.file.Paths.get(sig)
+      IndexLifecycle.writeMetaProps(root, "planted", 1, Nil)
+      val e = intercept[IllegalArgumentException](SignatureIndex.readMeta(sig))
+      assert(e.getMessage.contains("this build reads 2"), e.getMessage)
+    } finally Seq(sig, ann).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
+  }
+
   test("windowed-agg twin stays green off the versioned staging path") {
     // end-to-end: the production (default-version) staging path feeds
     // the streaming windowed agg and matches its batch twin — the exact

@@ -48,40 +48,75 @@ class IndexLifecycleSpec extends AnyFunSuite {
       IndexLifecycle.CompactSmallFilesMax))
   }
 
+  /** Write a one-byte stand-in part file into `sub` and commit it into
+    * the snapshot, as every add-only mutation commits its files. */
+  private def commitFake(root: java.nio.file.Path, sub: String,
+                         name: String): Unit =
+    IndexLifecycle.commitAddedWrite(root, sub) {
+      Files.createDirectories(root.resolve(sub))
+      Files.write(root.resolve(sub).resolve(name), Array[Byte](1))
+    }
+
   test("ann needsCompaction counts delta part files") {
     val dir = Files.createTempDirectory("graft_test_nc_")
+    def needs = graft.operators.AnnIndex.needsCompaction(dir.toString)
     try {
-      // no delta at all: fresh build, nothing to compact
-      assert(!graft.operators.AnnIndex.needsCompaction(dir.toString))
-      val delta = dir.resolve("delta")
-      Files.createDirectories(delta)
+      // a fresh build's snapshot: no side table, nothing to compact
+      IndexLifecycle.commitFresh(dir, Nil)
+      assert(!needs)
       (0 until IndexLifecycle.CompactSmallFilesMax - 1).foreach(i =>
-        Files.write(delta.resolve(s"part-$i.parquet"), Array[Byte](1)))
-      assert(!graft.operators.AnnIndex.needsCompaction(dir.toString))
+        commitFake(dir, "delta", s"part-$i.parquet"))
+      assert(!needs)
+      // a file on disk that no commit named (a crashed write's orphan)
+      // does not count
+      Files.write(dir.resolve("delta").resolve("orphan.parquet"), Array[Byte](1))
+      assert(!needs)
       // tombstone part files count toward the same trigger: a
       // delete-only lifecycle pays the identical per-file drag
-      val tomb = dir.resolve("tombstones")
-      Files.createDirectories(tomb)
-      Files.write(tomb.resolve("part-t.parquet"), Array[Byte](1))
-      assert(graft.operators.AnnIndex.needsCompaction(dir.toString))
-      Files.delete(tomb.resolve("part-t.parquet"))
-      Files.write(delta.resolve("part-last.parquet"), Array[Byte](1))
-      assert(graft.operators.AnnIndex.needsCompaction(dir.toString))
+      commitFake(dir, "tombstones", "part-t.parquet")
+      assert(needs)
+      // swapped out of the snapshot (retained on disk, as compaction
+      // leaves it): no longer counted
+      IndexLifecycle.commitSwap(dir,
+        Seq(dir.resolve("tombstones").resolve("part-t.parquet")), Nil)
+      assert(!needs)
+      commitFake(dir, "gapp_batches", "part-g.parquet")
+      assert(needs)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("signature needsCompaction counts small sig part files") {
     val dir = Files.createTempDirectory("graft_test_ncs_")
+    def needs(minFileBytes: Long) =
+      graft.operators.SignatureIndex.needsCompaction(dir.toString, minFileBytes)
     try {
-      val sig = dir.resolve("sig")
-      Files.createDirectories(sig)
-      (0 until IndexLifecycle.CompactSmallFilesMax).foreach(i =>
-        Files.write(sig.resolve(s"part-$i.parquet"), Array[Byte](1)))
-      assert(graft.operators.SignatureIndex.needsCompaction(dir.toString))
+      IndexLifecycle.commitFresh(dir, Nil)
+      (0 until IndexLifecycle.CompactSmallFilesMax - 1).foreach(i =>
+        commitFake(dir, "sig", s"part-$i.parquet"))
+      assert(!needs(8L << 20))
+      Files.write(dir.resolve("sig").resolve("orphan.parquet"), Array[Byte](1))
+      assert(!needs(8L << 20), "an uncommitted file counted")
+      // the gate-append sidecar's files count too
+      commitFake(dir, "gateapp_md5", "part-g.parquet")
+      assert(needs(8L << 20))
       // corpus-build parts above the size threshold never count
-      assert(!graft.operators.SignatureIndex.needsCompaction(
-        dir.toString, minFileBytes = 1))
+      assert(!needs(minFileBytes = 1))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("anyRow: a second identical existence probe compiles no class") {
+    import SparkTestSession._
+    // every production probe builds a fresh frame of the same shape; a
+    // planned limit would name its counter per call and compile anew
+    def frame = spark.range(0, 1000, 1, 4).toDF().filter("id % 7 = 3")
+    def compiles() = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    assert(IndexLifecycle.anyRow(frame))
+    val before = compiles()
+    assert(IndexLifecycle.anyRow(frame))
+    assert(compiles() - before == 0,
+      s"the second probe compiled ${compiles() - before} classes")
+    assert(!IndexLifecycle.anyRow(frame.filter("id < 0")))
   }
 
   test("dir fingerprint sees a rename even with identical bytes+mtime") {

@@ -334,9 +334,12 @@ class SignatureIndexSpec extends AnyFunSuite {
       a
     } finally spark.listenerManager.unregister(listener)
     assert(admitted.nonEmpty, "gate fixture admitted nothing")
+    // a scan of the table dir itself or of snapshot files inside it
     def scanOf(dir: String)(p: SparkPlan): Boolean = p match {
-      case s: FileSourceScanExec => s.relation.location.rootPaths
-        .exists(_.toString.endsWith(Paths.get(idx, dir).toString))
+      case s: FileSourceScanExec =>
+        val d = Paths.get(idx, dir).toString
+        s.relation.location.rootPaths.exists(r =>
+          r.toString.endsWith(d) || r.toString.contains(d + "/"))
       case _ => false
     }
     val sigScan = scanOf("sig") _
@@ -479,10 +482,12 @@ class SignatureIndexSpec extends AnyFunSuite {
     slices.foreach(SignatureIndex.appendToIndex(_, idx))
     val before = canon(SignatureIndex.selfPairsFromIndex(spark, idx))
     assert(before.nonEmpty)
-    def nFiles(): Int =
-      scala.util.Using.resource(Files.list(Paths.get(idx, "sig")))(
-        _.iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet")))
+    // the snapshot's sig files: compaction RETAINS superseded files on
+    // disk until the next maintenance entry, so the disk count is not
+    // the table's
+    def sigFiles(): Seq[java.nio.file.Path] =
+      IndexLifecycle.manifestFilesUnder(Paths.get(idx), "sig").get
+    def nFiles(): Int = sigFiles().size
     val filesBefore = nFiles()
     // a threshold below every file merges nothing and touches nothing
     assert(SignatureIndex.compactSignatures(spark, idx, minFileBytes = 1) == 0)
@@ -492,13 +497,137 @@ class SignatureIndexSpec extends AnyFunSuite {
       minFileBytes = Long.MaxValue)
     assert(merged == filesBefore && nFiles() < filesBefore)
     assert(canon(SignatureIndex.selfPairsFromIndex(spark, idx)) == before)
-    // meta bookkeeping refreshed to the compacted layout
+    // meta bookkeeping refreshed to the compacted snapshot
     assert(SignatureIndex.readMeta(idx).sigBytes ==
-      scala.util.Using.resource(Files.walk(Paths.get(idx, "sig")))(
-        _.iterator().asScala
-          .filter(p => Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet"))
-          .map(Files.size).sum))
+      sigFiles().map(Files.size).sum)
+  }
+
+  /** The doc_ids of the rows a snapshot sub-table lists. */
+  private def snapshotIds(idx: String, sub: String): Seq[Long] =
+    IndexLifecycle.manifestFilesUnder(Paths.get(idx), sub).get match {
+      case Nil => Nil
+      case fs => spark.read.parquet(fs.map(_.toString): _*)
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
+    }
+
+  /** Parquet files on disk vs the snapshot's, relative to the root. */
+  private def diskAndSnapshot(idx: String): (Set[String], Set[String]) = {
+    val root = Paths.get(idx)
+    (Seq("sig", "tombstones", "gateapp_md5")
+      .flatMap(IndexLifecycle.listRelParquet(root, _)).toSet,
+      IndexLifecycle.readManifest(root).get.toSet)
+  }
+
+  /** A fresh index over the corpus with two appended slices and two
+    * single-file deletes: a fragmented sig/ and tombstones/. */
+  private def fragmentedIndex(): (String, Set[Long]) = {
+    val idx = newIndexDir()
+    SignatureIndex.buildSignatureIndex(corpus, idx)
+    Seq((90, 93), (93, 96)).foreach { case (lo, hi) =>
+      SignatureIndex.appendToIndex(
+        hashed.filter(col("bucket") >= lo && col("bucket") < hi).drop("bucket"),
+        idx)
+    }
+    val deleted = Seq(3, 7).flatMap { r =>
+      val del = corpus.filter(col("doc_id") % 50 === r).select(col("doc_id"))
+      SignatureIndex.deleteFromIndex(del, idx)
+      del.collect().map(_.getLong(0))
+    }.toSet
+    (idx, deleted)
+  }
+
+  test("a signature compaction is snapshot-safe: frames resolved before it read snapshot N") {
+    val (idx, _) = fragmentedIndex()
+    val expected = canon(SignatureIndex.selfPairsFromIndex(spark, idx))
+    val (incDir, incBytes) = SignatureIndex.stageIncrement(inc)
+    val expectedProbe = canon(
+      SignatureIndex.probeStagedIncrement(spark, incDir, incBytes, idx))
+    // clusters carry one row per indexed doc: a duplicate signature row
+    // shows up there, while pair frames collapse it
+    val expectedClusters = canon(SignatureIndex.clustersFromIndex(spark, idx))
+    assert(expected.nonEmpty && expectedProbe.nonEmpty)
+    // resolved under snapshot N: the frames pin their file lists at
+    // construction
+    val pinned = SignatureIndex.selfPairsFromIndex(spark, idx)
+    val pinnedProbe =
+      SignatureIndex.probeStagedIncrement(spark, incDir, incBytes, idx)
+    val pinnedClusters = SignatureIndex.clustersFromIndex(spark, idx)
+    // every sig and tombstone file superseded by the swap
+    assert(SignatureIndex.compactSignatures(spark, idx,
+      minFileBytes = Long.MaxValue) > 0)
+    assert(canon(pinned) == expected,
+      "snapshot-N pair frame must return exactly the pre-state rows")
+    assert(canon(pinnedProbe) == expectedProbe,
+      "snapshot-N probe frame must return exactly the pre-state rows")
+    assert(canon(pinnedClusters) == expectedClusters)
+    assert(canon(SignatureIndex.selfPairsFromIndex(spark, idx)) == expected,
+      "snapshot-N+1 reader must see the same content")
+    assert(canon(SignatureIndex.clustersFromIndex(spark, idx)) ==
+      expectedClusters, "snapshot-N+1 reader saw a retained file")
+    val (disk, live) = diskAndSnapshot(idx)
+    assert((disk -- live).nonEmpty,
+      "compaction must retain superseded files for in-flight readers")
+    // the next maintenance entry reclaims them; results unchanged
+    SignatureIndex.compactSignatures(spark, idx)
+    val (disk2, live2) = diskAndSnapshot(idx)
+    assert(disk2 == live2, "after reclamation disk must equal the snapshot")
+    assert(canon(SignatureIndex.selfPairsFromIndex(spark, idx)) == expected)
+  }
+
+  test("appends and deletes after a signature compaction never resurrect retained files") {
+    val (idx, deleted0) = fragmentedIndex()
+    SignatureIndex.compactSignatures(spark, idx, minFileBytes = Long.MaxValue)
+    val (disk, live) = diskAndSnapshot(idx)
+    val retained = disk -- live
+    assert(retained.nonEmpty)
+    val last = hashed.filter(col("bucket") >= 96).drop("bucket")
+    SignatureIndex.appendToIndex(last, idx)
+    val del = corpus.filter(col("doc_id") % 50 === 11).select(col("doc_id"))
+    SignatureIndex.deleteFromIndex(del, idx)
+    val deleted = deleted0 ++ del.collect().map(_.getLong(0))
+    assert(diskAndSnapshot(idx)._2.intersect(retained).isEmpty,
+      "a retained file re-entered the snapshot")
+    // every indexed doc exactly once, every deletion exactly once
+    val sigIds = snapshotIds(idx, "sig")
+    assert(sigIds.size == sigIds.distinct.size, "duplicate signature rows")
+    assert(sigIds.toSet == hashed.select(col("doc_id")).collect()
+      .map(_.getLong(0)).toSet)
+    val tombIds = snapshotIds(idx, "tombstones")
+    assert(tombIds.size == tombIds.distinct.size && tombIds.toSet == deleted)
+    val meta = SignatureIndex.readMeta(idx)
+    assert(meta.nDocs == sigIds.size - deleted.size)
+    // and the consumers equal a fresh build over the survivors
+    val fresh = newIndexDir()
+    SignatureIndex.buildSignatureIndex(hashed.drop("bucket")
+      .filter(!col("doc_id").isin(deleted.toSeq: _*)), fresh)
+    assert(canon(SignatureIndex.selfPairsFromIndex(spark, idx)) ==
+      canon(SignatureIndex.selfPairsFromIndex(spark, fresh)))
+    assert(canon(SignatureIndex.clustersFromIndex(spark, idx)) ==
+      canon(SignatureIndex.clustersFromIndex(spark, fresh)))
+  }
+
+  test("a crash between a compaction's merge and its swap leaves snapshot N; re-entry reclaims the orphans") {
+    val (idx, _) = fragmentedIndex()
+    val root = Paths.get(idx)
+    val expected = canon(SignatureIndex.clustersFromIndex(spark, idx))
+    val ids = snapshotIds(idx, "sig")
+    // the merge ran and its files are in sig/, the swap never committed
+    val orphans = IndexLifecycle.mergeParquetFiles(spark,
+      IndexLifecycle.manifestFilesUnder(root, "sig").get, root.resolve("sig"))
+    assert(orphans.nonEmpty && orphans.forall(Files.isRegularFile(_)))
+    // sensitivity: a directory read would now see every row twice
+    assert(spark.read.parquet(s"$idx/sig").count() == 2L * ids.size)
+    // readers see snapshot N: no duplicate, same results
+    assert(snapshotIds(idx, "sig").sorted == ids.sorted)
+    assert(canon(SignatureIndex.clustersFromIndex(spark, idx)) == expected,
+      "a reader saw the uncommitted merge")
+    // re-entry reclaims the orphans before it merges again
+    assert(SignatureIndex.compactSignatures(spark, idx,
+      minFileBytes = Long.MaxValue) > 0)
+    assert(orphans.forall(f => !Files.exists(f)), "orphans survived re-entry")
+    val after = snapshotIds(idx, "sig")
+    assert(after.size == after.distinct.size && after.toSet == ids.toSet)
+    assert(canon(SignatureIndex.clustersFromIndex(spark, idx)) == expected)
   }
 
   test("staged pairs survive deletes via the read-side filter, no restage") {
@@ -525,7 +654,7 @@ class SignatureIndexSpec extends AnyFunSuite {
     assert(got.nonEmpty && got == live)
     // the filter is genuinely in the plan (the graph pre-dates the
     // delete, so the tombstone watermark mismatches) …
-    val (fb, fs) = graft.operators.IndexLifecycle.antiJoinKinds(served)
+    val (fb, fs) = IndexPlans.antiJoinKinds(served)
     assert(fb || fs, "expected the tombstone anti-join in the served plan")
     // and nothing was restaged — the pair bytes are untouched
     assert(pairFiles() == before)
@@ -535,7 +664,7 @@ class SignatureIndexSpec extends AnyFunSuite {
     Files.delete(Paths.get(idx, "pairs", "_PAIRS_OK"))
     val restaged = SignatureIndex.ensureSelfPairs(spark, idx)
     assert(canon(restaged) == live)
-    val (rb, rs) = graft.operators.IndexLifecycle.antiJoinKinds(restaged)
+    val (rb, rs) = IndexPlans.antiJoinKinds(restaged)
     assert(!rb && !rs,
       "a post-delete restage must skip the tombstone filter")
   }
