@@ -270,7 +270,7 @@ object AnnIndex {
   def readBooks(spark: SparkSession,
                 path: String): Seq[Seq[(Long, Array[Long])]] =
     booksMemo.get(path,
-      IndexLifecycle.dirFingerprint(Paths.get(path, "books")))(
+      graft.storage.ArtifactCache.fingerprint(Paths.get(path, "books")))(
       booksFrom(spark.read.parquet(s"$path/books")))
 
   /** (m, cid, qc) codebook rows as per-subspace, cid-sorted books. */
@@ -1375,7 +1375,7 @@ object AnnIndex {
   def readCentroids(spark: SparkSession,
                     path: String): Seq[(Long, Array[Long])] =
     centroidsMemo.get(path,
-      IndexLifecycle.dirFingerprint(Paths.get(path, "centroids")))(
+      graft.storage.ArtifactCache.fingerprint(Paths.get(path, "centroids")))(
       centsFrom(spark.read.parquet(s"$path/centroids")))
 
   /** (cid, qc) centroid rows, cid-sorted. */
@@ -1386,17 +1386,15 @@ object AnnIndex {
   private val centroidsMemo =
     new IndexLifecycle.FingerprintMemo[Seq[(Long, Array[Long])]]()
 
-  /** Build-once cache for fixture-derived indexes — same key AND
-    * stamp discipline as [[SignatureIndex.ensureIndex]] (prefix +
-    * source dir hash + size/mtime fingerprint via
-    * [[SignatureIndex.sourceCacheKey]]; `stamp` records the build
-    * configuration the closure encodes — a caller changing its
-    * centroid count or training depth must not silently reuse an
-    * index built under the old config). `build` runs once per
-    * (key, stamp) and must leave a complete index at the dir it is
-    * given. */
-  def ensureAnnIndex(cacheKey: String, stamp: String = "v1")
+  /** Build-once ANN index of a fixture's embeddings (the oracle/bench
+    * path): the "annindex" family of [[graft.storage.ArtifactCache]],
+    * keyed by (version, sfDir, embeddings fingerprint, `name`). `build`
+    * must leave a complete index at the directory it is given. `name`
+    * carries the build configuration the closure encodes (centroid
+    * count, training depth, slice): a caller changing it must change
+    * the name, or an index built under the old config is served. */
+  def ensureAnnIndex(sfDir: String, name: String, version: Int = FormatVersion)
                     (build: String => Meta): String =
-    IndexLifecycle.ensureArtifactDir(
-      s"graft_annindex_v${FormatVersion}_$cacheKey", stamp)(p => build(p))
+    graft.storage.ArtifactCache.cached("annindex", version, sfDir,
+      "embeddings.parquet", name)(p => build(p))
 }

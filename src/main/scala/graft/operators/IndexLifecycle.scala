@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * [[SignatureIndex]] (MinHash/LSH signatures for text dedup) and
   * [[AnnIndex]] (IVF cells for embedding search): meta properties IO
   * with a version gate, the appended-drift rebuild policy,
-  * marker-stamped build-once artifact caching, bounded driver-side
+  * marker-stamped index-internal artifacts, bounded driver-side
   * memoization keyed by content fingerprint, and the crash-ordered
   * small-file merge both compactions run.
   *
@@ -258,29 +258,16 @@ object IndexLifecycle {
     props
   }
 
-  // ---- build-once artifact cache -----------------------------------------
+  // ---- index-internal markers -------------------------------------------
 
-  /** Marker-stamped build-once artifact under the JVM tmp dir — the
-    * shared `ensure*` discipline: `build` runs once per (dirName,
-    * stamp) and must leave a complete artifact at the dir it is given;
-    * the marker commits it. `stamp` records the build configuration
-    * the closure encodes — a caller changing its parameters must not
-    * silently reuse an artifact built under the old config. Concurrent
-    * sessions race benignly (last content-identical overwrite wins —
-    * everything is a pure function of the inputs the key fingerprints). */
-  def ensureArtifactDir(dirName: String, stamp: String)
-                       (build: String => Unit): String = {
-    val dir = Paths.get(sys.props("java.io.tmpdir"), dirName)
-    ensureMarked(dir.resolve("_INDEX_OK"), stamp)(build(dir.toString))
-    dir.toString
-  }
-
-  /** The marker-guard primitive under [[ensureArtifactDir]] and the
-    * per-index staged artifacts ([[SignatureIndex.ensureSelfPairs]]'
-    * pairs graph, [[SignatureIndex.ensureSidecar]] tables): run
+  /** The marker guard of an index's own staged artifacts
+    * ([[SignatureIndex.ensureSelfPairs]]' pairs graph,
+    * [[SignatureIndex.ensureSidecar]] tables, one-shot mutations): run
     * `build` unless `marker` already records exactly `stamp`; commit
     * the marker after. Invalidation = deleting the marker (the append
-    * lifecycle does this for staged pairs).
+    * lifecycle does this for staged pairs). A marker records state of
+    * a MUTABLE index, so it lives inside the index; fixture-derived
+    * builds go through [[graft.storage.ArtifactCache]] instead.
     *
     * Locking: the built-marker fast path is LOCK-FREE, and builds
     * serialize per MARKER (striped), not globally — a multi-tenant
@@ -349,26 +336,6 @@ object IndexLifecycle {
       m.put(stableKey, (fingerprint, v))
       v
     }
-  }
-
-  /** Content fingerprint of a parquet directory: hash of the sorted
-    * (relative name, size, mtime) triples plus the total byte size.
-    * Strictly stronger than size+mtime alone — a rebuild landing in
-    * the same millisecond with identical total bytes still misses,
-    * because the rewritten part files carry fresh task-UUID names. */
-  def dirFingerprint(path: Path): String = {
-    val entries =
-      if (Files.isDirectory(path))
-        scala.util.Using.resource(Files.walk(path))(
-          _.iterator().asScala.filter(Files.isRegularFile(_))
-            .map(p => (path.relativize(p).toString, Files.size(p),
-              Files.getLastModifiedTime(p).toMillis))
-            .toVector.sortBy(_._1))
-      else Vector.empty
-    val h = java.util.Arrays.hashCode(
-      entries.map(e => s"${e._1}|${e._2}|${e._3}".hashCode).toArray)
-    java.lang.Integer.toHexString(h) + "_" +
-      java.lang.Long.toHexString(entries.map(_._2).sum)
   }
 
   /** Every parquet file under `dir`, recursively (none when absent). */

@@ -1069,29 +1069,14 @@ object SignatureIndex {
     admitted.select(keep.map(col): _*)
   }
 
-  /** Cache key for a fixture-derived index: prefix + source-DIR hash +
-    * source size+mtime fingerprint — the same discipline as
-    * [[graft.streaming.StreamingOps.stageDocBatches]]'s key. The dir
-    * hash matters: two different datasets colliding on total size and
-    * max mtime must not silently share one index (round-9 ADVICE). */
-  def sourceCacheKey(prefix: String, sfDir: String,
-                     table: String = "documents.parquet"): String =
-    prefix + "_" + Integer.toHexString(sfDir.hashCode) + "_" +
-      graft.streaming.StreamingOps.sourceFingerprint(
-        Paths.get(sfDir, table))
-
-  /** Build-once cache for fixture-derived indexes (the oracle/bench
-    * path, mirroring [[graft.streaming.StreamingOps.stageDocBatches]]'s
-    * discipline): the index for `cacheKey` is built under the JVM tmp
-    * dir on first use and revalidated by stamp; concurrent sessions
-    * race benignly (last overwrite wins on a content-identical build —
-    * everything is a pure function of the fixture). Returns the index
-    * path. */
-  def ensureIndex(hashed: => DataFrame, cacheKey: String,
-                  rowsPerBand: Int = 4, capPop: Int = 256,
-                  maxExtraBits: Int = 8): String =
-    IndexLifecycle.ensureArtifactDir(
-      s"graft_sigindex_v${FormatVersion}_$cacheKey",
-      s"rpb=$rowsPerBand cap=$capPop xb=$maxExtraBits")(p =>
-      buildSignatureIndex(hashed, p, rowsPerBand, capPop, maxExtraBits))
+  /** Build-once signature index of a fixture's documents (the
+    * oracle/bench path): the "sigindex" family of
+    * [[graft.storage.ArtifactCache]], keyed by (version, sfDir,
+    * documents fingerprint, `name`) and built at the default band
+    * geometry. `hashed` is evaluated only on a cold key. Returns the
+    * index path. */
+  def ensureIndex(hashed: => DataFrame, sfDir: String, name: String,
+                  version: Int = FormatVersion): String =
+    graft.storage.ArtifactCache.cached("sigindex", version, sfDir,
+      "documents.parquet", name)(buildSignatureIndex(hashed, _))
 }

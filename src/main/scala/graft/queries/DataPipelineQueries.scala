@@ -126,9 +126,14 @@ object DataPipelineQueries {
         "doc_id", "text", SHINGLE_K)
       .withColumn("bucket", splitBucket)
       .filter(col("bucket") < 90).drop("bucket")
-    SignatureIndex.ensureIndex(corpusHashed,
-      SignatureIndex.sourceCacheKey("docs90", d))
+    SignatureIndex.ensureIndex(corpusHashed, d, "docs90")
   }
+
+  /** A persisted signature index of the whole documents corpus. */
+  private def fullCorpusIndex(s: SparkSession, d: String, name: String): String =
+    SignatureIndex.ensureIndex(Dedup.shingleHashSets(
+      Tables.documents(s, d).repartition(col("doc_id")),
+      "doc_id", "text", SHINGLE_K), d, name)
 
   /** dedup_index_clusters: near-dup clusters served off the persisted
     * index's STAGED strong-pair graph (SCALING.md §4.14): the CcProbe
@@ -139,11 +144,7 @@ object DataPipelineQueries {
     * pays a pairs scan + the flat CC rounds. Identical frame to
     * dedup_clusters (one oracle twin serves both). */
   private val dedup_index_clusters: Q = (s, d) => {
-    val idx = SignatureIndex.ensureIndex(
-      Dedup.shingleHashSets(
-        Tables.documents(s, d).repartition(col("doc_id")),
-        "doc_id", "text", SHINGLE_K),
-      SignatureIndex.sourceCacheKey("docsall", d))
+    val idx = fullCorpusIndex(s, d, "docsall")
     SignatureIndex.clustersFromIndex(s, idx)
       .select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("cluster_id")).as("is_canonical"))
@@ -156,11 +157,7 @@ object DataPipelineQueries {
     * as dedup_neardup_pairs, zero re-hashing on every pass after the
     * build). */
   private val dedup_index_selfpairs: Q = (s, d) => {
-    val idx = SignatureIndex.ensureIndex(
-      Dedup.shingleHashSets(
-        Tables.documents(s, d).repartition(col("doc_id")),
-        "doc_id", "text", SHINGLE_K),
-      SignatureIndex.sourceCacheKey("docsall", d))
+    val idx = fullCorpusIndex(s, d, "docsall")
     SignatureIndex.selfPairsFromIndex(s, idx)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("n_union"),
         col("jaccard_bp"))
@@ -177,11 +174,7 @@ object DataPipelineQueries {
     * only. Uniform with [[ann_index_delete]] — both families carry
     * the takedown mutation. */
   private val dedup_index_delete: Q = (s, d) => {
-    val idx = SignatureIndex.ensureIndex(
-      Dedup.shingleHashSets(
-        Tables.documents(s, d).repartition(col("doc_id")),
-        "doc_id", "text", SHINGLE_K),
-      SignatureIndex.sourceCacheKey("docsall_del", d))
+    val idx = fullCorpusIndex(s, d, "docsall_del")
     // delete-once discipline: the tombstone write is idempotent in
     // RESULT (anti-join), so re-running on the cached index is safe;
     // the marker keeps the meta counters single-shot per build
@@ -207,11 +200,7 @@ object DataPipelineQueries {
     * a filter that leaked an edge through a deleted doc (or dropped
     * a surviving edge) breaks the hash. */
   private val dedup_index_delete_clusters: Q = (s, d) => {
-    val idx = SignatureIndex.ensureIndex(
-      Dedup.shingleHashSets(
-        Tables.documents(s, d).repartition(col("doc_id")),
-        "doc_id", "text", SHINGLE_K),
-      SignatureIndex.sourceCacheKey("docsall_delc", d))
+    val idx = fullCorpusIndex(s, d, "docsall_delc")
     // stage the graph BEFORE the takedown — the lifecycle under test
     SignatureIndex.ensureSelfPairs(s, idx)
     SignatureIndex.ensureSidecarMarkerOnce(idx, "DEL_MOD10EQ3") {
@@ -1002,9 +991,7 @@ object DataPipelineQueries {
     * (sfDir, embeddings fingerprint) from the same trained centroids
     * as ann_ivf_trained, shared by every index-served ANN query. */
   private[graft] def annIndexPath(s: SparkSession, d: String): String =
-    AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey("annivf", d, "embeddings.parquet"),
-      stamp = "cents=16 iters=2 slice=full") { p =>
+    AnnIndex.ensureAnnIndex(d, "annivf_c16i2_full") { p =>
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
@@ -1023,9 +1010,7 @@ object DataPipelineQueries {
     * the surviving ids. The takedown/retention mutation a production
     * vector store cannot ship without. */
   private val ann_index_delete: Q = (s, d) => {
-    val path = AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey("annivf_del", d, "embeddings.parquet"),
-      stamp = "cents=16 iters=2 del=mod10eq7") { p =>
+    val path = AnnIndex.ensureAnnIndex(d, "annivf_del_c16i2_mod10eq7") { p =>
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
@@ -1079,9 +1064,7 @@ object DataPipelineQueries {
     * quantizer for in-cell compression) every production vector store
     * ships. */
   private[graft] def annPqIndexPath(s: SparkSession, d: String): String =
-    AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey("annivfpq", d, "embeddings.parquet"),
-      stamp = s"cents=16 iters=2 pq=m${PQ_M}k${PQ_K}i1 slice=full") { p =>
+    AnnIndex.ensureAnnIndex(d, s"annivfpq_c16i2_m${PQ_M}k${PQ_K}i1") { p =>
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
@@ -1139,9 +1122,7 @@ object DataPipelineQueries {
     // arithmetic matches the twin's ((max+1)*9)//10 truncating form
     val maxId = embeddingsMaxVecId(s, d)
     val t = (maxId + 1) * 9 / 10
-    val path = AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey("annivf_app", d, "embeddings.parquet"),
-      stamp = "cents=16 iters=2 slice=base90+inc10 layout=delta-cleanbuild") { p =>
+    val path = AnnIndex.ensureAnnIndex(d, "annivf_app_c16i2_base90_inc10") { p =>
       val all = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         Similarity.quantize(col("embedding")).as("qv"))
       AnnIndex.buildAnnIndex(all.filter(col("vec_id") < t),
@@ -1207,9 +1188,7 @@ object DataPipelineQueries {
   private[graft] def annBaseIndexPath(s: SparkSession, d: String): String = {
     val maxId = embeddingsMaxVecId(s, d)
     val t = (maxId + 1) * 9 / 10
-    AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey("annivf_base", d, "embeddings.parquet"),
-      stamp = "cents=16 iters=2 slice=base90") { p =>
+    AnnIndex.ensureAnnIndex(d, "annivf_base_c16i2") { p =>
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).filter(col("vec_id") < t)
           .select(col("vec_id"), col("label"),
@@ -1310,8 +1289,8 @@ object DataPipelineQueries {
   private val PQ_SHORTLIST = 20
 
   /** Train the PQ codebooks ONCE per (sfDir, embeddings fingerprint)
-    * and stage them as a versioned parquet artifact (the round-6 GVID
-    * layout-cache pattern — `PartitionedStore.cached`). M×K rows of
+    * and stage them as a versioned parquet artifact through
+    * `PartitionedStore.cached` (the build-once `ArtifactCache`). M×K rows of
     * (m, cid, qc); the read-back is control-plane sized (128 rows). */
   private[graft] def trainedPqBooks(s: SparkSession,
                                     d: String): Seq[Seq[(Long, Array[Long])]] = {
@@ -2532,9 +2511,9 @@ object DataPipelineQueries {
   /** DuckDB twin of the STREAMING TAKEDOWN loop (stream_takedown):
     * stage b's probe rows are the top-k over the full-corpus index
     * minus the CUMULATIVE deletes of staged batches ≤ b — the batch
-    * cuts replay StreamingOps.stageVecBatches' integer arithmetic
-    * (idMin = (max+1)·9/10, span floored at 1, thirds by truncating
-    * division). Lives here because it shares the Lloyd/assignment
+    * cuts replay the integer arithmetic of the stream slicer
+    * (StreamingOps.stageCuts) on the embeddings source: idMin =
+    * (max+1)·9/10, span floored at 1, thirds by truncating division. Lives here because it shares the Lloyd/assignment
     * CTEs with every ANN twin; referenced by
     * StreamingQueries.oracles. */
   private[graft] lazy val takedownSql: String = {

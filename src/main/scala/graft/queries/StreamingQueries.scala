@@ -476,9 +476,8 @@ object StreamingQueries {
   private[graft] def gateStagingBatches(s: SparkSession, d: String,
                                         nBatches: Int,
                                         increment: => DataFrame): Int = {
-    val src = java.nio.file.Paths.get(d, "documents.parquet")
-    val rows = gateIncrementRows.get(d, StreamingOps.sourceFingerprint(src))(
-      increment.count())
+    val rows = gateIncrementRows.get(d, graft.storage.ArtifactCache.fingerprint(
+      java.nio.file.Paths.get(d, "documents.parquet")))(increment.count())
     val perTrigger = graft.operators.SignatureIndex.MaxGateBatchRows * 4L / 5
     math.max(nBatches, ((rows + perTrigger - 1) / perTrigger).toInt)
   }
@@ -574,7 +573,7 @@ object StreamingQueries {
     val base = SignatureIndex.ensureIndex(
       hashedAll.withColumn("bucket", bucket)
         .filter(col("bucket") < 90).drop("bucket"),
-      SignatureIndex.sourceCacheKey(s"docs90_gapp_p1_$nBatches", d))
+      d, s"docs90_gapp_p1_$nBatches")
     SignatureIndex.ensureSidecar(base, "gate_md5") { p =>
       graft.Tables.documents(s, d).filter(bucket < 90)
         .select(md5(col("text")).as("c_md5")).distinct()
@@ -644,15 +643,12 @@ object StreamingQueries {
 
   private[graft] def embedGateAppendLoop(s: SparkSession, d: String,
                                          nBatches: Int): DataFrame = {
-    import graft.operators.{AnnIndex, IndexLifecycle, Similarity, SignatureIndex}
+    import graft.operators.{AnnIndex, IndexLifecycle, Similarity}
     val maxId = DataPipelineQueries.embeddingsMaxVecId(s, d)
     val t = (maxId + 1) * 9 / 10
     // pristine base-corpus index — every invocation mutates a COPY
     // (same bench-honesty rework as gateAppendLoop)
-    val base = AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey(s"annivf_gapp_p$nBatches", d,
-        "embeddings.parquet"),
-      stamp = "cents=16 iters=2 slice=base90 pristine") { p =>
+    val base = AnnIndex.ensureAnnIndex(d, s"annivf_gapp_p${nBatches}_c16i2") { p =>
       AnnIndex.buildAnnIndex(
         graft.Tables.embeddings(s, d).filter(col("vec_id") < t)
           .select(col("vec_id"), col("label"),
@@ -696,11 +692,8 @@ object StreamingQueries {
 
   private[graft] def takedownLoop(s: SparkSession, d: String,
                                   nBatches: Int): DataFrame = {
-    import graft.operators.{AnnIndex, IndexLifecycle, Similarity, SignatureIndex}
-    val base = AnnIndex.ensureAnnIndex(
-      SignatureIndex.sourceCacheKey("annivf_takedown_p", d,
-        "embeddings.parquet"),
-      stamp = s"cents=16 iters=2 pristine") { p =>
+    import graft.operators.{AnnIndex, IndexLifecycle, Similarity}
+    val base = AnnIndex.ensureAnnIndex(d, "annivf_takedown_c16i2") { p =>
       AnnIndex.buildAnnIndex(
         graft.Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),

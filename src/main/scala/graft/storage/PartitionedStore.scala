@@ -17,44 +17,25 @@ import org.apache.spark.sql.functions._
 object PartitionedStore {
 
   /** Format version of the derived layouts built through [[cached]],
-    * embedded in every cache-directory name. Same staleness class as
-    * StreamingOps.StageFormatVersion: the (source size+mtime) key sees
-    * source regeneration but not a code change to the derived layout
-    * itself. Bump on any layout/schema/unit change to a cached table.
+    * embedded in every cache-directory name: the source fingerprint
+    * sees source regeneration but not a code change to the derived
+    * layout itself. Bump on any layout/schema/unit change to a cached
+    * table.
     *   v1: round-6 initial   v2: RoutedStore copies carry their own
     *   port only in dest_ports (multiplicity fix, see RoutedStore)
     *   v3: produceStream lands each micro-batch in its own batch=<id>
     *   sub-partition (exactly-once replay commit) */
   private[graft] val FormatVersion = 3
 
-  /** Build-once cache for derived table layouts: `build` writes the
-    * table to the path it is given; the result is keyed by (FORMAT
-    * VERSION, sfDir, source size+mtime, name) under the JVM temp dir,
-    * built under a temp name and atomically renamed so concurrent
-    * processes see a complete table or build their own. `source` names
-    * the table the layout is derived from (fingerprint basis). Returns
-    * the table path. */
+  /** Build-once cache for derived table layouts (the "part" family of
+    * [[ArtifactCache]]): `build` writes the table to the path it is
+    * given; `source` names the table under sfDir the layout derives
+    * from. Returns the table path. */
   private[graft] def cached(sfDir: String, name: String,
                             source: String = "events.parquet",
                             version: Int = FormatVersion)
-                           (build: String => Unit): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(sfDir, source)
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_part_v${version}_" + Integer.toHexString(sfDir.hashCode) +
-        "_" + graft.streaming.StreamingOps.sourceFingerprint(src), name)
-    if (Files.isDirectory(dir)) return dir.toString
-    val tmp = dir.resolveSibling(dir.getFileName.toString + ".build_" +
-      java.util.UUID.randomUUID().toString.take(8))
-    build(tmp.toString)
-    try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.DirectoryNotEmptyException =>
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-    dir.toString
-  }
+                           (build: String => Unit): String =
+    ArtifactCache.cached("part", version, sfDir, source, name)(build)
 
   /** events re-written partitioned by event-time day (yyyyMMdd int),
     * once per (sfDir, source fingerprint). Returns the table path. */
@@ -310,34 +291,38 @@ object BucketedStore {
     * mismatched counts reintroduce a shuffle on one side. */
   val Buckets = 8
 
-  /** orders + lineitem co-bucketed by order key: written once per
-    * (catalog, sfDir, source fingerprint) as external tables whose data
-    * lives under the JVM temp dir, then served from the catalog.
-    * Fingerprint-keyed like the staging caches, so a regenerated
-    * source re-builds instead of silently serving stale buckets. */
-  /** Format version of the bucketed layout, embedded in table/dir
-    * names — bump on any bucketing/schema change (same staleness class
-    * as PartitionedStore.FormatVersion). */
+  /** Format version of the bucketed layout (bump on any
+    * bucketing/schema change). */
   private[graft] val FormatVersion = 1
 
+  /** orders + lineitem co-bucketed by order key: written once per
+    * (sfDir, lineitem fingerprint) through [[ArtifactCache]], then
+    * registered in the session catalog as external tables over the
+    * committed files. A bucketed write needs a catalog table, so the
+    * build writes through a throwaway one and drops it (dropping an
+    * external table keeps its files); the bucket spec of the served
+    * tables comes from their DDL. */
   def ordersLineitemByOrderKey(spark: SparkSession,
-                               sfDir: String): (DataFrame, DataFrame) =
-    synchronized {
-      import java.nio.file.Paths
-      val fp = s"v${FormatVersion}_" + Integer.toHexString(sfDir.hashCode) + "_" +
-        graft.streaming.StreamingOps.sourceFingerprint(
-          Paths.get(sfDir, "lineitem.parquet"))
-      val oT = s"graft_orders_bkt_$fp"
-      val lT = s"graft_lineitem_bkt_$fp"
-      val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_bucketed_$fp")
-      if (!spark.catalog.tableExists(oT))
-        graft.Tables.orders(spark, sfDir).write.mode("overwrite")
-          .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
-          .option("path", base.resolve(oT).toString).saveAsTable(oT)
-      if (!spark.catalog.tableExists(lT))
-        graft.Tables.lineitem(spark, sfDir).write.mode("overwrite")
-          .bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
-          .option("path", base.resolve(lT).toString).saveAsTable(lT)
-      (spark.table(oT), spark.table(lT))
+                               sfDir: String): (DataFrame, DataFrame) = {
+    val sides = Seq(("orders", "o_orderkey", graft.Tables.orders _),
+      ("lineitem", "l_orderkey", graft.Tables.lineitem _))
+    val dir = java.nio.file.Paths.get(ArtifactCache.cached("bucketed", FormatVersion,
+        sfDir, "lineitem.parquet", "orders_lineitem") { build =>
+      for ((t, k, read) <- sides) {
+        val tmp = "graft_bkt_build_" + java.util.UUID.randomUUID().toString.replace("-", "")
+        read(spark, sfDir).write.bucketBy(Buckets, k).sortBy(k)
+          .option("path", s"$build/$t").saveAsTable(tmp)
+        spark.sql(s"DROP TABLE $tmp")
+      }
+    })
+    val Seq(o, l) = sides.map { case (t, k, read) =>
+      val name = s"${dir.getParent.getFileName}_$t"
+      if (!spark.catalog.tableExists(name))
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $name (${read(spark, sfDir).schema.toDDL}) " +
+          s"USING parquet CLUSTERED BY ($k) SORTED BY ($k) INTO $Buckets BUCKETS " +
+          s"LOCATION '${dir.resolve(t)}'")
+      spark.table(name)
     }
+    (o, l)
+  }
 }

@@ -24,7 +24,7 @@ object StreamingOps {
 
   /** Format version of the STAGED event-batch layout, embedded in every
     * staging-cache directory name. The cache key without it — (sfDir,
-    * source size+mtime) — only detects source REGENERATION; it cannot
+    * source fingerprint) — only detects source REGENERATION; it cannot
     * see a code change to the staged format itself. That bit round 5:
     * the staged `ts` unit changed micros→nanos and a round-4-era staged
     * dir (source untouched) was silently read as nanos, compressing the
@@ -94,7 +94,7 @@ object StreamingOps {
     * just by specs. Mirrors Tables.events' nanos→µs conversion. */
   def eventsStream(spark: SparkSession, sfDir: String,
                    nBatches: Int = 3): DataFrame =
-    streamFromStagedDir(spark, stageEventBatches(spark, sfDir, nBatches))
+    eventsFrom(spark, stageEventBatches(spark, sfDir, nBatches))
 
   /** The HOSTILE-arrival-order twin of [[eventsStream]]: the same three
     * event-time slices staged as (middle, last, FIRST) — the final
@@ -106,7 +106,7 @@ object StreamingOps {
     * retry buffer discards a leg that never finds its match in time,
     * `PedestrianReIDUsingAttrApp.java:176-192`). */
   def eventsStreamLateArrival(spark: SparkSession, sfDir: String): DataFrame =
-    streamFromStagedDir(spark,
+    eventsFrom(spark,
       stageEventBatches(spark, sfDir, 3, arrivalOrder = Seq(1, 2, 0)))
 
   /** [[eventsStream]] plus a SENTINEL row: one synthetic row
@@ -134,9 +134,24 @@ object StreamingOps {
   def eventsStreamWithSentinel(spark: SparkSession, sfDir: String,
                                nBatches: Int = 3,
                                sentinelType: String = "sentinel"): DataFrame =
-    streamFromStagedDir(spark,
+    eventsFrom(spark,
       stageEventBatches(spark, sfDir, nBatches,
         sentinel = true, sentinelType = sentinelType))
+
+  private def eventsFrom(spark: SparkSession, dir: String): DataFrame =
+    stagedStream(spark, eventsRawSchema, dir)
+      .withColumn("ts", timestamp_micros(expr("ts div 1000L")))
+
+  /** A file stream over a staged directory: one file per trigger,
+    * oldest mtime first. A file source cannot infer, so `schema` must
+    * match the staged files exactly. */
+  private def stagedStream(spark: SparkSession, schema: StructType,
+                           dir: String): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("latestFirst", "false")
+      .parquet(dir)
 
   /** documents.parquet schema for the forced file-stream schema (a
     * file source cannot infer; must match the staged parts exactly). */
@@ -155,11 +170,7 @@ object StreamingOps {
     * (dedup seen-sets), both batch-split-invariant. */
   def documentsStream(spark: SparkSession, sfDir: String,
                       nBatches: Int = 3): DataFrame =
-    spark.readStream
-      .schema(documentsRawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(stageDocBatches(spark, sfDir, nBatches))
+    stagedStream(spark, documentsRawSchema, stageDocBatches(spark, sfDir, nBatches))
 
   /** Explicit schema for the staged embeddings stream. */
   val embeddingsRawSchema: StructType = StructType(Seq(
@@ -176,11 +187,7 @@ object StreamingOps {
     * consumer is the stateless ANN-index gate. */
   def embeddingsStream(spark: SparkSession, sfDir: String,
                        nBatches: Int = 3): DataFrame =
-    spark.readStream
-      .schema(embeddingsRawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(stageVecBatches(spark, sfDir, nBatches))
+    stagedStream(spark, embeddingsRawSchema, stageVecBatches(spark, sfDir, nBatches))
 
   /** [[embeddingsStream]] plus a TRAILING REPLAY micro-batch — the
     * vector twin of [[documentsStreamWithReplay]]: after the
@@ -191,94 +198,8 @@ object StreamingOps {
     * ADMISSION must be rejected by the append carry. */
   def embeddingsStreamWithReplay(spark: SparkSession, sfDir: String,
                                  nBatches: Int = 3): DataFrame =
-    spark.readStream
-      .schema(embeddingsRawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(stageVecBatches(spark, sfDir, nBatches, replayStage0 = true))
-
-  /** Stage the embeddings increment (vec_id ≥ (max+1)·9/10) into
-    * `nBatches` vec_id-contiguous files — the [[stageDocBatches]]
-    * discipline applied to vectors (same cache key shape, same
-    * atomic-rename build, same empty-source guard + cleanup).
-    * `replayStage0` appends the replay file
-    * ([[embeddingsStreamWithReplay]]). */
-  private[graft] def stageVecBatches(spark: SparkSession, sfDir: String,
-                                     nBatches: Int,
-                                     replayStage0: Boolean = false): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(sfDir, "embeddings.parquet")
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_v${StageFormatVersion}_" +
-        Integer.toHexString(sfDir.hashCode) + "_" + sourceFingerprint(src),
-      (if (replayStage0) "vecinc_replay_" else "vecinc_") + nBatches)
-    if (Files.isDirectory(dir)) return dir.toString
-    val build = dir.resolveSibling(dir.getFileName.toString + ".build_" +
-      java.util.UUID.randomUUID().toString.take(8))
-    Files.createDirectories(build)
-    try {
-      val raw = spark.read.parquet(src.toString)
-        .select(embeddingsRawSchema.fields.toIndexedSeq
-          .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      val mm = raw.agg(max(col("vec_id"))).head()
-      require(!mm.isNullAt(0),
-        s"cannot stage streaming vec batches: $src has no rows")
-      val idMax = mm.getLong(0)
-      val idMin = (idMax + 1) * 9 / 10
-      val span = math.max(idMax - idMin, 1L)
-      val inc = raw.filter(col("vec_id") >= idMin)
-      val base = System.currentTimeMillis()
-      for (pos <- 0 until nBatches) {
-        val lo = idMin + span * pos / nBatches
-        val hi = idMin + span * (pos + 1) / nBatches
-        val slice = inc.filter(col("vec_id") >= lo &&
-          (if (pos == nBatches - 1) lit(true) else col("vec_id") < hi))
-        val tmp = build.resolve(s"tmp_$pos")
-        slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = scala.util.Using.resource(Files.list(tmp))(
-          _.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp")))
-        val dst = build.resolve(f"vecinc_$pos%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(base + pos * 2000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      }
-      if (replayStage0) {
-        require(nBatches >= 2, "replay staging needs >= 2 data batches")
-        // exact copies of every batch-0 row under fresh ids — the
-        // planted cross-batch duplicates
-        val replay = inc
-          .filter(col("vec_id") >= idMin &&
-            col("vec_id") < lit(idMin + span / nBatches))
-          .withColumn("vec_id", col("vec_id") + lit(ReplayIdOffset))
-          .select(embeddingsRawSchema.fields.toIndexedSeq
-            .map(f => col(f.name)): _*)
-        val tmp = build.resolve("tmp_replay")
-        replay.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = scala.util.Using.resource(Files.list(tmp))(
-          _.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp")))
-        val dst = build.resolve(f"vecinc_$nBatches%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(base + nBatches * 2000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      }
-      try Files.move(build, dir, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.DirectoryNotEmptyException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(build.toFile)
-      }
-    } catch {
-      case e: Throwable =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(build.toFile)
-        catch { case _: Exception => () }
-        throw e
-    }
-    dir.toString
-  }
+    stagedStream(spark, embeddingsRawSchema,
+      stageVecBatches(spark, sfDir, nBatches, replayStage0 = true))
 
   /** Id offset of REPLAYED documents in the gate-append staging
     * ([[documentsStreamWithReplay]]): a replayed row is a byte-exact
@@ -300,237 +221,168 @@ object StreamingOps {
     * copies to be non-vacuous at oracle SFs. */
   def documentsStreamWithReplay(spark: SparkSession, sfDir: String,
                                 nBatches: Int = 3): DataFrame =
-    spark.readStream
-      .schema(documentsRawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(stageDocBatches(spark, sfDir, nBatches, replayStage0 = true))
+    stagedStream(spark, documentsRawSchema,
+      stageDocBatches(spark, sfDir, nBatches, replayStage0 = true))
 
-  /** Row-group size of the staged document files. A file is one
-    * trigger, and the file source splits it across cores only at
-    * row-group boundaries: with the default 128 MB groups a 130-260 MB
-    * file (ScaleGen's 1M-2M rungs) read as one or two partitions, so
-    * a gate trigger hashed its batch on one or two cores. */
-  private val StagedDocRowGroupBytes = 16L << 20
+  /** A source table the stream stagers cut into batch files: the
+    * parquet under sfDir, the staged files' name prefix, the column
+    * the ranges cut, how the table is read, which key range is staged
+    * (from the column's min and max), which of batch 0's rows a replay
+    * file re-sends, and the staged files' write options. */
+  private final case class StagedSource(
+      file: String, prefix: String, key: String,
+      read: (SparkSession, String) => DataFrame,
+      range: (Long, Long) => (Long, Long),
+      replayRows: DataFrame => DataFrame,
+      writeOptions: Map[String, String])
 
-  /** Stage documents.parquet into `nBatches` doc_id-contiguous files
-    * under a cache dir keyed like [[stageDir]] (format version, sfDir,
-    * source size+mtime) — same atomic-rename build, same stale-key
-    * invalidation. `replayStage0` appends the gate-append oracle's
-    * replay file (see [[documentsStreamWithReplay]]). */
-  private[graft] def stageDocBatches(spark: SparkSession, sfDir: String,
-                                     nBatches: Int,
-                                     replayStage0: Boolean = false): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(sfDir, "documents.parquet")
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_v${StageFormatVersion}_" +
-        Integer.toHexString(sfDir.hashCode) + "_" + sourceFingerprint(src),
-      (if (replayStage0) "documents_replay_" else "documents_") + nBatches)
-    if (Files.isDirectory(dir)) return dir.toString
-    val build = dir.resolveSibling(dir.getFileName.toString + ".build_" +
-      java.util.UUID.randomUUID().toString.take(8))
-    Files.createDirectories(build)
-    // any failure past this point must not leave a dangling .build_ dir
-    // (the round-8 ADVICE finding: an empty source threw a MatchError
-    // out of the Row unapply and orphaned the half-built directory)
-    try {
-      val raw = spark.read.parquet(src.toString)
-        .select(documentsRawSchema.fields.toIndexedSeq
-          .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      val mm = raw.agg(min(col("doc_id")), max(col("doc_id"))).head()
+  private def typed(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toIndexedSeq
+      .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+
+  private val EventSource = StagedSource("events.parquet", "events", "ts",
+    rawEventsNs, (lo, hi) => (lo, hi), identity, Map.empty)
+
+  /** Documents: the replay re-sends only rows whose original doc_id
+    * buckets ≥ 90 (the increment split), and the staged files carry
+    * 16 MB row groups. A file is one trigger, and the file source
+    * splits it across cores only at row-group boundaries: with the
+    * default 128 MB groups a 130-260 MB file (ScaleGen's 1M-2M rungs)
+    * read as one or two partitions, so a gate trigger hashed its batch
+    * on one or two cores. */
+  private val DocSource = StagedSource("documents.parquet", "documents", "doc_id",
+    (s, p) => typed(s.read.parquet(p), documentsRawSchema), (lo, hi) => (lo, hi),
+    _.filter(pmod(graft.functions.HashFunctions.hash32(
+      col("doc_id").cast("string")), lit(100)) >= 90),
+    Map("parquet.block.size" -> (16L << 20).toString))
+
+  /** Embeddings: only the increment, vec_id ≥ (max+1)·9/10, is staged. */
+  private val VecSource = StagedSource("embeddings.parquet", "vecinc", "vec_id",
+    (s, p) => typed(s.read.parquet(p), embeddingsRawSchema),
+    (_, hi) => ((hi + 1) * 9 / 10, hi), identity, Map.empty)
+
+  /** The one stream slicer: cut `src` into `nBatches` contiguous ranges
+    * of its key and stage each as one parquet file, built once per
+    * [[graft.storage.ArtifactCache]] key ("stream" family, `version`,
+    * sfDir, source fingerprint, `name`). With [lo, hi] the staged key
+    * range and span = max(hi - lo, 1), cut b covers
+    * [lo + span·b/n, lo + span·(b+1)/n), the last cut open above — the
+    * integer arithmetic the stream oracle twins replay. Arrival
+    * position `pos` receives cut `order(pos)` as `<prefix>_<pos>` with
+    * mtime base + pos·2 s, so the file source takes them in that order;
+    * `last` rows ride in the last-arriving file; `replay` adds one
+    * trailing file of batch 0's [[StagedSource.replayRows]] under
+    * key + [[ReplayIdOffset]]. Jobs: one min/max aggregate, one write
+    * per file. */
+  private def stageCuts(spark: SparkSession, sfDir: String, src: StagedSource,
+                        name: String, version: Int, nBatches: Int,
+                        order: Seq[Int], last: Long => Option[DataFrame],
+                        replay: Boolean): String =
+    graft.storage.ArtifactCache.cached("stream", version, sfDir, src.file, name) { build =>
+      import java.nio.file.{Files, Paths}
+      val path = Paths.get(sfDir, src.file)
+      val raw = src.read(spark, path.toString)
+      val mm = raw.agg(min(col(src.key)), max(col(src.key))).head()
       require(!mm.isNullAt(0),
-        s"cannot stage streaming doc batches: $src has no rows")
-      val (idMin, idMax) = (mm.getLong(0), mm.getLong(1))
-      val span = math.max(idMax - idMin, 1L)
+        s"cannot stage streaming ${src.prefix} batches: $path has no rows")
+      val (lo, hi) = src.range(mm.getLong(0), mm.getLong(1))
+      val span = math.max(hi - lo, 1L)
+      def cut(b: Int): DataFrame = raw.filter(col(src.key) >= lo + span * b / nBatches &&
+        (if (b == nBatches - 1) lit(true) else col(src.key) < lo + span * (b + 1) / nBatches))
+      val arrivals = order.map(cut)
+      val files = arrivals.init ++
+        Seq(last(hi).fold(arrivals.last)(arrivals.last.unionByName(_))) ++
+        (if (!replay) Nil
+         else Seq(src.replayRows(cut(0))
+           .withColumn(src.key, col(src.key) + lit(ReplayIdOffset))))
       val base = System.currentTimeMillis()
-      for (pos <- 0 until nBatches) {
-        val lo = idMin + span * pos / nBatches
-        val hi = idMin + span * (pos + 1) / nBatches
-        val slice = raw.filter(col("doc_id") >= lo &&
-          (if (pos == nBatches - 1) lit(true) else col("doc_id") < hi))
-        val tmp = build.resolve(s"tmp_$pos")
-        slice.coalesce(1).write.mode("overwrite")
-          .option("parquet.block.size", StagedDocRowGroupBytes)
-          .parquet(tmp.toString)
+      Files.createDirectories(Paths.get(build))
+      for ((df, pos) <- files.zipWithIndex) {
+        val tmp = Paths.get(build, s"tmp_$pos")
+        df.coalesce(1).write.options(src.writeOptions).parquet(tmp.toString)
         val part = scala.util.Using.resource(Files.list(tmp))(
           _.iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet"))
             .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp")))
-        val dst = build.resolve(f"documents_$pos%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+        val dst = Paths.get(build, f"${src.prefix}_$pos%02d.parquet")
+        Files.move(part, dst)
         dst.toFile.setLastModified(base + pos * 2000L)
         org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
       }
-      if (replayStage0) {
-        require(nBatches >= 2, "replay staging needs >= 2 data batches")
-        // exact copies of batch-0's increment rows (original bucket
-        // >= 90) under fresh ids — the planted cross-batch duplicates
-        val bucket = pmod(graft.functions.HashFunctions.hash32(
-          col("doc_id").cast("string")), lit(100))
-        val replay = raw
-          .filter(col("doc_id") >= idMin &&
-            col("doc_id") < lit(idMin + span / nBatches))
-          .filter(bucket >= 90)
-          .withColumn("doc_id", col("doc_id") + lit(ReplayIdOffset))
-          .select(documentsRawSchema.fields.toIndexedSeq
-            .map(f => col(f.name)): _*)
-        val tmp = build.resolve("tmp_replay")
-        replay.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = scala.util.Using.resource(Files.list(tmp))(
-          _.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp")))
-        val dst = build.resolve(f"documents_$nBatches%02d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(base + nBatches * 2000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      }
-      try Files.move(build, dir, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.DirectoryNotEmptyException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(build.toFile)
-      }
-    } catch {
-      case e: Throwable =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(build.toFile)
-        catch { case _: Exception => () }
-        throw e
     }
-    dir.toString
+
+  /** Stage the embeddings increment into `nBatches` vec_id-contiguous
+    * files; `replayStage0` appends the replay file
+    * ([[embeddingsStreamWithReplay]]). */
+  private[graft] def stageVecBatches(spark: SparkSession, sfDir: String,
+                                     nBatches: Int,
+                                     replayStage0: Boolean = false): String = {
+    require(!replayStage0 || nBatches >= 2, "replay staging needs >= 2 data batches")
+    stageCuts(spark, sfDir, VecSource,
+      (if (replayStage0) "vecinc_replay_" else "vecinc_") + nBatches,
+      StageFormatVersion, nBatches, 0 until nBatches, _ => None, replayStage0)
   }
 
-  private def streamFromStagedDir(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(dir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000L")))
-
-  /** Fingerprint of a parquet table path (file or directory): total
-    * byte size + max mtime over all part files. Keys the staging cache
-    * so a regenerated events.parquet at the same path re-stages instead
-    * of silently serving stale batches. */
-  private[graft] def sourceFingerprint(path: java.nio.file.Path): String = {
-    import java.nio.file.Files
-    val files =
-      if (Files.isDirectory(path))
-        scala.util.Using.resource(Files.walk(path))(
-          _.iterator().asScala.filter(Files.isRegularFile(_)).toVector)
-      else Vector(path)
-    val size = files.map(Files.size).sum
-    val mtime = files.map(Files.getLastModifiedTime(_).toMillis).maxOption.getOrElse(0L)
-    java.lang.Long.toHexString(size) + "_" + java.lang.Long.toHexString(mtime)
+  /** Stage documents.parquet into `nBatches` doc_id-contiguous files;
+    * `replayStage0` appends the gate-append oracle's replay file (see
+    * [[documentsStreamWithReplay]]). */
+  private[graft] def stageDocBatches(spark: SparkSession, sfDir: String,
+                                     nBatches: Int,
+                                     replayStage0: Boolean = false): String = {
+    require(!replayStage0 || nBatches >= 2, "replay staging needs >= 2 data batches")
+    stageCuts(spark, sfDir, DocSource,
+      (if (replayStage0) "documents_replay_" else "documents_") + nBatches,
+      StageFormatVersion, nBatches, 0 until nBatches, _ => None, replayStage0)
   }
 
-  /** The staging-cache directory for (sfDir, nBatches) at a given
-    * staged-format version — the full cache key is (FORMAT VERSION,
-    * sfDir, source size+mtime, nBatches). Exposed for the
+  private def eventsStageName(nBatches: Int, arrivalOrder: Seq[Int],
+                              sentinel: Boolean, sentinelType: String): String =
+    s"events_$nBatches" +
+      (if (arrivalOrder.isEmpty) "" else "_o" + arrivalOrder.mkString("")) +
+      (if (sentinel) s"_sent_$sentinelType" else "")
+
+  /** The staging-cache directory of the events stream for (sfDir,
+    * nBatches, ...) at a given staged-format version. Exposed for the
     * stale-format regression spec, which plants an old-version dir and
     * proves it is never addressed by a newer version. */
   private[graft] def stageDir(sfDir: String, nBatches: Int,
                               version: Int = StageFormatVersion,
                               arrivalOrder: Seq[Int] = Nil,
                               sentinel: Boolean = false,
-                              sentinelType: String = "sentinel"): java.nio.file.Path = {
-    import java.nio.file.Paths
-    val src = Paths.get(sfDir, "events.parquet")
-    val orderTag = if (arrivalOrder.isEmpty) "" else "_o" + arrivalOrder.mkString("")
-    val sentTag = if (sentinel) s"_sent_$sentinelType" else ""
-    Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_v${version}_" + Integer.toHexString(sfDir.hashCode) +
-        "_" + sourceFingerprint(src), s"events_$nBatches$orderTag$sentTag")
-  }
+                              sentinelType: String = "sentinel"): java.nio.file.Path =
+    graft.storage.ArtifactCache.dir("stream", version, sfDir, "events.parquet",
+      eventsStageName(nBatches, arrivalOrder, sentinel, sentinelType))
 
   /** Split events.parquet into `nBatches` contiguous event-time ranges
-    * under a temp dir keyed by (format version, sfDir, source
-    * size+mtime) — see [[stageDir]]/[[StageFormatVersion]]. Test/verify
+    * (see [[stageCuts]] and [[StageFormatVersion]]). Test/verify
     * staging only (the production source is Kafka/file arrival order).
-    * The staged dir is built under a temp name and atomically renamed
-    * into place, so concurrent processes either see the complete dir or
-    * stage their own; a regenerated source file changes the fingerprint
-    * and a staged-format code change bumps the version — either way the
-    * stale dir stops being addressed and a fresh staging runs. */
+    * `arrivalOrder` permutes which event-time slice arrives at each
+    * position: the identity stages ascending batches (no late rows), a
+    * permutation makes chosen slices arrive BEHIND the watermark
+    * earlier slices established. The sentinel row (event-time 2 h past
+    * the corpus max, enough to clear any ±10-minute join horizon or
+    * window close in the registry) rides in the LAST-ARRIVING file:
+    * the watermark only advances at batch END, so it cannot late-drop
+    * the real rows it shares a batch with, and the no-data flush batch
+    * that follows evicts exactly the same state as a dedicated
+    * sentinel batch would. */
   private[graft] def stageEventBatches(spark: SparkSession, sfDir: String,
                                        nBatches: Int,
                                        version: Int = StageFormatVersion,
                                        arrivalOrder: Seq[Int] = Nil,
                                        sentinel: Boolean = false,
-                                       sentinelType: String = "sentinel"): String = synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+                                       sentinelType: String = "sentinel"): String = {
     require(arrivalOrder.isEmpty || arrivalOrder.sorted == (0 until nBatches),
       s"arrivalOrder must permute 0..${nBatches - 1}: $arrivalOrder")
-    val src = Paths.get(sfDir, "events.parquet")
-    val dir = stageDir(sfDir, nBatches, version, arrivalOrder, sentinel, sentinelType)
-    if (Files.isDirectory(dir)) return dir.toString
-    val build = dir.resolveSibling(dir.getFileName.toString + ".build_" +
-      java.util.UUID.randomUUID().toString.take(8))
-    Files.createDirectories(build)
-    // any failure past this point must not leave a dangling .build_ dir
-    // (same discipline as stageDocBatches; an empty source used to
-    // throw a MatchError out of the Row unapply and orphan the
-    // half-built directory)
-    try {
-    val raw = rawEventsNs(spark, src.toString)
-    val mm = raw.agg(min(col("ts")), max(col("ts"))).head()
-    require(!mm.isNullAt(0),
-      s"cannot stage streaming event batches: $src has no rows")
-    val (tsMin, tsMax) = (mm.getLong(0), mm.getLong(1))
-    val span = math.max(tsMax - tsMin, 1L)
-    val base = System.currentTimeMillis()
-    // arrival position pos receives event-time slice order(pos); the
-    // default identity order stages event-time-contiguous ascending
-    // batches (no late rows), a permutation makes chosen slices arrive
-    // BEHIND the watermark earlier slices established
-    val order = if (arrivalOrder.isEmpty) 0 until nBatches else arrivalOrder
-    // sentinel row: event-time 2 h past the corpus max — enough to
-    // clear any ±10-minute join horizon / window close in the registry.
-    // It rides in the LAST-ARRIVING batch file (not a file of its own):
-    // the watermark only advances at batch END, so it cannot late-drop
-    // the real rows it shares a batch with, and the no-data flush batch
-    // that follows evicts exactly the same state as a dedicated
-    // sentinel batch would — one fewer trigger per streaming oracle.
-    val sentinelRow: Option[DataFrame] = if (!sentinel) None else {
+    def sentinelRow(tsMax: Long): Option[DataFrame] = if (!sentinel) None else {
       import spark.implicits._
       Some(Seq((-1L, tsMax + 7200L * 1000000000L, -1L, sentinelType, 0.0, ""))
         .toDF(eventsRawSchema.fieldNames.toIndexedSeq: _*))
     }
-    for (pos <- 0 until nBatches) {
-      val b = order(pos)
-      val lo = tsMin + span * b / nBatches
-      val hi = tsMin + span * (b + 1) / nBatches
-      val dataSlice = raw.filter(
-        col("ts") >= lo && (if (b == nBatches - 1) lit(true) else col("ts") < hi))
-      val slice =
-        if (pos == nBatches - 1) sentinelRow.fold(dataSlice)(dataSlice.unionByName(_))
-        else dataSlice
-      val tmp = build.resolve(s"tmp_$pos")
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = scala.util.Using.resource(Files.list(tmp))(
-        _.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp")))
-      val dst = build.resolve(f"events_$pos%02d.parquet")
-      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-      // ascending mtimes: FileStreamSource picks oldest-first
-      dst.toFile.setLastModified(base + pos * 2000L)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-    try Files.move(build, dir, StandardCopyOption.ATOMIC_MOVE)
-    catch { // lost the race to another process: its dir is complete, use it
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.DirectoryNotEmptyException =>
-        org.apache.commons.io.FileUtils.deleteDirectory(build.toFile)
-    }
-    } catch {
-      case e: Throwable =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(build.toFile)
-        catch { case _: Exception => () }
-        throw e
-    }
-    dir.toString
+    stageCuts(spark, sfDir, EventSource,
+      eventsStageName(nBatches, arrivalOrder, sentinel, sentinelType), version,
+      nBatches, if (arrivalOrder.isEmpty) 0 until nBatches else arrivalOrder,
+      sentinelRow, replay = false)
   }
 
   /** Run a streaming DataFrame to completion into an in-memory table
@@ -803,7 +655,7 @@ object StreamingOps {
         .drop("batch")
     else // every batch produced zero rows: nothing was written
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** Where ephemeral stream checkpoints go: tmpfs when present (every

@@ -210,9 +210,9 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.buildAnnIndex(vecsQ.filter(col("vec_id") < 450), cents, idx)
     AnnIndex.appendToAnnIndex(vecsQ.filter(col("vec_id") >= 450), idx)
     assert(Files.isDirectory(Paths.get(idx, "delta")))
-    // rebuild over the full corpus at the same path (the stamp-miss
-    // path of ensureAnnIndex): the old delta must not survive to
-    // duplicate the previously-appended vectors
+    // rebuild over the full corpus at the same path (an in-place
+    // rebuild, as maintenance runs it): the old delta must not survive
+    // to duplicate the previously-appended vectors
     AnnIndex.buildAnnIndex(vecsQ, cents, idx)
     assert(!Files.isDirectory(Paths.get(idx, "delta")))
     val fresh = newIndexDir()

@@ -72,13 +72,10 @@ class CacheVersionSpec extends AnyFunSuite {
     assert(SignatureIndex.FormatVersion == 2 && AnnIndex.FormatVersion == 2)
     val key = "cv_spec_" + System.nanoTime()
     val sig = SignatureIndex.ensureIndex(graft.operators.Dedup.shingleHashSets(
-      Tables.documents(spark, sf).limit(20), "doc_id", "text", 5), key)
+      Tables.documents(spark, sf).limit(20), "doc_id", "text", 5), sf, key)
     assert(sig.contains(s"graft_sigindex_v${SignatureIndex.FormatVersion}_"),
       s"signature index cache dir must be format-versioned: $sig")
-    val ann = AnnIndex.ensureAnnIndex(key) { p =>
-      AnnIndex.buildAnnIndex(spark.range(4).select(col("id").as("vec_id"),
-        array(col("id"), lit(0L)).as("qv")), Seq((0L, Array(0L, 0L))), p)
-    }
+    val ann = AnnIndex.ensureAnnIndex(sf, key)(tinyAnnIndex)
     assert(ann.contains(s"graft_annindex_v${AnnIndex.FormatVersion}_"),
       s"ANN index cache dir must be format-versioned: $ann")
     try {
@@ -89,6 +86,42 @@ class CacheVersionSpec extends AnyFunSuite {
       assert(e.getMessage.contains("this build reads 2"), e.getMessage)
     } finally Seq(sig, ann).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
+  }
+
+  private def tinyAnnIndex(p: String) =
+    graft.operators.AnnIndex.buildAnnIndex(spark.range(4).select(col("id").as("vec_id"),
+      array(col("id"), lit(0L)).as("qv")), Seq((0L, Array(0L, 0L))), p)
+
+  test("each artifact family: one build per version, a bumped version rebuilds") {
+    import graft.operators.{AnnIndex, Dedup, SignatureIndex}
+    import graft.storage.{ArtifactCache, PartitionedStore}
+    val name = "cv_family_" + System.nanoTime()
+    // (family, source table, artifact name, the family's entry point)
+    val families: Seq[(String, String, String, Int => String)] = Seq(
+      ("stream", "events.parquet", "events_3",
+        v => StreamingOps.stageEventBatches(spark, sf, 3, v)),
+      ("part", "events.parquet", name,
+        v => PartitionedStore.cached(sf, name, version = v)(
+          spark.range(1).write.parquet(_))),
+      ("sigindex", "documents.parquet", name,
+        v => SignatureIndex.ensureIndex(Dedup.shingleHashSets(
+          Tables.documents(spark, sf).limit(20), "doc_id", "text", 5), sf, name, v)),
+      ("annindex", "embeddings.parquet", name,
+        v => AnnIndex.ensureAnnIndex(sf, name, v)(tinyAnnIndex)))
+    for ((family, source, artifact, call) <- families) {
+      val dirs = Seq(vOld, vNew).map(ArtifactCache.dir(family, _, sf, source, artifact))
+      dirs.foreach(deleteQuietly) // a crashed run's leftovers
+      try {
+        val (first, firstJobs) = jobsDuring(call(vOld))
+        val (again, againJobs) = jobsDuring(call(vOld))
+        val (bumped, bumpedJobs) = jobsDuring(call(vNew))
+        assert(first == dirs(0).toString, s"$family: $first is not its key's dir")
+        assert(firstJobs > 0 && again == first && againJobs == 0,
+          s"$family: the same version must be a cache hit ($againJobs jobs)")
+        assert(bumped == dirs(1).toString && bumped != first && bumpedJobs > 0,
+          s"$family: a bumped version must build fresh")
+      } finally dirs.foreach(deleteQuietly)
+    }
   }
 
   test("windowed-agg twin stays green off the versioned staging path") {
@@ -134,26 +167,5 @@ class CacheVersionSpec extends AnyFunSuite {
     val srcRows = StreamingOps.rawEventsNs(spark, s"$sf/events.parquet").count()
     assert(staged.filter(col("event_id") >= 0).count() == srcRows,
       "staged batches must cover every real source row exactly once")
-  }
-
-  test("PartitionedStore.cached re-builds when its format version bumps") {
-    import graft.storage.PartitionedStore
-    var builds = 0
-    def build(path: String): Unit = {
-      builds += 1
-      spark.range(1).write.parquet(path)
-    }
-    val p1 = PartitionedStore.cached(sf, "cv_test", version = vOld)(build)
-    val p1again = PartitionedStore.cached(sf, "cv_test", version = vOld)(build)
-    val buildsSameVersion = builds
-    val p2 = PartitionedStore.cached(sf, "cv_test", version = vNew)(build)
-    try {
-      assert(p1 == p1again && buildsSameVersion == 1,
-        "same version must be a cache hit")
-      assert(p2 != p1 && builds == 2, "bumped version must force a re-build")
-    } finally {
-      deleteQuietly(java.nio.file.Paths.get(p1))
-      deleteQuietly(java.nio.file.Paths.get(p2))
-    }
   }
 }

@@ -125,12 +125,17 @@ class IndexLifecycleSpec extends AnyFunSuite {
       val f = dir.resolve("part-0001.parquet")
       Files.write(f, Array[Byte](1, 2, 3))
       val mtime = Files.getLastModifiedTime(f)
-      val fp1 = IndexLifecycle.dirFingerprint(dir)
+      val fp1 = graft.storage.ArtifactCache.fingerprint(dir)
       // same bytes, same mtime, different name — must miss
       val g = dir.resolve("part-0002.parquet")
       Files.move(f, g)
       Files.setLastModifiedTime(g, mtime)
-      assert(IndexLifecycle.dirFingerprint(dir) != fp1)
+      assert(graft.storage.ArtifactCache.fingerprint(dir) != fp1)
+      // a single file is fingerprinted by its own size and mtime
+      val fpFile = graft.storage.ArtifactCache.fingerprint(g)
+      Files.setLastModifiedTime(g,
+        java.nio.file.attribute.FileTime.fromMillis(mtime.toMillis + 1000))
+      assert(graft.storage.ArtifactCache.fingerprint(g) != fpFile)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 

@@ -287,23 +287,6 @@ class SignatureIndexSpec extends AnyFunSuite {
       .select("doc_id", "text", "lang", "source"))
   }
 
-  /** Run `body`, returning its value and the Spark jobs it started. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-      (r, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("gate plan: no sort-merge join, no exchange or sort above a corpus scan") {
     // the round-9 defect was a corpus-sized SORT per micro-batch; the
     // gate must read each corpus table (md5 sidecar, sig/) in one scan
@@ -671,11 +654,11 @@ class SignatureIndexSpec extends AnyFunSuite {
 
   test("ensureIndex caches by key and stamp") {
     val key = "spec_" + System.nanoTime()
-    val p1 = SignatureIndex.ensureIndex(corpus, key)
+    val p1 = SignatureIndex.ensureIndex(corpus, sf, key)
     val meta1 = SignatureIndex.readMeta(p1)
     val p2 = SignatureIndex.ensureIndex(
       sys.error("second ensureIndex call must not re-evaluate the corpus"),
-      key)
+      sf, key)
     assert(p1 == p2 && meta1.nDocs > 0)
     Dedup.registerScratchDir(Paths.get(p1))
   }

@@ -516,35 +516,6 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy(col("bucket_start"), col("event_type"))
     assert(streamed.collect().sameElements(batch.collect()))
   }
-
-  test("empty events source fails with a message and leaves no .build_ orphan") {
-    // the events-staging twin of the documents-path guard (round-9
-    // verdict): an empty source must fail DESCRIPTIVELY (not with a
-    // MatchError out of a Row unapply) and must clean up its half-built
-    // .build_ directory
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val tmpSf = Files.createTempDirectory("graft_empty_sf_")
-    try {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StreamingOps.eventsRawSchema)
-        .write.parquet(tmpSf.resolve("events.parquet").toString)
-      val e = intercept[IllegalArgumentException] {
-        StreamingOps.stageEventBatches(spark, tmpSf.toString, 3)
-      }
-      assert(e.getMessage.contains("has no rows"), e.getMessage)
-      val stageParent = StreamingOps.stageDir(tmpSf.toString, 3).getParent
-      val orphans =
-        if (!Files.isDirectory(stageParent)) Nil
-        else scala.util.Using.resource(Files.list(stageParent))(
-          _.iterator().asScala.filter(
-            _.getFileName.toString.contains(".build_")).toList)
-      assert(orphans.isEmpty, s"orphaned build dirs: $orphans")
-      if (Files.isDirectory(stageParent))
-        org.apache.commons.io.FileUtils.deleteDirectory(stageParent.toFile)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmpSf.toFile)
-  }
 }
 
 /** Test access to the streaming query registry. */
