@@ -98,7 +98,11 @@ object AnnIndex {
     * ([[probeAnnIndexPq]]). 0 = the plain full-vector layout. */
   case class Meta(nCells: Int, dims: Int, nVecs: Long,
                   appendedVecs: Long = 0L, deletedVecs: Long = 0L,
-                  pqM: Int = 0, pqSubDim: Int = 0)
+                  pqM: Int = 0, pqSubDim: Int = 0) extends IndexLifecycle.Drift {
+    def live: Long = nVecs
+    def appended: Long = appendedVecs
+    def deleted: Long = deletedVecs
+  }
 
   /** Largest total codeword count (M × K) encoded with the inline
     * Catalyst argmin expression ([[Similarity.pqEncode]] — the
@@ -112,9 +116,9 @@ object AnnIndex {
   /** Gate-side probe-width POLICY for duplicate-admission gates riding
     * this index (the streaming embed gate): nProbe for a gate whose
     * job is REJECTING near-duplicates, pinned the way capPop and
-    * [[RebuildFraction]] are. Measured (SCALING.md §4.18, planted
-    * duplicate class on the √N-cell 1M/2M/8M ladder indexes): an
-    * EXACT re-ingest assigns to its original's cell and is caught at
+    * [[IndexLifecycle.RebuildFraction]] are. Measured (SCALING.md
+    * §4.18, planted duplicate class on the √N-cell 1M/2M/8M ladder
+    * indexes): an EXACT re-ingest assigns to its original's cell and is caught at
     * ANY nProbe ≥ 1 (admit-error 0 at every width and every corpus
     * size); misses only appear when perturbation pushes a probe
     * across a cell boundary, and at nProbe=16 the worst noise band
@@ -125,26 +129,13 @@ object AnnIndex {
     * cell. */
   val GateNProbe = 16
 
-  /** Fraction of the build-time corpus that may arrive by
-    * [[appendToAnnIndex]] before [[needsRebuild]] flags the frozen
-    * centroids stale. Appends never lose recall versus the same frozen
-    * quantizer (assignment is a pure deterministic function of the
-    * centroid table), but the quantizer itself drifts from the data:
-    * cells grow imbalanced and probe selectivity decays. Shared policy
-    * ([[IndexLifecycle.RebuildFraction]], measured at the threshold in
-    * SCALING.md §4.17: recall unchanged, only balance drifts). */
-  val RebuildFraction: Double = IndexLifecycle.RebuildFraction
-
-  /** Appends AND deletes both drift the frozen quantizer away from the
-    * live data, so both count toward the rebuild threshold. `nVecs`
-    * stores the LIVE count (build + appended − deleted), so the
-    * build-time corpus the policy is measured against reconstructs as
-    * `nVecs − appended + deleted`; the `+ 2·deleted` below is exactly
-    * that algebra pushed through [[IndexLifecycle.driftExceeds]]'s
-    * (appended, nTotal) signature. */
-  def needsRebuild(meta: Meta): Boolean =
-    IndexLifecycle.driftExceeds(meta.appendedVecs + meta.deletedVecs,
-      meta.nVecs + 2 * meta.deletedVecs)
+  /** The scheduled-rebuild signal ([[IndexLifecycle.needsRebuild]]).
+    * Appends never lose recall versus the same frozen quantizer
+    * (assignment is a pure deterministic function of the centroid
+    * table), but the quantizer itself drifts from the data: cells grow
+    * imbalanced and probe selectivity decays (measured at the threshold
+    * in SCALING.md §4.17: recall unchanged, only balance drifts). */
+  def needsRebuild(meta: Meta): Boolean = IndexLifecycle.needsRebuild(meta)
 
   /** Compaction-cadence predicate ([[IndexLifecycle
     * .CompactSmallFilesMax]], measured in SCALING.md §4.19): true once
@@ -274,7 +265,7 @@ object AnnIndex {
       booksFrom(spark.read.parquet(s"$path/books")))
 
   /** (m, cid, qc) codebook rows as per-subspace, cid-sorted books. */
-  private def booksFrom(df: DataFrame): Seq[Seq[(Long, Array[Long])]] =
+  private[graft] def booksFrom(df: DataFrame): Seq[Seq[(Long, Array[Long])]] =
     df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -299,27 +290,13 @@ object AnnIndex {
     val spark = vecsQ.sparkSession
     val root = Paths.get(path)
     Files.createDirectories(root)
-    // a REBUILD at a path that lived an append/delete lifecycle must
-    // not inherit the previous index's side tables: the overwrite
-    // below replaces cells/ and centroids/, and a stale delta/ would
-    // duplicate every previously-appended vector in probe candidate
-    // lists (found by the oracle gate: a stamp-forced rebuild over a
-    // probed index returned rank-duplicated candidates) while stale
-    // tombstones/ would silently ERASE rebuilt vectors that happen to
-    // share a previously-deleted vec_id
-    // a stale books/ from a previous PQ build under a now-plain layout
-    // would desynchronize from meta (which is the PQ source of truth)
-    val staleSides = Seq("delta", "tombstones", GateAppendBatchesDir) ++
-      (if (pqBooks.isEmpty) Seq("books") else Nil)
-    for (side <- staleSides) {
-      val stale = root.resolve(side)
-      if (Files.isDirectory(stale))
-        org.apache.commons.io.FileUtils.deleteDirectory(stale.toFile)
-    }
-    IndexLifecycle.clearBuildScopedMarkers(root)
-    import spark.implicits._
-    cents.map { case (cid, qc) => (cid, qc.toSeq) }.toDF("cid", "qc")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    // the overwrites below replace cells/ and centroids/; a stale
+    // delta/ would rank-duplicate probe candidates (found by the oracle
+    // gate), and a stale books/ under a now-plain layout would
+    // desynchronize from meta (the PQ source of truth)
+    IndexLifecycle.resetLayout(root, Seq("delta", "tombstones",
+      GateAppendBatchesDir) ++ (if (pqBooks.isEmpty) Seq("books") else Nil))
+    writeCents(spark, cents, s"$path/centroids")
     // PQ-coded layout: the M-code `codes` column rides BESIDE the full
     // vector in the SAME cell table — parquet is columnar, so the ADC
     // probe path reads only the code pages (the ~dims·8/M compression
@@ -334,10 +311,7 @@ object AnnIndex {
       books.foreach(b => require(
         b.map(_._1).sorted == (0L until b.size.toLong),
         "buildAnnIndex: PQ codebook ids must be dense 0..K-1 per subspace"))
-      books.zipWithIndex.flatMap { case (cs, m) =>
-        cs.map { case (cid, qc) => (m, cid, qc.toSeq) }
-      }.toDF("m", "cid", "qc")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
+      writeBooks(spark, books, s"$path/books")
     }
     val dims = cents.head._2.length
     val pqSubDim = pqBooks.map(b => dims / b.size).getOrElse(0)
@@ -375,7 +349,7 @@ object AnnIndex {
     * Recall contract: a post-append probe returns exactly what a fresh
     * build OVER THE SAME centroids would (assignment is deterministic
     * in the frozen quantizer) — only quantizer STALENESS drifts,
-    * bounded by [[RebuildFraction]]/[[needsRebuild]].
+    * bounded by [[needsRebuild]].
     *
     * Partial-failure contract (single-writer) — ATOMIC since the
     * manifest era (the round-13 second review pass retired the old
@@ -426,7 +400,7 @@ object AnnIndex {
     // re-appended row SILENTLY — the one failure mode the lifecycle
     // module forbids), so re-using one is a loud error, enforced at
     // increment cost: use a fresh id or rebuild first
-    tombstoneIds(spark, path).foreach { case (ts, bytes) =>
+    IndexLifecycle.tombstones(spark, root, "vec_id").foreach { case (ts, bytes) =>
       require(!IndexLifecycle.anyRow(IndexLifecycle.boundedIdJoin(
         assigned, ts, "vec_id", bytes, "left_semi")),
         s"appendToAnnIndex: increment re-uses tombstoned vec_ids at " +
@@ -449,7 +423,7 @@ object AnnIndex {
   }
 
   /** DELETE vectors from the index by id — the takedown/retention
-    * lifecycle (the one mutation build/append/compact didn't cover):
+    * lifecycle, the ANN instance of [[IndexLifecycle.deleteIds]]:
     * the ids land in the UNPARTITIONED `tombstones/` side table (the
     * delta pattern applied to removals — nothing corpus-sized is read
     * or written at delete time) and every search anti-joins them out
@@ -466,71 +440,24 @@ object AnnIndex {
     * all-or-nothing at the snapshot commit — a crash before it leaves
     * the tombstone file an unlisted orphan (probes unaffected), and
     * the caller MUST treat the delete as not-applied and retry
-    * (duplicate-safe: already-tombstoned ids drop out before counting
-    * or writing). Deleting a never-indexed id is a TRUE no-op — the
-    * increment is semi-joined
-    * against the slim vec_id column of base+delta first (one
-    * maintenance-priced columnar scan), so foreign ids touch neither
-    * the side table nor the drift counters (round-11 What's-wrong #2:
-    * they used to skew nVecs below the live count). Deletes count
-    * toward [[needsRebuild]] drift — removals unbalance the frozen
-    * quantizer's cells exactly like arrivals. */
+    * (duplicate-safe). Deleting a never-indexed id is a TRUE no-op —
+    * the increment is semi-joined against the slim vec_id column of
+    * base+delta first (one maintenance-priced columnar scan), so
+    * foreign ids touch neither the side table, the drift counters nor
+    * the meta file (round-11 What's-wrong #2: they used to skew nVecs
+    * below the live count). Deletes count toward [[needsRebuild]]
+    * drift — removals unbalance the frozen quantizer's cells exactly
+    * like arrivals. */
   def deleteFromAnnIndex(ids: DataFrame, path: String): Meta = {
-    val spark = ids.sparkSession
-    val root = Paths.get(path)
     val before = readMeta(path)
-    val ts0 = ids.select(col("vec_id")).distinct()
-    // only ids PRESENT in the live index count: broadcast the
-    // increment into a semi over the slim vec_id column (output
-    // increment-bounded), then drop ids already tombstoned
-    val present = baseUnionDelta(spark, path)(_.select(col("vec_id")))
-      // nothing live: every delete is a foreign-id TRUE no-op
-      .getOrElse(return before)
-      .join(broadcast(ts0), Seq("vec_id"), "left_semi").distinct()
-    val fresh = tombstoneIds(spark, path).fold(present) {
-      case (prev, bytes) =>
-        IndexLifecycle.boundedIdJoin(present, prev, "vec_id", bytes,
-          "left_anti")
-    }
-    // increment-class ENFORCED (boundedCollectIds fails loudly past
-    // the budget): collect and append from a local relation — writing
-    // the joined frame directly appended to tombstones/ through a
-    // lineage that READS tombstones/ (a lost block recomputing
-    // mid-write could scan the half-appended dir)
-    val newIds = IndexLifecycle.boundedCollectIds(fresh, "vec_id")
-    if (newIds.nonEmpty) {
-      import spark.implicits._
-      // coalesce(1): a LocalTableScan write otherwise fans out to
-      // min(rows, defaultParallelism) part files PER DELETE, inflating
-      // the compaction-cadence file count and the per-probe footer
-      // reads (round-12 self-review finding)
-      // exact-files snapshot commit (a relist would resurrect a
-      // compaction-applied retained tombstone file, silently
-      // re-hiding a legitimately re-appended id — review finding)
-      IndexLifecycle.commitAddedWrite(root, "tombstones") {
-        spark.createDataset(newIds.toSeq).toDF("vec_id")
-          .coalesce(1)
-          .write.mode("append").parquet(s"$path/tombstones")
-      }
-    }
-    val nDel = newIds.length.toLong
+    // nothing live (None): every delete is a foreign-id TRUE no-op
+    val nDel = IndexLifecycle.deleteIds(Paths.get(path), ids, "vec_id",
+      baseUnionDelta(ids.sparkSession, path)(_.select(col("vec_id"))))
     val meta = before.copy(nVecs = before.nVecs - nDel,
       deletedVecs = before.deletedVecs + nDel)
-    writeMeta(root, meta)
+    if (nDel > 0) writeMeta(Paths.get(path), meta)
     meta
   }
-
-  /** The deduplicated tombstone id frame + side-table parquet bytes
-    * (the [[IndexLifecycle.boundedIdJoin]] size signal), or None when
-    * none exist. `distinct()` collapses whatever duplicate rows
-    * crash-retried deletes left behind. */
-  private def tombstoneIds(spark: SparkSession,
-                           path: String): Option[(DataFrame, Long)] =
-    sideFiles(path, "tombstones").map { fs =>
-      (spark.read.parquet(fs.map(_.toString): _*)
-        .select(col("vec_id")).distinct(),
-        IndexLifecycle.idSideBytes(spark, fs))
-    }
 
   /** The snapshot's files of one sub-table. */
   private def files(path: String, sub: String): Seq[Path] =
@@ -718,11 +645,7 @@ object AnnIndex {
     // bytes (the cumulative set is policy-bounded, not code-bounded,
     // so the join must not assume broadcast-class); physically
     // removed, and this join dropped, at compaction
-    val cands1 = tombstoneIds(spark, path)
-      .fold(cands0) { case (ts, bytes) =>
-        IndexLifecycle.boundedIdJoin(cands0, ts, "vec_id", bytes,
-          "left_anti")
-      }
+    val cands1 = IndexLifecycle.withoutTombstones(cands0, Paths.get(path), "vec_id")
     val cands2 = excludeIds.fold(cands1)(ex =>
       cands1.join(broadcast(ex), Seq("vec_id"), "left_anti"))
     cands2.filter(candidateFilter)
@@ -1015,11 +938,8 @@ object AnnIndex {
       // batches are dead (only the in-flight batchId is ever read —
       // earlier batches committed before this trigger started) and
       // are pruned by compaction's sidecar merge.
-      IndexLifecycle.commitAddedWrite(Paths.get(path), GateAppendBatchesDir) {
-        admitted.select(col("probe_id").as("vec_id"),
-            lit(batchId).as("batch"))
-          .coalesce(1).write.mode("append").parquet(s"$path/$GateAppendBatchesDir")
-      }
+      IndexLifecycle.appendSideFile(Paths.get(path), GateAppendBatchesDir,
+        admitted.select(col("probe_id").as("vec_id"), lit(batchId).as("batch")))
       val admRows = rows.join(
         admitted.select(col("probe_id").as("vec_id")),
         Seq("vec_id"), "left_semi")
@@ -1116,7 +1036,7 @@ object AnnIndex {
     // the commit leaves snapshot N intact (rewritten files = orphans,
     // reclaimed at re-entry) and re-applying is a no-op anti.
     var compacted = 0
-    tombstoneIds(spark, path).foreach { case (ts0, tsBytes) =>
+    IndexLifecycle.tombstones(spark, root, "vec_id").foreach { case (ts0, tsBytes) =>
       val ts = ts0.cache()
       val removed = scala.collection.mutable.ArrayBuffer[Path]()
       val added = scala.collection.mutable.ArrayBuffer[Path]()
@@ -1240,16 +1160,6 @@ object AnnIndex {
     compacted
   }
 
-  /** Epoch stamp of a staging: the meta counters at staging time. A
-    * committed rebuild that crashed before reclaiming its staging
-    * must NOT be "resumed" after further appends/deletes re-flag the
-    * drift — the stale rows would drop every intervening append and
-    * resurrect every intervening delete (round-12 second-pass
-    * finding). Any mutation moves a counter, so a stamp mismatch
-    * detects exactly that. */
-  private def rebuildEpoch(meta: Meta): String =
-    s"${meta.nVecs}|${meta.appendedVecs}|${meta.deletedVecs}"
-
   /** Stage a rebuild's inputs into `dir` (see [[IndexLifecycle
     * .maintain]]): the live rows (base ∪ deduped delta, minus
     * tombstones) under `rows`, the RETRAINED quantizer (kmeansBulk
@@ -1271,33 +1181,22 @@ object AnnIndex {
     // one corpus-wide dedup: a rebuild is the repair point for every
     // documented transient-duplicate crash window, so it must
     // collapse them all (retried appends)
-    val live0 = merged.dropDuplicates("vec_id")
-    val live = tombstoneIds(spark, path).fold(live0) {
-      case (ts, bytes) =>
-        IndexLifecycle.boundedIdJoin(live0, ts, "vec_id", bytes,
-          "left_anti")
-    }
-    live.write.mode("overwrite").parquet(dir.resolve("rows").toString)
+    IndexLifecycle.withoutTombstones(merged.dropDuplicates("vec_id"),
+      Paths.get(path), "vec_id")
+      .write.mode("overwrite").parquet(dir.resolve("rows").toString)
     val vecsQ = spark.read.parquet(dir.resolve("rows").toString)
     val cents = kmeansBulk(vecsQ.select(col("qv")),
       readCentroids(spark, path), trainIters)
-    import spark.implicits._
-    cents.map { case (cid, qc) => (cid, qc.toSeq) }.toDF("cid", "qc")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("cents").toString)
+    writeCents(spark, cents, dir.resolve("cents").toString)
     // PQ layout: the codebooks are build artifacts like the quantizer
     // — retrained (warm-started from the frozen books, deterministic)
     // and staged beside the centroids; codes are re-derived by the
     // build from these
     val meta0 = readMeta(path)
-    if (meta0.pqM > 0) {
-      val newBooks = Similarity.pqTrain(vecsQ.select(col("qv")),
-        readBooks(spark, path), meta0.pqSubDim, trainIters)
-      newBooks.zipWithIndex.flatMap { case (cs, m) =>
-        cs.map { case (cid, qc) => (m, cid, qc.toSeq) }
-      }.toDF("m", "cid", "qc").coalesce(1).write.mode("overwrite")
-        .parquet(dir.resolve("books").toString)
-    }
+    if (meta0.pqM > 0)
+      writeBooks(spark, Similarity.pqTrain(vecsQ.select(col("qv")),
+        readBooks(spark, path), meta0.pqSubDim, trainIters),
+        dir.resolve("books").toString)
     // carry the gate-append sidecar through the rebuild: the build
     // clears it, but the IN-FLIGHT batch's exclusion record must
     // survive a mid-trigger rebuild or a crash-redelivery loses the
@@ -1310,17 +1209,18 @@ object AnnIndex {
     * from. */
   private[graft] def stageRebuildLive(spark: SparkSession, path: String,
                                       trainIters: Int): Unit =
-    IndexLifecycle.stageRebuild(Paths.get(path),
-      rebuildEpoch(readMeta(path)))(stageLive(spark, path, _, trainIters))
+    IndexLifecycle.stageRebuild(Paths.get(path), readMeta(path))(
+      stageLive(spark, path, _, trainIters))
 
   /** MAINTENANCE — the ANN family's steps under [[IndexLifecycle
     * .maintain]] (staging, crash re-entry and the commit point are the
     * shared driver's). Consults the policies in order and acts:
     *
     *  1. [[needsRebuild]] (append+delete drift past
-    *     [[RebuildFraction]]) → REBUILD in place from the index's own
-    *     live rows (the ANN family is self-contained: the vectors ARE
-    *     the stored content), quantizer retrained ([[stageLive]]).
+    *     [[IndexLifecycle.RebuildFraction]]) → REBUILD in place from
+    *     the index's own live rows (the ANN family is self-contained:
+    *     the vectors ARE the stored content), quantizer retrained
+    *     ([[stageLive]]).
     *     Physically reclaims every tombstone and folds every delta row;
     *     the staged gate-append sidecar is restored verbatim (its
     *     vec_ids were appended admissions, so they survive);
@@ -1331,7 +1231,7 @@ object AnnIndex {
                        trainIters: Int = 2): IndexLifecycle.Maintenance = {
     val meta = readMeta(path)
     val root = Paths.get(path)
-    IndexLifecycle.maintain(root, rebuildEpoch(meta), needsRebuild(meta))(
+    IndexLifecycle.maintain(root, meta)(
       stage = stageLive(spark, path, _, trainIters),
       build = { dir =>
         def staged(name: String) = spark.read.parquet(dir.resolve(name).toString)
@@ -1347,19 +1247,11 @@ object AnnIndex {
   // ---- meta / centroid IO ----------------------------------------------
 
   private def writeMeta(root: Path, meta: Meta): Unit =
-    IndexLifecycle.writeMetaProps(root, "graft ann index", FormatVersion, Seq(
-      "nCells" -> meta.nCells.toString,
-      "dims" -> meta.dims.toString,
-      "nVecs" -> meta.nVecs.toString,
-      "appendedVecs" -> meta.appendedVecs.toString,
-      "deletedVecs" -> meta.deletedVecs.toString,
-      "pqM" -> meta.pqM.toString,
-      "pqSubDim" -> meta.pqSubDim.toString))
+    IndexLifecycle.writeMetaProps(root, "graft ann index", FormatVersion, meta)
 
   def readMeta(path: String): Meta = {
-    val props = IndexLifecycle.readMetaProps(
+    val prop = IndexLifecycle.readMetaProps(
       Paths.get(path), "ann index", FormatVersion)
-    def prop(k: String): Long = props.getProperty(k).toLong
     Meta(prop("nCells").toInt, prop("dims").toInt, prop("nVecs"),
       prop("appendedVecs"), prop("deletedVecs"), prop("pqM").toInt,
       prop("pqSubDim").toInt)
@@ -1379,9 +1271,28 @@ object AnnIndex {
       centsFrom(spark.read.parquet(s"$path/centroids")))
 
   /** (cid, qc) centroid rows, cid-sorted. */
-  private def centsFrom(df: DataFrame): Seq[(Long, Array[Long])] =
+  private[graft] def centsFrom(df: DataFrame): Seq[(Long, Array[Long])] =
     df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
+
+  /** Write a centroid table as the one (cid, qc) file [[centsFrom]]
+    * reads. */
+  private[graft] def writeCents(spark: SparkSession,
+                                cents: Seq[(Long, Array[Long])], dest: String): Unit = {
+    import spark.implicits._
+    cents.map { case (cid, qc) => (cid, qc.toSeq) }.toDF("cid", "qc")
+      .coalesce(1).write.mode("overwrite").parquet(dest)
+  }
+
+  /** Write PQ codebooks as the one (m, cid, qc) file [[booksFrom]]
+    * reads. */
+  private[graft] def writeBooks(spark: SparkSession,
+                                books: Seq[Seq[(Long, Array[Long])]], dest: String): Unit = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (cs, m) =>
+      cs.map { case (cid, qc) => (m, cid, qc.toSeq) }
+    }.toDF("m", "cid", "qc").coalesce(1).write.mode("overwrite").parquet(dest)
+  }
 
   private val centroidsMemo =
     new IndexLifecycle.FingerprintMemo[Seq[(Long, Array[Long])]]()

@@ -3,9 +3,10 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.graft.LocalRows
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -40,6 +41,20 @@ import scala.jdk.CollectionConverters._
   *    superseded files until the next maintenance entry reclaims them
   *    ([[reclaimUnmanifested]]).
   *
+  * The mutation core both families run is here too; a family keeps
+  * only its layout, probe, gate, compaction phases and `Meta` fields:
+  *  - one build reset ([[resetLayout]]): stale side tables and
+  *    build-scoped markers go before a (re)build writes;
+  *  - one tombstone reader ([[tombstones]], [[withoutTombstones]]);
+  *  - one delete ([[deleteIds]]): present, not-yet-tombstoned ids land
+  *    as one committed file of `tombstones/`;
+  *  - one one-file side-table append ([[appendSideFile]]) for deletes,
+  *    gate-append sidecar records and sidecar restores;
+  *  - one drift rule and rebuild epoch over a family's [[Drift]]
+  *    counters ([[needsRebuild]]);
+  *  - one meta writer ([[writeMetaProps]]), which lands `_INDEX_META`
+  *    by the same atomic rename as `_MANIFEST`.
+  *
   * Crash ordering: new bytes are materialized COMPLETELY before the
   * manifest names them, and old bytes leave the disk only after a
   * later commit has dropped them. A crash at any instant leaves the
@@ -72,6 +87,28 @@ object IndexLifecycle {
     * build-time corpus is `nTotal - appended`. */
   def driftExceeds(appended: Long, nTotal: Long): Boolean =
     appended > RebuildFraction * (nTotal - appended)
+
+  /** The drift counters of a family's `Meta`: the LIVE row count and
+    * the rows appended and deleted since the build. */
+  trait Drift { def live: Long; def appended: Long; def deleted: Long }
+
+  /** The rebuild policy of both families: appends AND deletes drift
+    * the frozen build artifacts (signature hot/hot2 populations, the
+    * ANN quantizer) away from the live data, and deletes also grow
+    * the read-side tombstone anti-join, so both count. `live` is
+    * build + appended − deleted, so the build-time corpus reconstructs
+    * as `live − appended + deleted`; the `+ 2·deleted` is that algebra
+    * pushed through [[driftExceeds]]'s (appended, nTotal) form. */
+  def needsRebuild(d: Drift): Boolean =
+    driftExceeds(d.appended + d.deleted, d.live + 2 * d.deleted)
+
+  /** Epoch stamp of a rebuild staging: the drift counters at staging
+    * time. A committed rebuild that crashed before reclaiming its
+    * staging must NOT be "resumed" after further mutations re-flag the
+    * drift — the stale rows would drop every intervening append and
+    * resurrect every intervening delete. Any mutation moves a counter,
+    * so a stamp mismatch detects exactly that. */
+  private def epoch(d: Drift): String = s"${d.live}|${d.appended}|${d.deleted}"
 
   /** Small-file count at which an append lifecycle should schedule
     * compaction — the shared cadence trigger both families consult
@@ -143,10 +180,10 @@ object IndexLifecycle {
   }
 
   /** Hard bound on the id set a single increment-class mutation may
-    * collect to the driver (both families' `deleteFrom*` stage the
-    * fresh tombstone ids through a LOCAL relation — the right fix for
-    * the lineage-reads-the-appended-dir hazard — which makes the
-    * driver heap the budget). 10M longs ≈ 80 MB of payload: far above
+    * collect to the driver ([[deleteIds]] stages the fresh tombstone
+    * ids through a LOCAL relation — the right fix for the
+    * lineage-reads-the-appended-dir hazard — which makes the driver
+    * heap the budget). 10M longs ≈ 80 MB of payload: far above
     * any real per-call takedown increment, far below a corpus-class
     * set that belongs to a rebuild. The contract used to be narrated
     * ("increment-class by contract"); now a mis-contracted caller gets
@@ -200,9 +237,9 @@ object IndexLifecycle {
     // (appends/compactions/rebuilds write NEW files and at most DELETE
     // old ones; deleting a link never touches the pristine original),
     // so the copy's only byte-copies are the small mutable metadata
-    // files (_INDEX_META is rewritten IN PLACE by writeMetaProps — a
-    // linked inode there would corrupt the pristine base; _MANIFEST,
-    // markers and sidecar stamps are copied too for uniformity). The
+    // files (_INDEX_META and _MANIFEST land by atomic rename, so a link
+    // would be safe too, but markers are rewritten in place and every
+    // non-parquet file is copied for uniformity). The
     // mutation loops pay the real gate/append/delete/maintain work
     // every invocation either way — the copy is setup, not the
     // operator under measurement. Falls back to a byte copy when the
@@ -226,27 +263,43 @@ object IndexLifecycle {
 
   // ---- meta properties IO ----------------------------------------------
 
-  /** Write the `_INDEX_META` properties stamp (version + the family's
-    * fields) under `root`. Meta is BOOKKEEPING by contract in both
-    * families: probes read the layout snapshot, so a lost or
-    * stale meta rewrite never corrupts results — it only skews the
+  /** Write the `_INDEX_META` properties stamp under `root`: `version`
+    * plus every field of the family's `Meta`, keyed by field name.
+    * Lands by atomic rename ([[writeAtomic]]), so a crash leaves the
+    * previous stamp or the next one, never a truncated file that every
+    * later read would reject. Meta is BOOKKEEPING by contract in both
+    * families: probes read the layout snapshot, so a lost or stale
+    * meta rewrite never corrupts results — it only skews the
     * rebuild/compaction policy counters (conservatively, for a retried
     * append: counted twice means an earlier rebuild). */
   def writeMetaProps(root: Path, comment: String, version: Int,
-                     fields: Seq[(String, String)]): Unit = {
+                     meta: Product): Unit = {
     val props = new java.util.Properties()
     props.setProperty("version", version.toString)
-    fields.foreach { case (k, v) => props.setProperty(k, v) }
-    val out = Files.newOutputStream(root.resolve("_INDEX_META"))
-    try props.store(out, comment) finally out.close()
+    meta.productElementNames.zip(meta.productIterator)
+      .foreach { case (k, v) => props.setProperty(k, v.toString) }
+    val out = new java.io.ByteArrayOutputStream()
+    props.store(out, comment)
+    writeAtomic(root.resolve("_INDEX_META"), out.toByteArray)
   }
 
-  /** Read + version-gate the `_INDEX_META` stamp. A version mismatch
-    * is a hard error: the layout on disk was written by a different
-    * format generation and silently reading it is how stale-sidecar
-    * bugs happen (the round-10 stale-delta lesson). */
+  /** Replace `target` with `bytes` through a same-dir temp file and an
+    * ATOMIC_MOVE: readers see the old content or the new, whole. */
+  private def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
+    Files.write(tmp, bytes)
+    Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Read + version-gate the `_INDEX_META` stamp, returning its
+    * numeric fields by name (every `Meta` field is an Int or a Long).
+    * A version mismatch is a hard error: the layout on disk was
+    * written by a different format generation and silently reading it
+    * is how stale-sidecar bugs happen (the round-10 stale-delta
+    * lesson). */
   def readMetaProps(root: Path, what: String,
-                    version: Int): java.util.Properties = {
+                    version: Int): String => Long = {
     val p = root.resolve("_INDEX_META")
     require(Files.isRegularFile(p), s"no $what at $root")
     val props = new java.util.Properties()
@@ -255,7 +308,7 @@ object IndexLifecycle {
     require(props.getProperty("version") == version.toString,
       s"$what at $root has version ${props.getProperty("version")}, " +
         s"this build reads $version")
-    props
+    k => props.getProperty(k).toLong
   }
 
   // ---- index-internal markers -------------------------------------------
@@ -293,13 +346,19 @@ object IndexLifecycle {
   private val markerLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Delete every BUILD-SCOPED marker at an index root — the one-shot
-    * mutation (`_ONCE_*_OK`) and sidecar (`_SIDECAR_*_OK`) markers
-    * that record state of a PARTICULAR build. Called by both
-    * families' (re)builds: an in-place rebuild (same dir, new stamp)
-    * that kept them would silently skip recorded mutations and serve
-    * the previous build's sidecar tables. */
-  def clearBuildScopedMarkers(root: Path): Unit =
+  /** Reset an index root before a (re)build writes its layout: delete
+    * the `subs` directories the build does not overwrite (stale side
+    * tables a new snapshot must not inherit — old tombstones would
+    * ERASE rebuilt rows sharing a deleted id, an old delta would
+    * duplicate rows, old sidecars would record admissions into the
+    * previous build) and every BUILD-SCOPED marker — the one-shot
+    * mutation (`_ONCE_*_OK`) and sidecar (`_SIDECAR_*_OK`) markers that
+    * record state of a PARTICULAR build: an in-place rebuild (same
+    * dir, new stamp) that kept them would silently skip recorded
+    * mutations and serve the previous build's sidecar tables. */
+  def resetLayout(root: Path, subs: Seq[String]): Unit = {
+    subs.map(root.resolve).filter(Files.isDirectory(_))
+      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
     if (Files.isDirectory(root))
       scala.util.Using.resource(Files.list(root))(
         _.iterator().asScala
@@ -310,6 +369,7 @@ object IndexLifecycle {
               n.endsWith("_OK")
           }
           .toSeq).foreach(Files.delete)
+  }
 
   // ---- bounded fingerprint memo ------------------------------------------
 
@@ -486,14 +546,9 @@ object IndexLifecycle {
   def snapshotFiles(root: Path, sub: String): Seq[Path] =
     snapshot(root).filter(_.startsWith(sub + "/")).map(root.resolve)
 
-  private def writeManifestAtomic(root: Path, rel: Seq[String]): Unit = {
-    val tmp = root.resolve(ManifestName + ".tmp")
-    Files.write(tmp, rel.sorted.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve(ManifestName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeManifestAtomic(root: Path, rel: Seq[String]): Unit =
+    writeAtomic(root.resolve(ManifestName),
+      rel.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
   /** Current on-disk parquet listing of `sub`, relative to root. */
   def listRelParquet(root: Path, sub: String): Seq[String] =
@@ -532,6 +587,69 @@ object IndexLifecycle {
       rem(r) || dropSubs.exists(sb => r.startsWith(sb + "/"))) ++
       added.map(root.relativize(_).toString))
   }
+
+  // ---- the shared mutation core ---------------------------------------------
+
+  /** The snapshot's tombstone ids under `key`, deduplicated (crash-
+    * retried deletes may leave duplicate rows), with their size signal
+    * ([[idSideBytes]]) for [[boundedIdJoin]]; None when the snapshot
+    * lists no tombstone file. Read with the known one-LONG-column
+    * schema, so resolving the frame schedules no schema-inference
+    * job. */
+  def tombstones(spark: SparkSession, root: Path,
+                 key: String): Option[(DataFrame, Long)] =
+    Some(snapshotFiles(root, "tombstones")).filter(_.nonEmpty).map(fs =>
+      (spark.read.schema(StructType(Seq(StructField(key, LongType))))
+        .parquet(fs.map(_.toString): _*).distinct(),
+        idSideBytes(spark, fs)))
+
+  /** `df` minus the snapshot's tombstoned `key`s, through the
+    * byte-bounded anti ([[boundedIdJoin]]); `df` itself, plan
+    * unchanged, when no tombstone exists. */
+  def withoutTombstones(df: DataFrame, root: Path, key: String): DataFrame =
+    tombstones(df.sparkSession, root, key).fold(df) { case (ts, bytes) =>
+      boundedIdJoin(df, ts, key, bytes, "left_anti")
+    }
+
+  /** The DELETE of both families: tombstone the `key`s of `ids` that
+    * `indexed` (the live key column's scan, None when the index holds
+    * no live rows) holds and the snapshot has not tombstoned yet, and
+    * return how many that was — the family moves its counters by it.
+    *
+    * The increment broadcasts into a semi over the slim key column
+    * (output increment-bounded), so a never-indexed id is a TRUE
+    * no-op, and already-tombstoned ids drop out, so a retried delete
+    * changes neither the side table nor the count. The fresh ids are
+    * collected under the increment-class bound
+    * ([[boundedCollectIds]], loud past it) and appended from a local
+    * relation as ONE committed file: writing the joined frame directly
+    * would append to `tombstones/` through a lineage that READS it (a
+    * lost block recomputing mid-write could scan the half-appended
+    * table). Atomic at the snapshot commit: a crash before it leaves
+    * an unlisted orphan, and the caller retries. */
+  def deleteIds(root: Path, ids: DataFrame, key: String,
+                indexed: Option[DataFrame]): Long = indexed.fold(0L) { scan =>
+    val present = scan.select(col(key))
+      .join(broadcast(ids.select(col(key)).distinct()), Seq(key), "left_semi")
+      .distinct()
+    val fresh = boundedCollectIds(withoutTombstones(present, root, key), key)
+    if (fresh.nonEmpty) {
+      val spark = ids.sparkSession
+      appendSideFile(root, "tombstones",
+        spark.createDataset(fresh.toSeq)(Encoders.scalaLong).toDF(key))
+    }
+    fresh.length.toLong
+  }
+
+  /** Append `rows` to the side table `sub` as ONE part file and commit
+    * exactly that file ([[commitAddedWrite]]). One file per call: a
+    * local relation otherwise fans out to min(rows, parallelism) files
+    * per mutation, inflating the compaction cadence's file count and
+    * every reader's footer reads. */
+  def appendSideFile(root: Path, sub: String, rows: DataFrame): Unit =
+    commitAddedWrite(root, sub) {
+      rows.coalesce(1).write.mode("append").parquet(root.resolve(sub).toString)
+    }
 
   /** Lifecycle bracket for a mutation run against a pristine cached
     * index: copy, run, ALWAYS reclaim the copy (the four streaming
@@ -617,25 +735,25 @@ object IndexLifecycle {
   /** Stage a rebuild's inputs under the root's staging dir unless a
     * staging is already committed there: `stage` writes the staging
     * COMPLETELY (adding bytes only — nothing of the index is touched),
-    * then the `_STAGED_OK` marker, holding `epoch`, commits it. An
-    * uncommitted staging is restarted from scratch. Returns the dir. */
-  private[graft] def stageRebuild(root: Path, epoch: String)(stage: Path => Unit): Path = {
+    * then the `_STAGED_OK` marker, holding the meta's [[epoch]],
+    * commits it. An uncommitted staging is restarted from scratch.
+    * Returns the dir. */
+  private[graft] def stageRebuild(root: Path, meta: Drift)(stage: Path => Unit): Path = {
     val dir = root.resolve(RebuildStageDir)
     val marker = dir.resolve("_STAGED_OK")
     if (!Files.isRegularFile(marker)) {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
       Files.createDirectories(dir)
       stage(dir)
-      Files.write(marker, epoch.getBytes(StandardCharsets.UTF_8))
+      Files.write(marker, epoch(meta).getBytes(StandardCharsets.UTF_8))
     }
     dir
   }
 
   /** MAINTENANCE driver of both families — the production loop's one
-    * entry point for keeping an index healthy. `rebuild` is the
-    * family's drift policy on its current meta, and `epoch` stamps
-    * that meta (any mutation moves it). Each family supplies only its
-    * own steps:
+    * entry point for keeping an index healthy. `meta` is the family's
+    * current meta: [[needsRebuild]] on it decides, and its [[epoch]]
+    * stamps the staging. Each family supplies only its own steps:
     *  - `stage(dir)` writes the rebuild's inputs into the staging,
     *    including the sidecars a build clears ([[stageSidecar]]);
     *  - `build(dir)` rebuilds the index from the staging; its final
@@ -656,19 +774,20 @@ object IndexLifecycle {
     *    restore, reclaim the staging.
     * A rebuild requires reads to quiesce; compaction does not (see the
     * module header). */
-  def maintain(root: Path, epoch: String, rebuild: Boolean)(
+  def maintain(root: Path, meta: Drift)(
       stage: Path => Unit, build: Path => Unit, restore: Path => Unit)(
       compact: => Int): Maintenance = {
+    val rebuild = needsRebuild(meta)
     val dir = root.resolve(RebuildStageDir)
     val marker = dir.resolve("_STAGED_OK")
     if (Files.isRegularFile(marker)) {
       if (!rebuild) restore(dir)
       if (!rebuild || new String(Files.readAllBytes(marker),
-          StandardCharsets.UTF_8) != epoch)
+          StandardCharsets.UTF_8) != epoch(meta))
         org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
     if (!rebuild) return Maintenance(rebuilt = false, compact)
-    build(stageRebuild(root, epoch)(stage))
+    build(stageRebuild(root, meta)(stage))
     restore(dir)
     org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     Maintenance(rebuilt = true, 0)
@@ -690,9 +809,6 @@ object IndexLifecycle {
                      sub: String)(keep: DataFrame => DataFrame): Unit = {
     val staged = stageDir.resolve(sub)
     if (Files.isDirectory(staged))
-      commitAddedWrite(root, sub) {
-        keep(spark.read.parquet(staged.toString)).coalesce(1)
-          .write.mode("append").parquet(root.resolve(sub).toString)
-      }
+      appendSideFile(root, sub, keep(spark.read.parquet(staged.toString)))
   }
 }

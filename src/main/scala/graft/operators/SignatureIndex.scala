@@ -86,7 +86,11 @@ object SignatureIndex {
 
   case class Meta(rowsPerBand: Int, capPop: Int, maxExtraBits: Int,
                   nDocs: Long, sigBytes: Long, appendedDocs: Long = 0L,
-                  deletedDocs: Long = 0L)
+                  deletedDocs: Long = 0L) extends IndexLifecycle.Drift {
+    def live: Long = nDocs
+    def appended: Long = appendedDocs
+    def deleted: Long = deletedDocs
+  }
 
   /** The five persisted signature columns, from a (doc_id, hs) frame —
     * MUST stay byte-compatible with [[Dedup.probeKeyedSized]]'s staged
@@ -146,28 +150,12 @@ object SignatureIndex {
     val spark = hashed.sparkSession
     val root = Paths.get(path)
     Files.createDirectories(root)
-    // a REBUILD at a path that lived a delete/cluster lifecycle must
-    // not inherit the previous index's side artifacts: stale
-    // tombstones/ would silently ERASE rebuilt docs sharing a
-    // previously-deleted doc_id, and a stale pairs/ marker would serve
-    // the PRE-rebuild strong-pair graph to clustersFromIndex (the
-    // AnnIndex stale-delta bug class, round 10)
-    // the gate-append sidecar records admissions INTO the previous sig
-    // table; a rebuild re-derives the corpus from source, so stale
-    // entries would reject future copies of docs the new corpus no
-    // longer holds
-    for (side <- Seq("tombstones", GateAppendMd5Dir)) {
-      val stale = root.resolve(side)
-      if (Files.isDirectory(stale))
-        org.apache.commons.io.FileUtils.deleteDirectory(stale.toFile)
-    }
-    val stalePairs = root.resolve("pairs").resolve("_PAIRS_OK")
-    if (Files.isRegularFile(stalePairs)) Files.delete(stalePairs)
-    // one-shot mutation and sidecar markers are PER-BUILD state: an
-    // in-place rebuild (same dir, new stamp — e.g. a capPop change)
-    // that kept them would silently skip recorded mutations and serve
-    // the previous build's sidecars
-    IndexLifecycle.clearBuildScopedMarkers(root)
+    // a REBUILD must not inherit the previous index's side artifacts:
+    // besides the side tables, a stale pairs/ graph would serve the
+    // PRE-rebuild strong pairs to clustersFromIndex, and the
+    // gate-append sidecar would reject future copies of docs the new
+    // corpus no longer holds
+    IndexLifecycle.resetLayout(root, Seq("tombstones", GateAppendMd5Dir, "pairs"))
     hashed.select(sigColumns: _*)
       .write.mode("overwrite").parquet(s"$path/sig")
     // the fresh snapshot: sig/ alone, the side tables start empty
@@ -202,39 +190,14 @@ object SignatureIndex {
   }
 
   private def writeMeta(root: Path, meta: Meta): Unit =
-    IndexLifecycle.writeMetaProps(root, "graft signature index",
-      FormatVersion, Seq(
-        "rowsPerBand" -> meta.rowsPerBand.toString,
-        "capPop" -> meta.capPop.toString,
-        "maxExtraBits" -> meta.maxExtraBits.toString,
-        "nDocs" -> meta.nDocs.toString,
-        "sigBytes" -> meta.sigBytes.toString,
-        "appendedDocs" -> meta.appendedDocs.toString,
-        "deletedDocs" -> meta.deletedDocs.toString))
+    IndexLifecycle.writeMetaProps(root, "graft signature index", FormatVersion, meta)
 
-  /** Fraction of the index's BUILD-TIME corpus that may arrive by
-    * [[appendToIndex]] before [[Meta.needsRebuild]] flags the frozen
-    * hot/hot2 populations as stale. Appends are always recall-safe
-    * (see appendToIndex); what drifts is PERFORMANCE — buckets that
-    * became hot since the build are not split, so their pair-join
-    * populations grow unbounded. A quarter of the corpus is far below
-    * any density shift that moves a bucket past capPop in practice;
-    * the IndexProbe ladder (`graft.IndexProbe` at `ad24016`) records
-    * the append + post-append probe
-    * costs that make this policy adjudicable. Shared policy constant
-    * ([[IndexLifecycle.RebuildFraction]]). */
-  val RebuildFraction: Double = IndexLifecycle.RebuildFraction
-
-  /** True when appended + deleted drift exceeds [[RebuildFraction]]
-    * of the build-time corpus — the scheduled-rebuild signal. Deletes
-    * count because they both unbalance the frozen hot/hot2
-    * populations AND grow the read-side tombstone anti-join
-    * ([[deleteFromIndex]]); `nDocs` stores the LIVE count, so the
-    * build-time corpus reconstructs as nDocs − appended + deleted
-    * (the same algebra as [[AnnIndex.needsRebuild]]). */
-  def needsRebuild(meta: Meta): Boolean =
-    IndexLifecycle.driftExceeds(meta.appendedDocs + meta.deletedDocs,
-      meta.nDocs + 2 * meta.deletedDocs)
+  /** The scheduled-rebuild signal ([[IndexLifecycle.needsRebuild]]):
+    * appends are always recall-safe (see appendToIndex); what drifts is
+    * PERFORMANCE — buckets that became hot since the build are not
+    * split, so their pair-join populations grow unbounded — and deletes
+    * grow the read-side tombstone anti-join. */
+  def needsRebuild(meta: Meta): Boolean = IndexLifecycle.needsRebuild(meta)
 
   /** APPEND an increment's signatures to an existing index — the
     * between-rebuilds lifecycle: a daily ingest probes the index
@@ -308,7 +271,8 @@ object SignatureIndex {
   }
 
   /** DELETE documents from the index by id — the takedown/retention
-    * lifecycle, uniform with [[AnnIndex.deleteFromAnnIndex]]: the ids
+    * lifecycle, the signature instance of [[IndexLifecycle.deleteIds]]
+    * (as [[AnnIndex.deleteFromAnnIndex]] is): the ids
     * land in the UNPARTITIONED `tombstones/` side table
     * (increment-sized write, nothing corpus-sized touched) and every
     * consumer reads the sig table through [[liveSig]]'s broadcast
@@ -326,89 +290,36 @@ object SignatureIndex {
     * broadcast vs size-driven SHUFFLE_HASH from the side table's
     * measured bytes (the round-11 `weak` item: the drift bound is
     * advisory, so code must not bet an OOM on it). RE-RUNNING a
-    * half-failed delete is duplicate-safe (ids already tombstoned are
-    * dropped before counting or writing); deleting an id the index
+    * half-failed delete is duplicate-safe; deleting an id the index
     * never held is a TRUE no-op — the increment is semi-joined
     * against the slim doc_id column of the sig scan first (one
     * maintenance-priced columnar scan), so foreign ids touch neither
-    * `tombstones/` nor the drift counters. A tombstoned doc_id stays
+    * `tombstones/` nor the drift counters, and no meta is written.
+    * The staged strong-pair graph stays VALID: edge presence is
+    * pairwise-local, so [[ensureSelfPairs]] applies deletes as a
+    * read-side tombstone filter. A tombstoned doc_id stays
     * deleted until the next rebuild — re-ingesting it between
-    * rebuilds requires a fresh id. The staged strong-pair graph
-    * SURVIVES (edges touching deleted docs are filtered at read,
-    * [[ensureSelfPairs]] — no restage); caller-owned
+    * rebuilds requires a fresh id. Caller-owned
     * sidecars (e.g. the gate's md5 set) derive from the CALLER's
     * corpus view, not this index — a caller whose deletion policy
     * extends to them rebuilds them from its updated corpus. */
   def deleteFromIndex(ids: DataFrame, path: String): Meta = {
-    val spark = ids.sparkSession
-    val root = Paths.get(path)
     val before = readMeta(path)
-    // the staged pair graph stays VALID under deletes (round 12 —
-    // it used to be invalidated wholesale): edge presence is
-    // pairwise-local, so the survivors' graph is exactly the staged
-    // graph minus edges touching a deleted id, and [[ensureSelfPairs]]
-    // applies that as a read-side tombstone filter. No crash window:
-    // the filter derives from tombstones/ at read time, so pairs and
-    // deletions are always consistent.
-    val ts0 = ids.select(col("doc_id")).distinct()
-    // only ids PRESENT in the index count: the increment broadcasts
-    // into a semi over the slim doc_id column (output is
-    // increment-bounded), then ids already tombstoned drop out — a
-    // retried delete changes neither the tombstone set nor counters,
-    // and a foreign-id delete changes nothing at all
-    val present = sigScan(spark, path).select(col("doc_id"))
-      .join(broadcast(ts0), Seq("doc_id"), "left_semi").distinct()
-    val fresh = tombstoneIds(spark, path).fold(present) { case (prev, bytes) =>
-      IndexLifecycle.boundedIdJoin(present, prev, "doc_id", bytes, "left_anti")
-    }
-    // increment-class ENFORCED (boundedCollectIds fails loudly past
-    // the budget): collect to the driver and append from a local
-    // relation. Writing the joined frame directly (the round-11 form)
-    // appended to tombstones/ through a lineage that READS
-    // tombstones/ — on a cluster, an evicted block recomputing
-    // mid-write could scan the half-appended directory.
-    val newIds = IndexLifecycle.boundedCollectIds(fresh, "doc_id")
-    if (newIds.nonEmpty) {
-      import spark.implicits._
-      // coalesce(1): a LocalTableScan write otherwise fans out to
-      // min(rows, defaultParallelism) part files PER DELETE, inflating
-      // the compaction-cadence file count and the per-probe footer
-      // reads (round-12 self-review finding)
-      IndexLifecycle.commitAddedWrite(root, "tombstones") {
-        spark.createDataset(newIds.toSeq).toDF("doc_id")
-          .coalesce(1)
-          .write.mode("append").parquet(s"$path/tombstones")
-      }
-    }
-    val nDel = newIds.length.toLong
+    val nDel = IndexLifecycle.deleteIds(Paths.get(path), ids, "doc_id",
+      Some(sigScan(ids.sparkSession, path)))
     val meta = before.copy(nDocs = before.nDocs - nDel,
       deletedDocs = before.deletedDocs + nDel)
-    writeMeta(root, meta)
+    if (nDel > 0) writeMeta(Paths.get(path), meta)
     meta
   }
-
-  /** The deduplicated tombstone id frame + the side table's parquet
-    * bytes (the size signal [[IndexLifecycle.boundedIdJoin]] keys the
-    * join strategy on), or None when none exist. */
-  private def tombstoneIds(spark: SparkSession,
-                           path: String): Option[(DataFrame, Long)] =
-    Some(files(path, "tombstones")).filter(_.nonEmpty).map(fs =>
-      (spark.read.schema(IdSchema).parquet(fs.map(_.toString): _*).distinct(),
-        IndexLifecycle.idSideBytes(spark, fs)))
 
   /** The LIVE sig scan: the persisted signature table minus the
     * un-reclaimed tombstones ([[deleteFromIndex]]) — the one read
     * path every consumer (probe, self pairs, clusters, gate) goes
-    * through. The anti-join strategy is chosen from the tombstone
-    * table's measured bytes ([[IndexLifecycle.boundedIdJoin]]:
-    * broadcast below the session threshold, size-driven SHUFFLE_HASH
-    * above) and disappears entirely when no tombstones exist. */
-  private def liveSig(spark: SparkSession, path: String): DataFrame = {
-    val sig = sigScan(spark, path)
-    tombstoneIds(spark, path).fold(sig) { case (ts, bytes) =>
-      IndexLifecycle.boundedIdJoin(sig, ts, "doc_id", bytes, "left_anti")
-    }
-  }
+    * through. The anti-join disappears entirely when no tombstones
+    * exist ([[IndexLifecycle.withoutTombstones]]). */
+  private def liveSig(spark: SparkSession, path: String): DataFrame =
+    IndexLifecycle.withoutTombstones(sigScan(spark, path), Paths.get(path), "doc_id")
 
   /** MAINTENANCE — the signature family's steps under
     * [[IndexLifecycle.maintain]] (staging, crash re-entry and the
@@ -416,11 +327,12 @@ object SignatureIndex {
     * order and acts:
     *
     *  1. [[needsRebuild]] (append+delete drift past
-    *     [[RebuildFraction]]) → REBUILD in place from `rehashedCorpus`
-    *     restricted to the live indexed doc_ids — the only operation
-    *     that physically reclaims deleted signatures (sig/ is not
-    *     id-partitioned, so reclamation IS a corpus rewrite) and
-    *     re-freezes the hot/hot2 populations on the live data;
+    *     [[IndexLifecycle.RebuildFraction]]) → REBUILD in place from
+    *     `rehashedCorpus` restricted to the live indexed doc_ids —
+    *     the only operation that physically reclaims deleted
+    *     signatures (sig/ is not id-partitioned, so reclamation IS a
+    *     corpus rewrite) and re-freezes the hot/hot2 populations on
+    *     the live data;
     *  2. else [[needsCompaction]] → [[compactSignatures]]
     *     (increment-priced small-file merge, snapshot-safe).
     *
@@ -446,9 +358,7 @@ object SignatureIndex {
     val meta = readMeta(path)
     val root = Paths.get(path)
     def liveIds = liveSig(spark, path).select(col("doc_id"))
-    IndexLifecycle.maintain(root,
-      s"${meta.nDocs}|${meta.appendedDocs}|${meta.deletedDocs}",
-      needsRebuild(meta))(
+    IndexLifecycle.maintain(root, meta)(
       stage = { dir =>
         val rows = dir.resolve("rows").toString
         rehashedCorpus.join(liveIds, Seq("doc_id"), "left_semi")
@@ -524,15 +434,11 @@ object SignatureIndex {
   }
 
   def readMeta(path: String): Meta = {
-    val props = IndexLifecycle.readMetaProps(
+    val prop = IndexLifecycle.readMetaProps(
       Paths.get(path), "signature index", FormatVersion)
-    Meta(props.getProperty("rowsPerBand").toInt,
-      props.getProperty("capPop").toInt,
-      props.getProperty("maxExtraBits").toInt,
-      props.getProperty("nDocs").toLong,
-      props.getProperty("sigBytes").toLong,
-      props.getProperty("appendedDocs").toLong,
-      props.getProperty("deletedDocs").toLong)
+    Meta(prop("rowsPerBand").toInt, prop("capPop").toInt,
+      prop("maxExtraBits").toInt, prop("nDocs"), prop("sigBytes"),
+      prop("appendedDocs"), prop("deletedDocs"))
   }
 
   /** The joinable keyed frame (k, band, band_sig, sub, doc_id, hsi)
@@ -755,16 +661,15 @@ object SignatureIndex {
         new String(Files.readAllBytes(tombsMark),
           java.nio.charset.StandardCharsets.UTF_8)
       else "" // pre-watermark staging: filter conservatively
-    tombstoneIds(spark, indexPath).fold(pairs) { case (ts, bytes) =>
-      if (stagedFp == tombstoneState(indexPath)) pairs
-      else {
+    IndexLifecycle.tombstones(spark, Paths.get(indexPath), "doc_id") match {
+      case Some((ts, bytes)) if stagedFp != tombstoneState(indexPath) =>
         val fa = IndexLifecycle.boundedIdJoin(pairs,
           ts.withColumnRenamed("doc_id", "id_a"), "id_a", bytes, "left_anti")
         IndexLifecycle.boundedIdJoin(fa,
           ts.withColumnRenamed("doc_id", "id_b"), "id_b", bytes, "left_anti")
           // a USING join fronts its key column: restore the frame shape
           .select(pairs.columns.map(col).toIndexedSeq: _*)
-      }
+      case _ => pairs
     }
   }
 
@@ -892,7 +797,6 @@ object SignatureIndex {
     SparkSession.active.range(0)
       .select(col("id").as("doc_id"), Dedup.shingleHashes(lit(""), 1).as("hs"))
       .select(sigColumns: _*).schema
-  private val IdSchema = StructType(Seq(StructField("doc_id", LongType)))
   /** The md5 sidecars' one layout, used by the gate-append writer and
     * every reader: `gate_md5` (c_md5 only; the other columns read as
     * null) and the gate-append sidecar (c_md5, c_doc, c_batch). */
@@ -1056,14 +960,10 @@ object SignatureIndex {
       // lands is harmless: the exclusion hides sig rows that do not
       // exist, and the md5 row correctly rejects future copies of a
       // doc the re-delivered batch will re-admit and re-append.
-      IndexLifecycle.commitAddedWrite(Paths.get(indexPath), GateAppendMd5Dir) {
+      IndexLifecycle.appendSideFile(Paths.get(indexPath), GateAppendMd5Dir,
         admitted.select(Seq(col("i_md5"), col("doc_id"), lit(batchId))
-            .zip(Md5Schema.fields)
-            .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*)
-          .coalesce(1)
-          .write.mode("append")
-          .parquet(Paths.get(indexPath, GateAppendMd5Dir).toString)
-      }
+          .zip(Md5Schema.fields)
+          .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*))
       appendToIndex(admitted.select(col("doc_id"), col("hs")), indexPath)
     }
     admitted.select(keep.map(col): _*)

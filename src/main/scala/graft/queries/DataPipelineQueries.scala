@@ -978,7 +978,7 @@ object DataPipelineQueries {
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
       .cache()
     // trained once per (sfDir, source fingerprint) — see trainedPqBooks
-    val trained = trainedIvfCentroids(s, d)
+    val trained = trainedIvfCentroids(s, d, None)
     val assigned = Similarity.assignCellsQ(q, trained)
     val probes = q.filter(col("vec_id") >= 16 && col("vec_id") < 26)
       .select(col("vec_id").as("probe_id"), col("qv").as("pqv"))
@@ -995,7 +995,7 @@ object DataPipelineQueries {
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
-        trainedIvfCentroids(s, d), p)
+        trainedIvfCentroids(s, d, None), p)
     }
 
   /** ann_index_delete: the DELETE lifecycle end-to-end — build the
@@ -1014,7 +1014,7 @@ object DataPipelineQueries {
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
-        trainedIvfCentroids(s, d), p)
+        trainedIvfCentroids(s, d, None), p)
       AnnIndex.deleteFromAnnIndex(
         Tables.embeddings(s, d).filter(col("vec_id") % 10 === 7)
           .select(col("vec_id")), p)
@@ -1068,7 +1068,7 @@ object DataPipelineQueries {
       AnnIndex.buildAnnIndex(
         Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
-        trainedIvfCentroids(s, d), p, pqBooks = Some(trainedPqBooks(s, d)))
+        trainedIvfCentroids(s, d, None), p, pqBooks = Some(trainedPqBooks(s, d)))
     }
 
   /** ann_index_pq_topk: the COMPRESSED probe of the persisted IVF-PQ
@@ -1084,30 +1084,6 @@ object DataPipelineQueries {
     AnnIndex.probeAnnIndexPq(s, annPqIndexPath(s, d), annProbes(s, d),
       nProbe = 4, k = 3)
       .orderBy(col("probe_id"), col("rank"))
-
-  /** Coarse centroids trained over the BASE slice only (vec_id < t) —
-    * the quantizer an append-lifecycle index froze before the
-    * increment existed. Same artifact pattern as
-    * [[trainedIvfCentroids]]; `t` derives from the source, so the
-    * fingerprinted cache key stays consistent. */
-  private[graft] def trainedIvfCentroidsBase(s: SparkSession, d: String,
-                                      t: Long): Seq[(Long, Array[Long])] = {
-    val path = graft.storage.PartitionedStore.cached(
-      d, "ann_ivf_centroids_base_v1", source = "embeddings.parquet") { p =>
-      val q = Tables.embeddings(s, d).filter(col("vec_id") < t)
-        .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-      val seeds = q.filter(col("vec_id") < 16).collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1).toSeq
-      val trained = Similarity.kmeansQuantized(q, seeds, iters = 2)
-      import s.implicits._
-      trained.map { case (cid, qc) => (cid, qc.toSeq) }
-        .toDF("cid", "qc").coalesce(1).write.parquet(p)
-    }
-    centroidsMemo.get(d + "#ann_ivf_centroids_base_v1", path)(
-      s.read.parquet(path).collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1).toSeq)
-  }
 
   /** ann_index_append: the index APPEND lifecycle end-to-end — build
     * over the first 90% of the id space with centroids trained on
@@ -1126,7 +1102,7 @@ object DataPipelineQueries {
       val all = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         Similarity.quantize(col("embedding")).as("qv"))
       AnnIndex.buildAnnIndex(all.filter(col("vec_id") < t),
-        trainedIvfCentroidsBase(s, d, t), p)
+        trainedIvfCentroids(s, d, Some(t)), p)
       AnnIndex.appendToAnnIndex(all.filter(col("vec_id") >= t), p)
     }
     AnnIndex.probeAnnIndex(s, path, annProbes(s, d), nProbe = 4, k = 3)
@@ -1193,7 +1169,7 @@ object DataPipelineQueries {
         Tables.embeddings(s, d).filter(col("vec_id") < t)
           .select(col("vec_id"), col("label"),
             Similarity.quantize(col("embedding")).as("qv")),
-        trainedIvfCentroidsBase(s, d, t), p)
+        trainedIvfCentroids(s, d, Some(t)), p)
     }
   }
 
@@ -1305,11 +1281,8 @@ object DataPipelineQueries {
           (cid, qc.slice(m * PQ_SUBDIM, (m + 1) * PQ_SUBDIM)) }
       }
       // all M books in one corpus scan per iteration (Similarity.pqTrain)
-      val books = Similarity.pqTrain(q, seedBooks, PQ_SUBDIM, iters = 1)
-      import s.implicits._
-      books.zipWithIndex.flatMap { case (cents, m) =>
-        cents.map { case (cid, qc) => (m, cid, qc.toSeq) }
-      }.toDF("m", "cid", "qc").coalesce(1).write.parquet(p)
+      AnnIndex.writeBooks(s,
+        Similarity.pqTrain(q, seedBooks, PQ_SUBDIM, iters = 1), p)
     }
     // JVM memo: ONE live entry per logical artifact, revalidated by
     // the artifact PATH (which embeds the format version + source
@@ -1318,10 +1291,7 @@ object DataPipelineQueries {
     // how often their sources regenerate). The 128-row parse is
     // control-plane data read on every search.
     booksMemo.get(d + "#ann_pq_books_v1", path)(
-      s.read.parquet(path).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq))
+      AnnIndex.booksFrom(s.read.parquet(path)))
   }
 
   private val booksMemo =
@@ -1348,25 +1318,25 @@ object DataPipelineQueries {
         .write.parquet(p)
     }
 
-  /** Trained IVF coarse centroids, staged once per (sfDir, embeddings
-    * fingerprint) — same artifact pattern as [[trainedPqBooks]]. */
-  private[graft] def trainedIvfCentroids(s: SparkSession,
-                                         d: String): Seq[(Long, Array[Long])] = {
+  /** Trained IVF coarse centroids (seeds vec_id < 16, 2 Lloyd
+    * iterations) over the embeddings with vec_id < `upTo` — all of them
+    * when None — staged once per (sfDir, embeddings fingerprint), the
+    * [[trainedPqBooks]] artifact pattern. A bounded slice is the
+    * quantizer an append-lifecycle index froze before its increment
+    * existed; the bound derives from the source, so the fingerprinted
+    * cache key stays consistent. */
+  private[graft] def trainedIvfCentroids(s: SparkSession, d: String,
+                                         upTo: Option[Long]): Seq[(Long, Array[Long])] = {
+    val name = upTo.fold("ann_ivf_centroids_v1")(_ => "ann_ivf_centroids_base_v1")
     val path = graft.storage.PartitionedStore.cached(
-      d, "ann_ivf_centroids_v1", source = "embeddings.parquet") { p =>
-      val q = Tables.embeddings(s, d)
+      d, name, source = "embeddings.parquet") { p =>
+      val q = upTo.fold(Tables.embeddings(s, d))(t =>
+          Tables.embeddings(s, d).filter(col("vec_id") < t))
         .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-      val seeds = q.filter(col("vec_id") < 16).collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1).toSeq
-      val trained = Similarity.kmeansQuantized(q, seeds, iters = 2)
-      import s.implicits._
-      trained.map { case (cid, qc) => (cid, qc.toSeq) }
-        .toDF("cid", "qc").coalesce(1).write.parquet(p)
+      val seeds = AnnIndex.centsFrom(q.filter(col("vec_id") < 16))
+      AnnIndex.writeCents(s, Similarity.kmeansQuantized(q, seeds, iters = 2), p)
     }
-    centroidsMemo.get(d + "#ann_ivf_centroids_v1", path)(
-      s.read.parquet(path).collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1).toSeq)
+    centroidsMemo.get(d + "#" + name, path)(AnnIndex.centsFrom(s.read.parquet(path)))
   }
 
   /** ann_pq_topk: product-quantization ANN — the third classic scale

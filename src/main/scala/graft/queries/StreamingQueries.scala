@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.{CompletionCounter, StreamingOps}
 
@@ -442,27 +442,37 @@ object StreamingQueries {
   private[graft] def ingestGate(s: SparkSession, d: String,
                                 nBatches: Int): DataFrame = {
     import graft.operators.SignatureIndex
-    val bucket = pmod(graft.functions.HashFunctions.hash32(
-      col("doc_id").cast("string")), lit(100))
     // corpus index: built once per corpus (a corpus event, not a gate
     // cost), shared with dedup_incremental; the md5 sidecar rides in
     // the same artifact so exact-dedup needs no second corpus pass at
     // gate time
     val idx = DataPipelineQueries.docs90Index(s, d)
-    SignatureIndex.ensureSidecar(idx, "gate_md5") { p =>
-      graft.Tables.documents(s, d).filter(bucket < 90)
-        .select(md5(col("text")).as("c_md5")).distinct()
-        .write.mode("overwrite").parquet(p)
-    }
+    ensureGateMd5(s, d, idx)
     val inc = StreamingOps.documentsStream(s, d, gateStagingBatches(
-        s, d, nBatches, graft.Tables.documents(s, d).filter(bucket >= 90)))
-      .filter(bucket >= 90)
+        s, d, nBatches, graft.Tables.documents(s, d).filter(docBucket >= 90)))
+      .filter(docBucket >= 90)
     StreamingOps.runForeachBatch(s, inc,
       s"graft_stream_ingest_gate_$nBatches",
       (batch, _) => SignatureIndex.gateBatchThroughIndex(
         batch, idx, keep = Seq("doc_id", "lang", "source")))
       .orderBy(col("doc_id"))
   }
+
+  /** A document's 0..99 split bucket: the docs90 corpus is bucket < 90,
+    * the gates' increment bucket >= 90. */
+  private def docBucket: Column =
+    pmod(graft.functions.HashFunctions.hash32(col("doc_id").cast("string")), lit(100))
+
+  /** The `gate_md5` sidecar of a docs90 corpus index at `idx`: the
+    * distinct md5 of every corpus document (bucket < 90), built once
+    * beside the index — the gates' exact-dup set. */
+  private def ensureGateMd5(s: SparkSession, d: String, idx: String): Unit =
+    graft.operators.SignatureIndex.ensureSidecar(idx, "gate_md5") { p =>
+      graft.Tables.documents(s, d)
+        .filter(docBucket < 90)
+        .select(md5(col("text")).as("c_md5")).distinct()
+        .write.mode("overwrite").parquet(p)
+    }
 
   /** Staged-file count for a gate stream. The file source takes one
     * staged file per trigger, so a file is the smallest batch any
@@ -562,8 +572,6 @@ object StreamingQueries {
   private[graft] def gateAppendLoop(s: SparkSession, d: String,
                                     nBatches: Int): DataFrame = {
     import graft.operators.{Dedup, IndexLifecycle, SignatureIndex}
-    val bucket = pmod(graft.functions.HashFunctions.hash32(
-      col("doc_id").cast("string")), lit(100))
     def hashedAll = Dedup.shingleHashSets(
       graft.Tables.documents(s, d).repartition(col("doc_id")),
       "doc_id", "text", DataPipelineQueries.SHINGLE_K)
@@ -571,14 +579,10 @@ object StreamingQueries {
     // carries a layout version so artifacts the PREVIOUS scheme
     // mutated in place are never reused as a "pristine" base
     val base = SignatureIndex.ensureIndex(
-      hashedAll.withColumn("bucket", bucket)
+      hashedAll.withColumn("bucket", docBucket)
         .filter(col("bucket") < 90).drop("bucket"),
       d, s"docs90_gapp_p1_$nBatches")
-    SignatureIndex.ensureSidecar(base, "gate_md5") { p =>
-      graft.Tables.documents(s, d).filter(bucket < 90)
-        .select(md5(col("text")).as("c_md5")).distinct()
-        .write.mode("overwrite").parquet(p)
-    }
+    ensureGateMd5(s, d, base)
     IndexLifecycle.withMutableCopy(base) { idx =>
       // the staged stream carries a trailing REPLAY batch (exact
       // copies of batch-0's increment rows under fresh ids) so the
@@ -653,7 +657,7 @@ object StreamingQueries {
         graft.Tables.embeddings(s, d).filter(col("vec_id") < t)
           .select(col("vec_id"), col("label"),
             Similarity.quantize(col("embedding")).as("qv")),
-        DataPipelineQueries.trainedIvfCentroidsBase(s, d, t), p)
+        DataPipelineQueries.trainedIvfCentroids(s, d, Some(t)), p)
     }
     IndexLifecycle.withMutableCopy(base) { idx =>
       val inc = StreamingOps.embeddingsStreamWithReplay(s, d, nBatches)
@@ -697,7 +701,7 @@ object StreamingQueries {
       AnnIndex.buildAnnIndex(
         graft.Tables.embeddings(s, d).select(col("vec_id"), col("label"),
           Similarity.quantize(col("embedding")).as("qv")),
-        DataPipelineQueries.trainedIvfCentroids(s, d), p)
+        DataPipelineQueries.trainedIvfCentroids(s, d, None), p)
     }
     IndexLifecycle.withMutableCopy(base) { idx =>
       val delStream = StreamingOps.embeddingsStream(s, d, nBatches)
@@ -752,8 +756,6 @@ object StreamingQueries {
   private[graft] def sigTakedownLoop(s: SparkSession, d: String,
                                      nBatches: Int): DataFrame = {
     import graft.operators.{Dedup, IndexLifecycle, SignatureIndex}
-    val bucket = pmod(graft.functions.HashFunctions.hash32(
-      col("doc_id").cast("string")), lit(100))
     def hashedAll = Dedup.shingleHashSets(
       graft.Tables.documents(s, d).repartition(col("doc_id")),
       "doc_id", "text", DataPipelineQueries.SHINGLE_K)
@@ -761,7 +763,7 @@ object StreamingQueries {
     // the loop mutates a copy — every invocation pays the real loop
     IndexLifecycle.withMutableCopy(
       DataPipelineQueries.docs90Index(s, d)) { idx =>
-      val inc = hashedAll.withColumn("bucket", bucket)
+      val inc = hashedAll.withColumn("bucket", docBucket)
         .filter(col("bucket") >= 90).drop("bucket")
       // the probe increment is FIXED by construction — hash+stage it
       // ONCE per invocation (round-13 opt: the per-trigger
@@ -771,7 +773,7 @@ object StreamingQueries {
       // probe re-reads that fresh on every call)
       val (incDir, incBytes) = SignatureIndex.stageIncrement(inc)
       val delStream = StreamingOps.documentsStream(s, d, nBatches)
-        .filter(bucket < 90 && col("doc_id") % 5 === 0)
+        .filter(docBucket < 90 && col("doc_id") % 5 === 0)
         .select(col("doc_id"))
       StreamingOps.runForeachBatch(s, delStream,
         s"graft_stream_sig_takedown_$nBatches",

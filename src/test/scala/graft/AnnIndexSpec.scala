@@ -459,25 +459,6 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.needsRebuild(AnnIndex.Meta(16, 64, 74, 0, 26)))
   }
 
-  test("deleting never-indexed ids is a TRUE no-op (counters and side table)") {
-    import spark.implicits._
-    val cents = Similarity.kmeansQuantized(vecsQ.select(col("qv")),
-      rawCentroids(16), iters = 2)
-    val idx = newIndexDir()
-    val before = AnnIndex.buildAnnIndex(vecsQ, cents, idx)
-    // all-foreign increment: nothing written, nothing counted
-    // (round-11 What's-wrong #2: it used to decrement nVecs and skew
-    // the drift policy)
-    val foreign = (0L until 10L).map(_ + (1L << 41)).toDF("vec_id")
-    val m1 = AnnIndex.deleteFromAnnIndex(foreign, idx)
-    assert(m1.nVecs == before.nVecs && m1.deletedVecs == 0)
-    assert(!Files.isDirectory(Paths.get(idx, "tombstones")))
-    // mixed increment: exactly the present ids count
-    val mixed = foreign.unionByName(Seq(3L, 4L).toDF("vec_id"))
-    val m2 = AnnIndex.deleteFromAnnIndex(mixed, idx)
-    assert(m2.nVecs == before.nVecs - 2 && m2.deletedVecs == 2)
-  }
-
   test("tombstone anti-join leaves broadcast above the byte budget, results intact") {
     val cents = Similarity.kmeansQuantized(vecsQ.select(col("qv")),
       rawCentroids(16), iters = 2)

@@ -830,7 +830,7 @@ class OperatorsSpec extends AnyFunSuite {
     val seeds = q.filter($"vec_id" < 16).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1).toSeq
     val freshC = Similarity.kmeansQuantized(q, seeds, iters = 2)
-    val cachedC = trainedIvfCentroids(spark, sf)
+    val cachedC = trainedIvfCentroids(spark, sf, None)
     assert(cachedC.map(_._1) == freshC.map(_._1))
     cachedC.zip(freshC).foreach { case ((_, a), (_, b)) =>
       assert(a.sameElements(b), "centroid drift")

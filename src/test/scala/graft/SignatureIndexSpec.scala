@@ -663,20 +663,6 @@ class SignatureIndexSpec extends AnyFunSuite {
     Dedup.registerScratchDir(Paths.get(p1))
   }
 
-  test("deleting never-indexed ids is a TRUE no-op (counters and side table)") {
-    import spark.implicits._
-    val idx = newIndexDir()
-    val before = SignatureIndex.buildSignatureIndex(corpus, idx)
-    val foreign = (0L until 10L).map(_ + (1L << 41)).toDF("doc_id")
-    val m1 = SignatureIndex.deleteFromIndex(foreign, idx)
-    assert(m1.nDocs == before.nDocs && m1.deletedDocs == 0)
-    assert(!Files.isDirectory(Paths.get(idx, "tombstones")))
-    // mixed increment: exactly the present ids count
-    val two = corpus.select(col("doc_id")).orderBy(col("doc_id")).limit(2)
-    val m2 = SignatureIndex.deleteFromIndex(foreign.unionByName(two), idx)
-    assert(m2.nDocs == before.nDocs - 2 && m2.deletedDocs == 2)
-  }
-
   test("maintainIndex: drift fires a rebuild that reclaims tombstones; pairs equal a fresh build") {
     val all = hashed.drop("bucket")
     val idx = newIndexDir()
