@@ -459,6 +459,32 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.needsRebuild(AnnIndex.Meta(16, 64, 74, 0, 26)))
   }
 
+  test("deleting never-indexed ids is a TRUE no-op (counters and side table)") {
+    import spark.implicits._
+    val cents = Similarity.kmeansQuantized(vecsQ.select(col("qv")),
+      rawCentroids(16), iters = 2)
+    val idx = newIndexDir()
+    val before = AnnIndex.buildAnnIndex(vecsQ, cents, idx)
+    def tombstoneFiles =
+      IndexLifecycle.manifestFilesUnder(Paths.get(idx), "tombstones").get
+    // all-foreign increment: nothing written, nothing counted
+    // (it used to decrement nVecs and skew the drift policy)
+    val foreign = (0L until 10L).map(_ + (1L << 41)).toDF("vec_id")
+    val m1 = AnnIndex.deleteFromAnnIndex(foreign, idx)
+    assert(m1.nVecs == before.nVecs && m1.deletedVecs == 0)
+    assert(!Files.isDirectory(Paths.get(idx, "tombstones")))
+    assert(tombstoneFiles.isEmpty)
+    // mixed increment: exactly the present ids count, in one file
+    val mixed = foreign.unionByName(Seq(3L, 4L).toDF("vec_id"))
+    val m2 = AnnIndex.deleteFromAnnIndex(mixed, idx)
+    assert(m2.nVecs == before.nVecs - 2 && m2.deletedVecs == 2)
+    assert(tombstoneFiles.size == 1)
+    // a retried delete is counted once
+    val m3 = AnnIndex.deleteFromAnnIndex(mixed, idx)
+    assert(m3.nVecs == m2.nVecs && m3.deletedVecs == 2)
+    assert(tombstoneFiles.size == 1)
+  }
+
   test("tombstone anti-join leaves broadcast above the byte budget, results intact") {
     val cents = Similarity.kmeansQuantized(vecsQ.select(col("qv")),
       rawCentroids(16), iters = 2)

@@ -58,32 +58,6 @@ class IndexLifecycleSpec extends AnyFunSuite {
   private def twoIndexed(f: Family): DataFrame =
     f.source.select(col(f.key)).orderBy(col(f.key)).limit(2)
 
-  test("deleting never-indexed ids is a TRUE no-op in both families") {
-    import SparkTestSession.spark.implicits._
-    families.foreach { f =>
-      val idx = newIndexDir(f)
-      val before = f.build(idx)
-      def tombstoneFiles =
-        IndexLifecycle.manifestFilesUnder(Paths.get(idx), "tombstones").get
-      // all-foreign increment: nothing written, nothing counted
-      // (round-11 What's-wrong #2: it used to decrement the live count
-      // and skew the drift policy)
-      val foreign = (0L until 10L).map(_ + (1L << 41)).toDF(f.key)
-      val m1 = f.delete(foreign, idx)
-      assert(m1.live == before.live && m1.deleted == 0, f.name)
-      assert(!Files.isDirectory(Paths.get(idx, "tombstones")), f.name)
-      assert(tombstoneFiles.isEmpty, f.name)
-      // mixed increment: exactly the present ids count, in one file
-      val m2 = f.delete(foreign.unionByName(twoIndexed(f)), idx)
-      assert(m2.live == before.live - 2 && m2.deleted == 2, f.name)
-      assert(tombstoneFiles.size == 1, f.name)
-      // a retried delete is counted once
-      val m3 = f.delete(foreign.unionByName(twoIndexed(f)), idx)
-      assert(m3.live == m2.live && m3.deleted == 2, f.name)
-      assert(tombstoneFiles.size == 1, f.name)
-    }
-  }
-
   test("resolving a tombstone read runs no Spark job in either family") {
     import SparkTestSession._
     families.foreach { f =>

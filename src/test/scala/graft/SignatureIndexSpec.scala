@@ -663,6 +663,28 @@ class SignatureIndexSpec extends AnyFunSuite {
     Dedup.registerScratchDir(Paths.get(p1))
   }
 
+  test("deleting never-indexed ids is a TRUE no-op (counters and side table)") {
+    import spark.implicits._
+    val idx = newIndexDir()
+    val before = SignatureIndex.buildSignatureIndex(corpus, idx)
+    def tombstoneFiles =
+      IndexLifecycle.manifestFilesUnder(Paths.get(idx), "tombstones").get
+    val foreign = (0L until 10L).map(_ + (1L << 41)).toDF("doc_id")
+    val m1 = SignatureIndex.deleteFromIndex(foreign, idx)
+    assert(m1.nDocs == before.nDocs && m1.deletedDocs == 0)
+    assert(!Files.isDirectory(Paths.get(idx, "tombstones")))
+    assert(tombstoneFiles.isEmpty)
+    // mixed increment: exactly the present ids count, in one file
+    val two = corpus.select(col("doc_id")).orderBy(col("doc_id")).limit(2)
+    val m2 = SignatureIndex.deleteFromIndex(foreign.unionByName(two), idx)
+    assert(m2.nDocs == before.nDocs - 2 && m2.deletedDocs == 2)
+    assert(tombstoneFiles.size == 1)
+    // a retried delete is counted once
+    val m3 = SignatureIndex.deleteFromIndex(foreign.unionByName(two), idx)
+    assert(m3.nDocs == m2.nDocs && m3.deletedDocs == 2)
+    assert(tombstoneFiles.size == 1)
+  }
+
   test("maintainIndex: drift fires a rebuild that reclaims tombstones; pairs equal a fresh build") {
     val all = hashed.drop("bucket")
     val idx = newIndexDir()
