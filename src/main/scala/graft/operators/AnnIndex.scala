@@ -7,8 +7,6 @@ import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import scala.jdk.CollectionConverters._
-
 /** PERSISTED IVF (inverted-file) ANN index — the embedding-store twin
   * of [[SignatureIndex]]: at 100 TB an embedding corpus is assigned to
   * coarse centroid cells and written ONCE, cell-partitioned, and every
@@ -84,13 +82,6 @@ object AnnIndex {
     * k-NN-join case) the predicate is skipped outright — it would
     * prune nothing and still be planned. */
   val IsinCellsMax = 64
-
-  /** Affected-cell count above which compaction's tombstone
-    * application switches from per-cell merges (byte-identical
-    * untouched files, but one Spark job per cell — measured ~0.27 s
-    * of fixed cost each, SCALING.md §4.20) to ONE staged bulk rewrite
-    * + per-cell file moves. */
-  val BulkApplyMinCells = 16
 
   /** `pqM`/`pqSubDim` > 0 mark a PQ-coded layout ([[buildAnnIndex]]
     * with codebooks): cells carry an M-code `codes` column beside the
@@ -325,7 +316,7 @@ object AnnIndex {
     // manifest is exactly the cells listing
     IndexLifecycle.commitFresh(root, Seq("cells"))
     val meta = Meta(cents.size, dims,
-      nVecs = spark.read.parquet(s"$path/cells").count(),
+      nVecs = IndexLifecycle.parquetRowCount(spark, files(path, "cells")),
       pqM = pqBooks.map(_.size).getOrElse(0), pqSubDim = pqSubDim)
     writeMeta(root, meta)
     meta
@@ -378,9 +369,7 @@ object AnnIndex {
     val incoming = newVecsQ.schema.fieldNames.toSet
     // a fully-deleted-and-reclaimed index has no live schema source —
     // the reviving increment re-seeds it (None arm)
-    cellsScanOpt(spark, path)
-      .orElse(sideFiles(path, "delta").map(files =>
-        spark.read.parquet(files.map(_.toString): _*)))
+    cellsScanOpt(spark, path).orElse(deltaScanOpt(spark, path))
       .map(_.schema.fieldNames.toSet - "cell" -
         (if (before.pqM > 0) "codes" else ""))
       .foreach(existing => require(incoming == existing,
@@ -478,9 +467,13 @@ object AnnIndex {
     * loudly. */
   private def cellsScanOpt(spark: SparkSession,
                            path: String): Option[DataFrame] =
-    sideFiles(path, "cells").map(fs =>
-      spark.read.option("basePath", s"$path/cells")
-        .parquet(fs.map(_.toString): _*))
+    sideFiles(path, "cells").map(
+      IndexLifecycle.snapshotScan(spark, _, Some(Paths.get(path, "cells"))))
+
+  /** The un-compacted delta's scan; None when the snapshot lists none. */
+  private def deltaScanOpt(spark: SparkSession,
+                           path: String): Option[DataFrame] =
+    sideFiles(path, "delta").map(IndexLifecycle.snapshotScan(spark, _))
 
   /** The live rows' two sources — the base cells and the un-compacted
     * delta — each mapped by `f` and unioned; None when the snapshot
@@ -490,9 +483,8 @@ object AnnIndex {
       f: DataFrame => DataFrame,
       dedupeDelta: Boolean = false): Option[DataFrame] =
     (cellsScanOpt(spark, path).map(f) ++
-      sideFiles(path, "delta").map { fs =>
-        val d = f(spark.read.parquet(fs.map(_.toString): _*))
-        if (dedupeDelta) d.dropDuplicates("vec_id") else d
+      deltaScanOpt(spark, path).map { d =>
+        if (dedupeDelta) f(d).dropDuplicates("vec_id") else f(d)
       }).reduceOption(_ unionByName _)
 
   /** Top-k search against the persisted index. `probesQ` must carry
@@ -872,6 +864,14 @@ object AnnIndex {
     * searches: only the gate-append path reads it. */
   private val GateAppendBatchesDir = "gapp_batches"
 
+  /** The sidecar's one layout, so its reads infer no schema. */
+  private val GateAppendBatchesSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("batch", LongType)))
+
+  /** The sidecar's snapshot files under their known schema. */
+  private def gateAppendBatches(spark: SparkSession, fs: Seq[Path]): DataFrame =
+    spark.read.schema(GateAppendBatchesSchema).parquet(fs.map(_.toString): _*)
+
   /** The PRODUCTION gate→append composition for the embedding family
     * — [[SignatureIndex.gateAndAppendBatch]]'s twin, run once per
     * micro-batch by a foreachBatch sink: gate `rows` (which must
@@ -906,7 +906,7 @@ object AnnIndex {
                             nProbe: Int = GateNProbe): DataFrame = {
     val spark = rows.sparkSession
     val excl = sideFiles(path, GateAppendBatchesDir).map(fs =>
-      spark.read.parquet(fs.map(_.toString): _*)
+      gateAppendBatches(spark, fs)
         .filter(col("batch") === batchId)
         .select(col("vec_id")).distinct())
     val probes = rows.select(col("vec_id").as("probe_id"),
@@ -948,216 +948,76 @@ object AnnIndex {
     admitted
   }
 
-  /** Compact the index after a run of appends — the maintenance job
-    * that keeps a long append lifecycle scan-efficient. Two phases:
-    *
-    *  1. FOLD the `delta/` side table into the cell partitions
-    *     (delta rows already carry their frozen-quantizer cell, so the
-    *     fold is one repartition-by-cell write of delta-sized data —
-    *     never corpus-sized) and drop the folded delta files;
-    *  2. rewrite ONLY cells holding more than `maxFilesPerCell` part
-    *     files, one bounded cell at a time — cost proportional to the
-    *     fragmented cells' bytes; untouched cells keep their files
-    *     byte-identical.
-    *
-    *  - PHASE 1b applies the `tombstones/` side table
-    *    ([[deleteFromAnnIndex]]): only cells HOLDING a deleted id are
-    *    rewritten (one slim semi scan finds them — bounded by the
-    *    tombstone count).
-    *
-    * Same single-writer contract as build/append, and snapshot-safe
-    * for readers ([[IndexLifecycle]]): the entry reclaims what the
-    * previous maintenance event retained; each phase commits ONE
-    * [[IndexLifecycle.commitSwap]] and RETAINS the files it superseded.
-    * A crash before a phase's swap leaves the previous snapshot, its
-    * new files orphans for the next entry to reclaim; the fold stays
-    * IDEMPOTENT besides (the deduped delta LEFT ANTI-joins the base's
-    * vec_ids over the touched cells only, partition-pruned), so
-    * re-running compaction is the repair. Every cell rewrite dedupes
-    * on vec_id, so `maxFilesPerCell = 0` also collapses any duplicate
-    * a pre-snapshot crash left.
-    *
-    * The fold also dedupes delta on `vec_id`, so retried appends
-    * ([[appendToAnnIndex]]) stop costing bytes here. Returns the
-    * number of cells rewritten (tombstone application + phase 2). */
+  /** Compact the index after a run of appends and deletes — the
+    * maintenance job that keeps a long lifecycle scan-efficient — as
+    * ONE [[IndexLifecycle.compact]]: one staged `cell`-partitioned
+    * write, one swap. Driver-side facts (one collect, bounded by
+    * nCells) pick the rewrite set R: every cell holding a tombstoned id
+    * in base ∪ delta, plus every cell whose snapshot file count (+1 if
+    * the delta touches it) exceeds `maxFilesPerCell`. The staged write
+    * holds:
+    *  - for a cell in R, all its live rows: base ∪ delta, deduped on
+    *    `vec_id` (collapsing any duplicate a crash window or a retried
+    *    [[appendToAnnIndex]] left), minus the tombstones;
+    *  - for every other cell the delta touches, the FOLD: the deduped
+    *    delta rows minus the `vec_id`s that cell's base already holds,
+    *    so re-running a crashed compaction adds nothing twice.
+    * The gate-append sidecar is pruned to its newest batch beside it.
+    * The swap replaces R's files, adds the fold files and drops
+    * `delta/` and `tombstones/`; every other cell keeps its files
+    * byte-identical. Same single-writer contract as build/append, and
+    * snapshot-safe for readers: a crash before the swap leaves
+    * snapshot N, and re-running compaction is the repair. Returns |R|,
+    * the number of cells rewritten. */
   def compactCells(spark: SparkSession, path: String,
                    maxFilesPerCell: Int = 4): Int = {
     val root = Paths.get(path)
-    val cellsRoot = root.resolve("cells")
-    // MAINTENANCE ENTRY: reclaim the files the PREVIOUS maintenance
-    // event retained for its in-flight snapshot readers (superseded
-    // state lives exactly one maintenance interval). After this, disk
-    // == manifest for the snapshot sub-tables.
-    IndexLifecycle.reclaimUnmanifested(root,
-      Seq("cells", "delta", "tombstones", GateAppendBatchesDir))
-    def manifestSet: Set[String] =
-      IndexLifecycle.readManifest(root).get.toSet
-
-    // PHASE 1 (fold): delta rows move into the cell partitions; the
-    // snapshot swap makes the fold atomic for readers (a snapshot-N
-    // reader keeps seeing base+delta, a snapshot-N+1 reader sees the
-    // folded base — never both, never neither). The fold itself stays
-    // idempotent (anti-join vs the touched cells' base ids) so a
-    // crash BEFORE the commit re-runs as the repair, with the
-    // uncommitted fold files reclaimed as orphans at re-entry.
-    val deltaFiles = files(path, "delta")
-    if (deltaFiles.nonEmpty) {
-      val preCells = manifestSet
-      val delta = spark.read.parquet(deltaFiles.map(_.toString): _*)
-        .dropDuplicates("vec_id")
-        .cache()
-      // touched cells: bounded by min(|delta|, nCells) — control-plane
-      val touched = delta.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      // base may be EMPTY (fully-deleted index being revived by
-      // appends): the fold then lands every delta row
-      val folded0 = cellsScanOpt(spark, path).fold(delta) { cells =>
-        val baseIds = cells
-          .filter(
-            if (touched.length <= IsinCellsMax) col("cell").isin(touched: _*)
-            else array_contains(lit(touched), col("cell")))
-          .select(col("vec_id"))
-        delta.join(baseIds, Seq("vec_id"), "left_anti")
-      }
-      folded0
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(cellsRoot.toString)
-      delta.unpersist()
-      val folded = IndexLifecycle.listRelParquet(root, "cells")
-        .filterNot(preCells.contains).map(root.resolve)
-      IndexLifecycle.commitSwap(root, Nil, folded, dropSubs = Seq("delta"))
+    val base = cellsScanOpt(spark, path)
+    val delta = deltaScanOpt(spark, path)
+    // (cell, true) per cell the delta touches, (cell, false) per cell
+    // holding a tombstoned id
+    val facts = (delta.map(_.select(col("cell").cast("long"), lit(true))) ++
+      IndexLifecycle.tombstones(spark, root, "vec_id").flatMap { case (ts, bytes) =>
+        baseUnionDelta(spark, path)(_.select(col("cell"), col("vec_id")))
+          .map(live => IndexLifecycle.boundedIdJoin(live, ts, "vec_id", bytes,
+            "left_semi").select(col("cell").cast("long"), lit(false)))
+      }).reduceOption(_ union _)
+      .fold(Array.empty[(Long, Boolean)])(_.distinct().collect()
+        .map(r => (r.getLong(0), r.getBoolean(1))))
+    val touched = facts.collect { case (c, true) => c }.toSet
+    val parts = files(path, "cells")
+      .groupBy(_.getParent.getFileName.toString.stripPrefix("cell=").toLong)
+    def nFiles(c: Long): Int =
+      parts.get(c).fold(0)(_.size) + (if (touched(c)) 1 else 0)
+    val rewritten = (facts.collect { case (c, false) => c } ++
+      (parts.keySet ++ touched).filter(nFiles(_) > maxFilesPerCell))
+      .distinct.sorted.toSeq
+    val foldOnly = (touched -- rewritten).toSeq.sorted
+    def in(cs: Seq[Long]): Column = array_contains(lit(cs.toArray), col("cell"))
+    val merged = if (rewritten.isEmpty) None
+      else baseUnionDelta(spark, path)(_.filter(in(rewritten))).map(df =>
+        IndexLifecycle.withoutTombstones(df.dropDuplicates("vec_id"), root, "vec_id"))
+    val folded = if (foldOnly.isEmpty) None else delta.map { d =>
+      val fresh = d.filter(in(foldOnly)).dropDuplicates("vec_id")
+      base.fold(fresh)(b => fresh.join(
+        b.filter(in(foldOnly)).select(col("vec_id")), Seq("vec_id"), "left_anti"))
     }
-    // PHASE 1b (tombstones): physically remove deleted ids by
-    // rewriting ONLY the cells that hold them (bounded by the
-    // tombstone count — one slim semi scan finds the affected cells),
-    // committing the swap once at the end; tombstone and superseded
-    // cell files are retained for snapshot readers. A crash before
-    // the commit leaves snapshot N intact (rewritten files = orphans,
-    // reclaimed at re-entry) and re-applying is a no-op anti.
-    var compacted = 0
-    IndexLifecycle.tombstones(spark, root, "vec_id").foreach { case (ts0, tsBytes) =>
-      val ts = ts0.cache()
-      val removed = scala.collection.mutable.ArrayBuffer[Path]()
-      val added = scala.collection.mutable.ArrayBuffer[Path]()
-      // the hive partition column infers as int: cast for the collect.
-      // No base cells → tombstones cannot touch any (the fold above
-      // already ran, so delta-held tombstoned ids were folded first
-      // and a live base would exist).
-      val affected = cellsScanOpt(spark, path).fold(Array.empty[Long]) {
-        cells =>
-          IndexLifecycle.boundedIdJoin(cells, ts, "vec_id", tsBytes,
-            "left_semi")
-            .select(col("cell").cast("long")).distinct()
-            .collect().map(_.getLong(0)).sorted
-      }
-      def applyTransform(df: DataFrame): DataFrame =
-        IndexLifecycle.boundedIdJoin(df.dropDuplicates("vec_id"), ts,
-          "vec_id", tsBytes, "left_anti")
-      val live = manifestSet
-      def manifestParts(cid: Long): Seq[Path] =
-        live.filter(_.startsWith(s"cells/cell=$cid/"))
-          .toSeq.sorted.map(root.resolve)
-      if (affected.length <= BulkApplyMinCells) {
-        // few cells (the takedown shape): per-cell merge keeps every
-        // untouched byte identical and pays no corpus-job fixed cost
-        for (cid <- affected) {
-          val dir = cellsRoot.resolve(s"cell=$cid")
-          val parts = manifestParts(cid)
-          added ++= IndexLifecycle.mergeParquetFiles(spark, parts, dir,
-            transform = applyTransform)
-          removed ++= parts
-          compacted += 1
-        }
-      } else {
-        // many cells (uniform deletes touch ~every cell): the
-        // per-cell loop is one Spark job PER CELL — measured 713 s
-        // for 2639 cells at the 8M rung, ~all per-job fixed cost
-        // (SCALING.md §4.20). Bulk path: ONE job writes every
-        // rewritten cell to a staging dir, then per-cell file moves
-        // (move-in before the snapshot swap — the same
-        // materialize-first invariant, at filesystem speed).
-        val tag = java.util.UUID.randomUUID().toString.take(8)
-        // reclaim any staging a crashed previous application left
-        // (dot-prefixed: invisible to scans, but not free disk)
-        scala.util.Using.resource(Files.list(cellsRoot.getParent))(
-          _.iterator().asScala
-            .filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith(".apply_")).toSeq)
-          .foreach(p =>
-            org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
-        val staging = cellsRoot.resolveSibling(".apply_" + tag)
-        val affectedPred =
-          if (affected.length >= readMeta(path).nCells) lit(true)
-          else array_contains(lit(affected), col("cell"))
-        // affected nonEmpty on this branch ⇒ base cells exist
-        applyTransform(
-          cellsScanOpt(spark, path).get.filter(affectedPred))
-          .repartition(col("cell"))
-          .write.partitionBy("cell").parquet(staging.toString)
-        for (cid <- affected) {
-          val dir = cellsRoot.resolve(s"cell=$cid")
-          val stagedDir = staging.resolve(s"cell=$cid")
-          val newParts =
-            if (Files.isDirectory(stagedDir))
-              scala.util.Using.resource(Files.list(stagedDir))(
-                _.iterator().asScala
-                  .filter(_.getFileName.toString.endsWith(".parquet"))
-                  .toSeq)
-            else Seq.empty // every row of this cell was deleted
-          added ++= newParts.zipWithIndex.map { case (f, i) =>
-            val dst = dir.resolve(s"compact_${tag}_$i.parquet")
-            Files.move(f, dst)
-            dst
-          }
-          removed ++= manifestParts(cid)
-          compacted += 1
-        }
-        org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      }
-      IndexLifecycle.commitSwap(root, removed.toSeq, added.toSeq,
-        dropSubs = Seq("tombstones"))
-      ts.unpersist()
+    // the gate-append sidecar fragments one file per trigger and is
+    // scanned by every gate call; only its newest batch can serve a
+    // replay (every earlier batch committed before that trigger began)
+    val gapp = files(path, GateAppendBatchesDir)
+    val prune = Option.when(gapp.size >= 2) {
+      val df = gateAppendBatches(spark, gapp)
+      IndexLifecycle.Rewrite(GateAppendBatchesDir, gapp,
+        df.filter(col("batch") === df.agg(max(col("batch"))).scalar()).distinct())
     }
-    // the gate-append sidecar fragments one file per trigger (it is
-    // append-only by the replay invariant — see gateAndAppendAnnBatch)
-    // and is scanned by every gate call: merge it down in phase 2's
-    // swap, PRUNING superseded batches — only the newest batchId can
-    // ever serve a replay (every earlier batch committed before the
-    // newest trigger started), so its rows are the only live ones.
-    val removed2 = scala.collection.mutable.ArrayBuffer[Path]()
-    val added2 = scala.collection.mutable.ArrayBuffer[Path]()
-    val gappFiles = files(path, GateAppendBatchesDir)
-    if (gappFiles.size >= 2) {
-      added2 ++= IndexLifecycle.mergeParquetFiles(spark, gappFiles,
-        root.resolve(GateAppendBatchesDir), transform = { df =>
-          val mx = df.agg(max(col("batch"))).head()
-          if (mx.isNullAt(0)) df.distinct()
-          else df.filter(col("batch") === mx.getLong(0)).distinct()
-        })
-      removed2 ++= gappFiles
-    }
-    // PHASE 2 (fragmented-cell merge): part sets come from the
-    // MANIFEST (the disk may hold phase-1b's retained originals);
-    // merges retain originals and the swap commits once.
-    val byCell = manifestSet.filter(_.startsWith("cells/"))
-      .groupBy(r => r.substring(0, r.lastIndexOf('/')))
-    for ((cellRel, rels) <- byCell.toSeq.sortBy(_._1)) {
-      if (rels.size > maxFilesPerCell) {
-        val dir = root.resolve(cellRel)
-        val parts = rels.toSeq.sorted.map(root.resolve)
-        // vec_id dedupe at merge: the rewrite collapses any
-        // duplicates a prior crash window left in this cell, so
-        // re-running compaction IS the repair
-        added2 ++= IndexLifecycle.mergeParquetFiles(spark, parts, dir,
-          transform = _.dropDuplicates("vec_id"))
-        removed2 ++= parts
-        compacted += 1
-      }
-    }
-    if (removed2.nonEmpty)
-      IndexLifecycle.commitSwap(root, removed2.toSeq, added2.toSeq)
-    compacted
+    val cells = (merged ++ folded).reduceOption(_ unionByName _).map(
+      IndexLifecycle.Rewrite("cells", rewritten.flatMap(parts.getOrElse(_, Nil)),
+        _, partitionBy = Some("cell")))
+    IndexLifecycle.compact(root,
+      Seq("cells", "delta", "tombstones", GateAppendBatchesDir),
+      (cells ++ prune).toSeq, dropSubs = Seq("delta", "tombstones"))
+    rewritten.size
   }
 
   /** Stage a rebuild's inputs into `dir` (see [[IndexLifecycle
@@ -1224,9 +1084,9 @@ object AnnIndex {
     *     Physically reclaims every tombstone and folds every delta row;
     *     the staged gate-append sidecar is restored verbatim (its
     *     vec_ids were appended admissions, so they survive);
-    *  2. else [[needsCompaction]] → [[compactCells]] (delta fold +
-    *     tombstone application + fragmented-cell merge,
-    *     increment-priced, snapshot-safe). */
+    *  2. else [[needsCompaction]] → [[compactCells]] (delta fold,
+    *     tombstone application and fragmented-cell merge as one staged
+    *     rewrite and one swap, increment-priced, snapshot-safe). */
   def maintainAnnIndex(spark: SparkSession, path: String,
                        trainIters: Int = 2): IndexLifecycle.Maintenance = {
     val meta = readMeta(path)

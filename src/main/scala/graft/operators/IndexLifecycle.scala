@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.graft.LocalRows
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -15,8 +15,8 @@ import scala.jdk.CollectionConverters._
   * [[AnnIndex]] (IVF cells for embedding search): meta properties IO
   * with a version gate, the appended-drift rebuild policy,
   * marker-stamped index-internal artifacts, bounded driver-side
-  * memoization keyed by content fingerprint, and the crash-ordered
-  * small-file merge both compactions run.
+  * memoization keyed by content fingerprint, and the one staged
+  * rewrite both compactions run.
   *
   * Extracted (round 11) because the two families had drifted on
   * exactly these contracts while duplicating the code: the ANN append
@@ -36,8 +36,8 @@ import scala.jdk.CollectionConverters._
   *  - a build commits a fresh snapshot ([[commitFresh]]);
   *  - appends, deletes and sidecar writes add exactly the files they
   *    wrote ([[commitAddedWrite]]);
-  *  - a compaction merges files into new ones and swaps them in
-  *    ([[mergeParquetFiles]] + [[commitSwap]]), RETAINING the
+  *  - a compaction stages every rewritten sub-table and swaps the
+  *    results in with ONE [[commitSwap]] ([[compact]]), RETAINING the
   *    superseded files until the next maintenance entry reclaims them
   *    ([[reclaimUnmanifested]]).
   *
@@ -417,6 +417,23 @@ object IndexLifecycle {
     }
   }
 
+  /** A scan of snapshot `files` under the Spark schema the first file's
+    * writer stored in its footer, read driver-side: a bare
+    * `spark.read.parquet` schedules a schema-inference job on every
+    * call. Partition columns live in paths, not footers, so under
+    * `basePath` they still infer from the directory names. */
+  def snapshotScan(spark: SparkSession, files: Seq[Path],
+                   basePath: Option[Path] = None): DataFrame = {
+    val schema = footers(spark, files.take(1))(r => DataType.fromJson(r.getFooter
+      .getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))).next()
+      .asInstanceOf[StructType]
+    basePath.foldLeft(spark.read.schema(schema))(
+      (r, b) => r.option("basePath", b.toString)).parquet(files.map(_.toString): _*)
+  }
+
+  /** Footer key under which Spark's parquet writer stores the schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
   /** True when the parquet table under `dir` holds at least one ROW —
     * answered from the file FOOTERS, driver-side (round-13 opt: the
     * hot/hot2 emptiness consult was a `df.isEmpty`, i.e. one scheduled
@@ -675,7 +692,7 @@ object IndexLifecycle {
         // wholly dead side table (a folded-away delta/, an applied
         // tombstones/): everything in it — superseded parquet plus
         // the committer's _SUCCESS/.crc residue — goes at once
-        org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+        deleteDir(d)
       else {
         parquetFiles(d).filterNot(f => live(root.relativize(f).toString))
           .foreach { f =>
@@ -690,41 +707,71 @@ object IndexLifecycle {
           _.iterator().asScala.toSeq).reverse
           .filter(p => p != d && Files.isDirectory(p) &&
             !liveUnder(root.relativize(p).toString))
-          .foreach(p => org.apache.commons.io.FileUtils
-            .deleteDirectory(p.toFile))
+          .foreach(deleteDir)
       }
     }
   }
 
-  // ---- crash-ordered small-file merge --------------------------------------
+  // ---- the one compaction step --------------------------------------------
 
-  /** Merge `files` (parquet parts of one table) into a single part in
-    * `destDir` and return the new files; the originals stay on disk.
-    * The merged data is materialized COMPLETELY to a temp sibling, then
-    * moved into `destDir` under fresh unique names. The caller commits
-    * [-files +returned] with [[commitSwap]]: before that commit the new
-    * files are unlisted orphans (readers see snapshot N, never a
-    * duplicate; the next maintenance entry reclaims them), after it the
-    * originals are superseded files, retained for snapshot-N readers
-    * until the next maintenance entry. Loss is impossible at any point.
-    * `transform` lets a caller dedupe at merge time (the ANN cell
-    * rewrite collapses vec_id duplicates, the set-valued side tables
-    * take `distinct`). */
-  def mergeParquetFiles(spark: SparkSession, files: Seq[Path], destDir: Path,
-                        transform: DataFrame => DataFrame = identity): Seq[Path] = {
+  /** One sub-table's part of a [[compact]]: `rows` replace the snapshot
+    * files `removed` of `sub`, written as one file, or hive-partitioned
+    * by `partitionBy` with one file per partition value. */
+  final case class Rewrite(sub: String, removed: Seq[Path], rows: DataFrame,
+                           partitionBy: Option[String] = None)
+
+  /** The COMPACTION step of both families: one staged rewrite, one swap.
+    *  1. Maintenance entry: reclaim what the previous maintenance event
+    *     retained under `subs` ([[reclaimUnmanifested]]) and sweep every
+    *     dot-staging dir a crashed compaction left at the root.
+    *  2. Write every rewrite's `rows` into ONE fresh dot-staging dir,
+    *     then move the staged files into their sub-table dirs under
+    *     fresh `compact_<tag>_<i>.parquet` names ([[stageRewrites]]).
+    *  3. ONE [[commitSwap]]: every rewrite's `removed` out, the moved
+    *     files in, every file of `dropSubs` out (a folded delta,
+    *     applied tombstones). Skipped when there is nothing to rewrite
+    *     or drop.
+    * Crash ordering: the bytes are complete before a file moves, and
+    * the manifest names them only at the swap, so a crash anywhere
+    * leaves snapshot N; the staging dir and moved-but-unlisted files go
+    * at the next entry. The superseded files stay on disk for
+    * snapshot-N readers until that entry too. */
+  def compact(root: Path, subs: Seq[String], rewrites: Seq[Rewrite],
+              dropSubs: Seq[String] = Nil): Unit = {
+    reclaimUnmanifested(root, subs)
+    scala.util.Using.resource(Files.list(root))(_.iterator().asScala
+      .filter { p =>
+        val n = p.getFileName.toString
+        Files.isDirectory(p) && n.startsWith(".") && n != RebuildStageDir
+      }.toSeq).foreach(deleteDir)
+    if (rewrites.nonEmpty || dropSubs.exists(snapshotFiles(root, _).nonEmpty))
+      commitSwap(root, rewrites.flatMap(_.removed),
+        stageRewrites(root, rewrites), dropSubs)
+  }
+
+  /** Step 2 of [[compact]] without its commit: the moved files, which
+    * the snapshot does not list yet. */
+  private[graft] def stageRewrites(root: Path, rewrites: Seq[Rewrite]): Seq[Path] = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = destDir.resolveSibling(
-      ".merge_" + destDir.getFileName.toString + "_" + tag)
-    transform(spark.read.parquet(files.map(_.toString): _*)).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val moved = parquetFiles(tmp).zipWithIndex.map { case (f, i) =>
-      val dst = destDir.resolve(s"compact_${tag}_$i.parquet")
-      Files.move(f, dst)
-      dst
+    val staging = root.resolve(".compact_" + tag)
+    val staged = rewrites.zipWithIndex.map { case (rw, i) =>
+      val dir = staging.resolve(i.toString)
+      rw.partitionBy.fold(rw.rows.coalesce(1).write)(p =>
+        rw.rows.repartition(col(p)).write.partitionBy(p)).parquet(dir.toString)
+      (dir, root.resolve(rw.sub))
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val moved = staged.flatMap { case (dir, sub) =>
+      parquetFiles(dir).map(f => (f, sub.resolve(dir.relativize(f.getParent).toString)))
+    }.zipWithIndex.map { case ((f, destDir), i) =>
+      Files.createDirectories(destDir)
+      Files.move(f, destDir.resolve(s"compact_${tag}_$i.parquet"))
+    }
+    deleteDir(staging)
     moved
   }
+
+  private def deleteDir(d: Path): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
 
   // ---- the maintenance driver ----------------------------------------------
 

@@ -398,39 +398,35 @@ object SignatureIndex {
       files(path, "sig").count(Files.size(_) < minFileBytes) +
         files(path, "tombstones").size + files(path, GateAppendMd5Dir).size)
 
-  /** Compact the small files a long append lifecycle accumulates —
-    * snapshot-safe, like [[AnnIndex.compactCells]]: the entry reclaims
-    * what the previous maintenance event retained (and any crashed
-    * write's orphans); every `sig/` part under `minFileBytes` merges
-    * into one, the tombstone and gate-append sidecar tables merge down
-    * through `distinct` (both are sets, and distinct is the identity
-    * their consumers apply); then ONE [[IndexLifecycle.commitSwap]]
-    * publishes the merged files and RETAINS the originals for readers
-    * that resolved the previous snapshot. Content is untouched, so
-    * probes, gates and pair frames are result-invariant (spec-pinned);
-    * cost is proportional to the SMALL files' bytes, never the corpus
-    * build parts above the threshold. A crash before the swap leaves
-    * the merged files as orphans — readers see the previous snapshot,
-    * no duplicates — and re-entry reclaims them. Returns the number of
-    * files merged. */
+  /** Compact the small files a long append lifecycle accumulates as
+    * ONE [[IndexLifecycle.compact]], like [[AnnIndex.compactCells]]:
+    * every `sig/` part under `minFileBytes` merges into one, and the
+    * tombstone and gate-append sidecar tables merge down through
+    * `distinct` (both are sets, and distinct is the identity their
+    * consumers apply); one swap publishes the merged files and RETAINS
+    * the originals for readers that resolved the previous snapshot.
+    * Content is untouched, so probes, gates and pair frames are
+    * result-invariant (spec-pinned); cost is proportional to the SMALL
+    * files' bytes, never the corpus build parts above the threshold.
+    * Returns the number of files merged. */
   def compactSignatures(spark: SparkSession, path: String,
                         minFileBytes: Long = 8L << 20): Int = {
     val root = Paths.get(path)
-    IndexLifecycle.reclaimUnmanifested(root, MutableSubs)
-    val merges = Seq(
-      ("sig", files(path, "sig").filter(Files.size(_) < minFileBytes),
-        identity[DataFrame] _),
-      ("tombstones", files(path, "tombstones"), (_: DataFrame).distinct()),
-      (GateAppendMd5Dir, files(path, GateAppendMd5Dir),
-        (_: DataFrame).distinct()))
-      .filter(_._2.size >= 2)
-    if (merges.isEmpty) return 0
-    val added = merges.flatMap { case (sub, fs, transform) =>
-      IndexLifecycle.mergeParquetFiles(spark, fs, root.resolve(sub), transform)
-    }
-    IndexLifecycle.commitSwap(root, merges.flatMap(_._2), added)
-    writeMeta(root, readMeta(path).copy(sigBytes = sigBytes(path)))
-    merges.map(_._2.size).sum
+    def merge(sub: String, fs: Seq[Path])(rows: => DataFrame) =
+      Option.when(fs.size >= 2)(IndexLifecycle.Rewrite(sub, fs, rows))
+    def read(schema: StructType, fs: Seq[Path]) =
+      spark.read.schema(schema).parquet(fs.map(_.toString): _*)
+    val sig = files(path, "sig").filter(Files.size(_) < minFileBytes)
+    val md5 = files(path, GateAppendMd5Dir)
+    val rewrites = Seq(
+      merge("sig", sig)(read(SigSchema, sig)),
+      merge("tombstones", files(path, "tombstones"))(
+        IndexLifecycle.tombstones(spark, root, "doc_id").get._1),
+      merge(GateAppendMd5Dir, md5)(read(Md5Schema, md5).distinct())).flatten
+    IndexLifecycle.compact(root, MutableSubs, rewrites)
+    if (rewrites.nonEmpty)
+      writeMeta(root, readMeta(path).copy(sigBytes = sigBytes(path)))
+    rewrites.map(_.removed.size).sum
   }
 
   def readMeta(path: String): Meta = {

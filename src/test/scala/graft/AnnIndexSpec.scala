@@ -406,9 +406,8 @@ class AnnIndexSpec extends AnyFunSuite {
       == expectProbe)
   }
 
-  test("bulk tombstone application (many affected cells) equals per-cell") {
-    // 80 cells, every 3rd vector deleted: affected cells far exceed
-    // BulkApplyMinCells, so compaction takes the one-staged-job path
+  test("tombstone application over many affected cells equals a fresh build") {
+    // 80 cells, every 3rd vector deleted: nearly every cell is affected
     val cents = rawCentroids(80)
     val idx = newIndexDir()
     AnnIndex.buildAnnIndex(vecsQ, cents, idx)
@@ -418,9 +417,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.buildAnnIndex(vecsQ.filter(col("vec_id") % 3 =!= 0),
       cents, fresh)
     val expect = canon(AnnIndex.probeAnnIndex(spark, fresh, probes, 4, 3))
-    val rewritten = AnnIndex.compactCells(spark, idx)
-    assert(rewritten > AnnIndex.BulkApplyMinCells,
-      s"fixture must exercise the bulk path (rewrote $rewritten cells)")
+    AnnIndex.compactCells(spark, idx)
     assert(graft.operators.IndexLifecycle
       .manifestFilesUnder(Paths.get(idx), "tombstones").get.isEmpty)
     assert(canon(AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3))
@@ -906,8 +903,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // cells scan, making the state unrecoverable (rebuild and append
     // both read through it). Now only a base-less AND delta-less
     // SEARCH fails; deletes are no-ops and appends revive the index.
-    // 80 cells forces the BULK tombstone application (the arm that
-    // can empty the manifest outright).
+    // Deleting every row of all 80 cells empties the manifest outright.
     val cents = rawCentroids(80)
     val idx = newIndexDir()
     AnnIndex.buildAnnIndex(vecsQ, cents, idx)
@@ -964,5 +960,80 @@ class AnnIndexSpec extends AnyFunSuite {
       .manifestFilesUnder(Paths.get(idx), "delta").get.isEmpty)
     assert(!AnnIndex.needsCompaction(idx))
     incr.unpersist()
+  }
+
+  test("tombstone application runs the same jobs for one affected cell as for many") {
+    val cents = rawCentroids(80)
+    def compactAfterDelete(del: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val idx = newIndexDir()
+      AnnIndex.buildAnnIndex(vecsQ, cents, idx)
+      AnnIndex.deleteFromAnnIndex(del, idx)
+      jobsDuring(AnnIndex.compactCells(spark, idx))
+    }
+    val oneCell = AnnIndex.assignBulk(vecsQ, cents)
+      .filter(col("cell") === 3).select(col("vec_id"))
+    val (one, oneJobs) = compactAfterDelete(oneCell)
+    val (many, manyJobs) = compactAfterDelete(
+      vecsQ.filter(col("vec_id") % 3 === 0).select(col("vec_id")))
+    assert(one == 1 && many >= 16, s"rewrote $one and $many cells")
+    // one staged write for every affected cell, not one job per cell
+    assert(oneJobs == manyJobs,
+      s"1 cell ran $oneJobs jobs, $many cells ran $manyJobs")
+  }
+
+  test("an ANN read resolves its snapshot tables with no Spark job") {
+    val cents = Similarity.kmeansQuantized(vecsQ.select(col("qv")),
+      rawCentroids(16), iters = 2)
+    val idx = newIndexDir()
+    AnnIndex.buildAnnIndex(vecsQ.filter(col("vec_id") < 400), cents, idx)
+    AnnIndex.appendToAnnIndex(vecsQ.filter(col("vec_id") >= 400), idx)
+    // the first call warms the centroid memo
+    AnnIndex.knnJoinIndex(spark, idx, vecsQ, nProbe = 4, k = 3)
+    // cells and delta take their schema from a footer, driver-side
+    val (_, jobs) = jobsDuring(
+      AnnIndex.knnJoinIndex(spark, idx, vecsQ, nProbe = 4, k = 3))
+    assert(jobs == 0, s"building the k-NN join frame ran $jobs jobs")
+  }
+
+  test("a crash between a compaction's merge and its swap leaves snapshot N; re-entry reclaims the orphans") {
+    val cents = Similarity.kmeansQuantized(vecsQ.select(col("qv")),
+      rawCentroids(16), iters = 2)
+    val idx = newIndexDir()
+    val root = Paths.get(idx)
+    AnnIndex.buildAnnIndex(vecsQ.filter(col("vec_id") < 400), cents, idx)
+    AnnIndex.appendToAnnIndex(vecsQ.filter(col("vec_id") >= 400), idx)
+    AnnIndex.deleteFromAnnIndex(
+      vecsQ.filter(col("vec_id") % 10 === 7).select(col("vec_id")), idx)
+    val expected = canon(AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3))
+    val cellFiles = IndexLifecycle.manifestFilesUnder(root, "cells").get
+    val merge = IndexLifecycle.Rewrite("cells", cellFiles,
+      spark.read.option("basePath", s"$idx/cells")
+        .parquet(cellFiles.map(_.toString): _*), partitionBy = Some("cell"))
+    // a crash mid-write: the second rewrite's job fails after the
+    // first was staged; nothing moved, nothing committed
+    intercept[org.apache.spark.SparkException](
+      IndexLifecycle.compact(root, Nil, Seq(merge, IndexLifecycle.Rewrite(
+        "tombstones", Nil, IndexPlans.failingRows("vec_id")))))
+    assert(IndexPlans.dotDirs(root).nonEmpty,
+      "the crashed write must leave its staging dir")
+    assert(IndexLifecycle.manifestFilesUnder(root, "cells").get == cellFiles)
+    // the writes finished and their files moved into cells/, the swap
+    // never committed
+    val orphans = IndexLifecycle.stageRewrites(root, Seq(merge))
+    assert(orphans.nonEmpty && orphans.forall(Files.isRegularFile(_)))
+    // sensitivity: a directory read would now see every base row twice
+    assert(spark.read.parquet(s"$idx/cells").count() == 2L * 400)
+    // readers see snapshot N: same results
+    assert(canon(AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3)) == expected,
+      "a reader saw the uncommitted merge")
+    // re-entry reclaims the orphans and the staging before it rewrites
+    assert(AnnIndex.compactCells(spark, idx, maxFilesPerCell = 0) > 0)
+    assert(orphans.forall(f => !Files.exists(f)), "orphans survived re-entry")
+    assert(IndexPlans.dotDirs(root).isEmpty, "a staging dir survived re-entry")
+    val live = spark.read.parquet(IndexLifecycle.manifestFilesUnder(root, "cells")
+      .get.map(_.toString): _*).select(col("vec_id")).collect().map(_.getLong(0))
+    assert(live.length == live.distinct.length &&
+      live.length == AnnIndex.readMeta(idx).nVecs)
+    assert(canon(AnnIndex.probeAnnIndex(spark, idx, probes, 4, 3)) == expected)
   }
 }

@@ -594,9 +594,20 @@ class SignatureIndexSpec extends AnyFunSuite {
     val root = Paths.get(idx)
     val expected = canon(SignatureIndex.clustersFromIndex(spark, idx))
     val ids = snapshotIds(idx, "sig")
-    // the merge ran and its files are in sig/, the swap never committed
-    val orphans = IndexLifecycle.mergeParquetFiles(spark,
-      IndexLifecycle.manifestFilesUnder(root, "sig").get, root.resolve("sig"))
+    val sigFiles = IndexLifecycle.manifestFilesUnder(root, "sig").get
+    val merge = IndexLifecycle.Rewrite("sig", sigFiles,
+      spark.read.parquet(sigFiles.map(_.toString): _*))
+    // a crash mid-write: the second rewrite's job fails after the
+    // first was staged; nothing moved, nothing committed
+    intercept[org.apache.spark.SparkException](
+      IndexLifecycle.compact(root, Nil, Seq(merge, IndexLifecycle.Rewrite(
+        "tombstones", Nil, IndexPlans.failingRows("doc_id")))))
+    assert(IndexPlans.dotDirs(root).nonEmpty,
+      "the crashed write must leave its staging dir")
+    assert(snapshotIds(idx, "sig").sorted == ids.sorted)
+    // the writes finished and their files moved into sig/, the swap
+    // never committed
+    val orphans = IndexLifecycle.stageRewrites(root, Seq(merge))
     assert(orphans.nonEmpty && orphans.forall(Files.isRegularFile(_)))
     // sensitivity: a directory read would now see every row twice
     assert(spark.read.parquet(s"$idx/sig").count() == 2L * ids.size)
@@ -604,10 +615,11 @@ class SignatureIndexSpec extends AnyFunSuite {
     assert(snapshotIds(idx, "sig").sorted == ids.sorted)
     assert(canon(SignatureIndex.clustersFromIndex(spark, idx)) == expected,
       "a reader saw the uncommitted merge")
-    // re-entry reclaims the orphans before it merges again
+    // re-entry reclaims the orphans and the staging before it merges again
     assert(SignatureIndex.compactSignatures(spark, idx,
       minFileBytes = Long.MaxValue) > 0)
     assert(orphans.forall(f => !Files.exists(f)), "orphans survived re-entry")
+    assert(IndexPlans.dotDirs(root).isEmpty, "a staging dir survived re-entry")
     val after = snapshotIds(idx, "sig")
     assert(after.size == after.distinct.size && after.toSet == ids.toSet)
     assert(canon(SignatureIndex.clustersFromIndex(spark, idx)) == expected)
