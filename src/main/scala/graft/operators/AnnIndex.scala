@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -496,12 +497,10 @@ object AnnIndex {
     * contract as every live ANN query. */
   def probeAnnIndex(spark: SparkSession, path: String, probesQ: DataFrame,
                     nProbe: Int, k: Int,
-                    candidateFilter: Column = lit(true),
-                    excludeIds: Option[DataFrame] = None): DataFrame = {
+                    candidateFilter: Column = lit(true)): DataFrame =
     searchCells(spark, path,
       broadcast(materializedProbeCells(spark, path, probesQ, nProbe)),
-      candidateFilter, k, pruneCells = true, excludeIds = excludeIds)
-  }
+      candidateFilter, k, pruneCells = true)
 
   /** The probe side of [[probeAnnIndex]] as a driver-LOCAL relation.
     * The probe side is broadcast-class BY CONTRACT and the search
@@ -510,7 +509,7 @@ object AnnIndex {
     * runs a single time, the distinct-cell collect for partition
     * pruning reads local rows, and nothing registers with the
     * CacheManager (round-11 ADVICE: the cached frame was never
-    * unpersisted, and the streaming embed gate calls this once per
+    * unpersisted, and the streaming embed gate called this once per
     * micro-batch — a long-lived driver accumulated one cache entry per
     * trigger without bound). Split out (round-13 opt) so a mutation
     * loop probing a FIXED probe set between triggers evaluates the
@@ -532,10 +531,9 @@ object AnnIndex {
     * append immediately; only the probe-side evaluation is reused. */
   def probeAnnIndexCells(spark: SparkSession, path: String,
                          probeCells: DataFrame, k: Int,
-                         candidateFilter: Column = lit(true),
-                         excludeIds: Option[DataFrame] = None): DataFrame =
+                         candidateFilter: Column = lit(true)): DataFrame =
     searchCells(spark, path, broadcast(probeCells), candidateFilter, k,
-      pruneCells = true, excludeIds = excludeIds)
+      pruneCells = true)
 
   /** k-NN JOIN against the persisted index: EVERY input vector probes
     * for its top-k — the k-NN-graph build a semantic-dedup or
@@ -582,41 +580,33 @@ object AnnIndex {
     * increment-sized; the corpus-sized base never pays it. */
   private def searchCells(spark: SparkSession, path: String,
                           probeCells: DataFrame, candidateFilter: Column,
-                          k: Int, pruneCells: Boolean,
-                          excludeIds: Option[DataFrame] = None): DataFrame = {
-    val cands = liveCandidates(spark, path,
-      cellPredFor(spark, path, probeCells, pruneCells),
-      candidateFilter, excludeIds)
+                          k: Int, pruneCells: Boolean): DataFrame = {
+    // distinct probed cells: bounded by nCells (the centroid table is
+    // driver-held already, so this is a control-plane collect)
+    val cellPred = Option.when(pruneCells)(cellPredFor(path,
+      probeCells.select(col("cell")).distinct().collect().map(_.getLong(0)))).flatten
+    val cands = liveCandidates(spark, path, cellPred, candidateFilter)
     Similarity.ivfSearch(cands, probeCells, "vec_id", k)
   }
 
-  /** The cell-pruning predicate of a probe — distinct probed cells
-    * (bounded by nCells; the centroid table is driver-held already,
-    * so this is a control-plane collect) as a partition predicate, so
-    * only the probed directories are ever scanned. None when pruning
-    * is off (the k-NN-join contract) or the probe set covers every
-    * cell. */
-  private def cellPredFor(spark: SparkSession, path: String,
-                          probeCells: DataFrame,
-                          pruneCells: Boolean): Option[Column] =
-    if (!pruneCells) None
-    else {
-      val cellIds = probeCells.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (cellIds.length >= readMeta(path).nCells) None
-      else if (cellIds.length <= IsinCellsMax)
-        Some(col("cell").isin(cellIds: _*))
-      else Some(array_contains(lit(cellIds), col("cell")))
-    }
+  /** The cell-pruning predicate of a probe's distinct cells: a
+    * partition predicate, so only the probed directories are ever
+    * scanned. None when the probe set covers every cell. */
+  private def cellPredFor(path: String, cells: Array[Long]): Option[Column] = {
+    val cellIds = cells.sorted
+    if (cellIds.length >= readMeta(path).nCells) None
+    else if (cellIds.length <= IsinCellsMax)
+      Some(col("cell").isin(cellIds: _*))
+    else Some(array_contains(lit(cellIds), col("cell")))
+  }
 
   /** The LIVE candidate scan every search path reads — base cells
     * (partition-pruned by `cellPred`) ∪ un-compacted delta (same
     * predicate as PushedFilters, deduped on vec_id — the collapse
-    * point that makes a RETRIED append duplicate-safe), minus the
-    * tombstones through the byte-bounded anti, minus any caller-scoped
-    * exclusion (batch-bounded by contract: the gate-append REPLAY path
-    * hides the redelivered batch's own appended rows), filtered by the
-    * caller's payload predicate. Returns ALL stored columns; callers
+    * point that makes a RETRIED append duplicate-safe; a top-1 gate,
+    * which a duplicate cannot change, skips it), minus the tombstones
+    * through the byte-bounded anti, filtered by the caller's payload
+    * predicate. Returns ALL stored columns; callers
     * project, and Catalyst prunes the projection down to the parquet
     * scans (on a PQ layout the ADC path therefore reads ONLY the code
     * pages — the compression win is column pruning, not a second
@@ -624,12 +614,12 @@ object AnnIndex {
   private def liveCandidates(spark: SparkSession, path: String,
                              cellPred: Option[Column],
                              candidateFilter: Column,
-                             excludeIds: Option[DataFrame] = None): DataFrame = {
+                             dedupeDelta: Boolean = true): DataFrame = {
     // un-compacted appends: increment-class side table. A base-less
     // index (everything deleted + compacted) serves from delta alone
     // — appends REVIVE it.
     val cands0 = baseUnionDelta(spark, path)(
-      df => cellPred.fold(df)(p => df.filter(p)), dedupeDelta = true)
+      df => cellPred.fold(df)(p => df.filter(p)), dedupeDelta)
       .getOrElse(throw new IllegalStateException(
         s"index at $path has no live rows (every row deleted and " +
           "compacted away) — rebuild it or append fresh data first"))
@@ -637,10 +627,8 @@ object AnnIndex {
     // bytes (the cumulative set is policy-bounded, not code-bounded,
     // so the join must not assume broadcast-class); physically
     // removed, and this join dropped, at compaction
-    val cands1 = IndexLifecycle.withoutTombstones(cands0, Paths.get(path), "vec_id")
-    val cands2 = excludeIds.fold(cands1)(ex =>
-      cands1.join(broadcast(ex), Seq("vec_id"), "left_anti"))
-    cands2.filter(candidateFilter)
+    IndexLifecycle.withoutTombstones(cands0, Paths.get(path), "vec_id")
+      .filter(candidateFilter)
   }
 
   /** Shortlist width of the compressed PQ probe: ADC survivors per
@@ -758,8 +746,7 @@ object AnnIndex {
       val pid = r.getLong(0)
       (pid, luts(pid), r.getLong(2))
     }.toSeq.toDF("probe_id", "lut", "cell")
-    val cellPred = cellPredFor(spark, path,
-      probeFrame.select(col("cell")), pruneCells = true)
+    val cellPred = cellPredFor(path, pcRows.map(_.getLong(2)).distinct)
     // compressed ADC scan — only (cell, vec_id, codes) leave the
     // pruned scan; qv's pages are never read (column pruning)
     val scored = liveCandidates(spark, path, cellPred, candidateFilter)
@@ -805,58 +792,61 @@ object AnnIndex {
       val enc = org.apache.spark.sql.Encoders.row(outSchema)
       probesQ.select(col("probe_id"), col("pqv")).mapPartitions { rows =>
         val cs = bc.value
-        val np = math.min(nProbe, cs.length)
         rows.flatMap { r =>
-          val qv = r.getSeq[Long](1).toArray
-          // full (d, cid) scan then a bounded sort of nCells entries:
-          // selection cost is dwarfed by the distance pass itself
-          val ds = new Array[(Long, Long)](cs.length)
-          var i = 0
-          while (i < cs.length) {
-            val qc = cs(i)._2
-            var d = 0L
-            var j = 0
-            while (j < qv.length) { val x = qv(j) - qc(j); d += x * x; j += 1 }
-            ds(i) = (d, cs(i)._1)
-            i += 1
-          }
-          java.util.Arrays.sort(ds, Ordering.Tuple2[Long, Long])
-          (0 until np).map(n => Row(r.get(0), r.get(1), ds(n)._2))
+          nearestCells(r.getSeq[Long](1).toArray, cs, nProbe)
+            .map(c => Row(r.get(0), r.get(1), c))
         }
       }(enc)
     }
   }
 
-  /** Streaming-ingest ADMISSION GATE body for the embedding family —
-    * the [[SignatureIndex.gateBatchThroughIndex]] twin a foreachBatch
-    * sink runs per trigger: the batch's quantized probes (probe_id,
-    * pqv) take their top-1 exact-dot neighbor from the persisted
-    * index; arrivals whose best score reaches `threshold` are
-    * near-duplicates of curated data and are REJECTED, no-neighbor
-    * arrivals are admitted. Stateless by construction (every decision
-    * is a pure function of the row and the frozen index), so the
-    * admitted set is batch-split-invariant.
+  /** The `nProbe` nearest cells of `qv` over cid-sorted centroids, by
+    * (squared L2, cid) — the bulk kernel's cell selection, run in its
+    * tasks and by the gate on the driver. A full (d, cid) scan then a
+    * bounded sort of nCells entries: selection cost is dwarfed by the
+    * distance pass itself. */
+  private def nearestCells(qv: Array[Long], cs: Array[(Long, Array[Long])],
+                           nProbe: Int): Seq[Long] = {
+    val ds = new Array[(Long, Long)](cs.length)
+    var i = 0
+    while (i < cs.length) {
+      val qc = cs(i)._2
+      var d = 0L
+      var j = 0
+      while (j < qv.length) { val x = qv(j) - qc(j); d += x * x; j += 1 }
+      ds(i) = (d, cs(i)._1)
+      i += 1
+    }
+    java.util.Arrays.sort(ds, Ordering.Tuple2[Long, Long])
+    ds.iterator.take(nProbe).map(_._2).toSeq
+  }
+
+  /** Streaming-ingest ADMISSION GATE for the embedding family — its
+    * [[IndexLifecycle.gate]], the [[SignatureIndex.gateBatchThroughIndex]]
+    * twin a foreachBatch sink runs per trigger: each row of `rows`
+    * (vec_id, qv and any payload columns) takes its top-1 exact-dot
+    * neighbor from the persisted index; arrivals whose best score
+    * reaches `threshold` are near-duplicates of curated data and are
+    * REJECTED, no-neighbor arrivals are admitted. Stateless by
+    * construction (every decision is a pure function of the row and the
+    * frozen index), so the admitted set is batch-split-invariant.
     *
     * `nProbe` defaults to the pinned [[GateNProbe]] policy — the
     * measured admit-error operating point for a √N-cell production
     * index (SCALING.md §4.18); the oracle config overrides it to its
-    * fixture width. Per-batch cost is [[probeAnnIndex]]'s contract:
-    * probe-side assignment + a partition-pruned scan of the probed
-    * cells — the corpus is never re-assigned, never shuffled
-    * (ladder-measured end to end: 1.28/1.21× per corpus doubling,
-    * §4.18). Returns (probe_id, nn_id, score) for the admitted rows. */
-  def gateBatchThroughAnnIndex(probes: DataFrame, path: String,
+    * fixture width. Per batch: the one batch collect, then the probe
+    * cells computed on the driver from the driver-held centroids, and
+    * ONE partition-pruned scan of the probed cells ∪ delta (minus
+    * tombstones) joined to the broadcast probe cells, each partition
+    * shipping its best candidate per probe — the corpus is never
+    * re-assigned, never shuffled. Three jobs without tombstones (four
+    * with their broadcast): the batch collect, the probe-cell broadcast,
+    * the scan. Returns (probe_id, nn_id, score) for the admitted rows, a
+    * driver-local relation (nn_id and score null when no neighbor). */
+  def gateBatchThroughAnnIndex(rows: DataFrame, path: String,
                                threshold: Long,
-                               nProbe: Int = GateNProbe,
-                               excludeIds: Option[DataFrame] = None): DataFrame = {
-    val spark = probes.sparkSession
-    val top1 = probeAnnIndex(spark, path, probes, nProbe = nProbe, k = 1,
-      excludeIds = excludeIds)
-      .select(col("probe_id"), col("candidate_id").as("nn_id"), col("score"))
-    probes.select(col("probe_id")).join(top1, Seq("probe_id"), "left")
-      .filter(col("score").isNull || col("score") < threshold)
-      .select(col("probe_id"), col("nn_id"), col("score"))
-  }
+                               nProbe: Int = GateNProbe): DataFrame =
+    gate(rows, path, threshold, None, nProbe)
 
   /** Sidecar recording which batch admitted which vector —
     * (vec_id, batch) — written by [[gateAndAppendAnnBatch]]. Dot-less
@@ -868,84 +858,94 @@ object AnnIndex {
   private val GateAppendBatchesSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("batch", LongType)))
 
-  /** The sidecar's snapshot files under their known schema. */
-  private def gateAppendBatches(spark: SparkSession, fs: Seq[Path]): DataFrame =
-    spark.read.schema(GateAppendBatchesSchema).parquet(fs.map(_.toString): _*)
+  /** The admitted (probe_id, nn_id, score) rows of both gates. */
+  private val GateOutSchema = StructType(Seq("probe_id", "nn_id", "score")
+    .map(StructField(_, LongType)))
 
   /** The PRODUCTION gate→append composition for the embedding family
     * — [[SignatureIndex.gateAndAppendBatch]]'s twin, run once per
     * micro-batch by a foreachBatch sink: gate `rows` (which must
     * carry exactly the indexed cell columns — vec_id, payload, qv)
-    * through [[gateBatchThroughAnnIndex]], APPEND the admitted rows,
-    * and record the admissions in the `gapp_batches` sidecar.
+    * through the same [[IndexLifecycle.gate]] as
+    * [[gateBatchThroughAnnIndex]], record the admissions in the
+    * `gapp_batches` sidecar and APPEND the admitted rows, both from the
+    * driver-local batch: the micro-batch's plan runs once per trigger.
     * Returns the admitted (probe_id, nn_id, score) frame.
     *
     * REPLAY EXACTLY-ONCE (the round-12 self-review hole: `probe_id ≠
     * candidate_id` alone lets two co-admitted intra-batch duplicates
     * reject EACH OTHER on crash-redelivery): the gate excludes every
     * candidate this SAME batchId previously appended (the sidecar's
-    * batch column → a batch-bounded broadcast anti on the candidate
-    * scan), so a redelivered batch decides as if its own appends never
-    * happened — the admitted set is delivery-count-invariant,
-    * spec-pinned. Re-appending the same rows is duplicate-safe
-    * ([[appendToAnnIndex]]'s delta-dedup contract); duplicate sidecar
-    * rows collapse at the exclusion's distinct.
-    *
-    * The admitted set is collected into a DRIVER-LOCAL relation before
-    * either write — its plan reads the directories the appends mutate —
-    * as [[SignatureIndex.gateAndAppendBatch]] does: the appends need no
-    * checkpoint, and an executor lost mid-append cannot lose or
-    * recompute the decision. The collect is bounded by
-    * [[IndexLifecycle.MaxIncrementIds]]: an admitted row is three longs,
-    * held as one UnsafeRow of 92 bytes (SizeEstimator on a 200k-row
-    * collect), so a full bound is ~0.9 GB of driver heap; a trigger
-    * admits at most its own batch, which the stream bounds with
-    * `maxFilesPerTrigger`/`maxBytesPerTrigger`. */
+    * batch column, read once per trigger), so a redelivered batch
+    * decides as if its own appends never happened — the admitted set is
+    * delivery-count-invariant, spec-pinned. Re-appending the same rows
+    * is duplicate-safe ([[appendToAnnIndex]]'s delta-dedup contract).
+    * The sidecar is APPEND-only, never overwritten (round-12 ADVICE):
+    * Spark's overwrite DELETES the dir before writing, so a crash
+    * mid-overwrite on a redelivery — after the first delivery's index
+    * appends landed — erased the exclusion record and re-opened the
+    * exact replay hole the sidecar closes. Rows of SUPERSEDED batches
+    * are dead (only the in-flight batchId is ever read — earlier
+    * batches committed before this trigger started) and are pruned by
+    * compaction's sidecar merge. */
   def gateAndAppendAnnBatch(rows: DataFrame, path: String,
                             threshold: Long, batchId: Long,
-                            nProbe: Int = GateNProbe): DataFrame = {
+                            nProbe: Int = GateNProbe): DataFrame =
+    gate(rows, path, threshold, Some(batchId), nProbe)
+
+  /** The embedding family's [[IndexLifecycle.gate]]: no exact key, the
+    * top-1 candidate step ([[nearestLive]]), `score ≥ threshold` as the
+    * residual. */
+  private[graft] def gate(rows: DataFrame, path: String, threshold: Long,
+                          appendBatch: Option[Long],
+                          nProbe: Int = GateNProbe): DataFrame = {
     val spark = rows.sparkSession
-    val excl = sideFiles(path, GateAppendBatchesDir).map(fs =>
-      gateAppendBatches(spark, fs)
-        .filter(col("batch") === batchId)
-        .select(col("vec_id")).distinct())
-    val probes = rows.select(col("vec_id").as("probe_id"),
-      col("qv").as("pqv"))
-    val decided = gateBatchThroughAnnIndex(probes, path, threshold,
-      nProbe, excludeIds = excl)
-    val rowsAdmitted = IndexLifecycle.boundedCollect(decided,
-      IndexLifecycle.MaxIncrementIds,
-      s"gate-append admitted more than ${IndexLifecycle.MaxIncrementIds} " +
-        "rows in one batch — bound the stream's " +
-        "maxFilesPerTrigger/maxBytesPerTrigger")(LocalRows.collectPerPartition)
-    val admitted =
-      LocalRows.frame(spark, decided.schema, rowsAdmitted.toSeq)
-    if (rowsAdmitted.nonEmpty) {
-      // SIDECAR FIRST, index append second (round-12 second-pass
-      // finding: the reverse order re-opened the replay hole exactly
-      // in the crash window the sidecar exists for — sigs landed, no
-      // record, redelivered twins rejected each other). With this
-      // order a crash between the writes leaves an exclusion record
-      // for rows not yet appended: a harmless no-op anti.
-      // APPEND, not overwrite (round-12 ADVICE): Spark's overwrite
-      // DELETES the dir before writing, so a crash mid-overwrite on a
-      // redelivery — after the first delivery's index appends landed —
-      // erased the exclusion record and re-opened the exact replay
-      // hole the sidecar closes (and violated the mutations-only-ADD-
-      // side-files invariant). Append-only means the record is never
-      // transiently absent; a replay appends identical rows, which
-      // collapse at the exclusion's distinct. Rows of SUPERSEDED
-      // batches are dead (only the in-flight batchId is ever read —
-      // earlier batches committed before this trigger started) and
-      // are pruned by compaction's sidecar merge.
-      IndexLifecycle.appendSideFile(Paths.get(path), GateAppendBatchesDir,
-        admitted.select(col("probe_id").as("vec_id"), lit(batchId).as("batch")))
-      val admRows = rows.join(
-        admitted.select(col("probe_id").as("vec_id")),
-        Seq("vec_id"), "left_semi")
-      appendToAnnIndex(admRows, path)
+    val (schema, admitted, best) = IndexLifecycle.gate(IndexLifecycle.Gate(
+      Paths.get(path), "vec_id", identity,
+      IndexLifecycle.Sidecar(GateAppendBatchesDir, GateAppendBatchesSchema,
+        "vec_id", "batch"), exactKey = None,
+      (schema, held, excluded) => Some(nearestLive(spark, path, nProbe, schema,
+        held, excluded)),
+      threshold), rows, appendBatch)(
+      appendToAnnIndex(_, path))
+    val fId = schema.fieldIndex("vec_id")
+    LocalRows.frame(spark, GateOutSchema, admitted.map { r =>
+      val id = r.getLong(fId)
+      best.get(id).fold(InternalRow(id, null, null)) {
+        case (nn, score) => InternalRow(id, nn, score) }
+    })
+  }
+
+  /** The gate's candidate step: each held row's nProbe cells, computed
+    * on the driver from the driver-held centroids ([[nearestCells]]),
+    * as a broadcast (probe_id, pqv, cell) relation joined to ONE scan
+    * of the live rows of those cells (pruned base ∪ delta, minus
+    * tombstones, minus the `excluded` ids) and scored by exact dot —
+    * (probe_id, nn_id, score) per candidate, self-matches excluded as
+    * in every search. */
+  private def nearestLive(spark: SparkSession, path: String, nProbe: Int,
+                          schema: StructType, held: Seq[InternalRow],
+                          excluded: Set[Long]): DataFrame = {
+    val cents = readCentroids(spark, path).toArray
+    val Seq(fId, fQv) = Seq("vec_id", "qv").map(schema.fieldIndex)
+    val probeCells = held.flatMap { r =>
+      val qv = r.getArray(fQv)
+      nearestCells(qv.toLongArray, cents, nProbe)
+        .map(c => InternalRow(r.getLong(fId), qv, c))
     }
-    admitted
+    val live = liveCandidates(spark, path,
+      cellPredFor(path, probeCells.map(_.getLong(2)).distinct.toArray),
+      lit(true), dedupeDelta = false)
+    val cands =
+      if (excluded.isEmpty) live
+      else live.filter(!org.apache.spark.sql.graft.HashExpressions
+        .in_set(col("vec_id"), excluded))
+    cands.join(broadcast(LocalRows.frame(spark, StructType(Seq(
+        StructField("probe_id", LongType), schema(fQv).copy(name = "pqv"),
+        StructField("cell", LongType))), probeCells)), Seq("cell"))
+      .filter(col("probe_id") =!= col("vec_id"))
+      .select(col("probe_id"), col("vec_id").as("nn_id"),
+        Similarity.dotLong(col("pqv"), col("qv")).as("score"))
   }
 
   /** Compact the index after a run of appends and deletes — the
@@ -1007,7 +1007,8 @@ object AnnIndex {
     // replay (every earlier batch committed before that trigger began)
     val gapp = files(path, GateAppendBatchesDir)
     val prune = Option.when(gapp.size >= 2) {
-      val df = gateAppendBatches(spark, gapp)
+      val df = spark.read.schema(GateAppendBatchesSchema)
+        .parquet(gapp.map(_.toString): _*)
       IndexLifecycle.Rewrite(GateAppendBatchesDir, gapp,
         df.filter(col("batch") === df.agg(max(col("batch"))).scalar()).distinct())
     }

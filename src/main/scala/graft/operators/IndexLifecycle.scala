@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.graft.LocalRows
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.graft.{HashExpressions, LocalRows}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
@@ -15,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * [[AnnIndex]] (IVF cells for embedding search): meta properties IO
   * with a version gate, the appended-drift rebuild policy,
   * marker-stamped index-internal artifacts, bounded driver-side
-  * memoization keyed by content fingerprint, and the one staged
-  * rewrite both compactions run.
+  * memoization keyed by content fingerprint, the one staged rewrite
+  * both compactions run, and the one streaming admission gate
+  * ([[gate]]) both families' gate queries run.
   *
   * Extracted (round 11) because the two families had drifted on
   * exactly these contracts while duplicating the code: the ANN append
@@ -42,7 +44,8 @@ import scala.jdk.CollectionConverters._
   *    ([[reclaimUnmanifested]]).
   *
   * The mutation core both families run is here too; a family keeps
-  * only its layout, probe, gate, compaction phases and `Meta` fields:
+  * only its layout, probe, gate steps, compaction phases and `Meta`
+  * fields:
   *  - one build reset ([[resetLayout]]): stale side tables and
   *    build-scoped markers go before a (re)build writes;
   *  - one tombstone reader ([[tombstones]], [[withoutTombstones]]);
@@ -607,17 +610,19 @@ object IndexLifecycle {
 
   // ---- the shared mutation core ---------------------------------------------
 
-  /** The snapshot's tombstone ids under `key`, deduplicated (crash-
-    * retried deletes may leave duplicate rows), with their size signal
+  /** The snapshot's tombstone ids under `key`, with their size signal
     * ([[idSideBytes]]) for [[boundedIdJoin]]; None when the snapshot
-    * lists no tombstone file. Read with the known one-LONG-column
+    * lists no tombstone file. Crash-retried deletes may leave duplicate
+    * rows, and they stay: every consumer is a semi or anti join, which
+    * ignores duplicate build keys, so a `distinct` here would only add
+    * a shuffle job to every read. Read with the known one-LONG-column
     * schema, so resolving the frame schedules no schema-inference
     * job. */
   def tombstones(spark: SparkSession, root: Path,
                  key: String): Option[(DataFrame, Long)] =
     Some(snapshotFiles(root, "tombstones")).filter(_.nonEmpty).map(fs =>
       (spark.read.schema(StructType(Seq(StructField(key, LongType))))
-        .parquet(fs.map(_.toString): _*).distinct(),
+        .parquet(fs.map(_.toString): _*),
         idSideBytes(spark, fs)))
 
   /** `df` minus the snapshot's tombstoned `key`s, through the
@@ -666,6 +671,173 @@ object IndexLifecycle {
   def appendSideFile(root: Path, sub: String, rows: DataFrame): Unit =
     commitAddedWrite(root, sub) {
       rows.coalesce(1).write.mode("append").parquet(root.resolve(sub).toString)
+    }
+
+  // ---- the one admission gate ------------------------------------------
+
+  /** Increment-class bound on one [[gate]] micro-batch, both families.
+    * The gate holds the prepared batch on the driver as the UnsafeRows
+    * the executors ship. Measured with SizeEstimator on 20k-row
+    * collects:
+    *  - signatures (keep columns, md5, signature, sorted shingle set,
+    *    plus the shingle hashes on the append path), ScaleGen's
+    *    ~700-character documents (~620 shingles): 2.9 kB per row for
+    *    the stateless gate, 8.0 kB with the append path's hashes (boxed
+    *    `Dataset.collect` rows: 13.1 / 30.6 kB); sf0.1 documents (~300
+    *    characters) 1.1 / 2.8 kB;
+    *  - ANN (vec_id, label, 64-dim quantized vector): 0.62 kB per row;
+    *    the probe-cell relation the candidate scan broadcasts adds
+    *    0.62 kB per probed cell, 9.9 kB per row at [[AnnIndex.GateNProbe]]
+    *    (the oracle width of 4 cells: 2.5 kB).
+    * So 50k rows retain ~145 MB, ~400 MB on the signature append path,
+    * and ~530 MB on the ANN path at its production probe width — an
+    * eighth of a 4 GB driver heap at most. The batch is collected in one
+    * job over all its partitions, each shipping at most one bound's
+    * worth before an over-bound batch fails. A stream feeding the gate bounds
+    * its micro-batches with `maxFilesPerTrigger`/`maxBytesPerTrigger`
+    * or by its staging (`StreamingQueries.gateStagingBatches`). */
+  val MaxGateBatchRows: Int = 50000
+
+  /** A family's replay sidecar: the side table `sub`, under `schema`,
+    * recording which `batch` admitted which `id`. */
+  final case class Sidecar(sub: String, schema: StructType, id: String,
+                           batch: String)
+
+  /** A family's exact-key check: the prepared rows' `held` column
+    * against the `stored` column of the build-time `tables` and of the
+    * replay sidecar, all read under the sidecar's schema. */
+  final case class ExactKey(held: String, stored: String, tables: Seq[String])
+
+  /** One index family's steps of the [[gate]]:
+    *  - `prepare` hashes or quantizes the micro-batch into the rows the
+    *    gate holds, keyed by their LONG column `id`;
+    *  - `sidecar` and `exactKey` (None: the family has no exact key);
+    *  - `candidates(schema, rows, excluded)` is the family's one scan of
+    *    its live index for the held `rows`, minus the `excluded` ids:
+    *    (held id, candidate id, score) LONG rows (None: nothing is left
+    *    to check);
+    *  - the residual: a held row whose best candidate ([[top1]]) scores
+    *    at least `threshold` is rejected. */
+  final case class Gate(root: Path, id: String, prepare: DataFrame => DataFrame,
+                        sidecar: Sidecar, exactKey: Option[ExactKey],
+                        candidates: (StructType, Seq[InternalRow], Set[Long]) => Option[DataFrame],
+                        threshold: Long)
+
+  /** The streaming-ingest ADMISSION GATE of both families, run once per
+    * micro-batch by a foreachBatch sink. It decides against the index
+    * AS OF this trigger, in work the size of the batch plus one pass
+    * over each index table:
+    *  1. `prepare` the batch and collect it ONCE into a driver-local
+    *     relation, bounded by [[MaxGateBatchRows]] (a larger batch fails
+    *     loudly, naming the cap);
+    *  2. with `appendBatch = Some(batchId)`, read the replay sidecar for
+    *     this batch's own earlier admissions: their ids are EXCLUDED
+    *     from every check, so a redelivered batch decides as if its own
+    *     appends never happened (the replay contract below);
+    *  3. in the same scan, the exact-key matches: a held row whose key
+    *     is stored (other than by this batch) is rejected;
+    *  4. one candidate scan of the live index, each partition shipping
+    *     only its best candidate per held id ([[top1]]): a near-duplicate
+    *     cluster of many index rows multiplies the matches of one held
+    *     row, so the shipped rows are bounded by partitions × batch,
+    *     whatever the cluster sizes;
+    *  5. decide on the driver: a held row is admitted unless its best
+    *     candidate reaches the family's `threshold`.
+    * Every driver-side step goes through [[boundedCollect]]: the batch
+    * under [[MaxGateBatchRows]]; the sidecar/exact-key scan and the
+    * candidates (at most one row per held row per scan partition) under
+    * [[MaxIncrementIds]]. Nothing is cached or checkpointed: the result
+    * carries no lineage, so losing an executor after the call cannot
+    * lose or recompute it.
+    *
+    * On the append path the admitted rows go, from the local relation,
+    * first into the sidecar as (id, batch[, key]) and then to the
+    * family's `append`. SIDECAR FIRST: the reverse order re-opened the
+    * replay hole in the crash window between the writes — rows landed
+    * with no batch record, so the redelivered batch's own rows
+    * self-rejected. Recording an admission whose append never lands is
+    * harmless: the exclusion hides rows that do not exist, and the key
+    * record correctly rejects later copies of a row the redelivered
+    * batch re-admits and re-appends. Both writes read the local
+    * relation, not the directories they write, so they need no
+    * checkpoint in between.
+    *
+    * REPLAY EXACTLY-ONCE (foreachBatch redelivery after a crash between
+    * the gate and the appends): per-row self-exclusion alone was NOT
+    * enough — two identical rows co-admitted in one batch would reject
+    * EACH OTHER on redelivery. With the batch-scoped exclusion the
+    * admitted set is delivery-count-invariant (spec-pinned in both
+    * families); re-appending is duplicate-safe, and duplicate sidecar
+    * rows collapse in every reader (both sidecars are sets).
+    *
+    * Returns the prepared schema, the admitted rows and each checked
+    * held id's best (candidate id, score). */
+  def gate(g: Gate, batch: DataFrame, appendBatch: Option[Long])(
+      append: DataFrame => Unit): (StructType, Seq[InternalRow], Map[Long, (Long, Long)]) = {
+    val spark = batch.sparkSession
+    val prepared = g.prepare(batch)
+    val schema = prepared.schema
+    val rows = boundedCollect(prepared, MaxGateBatchRows,
+      s"gate micro-batch holds more than $MaxGateBatchRows rows; the gate " +
+        "holds each batch on the driver — bound the stream's " +
+        "maxFilesPerTrigger/maxBytesPerTrigger")(LocalRows.collectPerPartition)
+    if (rows.isEmpty) return (schema, Nil, Map.empty)
+    val sc = g.sidecar
+    val key = g.exactKey.map(k => (k, schema.fieldIndex(k.held), schema(k.held).dataType))
+    def keyOf(r: InternalRow): Option[Any] = key.map { case (_, f, t) => r.get(f, t) }
+
+    // 2-3. one scan: this batch's recorded admissions and the key matches
+    val paths = g.exactKey.toSeq.flatMap(_.tables) ++ appendBatch.toSeq.flatMap(_ =>
+      snapshotFiles(g.root, sc.sub).map(_.toString))
+    val matched = (key.map { case (k, _, _) =>
+      HashExpressions.in_set(col(k.stored), rows.flatMap(keyOf)) } ++
+      appendBatch.map(col(sc.batch) === _)).reduceOption(_ || _)
+      .filter(_ => paths.nonEmpty)
+      .fold(Array.empty[InternalRow])(f => boundedCollect(
+        spark.read.schema(sc.schema).parquet(paths: _*).filter(f), MaxIncrementIds,
+        s"gate sidecar scan matched more than $MaxIncrementIds rows of one " +
+          "batch — bound the stream's maxFilesPerTrigger/maxBytesPerTrigger")(
+        LocalRows.collectPerPartition))
+    val fBatch = sc.schema.fieldIndex(sc.batch)
+    val (own, other) = matched.partition(r =>
+      appendBatch.exists(b => !r.isNullAt(fBatch) && r.getLong(fBatch) == b))
+    val excluded = own.map(_.getLong(sc.schema.fieldIndex(sc.id))).toSet
+    val rejected = key.fold(Set.empty[Any]) { case (k, _, t) =>
+      other.map(_.get(sc.schema.fieldIndex(k.stored), t)).toSet }
+    val unmatched = rows.toSeq.filterNot(r => keyOf(r).exists(rejected))
+
+    // 4. one candidate scan, the best candidate per held id
+    val best = g.candidates(schema, unmatched, excluded).fold(Map.empty[Long, (Long, Long)]) { c =>
+      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+      top1(boundedCollect(c.as(enc).mapPartitions(top1(_).iterator.map {
+          case (k, (n, score)) => (k, n, score) })(enc).toDF(), MaxIncrementIds,
+        s"gate candidate scan shipped more than $MaxIncrementIds rows (at " +
+          "most one per held row per scan partition)")(LocalRows.collectPerPartition)
+        .iterator.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    }
+
+    // 5. the decision, then the sidecar and the append
+    val fId = schema.fieldIndex(g.id)
+    val admitted = unmatched.filterNot(r =>
+      best.get(r.getLong(fId)).exists(_._2 >= g.threshold))
+    appendBatch.filter(_ => admitted.nonEmpty).foreach { b =>
+      val frame = LocalRows.frame(spark, schema, admitted)
+      val source = Map(sc.id -> col(g.id), sc.batch -> lit(b)) ++
+        g.exactKey.map(k => k.stored -> col(k.held))
+      appendSideFile(g.root, sc.sub, frame.select(sc.schema.fields.toIndexedSeq
+        .map(f => source(f.name).cast(f.dataType).as(f.name)): _*))
+      append(frame)
+    }
+    (schema, admitted, best)
+  }
+
+  /** The best (candidate id, score) per held id of (held id, candidate
+    * id, score) rows: the highest score, then the smallest candidate id
+    * — the top-1 order of every search. */
+  private def top1(rows: Iterator[(Long, Long, Long)]): Map[Long, (Long, Long)] =
+    rows.foldLeft(Map.empty[Long, (Long, Long)]) { case (m, (k, n, score)) =>
+      m.updated(k, m.get(k).filter { case (n0, s0) =>
+        s0 > score || s0 == score && n0 < n }.getOrElse((n, score)))
     }
 
   /** Lifecycle bracket for a mutation run against a pristine cached

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions._
@@ -421,7 +421,7 @@ object SignatureIndex {
     val rewrites = Seq(
       merge("sig", sig)(read(SigSchema, sig)),
       merge("tombstones", files(path, "tombstones"))(
-        IndexLifecycle.tombstones(spark, root, "doc_id").get._1),
+        IndexLifecycle.tombstones(spark, root, "doc_id").get._1.distinct()),
       merge(GateAppendMd5Dir, md5)(read(Md5Schema, md5).distinct())).flatten
     IndexLifecycle.compact(root, MutableSubs, rewrites)
     if (rewrites.nonEmpty)
@@ -722,10 +722,11 @@ object SignatureIndex {
   }
 
   /** Streaming-ingest ADMISSION GATE, one micro-batch at a time — the
-    * batch-mode body a foreachBatch sink runs per trigger (see
-    * `graft.queries.StreamingQueries.ingestGate`). Returns the rows of
-    * `batch` (projected to `keep`) that pass every check against the
-    * persisted corpus index:
+    * signature family's [[IndexLifecycle.gate]] (see there for the
+    * per-trigger steps and bounds), which a foreachBatch sink runs per
+    * trigger (`graft.queries.StreamingQueries.gateLoop`). Returns the
+    * rows of `batch` (projected to `keep`) that pass every check
+    * against the persisted corpus index:
     *  - not an exact duplicate: md5 absent from the `gate_md5` sidecar
     *    (NOT subsumable by the band checks — a document with fewer than
     *    `shingleK` tokens has an EMPTY shingle set, a null MinHash
@@ -735,20 +736,16 @@ object SignatureIndex {
     *    3·|A∩B| ≥ |A|+|B|) through any of the first `nGateBands` LSH
     *    bands of the index.
     *
-    * Per-trigger shape ([[gateRows]], shared with
-    * [[gateAndAppendBatch]]): work the size of the increment plus one
-    * pass over each corpus table, in a handful of jobs —
-    *  1. one job hashes the micro-batch into a DRIVER-LOCAL relation,
-    *     bounded by [[MaxGateBatchRows]] (a larger batch fails loudly);
-    *  2. one scan of the md5 sidecar, filtered by the batch's md5 set;
-    *  3. one unshuffled, unsorted scan of the live `sig/` table whose
-    *     first `nGateBands` bands stream through a broadcast hash join
-    *     on the batch's band rows, with the exact-Jaccard residual;
-    *  4. the admitted rows return as a local relation.
-    * Index tables are read with their known schemas, so no
-    * schema-inference job runs per trigger. Nothing is cached or
-    * checkpointed: the result carries no lineage, so losing an
-    * executor after the call cannot lose or recompute it.
+    * The family's steps: the batch is hashed (md5, shingles, MinHash,
+    * sorted shingle set) in the one batch collect; the md5 sidecar is
+    * read in one scan filtered by the batch's md5 set; the candidate
+    * step is one unshuffled, unsorted scan of the live `sig/` table
+    * whose first `nGateBands` bands stream through a broadcast hash join
+    * on the batch's band rows, with the strong-Jaccard residual in the
+    * join. Four jobs at most — the batch collect, the md5 scan, the
+    * broadcast of the band rows, the sig scan — and the later ones are
+    * skipped when nothing is left to check. Index tables are read with
+    * their known schemas, so no schema-inference job runs per trigger.
     *
     * The gate deliberately IGNORES the index's hot/hot2 refinement
     * tables: refinement shards a hot bucket to bound PAIR-JOIN output,
@@ -761,28 +758,8 @@ object SignatureIndex {
     * toward the index's full band count for higher recall. */
   def gateBatchThroughIndex(batch: DataFrame, indexPath: String,
                             keep: Seq[String], shingleK: Int = 5,
-                            nGateBands: Int = 2): DataFrame = {
-    val (schema, admitted) =
-      gateRows(batch, indexPath, keep, shingleK, nGateBands, appendBatch = None)
-    LocalRows.frame(batch.sparkSession, schema, admitted)
-      .select(keep.map(col): _*)
-  }
-
-  /** Increment-class bound on one gate micro-batch. The gate holds the
-    * hashed batch on the driver as the UnsafeRows the executors ship
-    * (keep columns, md5, signature, sorted shingle set — plus the
-    * shingle hashes on the append path). Measured with SizeEstimator
-    * on 20k-row collects of ScaleGen's ~700-character documents
-    * (~620 shingles): 2.9 kB per row for the stateless gate, 8.0 kB
-    * with the append path's hashes (boxed `Dataset.collect` rows:
-    * 13.1 / 30.6 kB); sf0.1 documents (~300 characters) 1.1 / 2.8 kB.
-    * So 50k rows retain ~145 MB, or ~400 MB on the append path — a
-    * tenth of a 4 GB driver heap. The batch is hashed in one job over
-    * all its partitions, each shipping at most one bound's worth
-    * before an over-bound batch fails. A stream feeding the gate bounds
-    * its micro-batches with `maxFilesPerTrigger`/`maxBytesPerTrigger`
-    * or by its staging (`StreamingQueries.gateStagingBatches`). */
-  val MaxGateBatchRows: Int = 50000
+                            nGateBands: Int = 2): DataFrame =
+    gate(batch, indexPath, keep, None, shingleK, nGateBands)
 
   /** Known schemas of the index tables: reading with them skips the
     * footer-merging schema-inference job every bare
@@ -799,33 +776,19 @@ object SignatureIndex {
   private val Md5Schema = StructType(Seq(StructField("c_md5", StringType),
     StructField("c_doc", LongType), StructField("c_batch", LongType)))
 
-  /** The gate body behind [[gateBatchThroughIndex]] and
-    * [[gateAndAppendBatch]]: the admitted rows of the hashed batch and
-    * their schema (keep ∪ doc_id, i_md5, sig, hsi — plus hs when
-    * `appendBatch` is set, so the caller appends without re-hashing).
-    * `appendBatch = Some(batchId)` adds the gate-append sidecar to the
-    * md5 check and hides this batch's own recorded admissions from
-    * both checks (the replay contract of [[gateAndAppendBatch]]).
-    * Four jobs at most — the batch collect, the md5 scan, the
-    * broadcast of the batch's band rows, the sig scan — and the later
-    * ones are skipped when nothing is left to check. */
-  private def gateRows(batch: DataFrame, indexPath: String,
-                       keep: Seq[String], shingleK: Int,
-                       nGateBands: Int, appendBatch: Option[Long])
-      : (StructType, Seq[InternalRow]) = {
-    import org.apache.spark.sql.catalyst.util.ArrayData
+  /** The signature family's [[IndexLifecycle.gate]]: the admitted rows
+    * projected to `keep`. The held rows are keep ∪ (doc_id, i_md5, sig,
+    * hsi) — plus hs when `appendBatch` is set, so the append needs no
+    * re-hashing. */
+  private[graft] def gate(batch: DataFrame, indexPath: String,
+                          keep: Seq[String], appendBatch: Option[Long],
+                          shingleK: Int = 5, nGateBands: Int = 2): DataFrame = {
     import org.apache.spark.sql.graft.HashExpressions
-    import org.apache.spark.unsafe.types.UTF8String
-    val spark = batch.sparkSession
     val rpb = readMeta(indexPath).rowsPerBand
     require(nGateBands * rpb <= MinHashCoeffs.length,
       s"gate wants $nGateBands bands of $rpb rows; " +
         s"only ${MinHashCoeffs.length} signature values exist")
-
-    // 1. the batch, hashed once into a driver-local relation (kept as
-    // the UnsafeRows the executors ship: MaxGateBatchRows is sized on
-    // their bytes)
-    val hashed = batch
+    val hash: DataFrame => DataFrame = _
       .withColumn("i_md5", md5(col("text")))
       .withColumn("hs", Dedup.shingleHashes(col("text"), shingleK))
       .withColumn("sig", HashExpressions.minhash_sigs(col("hs")))
@@ -833,85 +796,67 @@ object SignatureIndex {
         h => (h - 2147483648L).cast("int"))))
       .select((keep ++ Seq("doc_id", "i_md5", "sig", "hsi") ++
         appendBatch.map(_ => "hs")).distinct.map(col): _*)
-    val rows = IndexLifecycle.boundedCollect(hashed, MaxGateBatchRows,
-      s"gate micro-batch holds more than $MaxGateBatchRows rows; the gate " +
-        "hashes each batch on the driver — bound the stream's " +
-        "maxFilesPerTrigger/maxBytesPerTrigger")(LocalRows.collectPerPartition)
-    val schema = hashed.schema
-    if (rows.isEmpty) return (schema, Nil)
-    val Seq(fDoc, fMd5, fSig, fHsi) =
-      Seq("doc_id", "i_md5", "sig", "hsi").map(schema.fieldIndex)
+    val (schema, admitted, _) = IndexLifecycle.gate(IndexLifecycle.Gate(
+      Paths.get(indexPath), "doc_id", hash,
+      IndexLifecycle.Sidecar(GateAppendMd5Dir, Md5Schema, "c_doc", "c_batch"),
+      Some(IndexLifecycle.ExactKey("i_md5", "c_md5", Seq(s"$indexPath/gate_md5"))),
+      nearDups(batch.sparkSession, indexPath, rpb, nGateBands),
+      threshold = 0L), batch, appendBatch)(
+      admitted => appendToIndex(admitted.select(col("doc_id"), col("hs")), indexPath))
+    LocalRows.frame(batch.sparkSession, schema, admitted).select(keep.map(col): _*)
+  }
 
-    // 2. exact-dup check: one scan of the md5 sidecar(s), filtered by
-    // the batch's md5 set. With a batch id it also returns the rows
-    // this batch recorded on an earlier delivery: those neither reject
-    // (by md5) nor may their signatures (below). Bounded by the batch:
-    // gate_md5 is a set, and the append sidecar gains one row per
-    // admission.
-    val md5Paths = s"$indexPath/gate_md5" +: (if (appendBatch.isEmpty) Nil
-      else files(indexPath, GateAppendMd5Dir).map(_.toString))
-    val md5Match = HashExpressions.in_set(col("c_md5"),
-      rows.map(_.getUTF8String(fMd5)))
-    val (own, other) = spark.read.schema(Md5Schema).parquet(md5Paths: _*)
-      .filter(appendBatch.fold(md5Match)(id => md5Match || col("c_batch") === id))
-      .collect()
-      .partition(r => appendBatch.exists(id => !r.isNullAt(2) && r.getLong(2) == id))
-    val rejectMd5 = other.map(r => UTF8String.fromString(r.getString(0))).toSet
-    val excluded = own.map(_.getLong(1)).toSet
-    val afterMd5 = rows.filterNot(r => rejectMd5(r.getUTF8String(fMd5)))
-
-    // 3. near-dup check: the batch's first nGateBands bands, cut on the
-    // driver exactly as the corpus side's slice(); a null signature
-    // (empty shingle set) has no bands and matches nothing — the
-    // oracle's null-signature semantics
-    val bands = afterMd5.iterator.filterNot(_.isNullAt(fSig)).flatMap { r =>
+  /** The gate's candidate step: the held rows' first `nGateBands`
+    * bands, cut on the driver exactly as the corpus side's slice(), as a
+    * broadcast local relation joined to one scan of the live sig/ table
+    * (minus the excluded doc ids) — one (batch doc, corpus doc, score)
+    * row per band match. The score is the strong-Jaccard residual
+    * 3·|A∩B| − (|A|+|B|): set-Jaccard ≥ 1/2 exactly when it is ≥ 0, the
+    * gate's threshold. A null signature (empty shingle set) has no
+    * bands and matches nothing — the oracle's null-signature
+    * semantics. */
+  private def nearDups(spark: SparkSession, indexPath: String, rpb: Int,
+                       nGateBands: Int)(
+      schema: StructType, rows: Seq[InternalRow],
+      excluded: Set[Long]): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.graft.HashExpressions
+    val Seq(fDoc, fSig, fHsi) = Seq("doc_id", "sig", "hsi").map(schema.fieldIndex)
+    val bands = rows.iterator.filterNot(_.isNullAt(fSig)).flatMap { r =>
       val sig = r.getArray(fSig).toLongArray
       val hsi = r.getArray(fHsi)
       (0 until nGateBands).map(b => InternalRow(r.getLong(fDoc), b,
         ArrayData.toArrayData(sig.slice(b * rpb, (b + 1) * rpb)), hsi))
     }.toSeq
-    val bandSchema = StructType(Seq(schema(fDoc).copy(name = "b_doc"),
-      StructField("band", IntegerType), schema(fSig).copy(name = "band_sig"),
-      schema(fHsi)))
-    val hits =
-      if (bands.isEmpty) Set.empty[Long]
-      else {
-        val live = liveSig(spark, indexPath)
-        val corpus =
-          if (excluded.isEmpty) live
-          else live.filter(!HashExpressions.in_set(col("doc_id"), excluded))
-        val strong = lit(3) * HashExpressions
-          .sorted_inter_size(col("hsi"), col("c_hsi")) >=
-          size(col("hsi")) + size(col("c_hsi"))
-        // the join yields one row per strong (batch doc, corpus doc,
-        // band) match — a near-duplicate cluster of many corpus docs
-        // multiplies it — so each partition ships its DISTINCT batch
-        // docs only (no exchange): the collect is bounded by
-        // partitions × batch size, whatever the cluster sizes
-        corpus.select(col("hsi").as("c_hsi"),
-            posexplode(transform(sequence(lit(0), lit(nGateBands - 1)),
-              b => slice(col("sig"), b * rpb + 1, lit(rpb))))
-              .as(Seq("c_band", "c_band_sig")))
-          .join(broadcast(LocalRows.frame(spark, bandSchema, bands)),
-            col("c_band") === col("band") &&
-              col("c_band_sig") === col("band_sig") && strong)
-          .select(col("b_doc")).as(Encoders.scalaLong)
-          .mapPartitions(_.toSet.iterator)(Encoders.scalaLong)
-          .collect().toSet
-      }
-    // 4. the admitted rows, driver-local
-    (schema, afterMd5.filterNot(r => hits(r.getLong(fDoc))).toSeq)
+    Option.when(bands.nonEmpty) {
+      val bandSchema = StructType(Seq(schema(fDoc).copy(name = "b_doc"),
+        StructField("band", IntegerType), schema(fSig).copy(name = "band_sig"),
+        schema(fHsi)))
+      val live = liveSig(spark, indexPath)
+      val corpus =
+        if (excluded.isEmpty) live
+        else live.filter(!HashExpressions.in_set(col("doc_id"), excluded))
+      corpus.select(col("doc_id"), col("hsi").as("c_hsi"),
+          posexplode(transform(sequence(lit(0), lit(nGateBands - 1)),
+            b => slice(col("sig"), b * rpb + 1, lit(rpb))))
+            .as(Seq("c_band", "c_band_sig")))
+        .join(broadcast(LocalRows.frame(spark, bandSchema, bands)),
+          col("c_band") === col("band") && col("c_band_sig") === col("band_sig"))
+        .select(col("b_doc"), col("doc_id"), (lit(3L) * HashExpressions
+          .sorted_inter_size(col("hsi"), col("c_hsi")) -
+          size(col("hsi")) - size(col("c_hsi"))).cast("long"))
+    }
   }
 
   /** The PRODUCTION ingest composition — gate the batch, then APPEND
     * the admissions — run once per micro-batch by a foreachBatch sink:
-    * [[gateRows]] (the body the stateless gate runs) decides against
-    * the index AS OF this trigger, and the admitted rows' signatures
-    * and md5s are appended so TOMORROW'S increment dedups against
-    * TODAY'S admissions. A later batch carrying a copy of an earlier
-    * batch's admission is REJECTED — the property the
-    * stream_gate_append oracle hashes across a 3-batch-plus-replay
-    * staging.
+    * the same [[IndexLifecycle.gate]] as the stateless gate decides
+    * against the index AS OF this trigger, and the admitted rows' md5s
+    * (sidecar first) and signatures are appended so TOMORROW'S
+    * increment dedups against TODAY'S admissions. A later batch
+    * carrying a copy of an earlier batch's admission is REJECTED — the
+    * property the stream_gate_append oracle hashes across a
+    * 3-batch-plus-replay staging.
     *
     * Semantics vs the stateless gate: admission is ORDER-DEPENDENT
     * (the first arrival of a duplicate class wins; later copies
@@ -920,50 +865,20 @@ object SignatureIndex {
     * index, not the in-flight batch; the oracle twin replays the
     * staged batch cuts exactly).
     *
-    * REPLAY EXACTLY-ONCE (foreachBatch redelivery after a crash
-    * between the gate and the appends): the gate decides as if this
-    * batchId's OWN previous appends never happened — the md5 check
-    * ignores append-sidecar rows with `c_batch = batchId`, and the
-    * band check filters the sig rows of those recorded admissions out
-    * of its scan. Per-row self-exclusion alone was NOT enough: two
-    * identical docs co-admitted in one batch would reject EACH OTHER
-    * on redelivery. With the batch-scoped exclusion the admitted set
-    * is delivery-count-invariant, spec-pinned; re-appending is
-    * duplicate-safe ([[appendToIndex]]'s contract; duplicate sidecar
-    * rows collapse in the md5 set). The corpus `gate_md5` sidecar
-    * needs no exclusion: the caller's corpus/increment split keeps the
-    * id spaces disjoint.
+    * Replay: the md5 check ignores append-sidecar rows with
+    * `c_batch = batchId`, and the band check filters the sig rows of
+    * those recorded admissions out of its scan (the batch-scoped
+    * exclusion of [[IndexLifecycle.gate]]). The corpus `gate_md5`
+    * sidecar needs no exclusion: the caller's corpus/increment split
+    * keeps the id spaces disjoint.
     *
     * Per-trigger cost: the gate's jobs plus two increment-sized
-    * appends. The decision is a driver-local relation before either
-    * append runs, so the appends — which write the directories the
-    * gate read — need no checkpoint or cache in between, and an
-    * executor lost mid-append cannot recompute the decision against
-    * half-written tables. */
+    * appends, six jobs at most. */
   def gateAndAppendBatch(batch: DataFrame, indexPath: String,
                          keep: Seq[String], batchId: Long,
                          shingleK: Int = 5,
-                         nGateBands: Int = 2): DataFrame = {
-    val (schema, rows) = gateRows(batch, indexPath, keep, shingleK,
-      nGateBands, appendBatch = Some(batchId))
-    val admitted =
-      LocalRows.frame(batch.sparkSession, schema, rows)
-    if (rows.nonEmpty) {
-      // SIDECAR FIRST, index append second: the reverse order re-opened
-      // the replay hole in the crash window between the writes — sigs
-      // landed with no batch record, so the redelivered batch's own
-      // rows self-rejected. Recording an admission whose sig never
-      // lands is harmless: the exclusion hides sig rows that do not
-      // exist, and the md5 row correctly rejects future copies of a
-      // doc the re-delivered batch will re-admit and re-append.
-      IndexLifecycle.appendSideFile(Paths.get(indexPath), GateAppendMd5Dir,
-        admitted.select(Seq(col("i_md5"), col("doc_id"), lit(batchId))
-          .zip(Md5Schema.fields)
-          .map { case (c, f) => c.cast(f.dataType).as(f.name) }: _*))
-      appendToIndex(admitted.select(col("doc_id"), col("hs")), indexPath)
-    }
-    admitted.select(keep.map(col): _*)
-  }
+                         nGateBands: Int = 2): DataFrame =
+    gate(batch, indexPath, keep, Some(batchId), shingleK, nGateBands)
 
   /** Build-once signature index of a fixture's documents (the
     * oracle/bench path): the "sigindex" family of

@@ -418,9 +418,9 @@ object StreamingQueries {
     * Per-trigger shape: the corpus side is the PERSISTED SIGNATURE
     * INDEX ([[graft.operators.SignatureIndex]], shared artifact with
     * dedup_incremental) plus its md5 sidecar, probed inside
-    * foreachBatch by [[graft.operators.SignatureIndex
-    * .gateBatchThroughIndex]]: the micro-batch is hashed once into a
-    * driver-local relation (bounded — the staging cuts the increment
+    * foreachBatch ([[gateLoop]]) by the one admission gate
+    * ([[graft.operators.IndexLifecycle.gate]]): the micro-batch is
+    * hashed once into a driver-local relation (bounded — the staging cuts the increment
     * into enough one-file triggers, [[gateStagingBatches]]), the md5
     * sidecar and the live sig/ table are each read in one scan keyed by
     * the batch (an md5 set filter; a broadcast join on the batch's band
@@ -441,22 +441,58 @@ object StreamingQueries {
     * staged into more files ([[gateStagingBatches]]). */
   private[graft] def ingestGate(s: SparkSession, d: String,
                                 nBatches: Int): DataFrame = {
-    import graft.operators.SignatureIndex
     // corpus index: built once per corpus (a corpus event, not a gate
     // cost), shared with dedup_incremental; the md5 sidecar rides in
     // the same artifact so exact-dedup needs no second corpus pass at
     // gate time
     val idx = DataPipelineQueries.docs90Index(s, d)
     ensureGateMd5(s, d, idx)
-    val inc = StreamingOps.documentsStream(s, d, gateStagingBatches(
-        s, d, nBatches, graft.Tables.documents(s, d).filter(docBucket >= 90)))
-      .filter(docBucket >= 90)
-    StreamingOps.runForeachBatch(s, inc,
-      s"graft_stream_ingest_gate_$nBatches",
-      (batch, _) => SignatureIndex.gateBatchThroughIndex(
-        batch, idx, keep = Seq("doc_id", "lang", "source")))
-      .orderBy(col("doc_id"))
+    gateLoop(s, s"graft_stream_ingest_gate_$nBatches",
+      StreamingOps.documentsStream(s, d, gateStagingBatches(
+          s, d, nBatches, graft.Tables.documents(s, d).filter(docBucket >= 90)))
+        .filter(docBucket >= 90), idx, "doc_id", sigGate, maintain = None)
   }
+
+  /** THE gate loop of the four gate queries: each micro-batch of the
+    * family's staged `stream` runs its `gate` (see
+    * [[graft.operators.IndexLifecycle.gate]]) inside foreachBatch.
+    * Stateless (`maintain` None), the gate probes the `base` index
+    * itself. With a `maintain` step the loop APPENDS: every invocation
+    * copies the PRISTINE cached base into a fresh scratch dir
+    * ([[graft.operators.IndexLifecycle.withMutableCopy]]) and runs the
+    * full mutation loop against the copy — gate-append, then the
+    * family's production maintenance cadence, per trigger. The output,
+    * ordered by `key`, reads the foreachBatch sink, not the index, so
+    * the mutated copy can be reclaimed before the caller runs it. */
+  private def gateLoop(s: SparkSession, name: String, stream: DataFrame,
+                       base: String, key: String,
+                       gate: (DataFrame, String, Option[Long]) => DataFrame,
+                       maintain: Option[String => Unit]): DataFrame = {
+    def run(idx: String) = StreamingOps.runForeachBatch(s, stream, name,
+      (batch, bid) => {
+        val admitted = gate(batch, idx, maintain.map(_ => bid))
+        maintain.foreach(_(idx))
+        admitted
+      }).orderBy(col(key))
+    if (maintain.isEmpty) run(base)
+    else graft.operators.IndexLifecycle.withMutableCopy(base)(run)
+  }
+
+  /** The signature family's gate in [[gateLoop]]. */
+  private def sigGate(batch: DataFrame, idx: String,
+                      appendBatch: Option[Long]): DataFrame =
+    graft.operators.SignatureIndex.gate(batch, idx,
+      keep = Seq("doc_id", "lang", "source"), appendBatch)
+
+  /** The embedding family's gate in [[gateLoop]]: the batch quantized
+    * to the indexed cell columns, probed at the fixture width (4 of 16
+    * cells; see the policy note on [[stream_embed_gate]]). */
+  private def annGate(batch: DataFrame, idx: String,
+                      appendBatch: Option[Long]): DataFrame =
+    graft.operators.AnnIndex.gate(batch.select(col("vec_id"), col("label"),
+        graft.operators.Similarity.quantize(col("embedding")).as("qv")),
+      idx, DataPipelineQueries.EmbedDupThreshold, appendBatch, nProbe = 4)
+      .select(col("probe_id").as("vec_id"), col("nn_id"), col("score"))
 
   /** A document's 0..99 split bucket: the docs90 corpus is bucket < 90,
     * the gates' increment bucket >= 90. */
@@ -478,7 +514,7 @@ object StreamingQueries {
     * staged file per trigger, so a file is the smallest batch any
     * stream option can make: the increment is cut into at least
     * `nBatches` files and into enough that a trigger averages at most
-    * 80% of [[graft.operators.SignatureIndex.MaxGateBatchRows]] (the
+    * 80% of [[graft.operators.IndexLifecycle.MaxGateBatchRows]] (the
     * doc_id-range cuts are not row-exact; the headroom absorbs uneven
     * id density). Only valid for a batch-split-INVARIANT gate, where
     * the count changes the trigger count and nothing else. The
@@ -488,7 +524,7 @@ object StreamingQueries {
                                         increment: => DataFrame): Int = {
     val rows = gateIncrementRows.get(d, graft.storage.ArtifactCache.fingerprint(
       java.nio.file.Paths.get(d, "documents.parquet")))(increment.count())
-    val perTrigger = graft.operators.SignatureIndex.MaxGateBatchRows * 4L / 5
+    val perTrigger = graft.operators.IndexLifecycle.MaxGateBatchRows * 4L / 5
     math.max(nBatches, ((rows + perTrigger - 1) / perTrigger).toInt)
   }
 
@@ -523,20 +559,11 @@ object StreamingQueries {
   /** Gate body, parameterized on batch count so batch-split invariance
     * is spec-testable (OracleSfSweepSpec pattern). */
   private[graft] def embedGate(s: SparkSession, d: String,
-                               nBatches: Int): DataFrame = {
-    import graft.operators.{AnnIndex, Similarity}
-    val idx = DataPipelineQueries.annBaseIndexPath(s, d)
-    val inc = StreamingOps.embeddingsStream(s, d, nBatches)
-    StreamingOps.runForeachBatch(s, inc,
-      s"graft_stream_embed_gate_$nBatches",
-      (batch, _) => AnnIndex.gateBatchThroughAnnIndex(
-          batch.select(col("vec_id").as("probe_id"),
-            Similarity.quantize(col("embedding")).as("pqv")),
-          idx, DataPipelineQueries.EmbedDupThreshold,
-          nProbe = 4) // fixture width (4 of 16 cells; see policy note)
-        .select(col("probe_id").as("vec_id"), col("nn_id"), col("score")))
-      .orderBy(col("vec_id"))
-  }
+                               nBatches: Int): DataFrame =
+    gateLoop(s, s"graft_stream_embed_gate_$nBatches",
+      StreamingOps.embeddingsStream(s, d, nBatches),
+      DataPipelineQueries.annBaseIndexPath(s, d), "vec_id", annGate,
+      maintain = None)
 
   /** stream_gate_append: the PRODUCTION ingest loop — gate each
     * micro-batch through the persisted signature index, then APPEND
@@ -571,7 +598,7 @@ object StreamingQueries {
 
   private[graft] def gateAppendLoop(s: SparkSession, d: String,
                                     nBatches: Int): DataFrame = {
-    import graft.operators.{Dedup, IndexLifecycle, SignatureIndex}
+    import graft.operators.{Dedup, SignatureIndex}
     def hashedAll = Dedup.shingleHashSets(
       graft.Tables.documents(s, d).repartition(col("doc_id")),
       "doc_id", "text", DataPipelineQueries.SHINGLE_K)
@@ -583,45 +610,32 @@ object StreamingQueries {
         .filter(col("bucket") < 90).drop("bucket"),
       d, s"docs90_gapp_p1_$nBatches")
     ensureGateMd5(s, d, base)
-    IndexLifecycle.withMutableCopy(base) { idx =>
-      // the staged stream carries a trailing REPLAY batch (exact
-      // copies of batch-0's increment rows under fresh ids) so the
-      // cross-batch rejection is non-vacuous at oracle SFs; the
-      // bucket filter keys on the ORIGINAL id (doc_id % offset) so
-      // every replay row stays in the stream
-      val origBucket = pmod(graft.functions.HashFunctions.hash32(
-        pmod(col("doc_id"), lit(StreamingOps.ReplayIdOffset))
-          .cast("string")), lit(100))
-      // the cuts stay at nBatches: admission here is order-dependent
-      // and the oracle twin replays these exact cuts, so an increment
-      // too large for them fails loudly at the gate's batch bound
-      // instead of being re-cut (contrast gateStagingBatches)
-      val inc = StreamingOps.documentsStreamWithReplay(s, d, nBatches)
-        .filter(origBucket >= 90)
-      StreamingOps.runForeachBatch(s, inc,
-        s"graft_stream_gate_append_$nBatches",
-        (batch, bid) => {
-          val admitted = SignatureIndex.gateAndAppendBatch(
-            batch, idx, keep = Seq("doc_id", "lang", "source"),
-            batchId = bid)
-          // maintenance in production shape: rehash-from-source,
-          // evaluated only if the rebuild fires and restricted by
-          // maintainIndex to the docs the index holds. Replay-admitted
-          // docs carry doc_id + ReplayIdOffset and do NOT exist in
-          // documents, so the source corpus is widened with the
-          // offset-keyed copies (identical text → identical hs) —
-          // without them a drift-fired rebuild would drop those
-          // admissions, which maintainIndex refuses loudly (round-12
-          // ADVICE)
-          SignatureIndex.maintainIndex(s, idx)(
-            hashedAll.unionByName(hashedAll.withColumn("doc_id",
-              col("doc_id") + lit(StreamingOps.ReplayIdOffset))))
-          admitted
-        })
-        // reads the foreachBatch sink, not the index: the mutated copy
-        // can be reclaimed before the caller runs it
-        .orderBy(col("doc_id"))
-    }
+    // the staged stream carries a trailing REPLAY batch (exact copies
+    // of batch-0's increment rows under fresh ids) so the cross-batch
+    // rejection is non-vacuous at oracle SFs; the bucket filter keys on
+    // the ORIGINAL id (doc_id % offset) so every replay row stays in
+    // the stream
+    val origBucket = pmod(graft.functions.HashFunctions.hash32(
+      pmod(col("doc_id"), lit(StreamingOps.ReplayIdOffset))
+        .cast("string")), lit(100))
+    // the cuts stay at nBatches: admission here is order-dependent and
+    // the oracle twin replays these exact cuts, so an increment too
+    // large for them fails loudly at the gate's batch bound instead of
+    // being re-cut (contrast gateStagingBatches)
+    gateLoop(s, s"graft_stream_gate_append_$nBatches",
+      StreamingOps.documentsStreamWithReplay(s, d, nBatches)
+        .filter(origBucket >= 90), base, "doc_id", sigGate,
+      // maintenance in production shape: rehash-from-source, evaluated
+      // only if the rebuild fires and restricted by maintainIndex to
+      // the docs the index holds. Replay-admitted docs carry doc_id +
+      // ReplayIdOffset and do NOT exist in documents, so the source
+      // corpus is widened with the offset-keyed copies (identical text
+      // → identical hs) — without them a drift-fired rebuild would drop
+      // those admissions, which maintainIndex refuses loudly (round-12
+      // ADVICE)
+      maintain = Some(idx => SignatureIndex.maintainIndex(s, idx)(
+        hashedAll.unionByName(hashedAll.withColumn("doc_id",
+          col("doc_id") + lit(StreamingOps.ReplayIdOffset))))))
   }
 
   /** stream_embed_gate_append: the ANN twin of [[stream_gate_append]]
@@ -647,7 +661,7 @@ object StreamingQueries {
 
   private[graft] def embedGateAppendLoop(s: SparkSession, d: String,
                                          nBatches: Int): DataFrame = {
-    import graft.operators.{AnnIndex, IndexLifecycle, Similarity}
+    import graft.operators.{AnnIndex, Similarity}
     val maxId = DataPipelineQueries.embeddingsMaxVecId(s, d)
     val t = (maxId + 1) * 9 / 10
     // pristine base-corpus index — every invocation mutates a COPY
@@ -659,24 +673,9 @@ object StreamingQueries {
             Similarity.quantize(col("embedding")).as("qv")),
         DataPipelineQueries.trainedIvfCentroids(s, d, Some(t)), p)
     }
-    IndexLifecycle.withMutableCopy(base) { idx =>
-      val inc = StreamingOps.embeddingsStreamWithReplay(s, d, nBatches)
-      StreamingOps.runForeachBatch(s, inc,
-        s"graft_stream_embed_gapp_$nBatches",
-        (batch, bid) => {
-          val admitted = AnnIndex.gateAndAppendAnnBatch(
-            batch.select(col("vec_id"), col("label"),
-              Similarity.quantize(col("embedding")).as("qv")),
-            idx, DataPipelineQueries.EmbedDupThreshold, batchId = bid,
-            nProbe = 4) // fixture width (4 of 16 cells; see policy note)
-          AnnIndex.maintainAnnIndex(s, idx) // production cadence; no-op at oracle SF
-          admitted.select(col("probe_id").as("vec_id"), col("nn_id"),
-            col("score"))
-        })
-        // reads the foreachBatch sink, not the index: the mutated copy
-        // can be reclaimed before the caller runs it
-        .orderBy(col("vec_id"))
-    }
+    gateLoop(s, s"graft_stream_embed_gapp_$nBatches",
+      StreamingOps.embeddingsStreamWithReplay(s, d, nBatches), base, "vec_id",
+      annGate, maintain = Some(idx => AnnIndex.maintainAnnIndex(s, idx)))
   }
 
   /** stream_takedown: DELETES ARRIVING AS A STREAM — the reference's

@@ -22,14 +22,8 @@ import org.apache.spark.sql.types.StructType
 object LocalRows {
 
   /** Collect `df` as UnsafeRows, under a SQL execution id exactly as
-    * `Dataset.collect` runs (listeners and the SQL tab see it). */
-  def collect(df: DataFrame): Array[InternalRow] = {
-    val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.executedPlan.executeCollect())
-  }
-
-  /** [[collect]] with at most `n` rows from each partition, in ONE job
+    * `Dataset.collect` runs (listeners and the SQL tab see it), with at
+    * most `n` rows from each partition, in ONE job
     * over all partitions. A global limit's collect scans the first
     * partition alone, then the rest in a second job — serializing the
     * work of a multi-partition frame. The cut is not a planned

@@ -699,6 +699,92 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(c1 == 0, "a later copy of an admission must be rejected")
   }
 
+  /** An index over the first 90% of the embeddings (16 trained cells)
+    * and the rest as a gate batch (vec_id, label, qv) — the fixture of
+    * the ANN gate pins. The centroid memo is warmed: reading the
+    * quantizer is a one-time cost, not a gate cost. */
+  private def annGateFixture(): (String, org.apache.spark.sql.DataFrame) = {
+    val t = vecsQ.count() * 9 / 10
+    val base = vecsQ.filter(col("vec_id") < t)
+    val cents = Similarity.kmeansQuantized(base.select(col("qv")),
+      rawCentroids(16), iters = 2)
+    val idx = newIndexDir()
+    AnnIndex.buildAnnIndex(base, cents, idx)
+    AnnIndex.readCentroids(spark, idx)
+    (idx, vecsQ.filter(col("vec_id") >= t))
+  }
+
+  private val GateThreshold = queries.DataPipelineQueries.EmbedDupThreshold
+
+  test("ANN gate job-count pin: at most the signature gate's ceilings") {
+    // the signature gate's ceilings (SignatureIndexSpec): 4 jobs for a
+    // stateless trigger, 6 with the appends. Measured here: the batch
+    // collect, the probe-cell broadcast and the cell scan (3); the
+    // appends add the sidecar and delta writes, and a replayed trigger
+    // the sidecar read
+    val (idx, batch) = annGateFixture()
+    spark.catalog.clearCache()
+    val (admitted, gateJobs) = jobsDuring(
+      AnnIndex.gateBatchThroughAnnIndex(batch, idx, GateThreshold, nProbe = 4))
+    assert(gateJobs <= 4, s"gateBatchThroughAnnIndex ran $gateJobs jobs (ceiling 4)")
+    // a driver-local relation: no lineage an executor loss could
+    // recompute, and nothing registered with the CacheManager
+    assert(admitted.queryExecution.logical.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]).isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the decision is the top-1 search's: admitted exactly when the
+    // best neighbor scores below the threshold
+    val top1 = AnnIndex.probeAnnIndex(spark, idx,
+      batch.select(col("vec_id").as("probe_id"), col("qv").as("pqv")),
+      nProbe = 4, k = 1)
+    val expected = batch.select(col("vec_id").as("probe_id"))
+      .join(top1.select(col("probe_id"), col("candidate_id").as("nn_id"),
+        col("score")), Seq("probe_id"), "left")
+      .filter(col("score").isNull || col("score") < GateThreshold)
+    assert(canon(admitted) == canon(expected))
+    assert(canon(admitted).nonEmpty && canon(admitted).size < batch.count())
+    // first delivery, its replay, and a next batch of copies under
+    // fresh ids: the first two decide as the stateless gate, the copies
+    // meet their originals' admissions
+    val copies = batch.withColumn("vec_id", col("vec_id") + 1000000L)
+    for ((b, bid) <- Seq((batch, 0L), (batch, 0L), (copies, 1L))) {
+      val (appended, appendJobs) = jobsDuring(AnnIndex.gateAndAppendAnnBatch(
+        b, idx, GateThreshold, batchId = bid, nProbe = 4))
+      assert(appendJobs <= 6,
+        s"gateAndAppendAnnBatch($bid) ran $appendJobs jobs (ceiling 6)")
+      if (bid == 0L) assert(canon(appended) == canon(admitted))
+      else assert(appended.count() == 0)
+    }
+  }
+
+  test("ANN gate codegen pin: a second identical gate call compiles no class") {
+    val (idx, batch) = annGateFixture()
+    def gate() = AnnIndex
+      .gateBatchThroughAnnIndex(batch, idx, GateThreshold, nProbe = 4).collect()
+    def compiles() = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val first = gate()
+    val before = compiles()
+    val second = gate()
+    assert(compiles() - before == 0,
+      s"the second gate call compiled ${compiles() - before} classes")
+    assert(first.map(_.mkString("|")).sorted.sameElements(
+      second.map(_.mkString("|")).sorted))
+  }
+
+  test("an ANN gate batch over the increment bound fails loudly, naming the caps") {
+    val (idx, _) = annGateFixture()
+    val big = spark.range(0, IndexLifecycle.MaxGateBatchRows + 1L)
+      .select(col("id").as("vec_id"), lit(1).as("label"),
+        array(lit(0L)).as("qv"))
+    val e = intercept[IllegalArgumentException](
+      AnnIndex.gateBatchThroughAnnIndex(big, idx, GateThreshold, nProbe = 4))
+    assert(e.getMessage.contains(
+      s"more than ${IndexLifecycle.MaxGateBatchRows} rows"), e.getMessage)
+    assert(e.getMessage.contains("maxFilesPerTrigger/maxBytesPerTrigger"),
+      e.getMessage)
+  }
+
   /** Seed PQ books (M=8, sub=8) from the first n vectors' subvectors
     * RE-KEYED to dense 0..n-1 code ids (the ADC LUT is positional —
     * the contract buildAnnIndex enforces), trained one Lloyd round —

@@ -77,6 +77,23 @@ class IndexLifecycleSpec extends AnyFunSuite {
     }
   }
 
+  test("collecting the tombstone anti runs no deduplicating shuffle") {
+    import SparkTestSession._
+    val f = families.find(_.name == "ann").get
+    val idx = newIndexDir(f)
+    f.build(idx) // 16 cells
+    f.delete(f.source.select(col(f.key)).orderBy(col(f.key)).limit(50), idx)
+    val root = Paths.get(idx)
+    val cells = IndexLifecycle.snapshotScan(spark,
+      IndexLifecycle.snapshotFiles(root, "cells"), Some(root.resolve("cells")))
+    // the tombstone broadcast and the scan; a distinct on the tombstone
+    // read would add a shuffle job, which an anti join does not need
+    val (live, jobs) = jobsDuring(
+      IndexLifecycle.withoutTombstones(cells, root, f.key).collect())
+    assert(jobs == 2, s"collecting the tombstone anti ran $jobs jobs")
+    assert(live.length == f.source.count() - 50)
+  }
+
   test("a meta rewrite lands by atomic rename with the field names as keys") {
     families.foreach { f =>
       val idx = newIndexDir(f)

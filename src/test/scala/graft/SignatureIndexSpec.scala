@@ -394,12 +394,12 @@ class SignatureIndexSpec extends AnyFunSuite {
 
   test("a gate batch over the increment bound fails loudly, naming the caps") {
     val (idx, _) = gateFixture()
-    val big = spark.range(0, SignatureIndex.MaxGateBatchRows + 1L)
+    val big = spark.range(0, IndexLifecycle.MaxGateBatchRows + 1L)
       .select(col("id").as("doc_id"), lit("tiny doc").as("text"))
     val e = intercept[IllegalArgumentException](
       SignatureIndex.gateBatchThroughIndex(big, idx, keep = Seq("doc_id")))
     assert(e.getMessage.contains(
-      s"more than ${SignatureIndex.MaxGateBatchRows} rows"), e.getMessage)
+      s"more than ${IndexLifecycle.MaxGateBatchRows} rows"), e.getMessage)
     assert(e.getMessage.contains("maxFilesPerTrigger/maxBytesPerTrigger"),
       e.getMessage)
   }
